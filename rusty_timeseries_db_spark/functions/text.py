@@ -27,11 +27,6 @@ def token_array(col: Column | str, delimiter: str = " ") -> Column:
     return F.filter(F.split(F.lower(c), delimiter), lambda t: F.length(t) > 0)
 
 
-def token_count(col: Column | str) -> Column:
-    """Whitespace token count (cheap, exact)."""
-    return F.size(token_array(col))
-
-
 def bpe_ish_token_count(col: Column | str) -> Column:
     """BPE-ish subword proxy: count word chunks + digits + punctuation
     runs, the standard ~heuristic for LLM token estimation when no real

@@ -3,8 +3,7 @@ the reference has no UDFs).
 
 Policy: built-in expressions first, Arrow-batched pandas UDFs only where
 per-group/model-style Python logic is genuinely needed. Row-at-a-time
-Python UDFs are deliberately absent from every hot path; one is
-registered here solely to cover the ``spark.udf.register`` SQL surface.
+Python UDFs are deliberately absent from every hot path.
 """
 
 from __future__ import annotations
@@ -12,7 +11,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -109,19 +108,3 @@ def scale_values_arrow(
             )
 
     return df.mapInArrow(run, out_schema)
-
-
-# ------------------------------------------------------ SQL registration
-
-def register_sql_udfs(spark: SparkSession) -> None:
-    """Register the SQL-callable UDF surface (``spark.udf.register``).
-
-    ``fault_band`` intentionally demonstrates the *slow* row-at-a-time
-    path — documented as such; everything performance-relevant uses
-    built-ins or pandas UDFs."""
-    spark.udf.register(
-        "fault_band",
-        lambda v: "high" if v is not None and v > 0.95 else "ok",
-        "string",
-    )
-    spark.udf.register("minmax_scale", minmax_scale)

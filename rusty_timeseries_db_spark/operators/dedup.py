@@ -109,24 +109,6 @@ def word_shingles(tokens: Column, k: int = 3) -> Column:
 
 # ------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as a single array expression. NOTE: evaluating
-    this inlines the shingle expression once per hash — prefer
-    ``minhash_signatures_df`` (explode + aggregate) in pipelines; this
-    form is kept for expression-level composition on small inputs.
-
-    INCOMPATIBLE with ``minhash_signatures_df``: this is the classic
-    per-index ``xxhash64(s, i)`` hash family; the DataFrame form uses
-    one-permutation hashing over a single hash. Signatures from the two
-    schemes must never be mixed — positionwise agreement between them
-    is meaningless."""
-    sigs = [
-        F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str,
@@ -329,35 +311,6 @@ def minhash_dedup_pairs(
 
 
 # ------------------------------------------------------------- simhash
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash of a token array, as one codegen'd expression:
-    per-bit signed vote across token hashes, then sign → bit fold.
-    """
-    # votes[j] = sum over tokens of (2*bit_j(xxhash64(t)) - 1)
-    # (getbit accepts a column bit position; shiftright does not)
-    votes = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda j: (F.getbit(F.xxhash64(t), j) * 2 - 1).cast("long"),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    # fold MSB-first: acc*2 + bit reconstructs the 64-bit word exactly
-    bits = F.transform(
-        votes, lambda v: F.when(v > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(
-        F.reverse(bits),
-        F.lit(0).cast("long"),
-        lambda acc, b: F.shiftleft(acc, 1).bitwiseOR(b),
-    )
-
 
 def simhash64_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, 64-bit simhash) via explode → one hash-aggregate pass.

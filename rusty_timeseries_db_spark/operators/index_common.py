@@ -10,10 +10,9 @@ stay per-index — postings/terms/docs vs a cell tree are different
 enough that sharing them would mean parameterizing every line.
 
 Host-class contract: ``self.spark``, ``self.index_path``,
-``self.tombstones_path``, ``self.marker_path``, ``self.manifest_path``
-(the LEGACY flat-file location, still read as a fallback),
-``self._manifest()``, and ``_ROWS_FIELD`` (the manifest key holding
-the LIVE row/doc count — ``"n_docs"`` for BM25, ``"n_rows"`` for IVF).
+``self.tombstones_path``, ``self.marker_path``, ``self._manifest()``,
+and ``_ROWS_FIELD`` (the manifest key holding the LIVE row/doc count
+— ``"n_docs"`` for BM25, ``"n_rows"`` for IVF).
 
 Manifest writes are compare-and-swap (round 15 — VERDICT r14
 next-round #5): every mutator reads a CAS token with its manifest
@@ -23,10 +22,7 @@ between — the single-writer contract is now ENFORCED (serialize or
 raise), not just documented: two interleaved ``add()``s can no longer
 each bump N/sum_dl from its own stale snapshot with one bump silently
 lost. Versions live in a SIBLING directory ``<index>.manifest/``
-(never inside the index root — the IVF cell tree IS a parquet root);
-a legacy flat ``<index>.<kind>.json`` file reads as token ``None``,
-so even two concurrent first-writers on a legacy index conflict on
-the v1 commit.
+(never inside the index root — the IVF cell tree IS a parquet root).
 """
 
 from __future__ import annotations
@@ -48,22 +44,16 @@ class IndexLifecycleMixin:
         return self.index_path.rstrip("/") + ".manifest"
 
     def _read_manifest_cas(self) -> "tuple[int | None, dict | None]":
-        """(CAS token, payload): the highest committed versioned
-        manifest when one exists; else the legacy flat file's payload
-        with token ``None`` (the first CAS write then expects
-        'no version yet', so two concurrent migrators still
-        conflict); (None, None) on a never-built index."""
-        from ..fsutil import (
-            read_json_manifest,
-            read_versioned_manifest_versioned,
-        )
+        """(CAS token, payload) of the highest committed versioned
+        manifest; (None, None) on a never-built index (the first CAS
+        write then expects 'no version yet', so two concurrent first
+        build() calls still conflict)."""
+        from ..fsutil import read_versioned_manifest_versioned
 
         got = read_versioned_manifest_versioned(
             self.spark, self._manifest_dir, self._MANIFEST_STEM
         )
-        if got is not None:
-            return got
-        return None, read_json_manifest(self.spark, self.manifest_path)
+        return (None, None) if got is None else got
 
     def _commit_manifest(self, payload: dict, expected: "int | None") -> int:
         """CAS manifest commit: raises
@@ -72,17 +62,11 @@ class IndexLifecycleMixin:
         the caller's whole operation must be retried against fresh
         state (its appends may still be physically present — the
         conflict means the ACCOUNTING was not applied, the same
-        at-least-once posture as a crash before the manifest bump).
-        Retires the legacy flat file after a successful commit
-        (readers prefer the versioned manifest from then on)."""
-        from ..fsutil import (
-            ManifestVersionConflict,
-            delete_path,
-            write_versioned_manifest,
-        )
+        at-least-once posture as a crash before the manifest bump)."""
+        from ..fsutil import ManifestVersionConflict, write_versioned_manifest
 
         try:
-            n = write_versioned_manifest(
+            return write_versioned_manifest(
                 self.spark,
                 self._manifest_dir,
                 self._MANIFEST_STEM,
@@ -98,8 +82,6 @@ class IndexLifecycleMixin:
                 "time contract is enforced; re-read and retry against "
                 f"the fresh state ({e})"
             ) from e
-        delete_path(self.spark, self.manifest_path)
-        return n
 
     #: default tombstone fraction past which compact() is advised —
     #: below it, the per-query anti-join and the dead bytes are noise;

@@ -351,9 +351,11 @@ def _joint_and_marginals(
     # ONE guard job instead of two (round 20 — guide §1.2): both level
     # counts come from a single aggregate over the joint counts.
     # count(DISTINCT) skips NULL while groupBy emits a NULL group, so
-    # a null-presence flag keeps n_a/n_b exactly ma.count()/mb.count()
-    null_grp = lambda c: F.max(  # noqa: E731
-        F.when(F.col(c).isNull(), 1).otherwise(0)
+    # a null-presence flag keeps n_a/n_b exactly ma.count()/mb.count().
+    # max() over zero joint-count rows (empty input) is NULL, so the
+    # flag coalesces to 0 and an empty input has 0 x 0 cells
+    null_grp = lambda c: F.coalesce(  # noqa: E731
+        F.max(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0)
     )
     dims = counts.agg(
         (F.countDistinct("_a") + null_grp("_a")).alias("_ka"),

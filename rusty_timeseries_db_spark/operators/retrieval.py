@@ -223,7 +223,6 @@ class Bm25Index(IndexLifecycleMixin):
         self.docs_path = self.index_path + "/docs"
         self.tombstones_path = self.index_path + "/tombstones"
         self.marker_path = self.index_path + "/_compacting.json"
-        self.manifest_path = self.index_path + ".bm25.json"
 
     # -- build -------------------------------------------------------
     def _stage_docs(

@@ -15,8 +15,6 @@ All vector math is JVM-side (functions/vectors.py).
 
 from __future__ import annotations
 
-import random
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -91,34 +89,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int) -> list[list[list[float]]]:
-    """Deterministic Gaussian hyperplanes, driver-side (no numpy needed
-    on executors; shipped as literal arrays). Kept for the literal-plane
-    variant; the hot paths use ``lsh_bucket_hash_col`` (see below)."""
-    rng = random.Random(seed)
-    return [
-        [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-        for _ in range(n_tables)
-    ]
-
-
-def lsh_bucket_col(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket key for one LSH table: bit_i = 1[v·p_i > 0]."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def lsh_bucket_hash_col(vec_col, table: int, n_planes: int, seed: int = 42):
@@ -439,7 +409,6 @@ class IvfIndex(IndexLifecycleMixin):
     def __init__(self, spark, index_path: str):
         self.spark = spark
         self.index_path = index_path
-        self.manifest_path = index_path + ".ivf.json"
         # deletion-lifecycle sidecars (round 14 — VERDICT r13
         # next-round #2, the Bm25Index pattern): SIBLINGS of the cell
         # tree, never inside it — the index_path IS the parquet root,

@@ -19,11 +19,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def has_pushed_filters(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
 def scan_read_schema(df: DataFrame) -> str:
     """The ReadSchema of the first parquet scan — verifies column
     pruning (a scan reading all columns for a 2-column projection is a

@@ -5,29 +5,25 @@ stores, completing the family: topk=streaming/sketch.py,
 durations=streaming/state.py, quantiles=here).
 
 Shape: every micro-batch aggregates its OWN per-cell KLL sketches
-(batch-sized work) and lands them under a VERSIONED directory keyed
-by the batch id — ``summaries/batch=<id>/``, mode=overwrite — with
-the manifest's ``last_applied_batch`` watermark advanced LAST (the
-streaming/state.py protocol) through the versioned CAS commit of
-streaming/store_common.py (round 16: old-or-new atomic, no vanish
-window; sink-vs-compact conflicts retry against the fresh snapshot,
-each writer mutating only its own fields). A crash between the summary write and
-the manifest bump replays the batch and OVERWRITES the directory —
-replays are idempotent in EFFECT: exactly one summary row per (cell,
-batch) ever serves, and the exact ``n_rows`` accounting is identical
-on any replay. (Unlike the top-k store's integer summaries, KLL
-sketch BYTES are not replay-bit-identical — DataSketches compaction
-makes level decisions the merge order can shift — so the pinned
-replay property is single-application + rank-error containment, not
-byte equality. Estimates always stay within the k=200 normalized
-rank-error bound of the truth.)
+(batch-sized work) and lands them at ``summaries/batch=<id>/``
+through the shared batch-versioned delta store
+(streaming/store_common.py: versioned overwrite, then the CAS bump
+of the ``last_applied_batch`` watermark). A crash between the
+summary write and the manifest bump replays the batch and OVERWRITES
+the directory — replays are idempotent in EFFECT: exactly one
+summary row per (cell, batch) ever serves, and the exact ``n_rows``
+accounting is identical on any replay. (Unlike the top-k store's
+integer summaries, KLL sketch BYTES are not replay-bit-identical —
+DataSketches compaction makes level decisions the merge order can
+shift — so the pinned replay property is single-application +
+rank-error containment, not byte equality. Estimates always stay
+within the k=200 normalized rank-error bound of the truth.)
 
 Serving merges base ∪ committed deltas with ``kll_merge_agg_double``
 and evaluates any requested quantiles — O(stored sketches), never
 O(events). Compaction folds committed summaries into one per-cell
-merged-sketch base (KLL merge is associative within its error bound),
-same crash-safe base-write → manifest-switch → idempotent-sweep
-protocol as :func:`..streaming.sketch.compact_topk_sketch`.
+merged-sketch base (KLL merge is associative within its error
+bound).
 """
 
 from __future__ import annotations
@@ -38,12 +34,40 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.sketches import merge_quantile_rollup, quantile_rollup
 from .store_common import (
-    is_missing_summaries_error,
-    read_store_manifest,
-    update_store_manifest,
+    DeltaStore,
+    apply_batch,
+    compact,
+    served_parts,
+    start_sink,
 )
 
-_KIND = "quantile"
+
+def _summarize(batch: DataFrame, s: dict) -> DataFrame:
+    v = s["value_col"]
+    return quantile_rollup(
+        batch.filter(F.col(v).isNotNull()), s["keys"], v, k=s["k"]
+    )
+
+
+def _fold(parts: tuple, keys: list[str]) -> tuple:
+    return (
+        parts[0].groupBy(*keys).agg(
+            F.kll_merge_agg_double(F.col("q_sketch")).alias("q_sketch"),
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+        ),
+    )
+
+
+_STORE = DeltaStore(
+    kind="quantile",
+    label="quantile store",
+    apply_name="apply_quantile_sketch_batch",
+    serve_name="serve_quantiles",
+    columns=(("q_sketch", "n_rows"),),
+    fold=_fold,
+    summarize=_summarize,
+    k_note="sketch accuracy must not vary across batches",
+)
 
 
 def apply_quantile_sketch_batch(
@@ -61,98 +85,10 @@ def apply_quantile_sketch_batch(
     number of summary rows written, or 0 when ``batch_id`` was
     already applied or the batch is empty. Factored out of the sink
     so the replay contract is unit-testable."""
-    store = store_path.rstrip("/")
-    default = {
-        "keys": keys,
-        "value_col": value_col,
-        "k": int(k),
-        "last_applied_batch": -1,
-        "base_upto": -1,
-    }
-    man = read_store_manifest(spark, store, _KIND) or default
-    if list(man["keys"]) != list(keys) or man["value_col"] != value_col:
-        raise ValueError(
-            "quantile store schema mismatch: built for "
-            f"({man['keys']}, {man['value_col']}), got ({keys}, "
-            f"{value_col})"
-        )
-    if int(k) != int(man["k"]):
-        raise ValueError(
-            f"quantile store built with k={man['k']}, got k={k} — "
-            "sketch accuracy must not vary across batches"
-        )
-    if batch_id <= int(man.get("last_applied_batch", -1)):
-        return 0
-    sk = quantile_rollup(
-        batch.filter(F.col(value_col).isNotNull()), keys, value_col, k=k
+    schema = {"keys": list(keys), "value_col": value_col, "k": int(k)}
+    return (
+        apply_batch(spark, _STORE, store_path, batch, batch_id, schema) or 0
     )
-    n = sk.count()
-    if n > 0:
-        sk.write.mode("overwrite").parquet(
-            f"{store}/summaries/batch={batch_id}"
-        )
-    # CAS commit updating only THIS writer's field (round 16 — ADVICE
-    # r15: the flat fresh-re-read narrowed but did not close the
-    # sink-vs-compact race; a compact() committing base_upto in
-    # between now conflicts and this commit replays fresh)
-    def _bump(m: dict) -> None:
-        m["last_applied_batch"] = int(batch_id)
-
-    update_store_manifest(spark, store, _KIND, _bump, default=default)
-    return int(n)
-
-
-def _committed_cells(spark, store: str, man: dict) -> DataFrame | None:
-    """The committed (keys..., q_sketch, n_rows) cell rows: the BASE
-    snapshot (if folded) plus summary versions in (base_upto,
-    watermark]. Dirs above the watermark or at-or-below base_upto are
-    excluded — reads never double-count or see half-applied state.
-    None when nothing has been committed at all."""
-    keys = list(man["keys"])
-    base_upto = int(man.get("base_upto", -1))
-    parts = []
-    if base_upto >= 0:
-        parts.append(
-            spark.read.parquet(f"{store}/base/upto={base_upto}").select(
-                *keys, "q_sketch", "n_rows"
-            )
-        )
-    # FS pre-check before the read (round 17 — VERDICT r16 #2): a
-    # fully-folded store legitimately has no summaries dir (or an empty
-    # one after the compaction sweep), and PROBING it with the reader
-    # posts a failed-execution event that any registered
-    # QueryExecutionListener (the ObservationManager's, once any
-    # Observation has run) re-raises as ERROR spam — so the expected
-    # no-summaries case short-circuits on fsutil.parquet_data_exists
-    # and the reader only runs against data known present; the
-    # error-class classification stays as the residual-race fallback
-    # (a compaction sweep between check and read).
-    from ..fsutil import parquet_data_exists
-
-    if not parquet_data_exists(spark, f"{store}/summaries"):
-        return parts[0] if parts else None
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{store}/summaries")
-            .parquet(f"{store}/summaries")
-            .filter(
-                (F.col("batch") > base_upto)
-                & (F.col("batch") <= int(man["last_applied_batch"]))
-            )
-            .select(*keys, "q_sketch", "n_rows")
-        )
-        parts.append(deltas)
-    except Exception as e:
-        # matched on the AnalysisException error class, not message
-        # substrings (ADVICE r15 low) — anything else propagates
-        if not is_missing_summaries_error(e):
-            raise
-        if base_upto < 0:
-            return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def serve_quantiles(
@@ -165,25 +101,7 @@ def serve_quantiles(
     merge the committed cell sketches (base ∪ post-watermark deltas)
     to ``keys`` (any subset of the stored cell keys) and evaluate the
     requested quantiles. O(stored sketches), never O(events)."""
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None:
-        raise FileNotFoundError(
-            f"no quantile store at {store} — start the sink (or "
-            "apply_quantile_sketch_batch) first"
-        )
-    if not set(keys) <= set(man["keys"]):
-        raise ValueError(
-            f"serve_quantiles keys {keys} must be a subset of the "
-            f"stored cell keys {man['keys']}"
-        )
-    cells = _committed_cells(spark, store, man)
-    if cells is None:
-        raise ValueError(
-            f"quantile store at {store} has a manifest "
-            f"(last_applied_batch={man.get('last_applied_batch')}) but no "
-            "summaries yet — every applied batch was empty"
-        )
+    _, (cells,) = served_parts(spark, _STORE, store_path, keys)
     return merge_quantile_rollup(cells, keys, quantiles=list(quantiles))
 
 
@@ -193,55 +111,11 @@ def compact_quantile_sketch(spark, store_path: str) -> int:
     landed since. ``n_rows`` accounting is EXACTLY preserved; the
     merged sketch's estimates stay within the KLL rank-error bound
     (KLL merge is associative within its guarantee — byte-identity
-    across merge orders is not promised, containment is). Protocol
-    (compact_topk_sketch's, crash-safe at every step): base write →
-    fresh-manifest ``base_upto`` switch → idempotent cleanup sweep.
-    Returns the number of summary versions folded."""
-    from ..fsutil import delete_path, list_dir_names
-
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None or int(man.get("last_applied_batch", -1)) < 0:
-        raise FileNotFoundError(
-            f"no quantile store at {store} — nothing to compact"
-        )
-    keys = list(man["keys"])
-    wm = int(man["last_applied_batch"])
-    old_base = int(man.get("base_upto", -1))
-    if wm > old_base:
-        cells = _committed_cells(spark, store, man)
-        if cells is None:
-            n_folded = 0
-            wm = old_base
-        else:
-            folded = cells.groupBy(*keys).agg(
-                F.kll_merge_agg_double(F.col("q_sketch")).alias("q_sketch"),
-                F.sum("n_rows").cast("bigint").alias("n_rows"),
-            )
-            folded.write.mode("overwrite").parquet(f"{store}/base/upto={wm}")
-            n_folded = wm - old_base
-
-            # CAS commit updating only THIS writer's field — a sink
-            # batch committing during the fold keeps its watermark
-            def _switch(m: dict) -> None:
-                m["base_upto"] = wm
-
-            update_store_manifest(spark, store, _KIND, _switch)
-    else:
-        n_folded = 0
-        wm = old_base
-    for name in list_dir_names(spark, f"{store}/summaries"):
-        if name.startswith("batch="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if b <= wm:
-                delete_path(spark, f"{store}/summaries/{name}")
-    for name in list_dir_names(spark, f"{store}/base"):
-        if name.startswith("upto=") and name != f"upto={wm}":
-            delete_path(spark, f"{store}/base/{name}")
-    return int(n_folded)
+    across merge orders is not promised, containment is). Crash-safe
+    base write → CAS ``base_upto`` switch → idempotent sweep
+    (:func:`.store_common.compact`). Returns the number of summary
+    versions folded."""
+    return compact(spark, _STORE, store_path)
 
 
 def start_quantile_sketch_sink(
@@ -259,18 +133,7 @@ def start_quantile_sketch_sink(
     quantile at any time with :func:`serve_quantiles`; run
     :func:`compact_quantile_sketch` periodically to keep the serve
     cost flat as batches accrue."""
-    spark = stream.sparkSession
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_quantile_sketch_batch(
-            spark, store_path, batch, batch_id, keys, value_col, k=k
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, checkpoint_dir, trigger_seconds, available_now,
+        apply_quantile_sketch_batch, store_path, keys, value_col, k=k,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -5,23 +5,17 @@ streaming/index.py is the streaming face of the persisted retrieval
 indexes).
 
 Shape: every micro-batch computes its OWN per-cell top-k summaries
-(batch-sized work, exact within the batch) and lands them under a
-VERSIONED directory keyed by the batch id —
-``summaries/batch=<id>/``, mode=overwrite — and the manifest's
-``last_applied_batch`` watermark advances LAST through the versioned
-CAS protocol (round 16 — streaming/store_common.py: commits are
-old-or-new atomic with no vanish window, and the sink-vs-compact
-manifest race is CLOSED, not just narrowed — a conflicting commit
-retries against the fresh snapshot, each writer mutating only its own
-fields). :func:`topk_sketch`
+(batch-sized work, exact within the batch) and lands them at
+``summaries/batch=<id>/`` through the shared batch-versioned delta
+store (streaming/store_common.py: versioned overwrite, then the CAS
+bump of the ``last_applied_batch`` watermark). :func:`topk_sketch`
 is deterministic (ties broken by value), so a crash between the
 summary write and the manifest bump replays the batch and OVERWRITES
 the directory with identical content — replays converge instead of
-appending duplicate summary rows (review round 15; the previous
-append-to-one-file layout made that crash window permanently inflate
-``count_lo`` with no rebuild path, since raw events are not retained
-and the stream checkpoint never re-delivers consumed batches). This
-is exactly streaming/state.py's exactly-once-effective protocol.
+appending duplicate summary rows (review round 15; raw events are not
+retained and the stream checkpoint never re-delivers consumed
+batches, so an appended duplicate would inflate ``count_lo`` for
+good).
 
 Serving merges the committed summaries with the
 :func:`..functions.sketches.merge_topk_sketch` machinery, whose error
@@ -31,22 +25,22 @@ just means several summary rows for that cell, and the merge's
 (pinned by the batch-side property test). No raw event is ever
 revisited: the store grows by O(cells × k) per batch, not O(events).
 
-Compaction (:func:`compact_topk_sketch`; round 15 — the delta-store
-answer to ``serve_topk`` paying O(applied batches) forever on a
-long-running stream, same stance as ``compact_state_durations``):
-fold every committed summary into ONE base snapshot. The trap the
-duration store does not have: a finished summary's per-cell
+Compaction (:func:`compact_topk_sketch`; round 15 — the answer to
+``serve_topk`` paying O(applied batches) forever on a long-running
+stream): fold every committed summary into ONE base snapshot. The
+trap the other stores do not have: a finished summary's per-cell
 ``dropped_max`` is a MAX-shaped bound, NOT plain-summable — folding
 summaries by re-truncating to a new (top, dropped_max) row would
-loosen the served bounds. The fold therefore persists the merge's
-DECOMPOSITION instead (:func:`..functions.sketches.
+loosen the served bounds. The store therefore reads and folds the
+merge's DECOMPOSITION (:func:`..functions.sketches.
 decompose_topk_sketch`): per-(cell, value) ``count_lo``/
-``present_err`` and per-cell ``total_err``/``n_rows`` — four plain
-sums over disjoint summary rows, which commute with any later
-coarsening. Serving reads base ∪ decomposed post-watermark deltas and
-produces BIT-IDENTICAL results before and after a compact (pinned).
-Base size is O(cells × distinct values that ever survived a batch
-top-k), independent of batch count.
+``present_err`` (``base/upto=<b>/values``) and per-cell
+``total_err``/``n_rows`` (``base/upto=<b>/cells``) — four plain sums
+over disjoint summary rows, which commute with any later coarsening.
+Serving reads base ∪ decomposed post-watermark deltas and produces
+BIT-IDENTICAL results before and after a compact (pinned). Base size
+is O(cells × distinct values that ever survived a batch top-k),
+independent of batch count.
 """
 
 from __future__ import annotations
@@ -61,12 +55,42 @@ from ..functions.sketches import (
     topk_sketch,
 )
 from .store_common import (
-    is_missing_summaries_error,
-    read_store_manifest,
-    update_store_manifest,
+    DeltaStore,
+    apply_batch,
+    compact,
+    served_parts,
+    start_sink,
 )
 
-_KIND = "sketch"
+
+def _fold(parts: tuple, keys: list[str]) -> tuple:
+    pv, cells = parts
+    return (
+        pv.groupBy(*keys, "value").agg(
+            F.sum("count_lo").cast("long").alias("count_lo"),
+            F.sum("present_err").cast("long").alias("present_err"),
+        ),
+        cells.groupBy(*keys).agg(
+            F.sum("total_err").cast("long").alias("total_err"),
+            F.sum("n_rows").cast("long").alias("n_rows"),
+        ),
+    )
+
+
+_STORE = DeltaStore(
+    kind="sketch",
+    label="topk-sketch store",
+    apply_name="apply_topk_sketch_batch",
+    serve_name="serve_topk",
+    columns=(("value", "count_lo", "present_err"), ("total_err", "n_rows")),
+    fold=_fold,
+    summarize=lambda batch, s: topk_sketch(
+        batch, s["keys"], s["value_col"], k=s["k"]
+    ),
+    decompose=decompose_topk_sketch,
+    base_parts=("values", "cells"),
+    k_note="per-cell truncation depth must not vary across batches",
+)
 
 
 def apply_topk_sketch_batch(
@@ -85,115 +109,10 @@ def apply_topk_sketch_batch(
     (manifest watermark) or the batch is empty. Factored out of the
     sink so the replay contract is unit-testable without a streaming
     harness."""
-    store = store_path.rstrip("/")
-    default = {
-        "keys": keys,
-        "value_col": value_col,
-        "k": int(k),
-        "last_applied_batch": -1,
-        "base_upto": -1,
-    }
-    man = read_store_manifest(spark, store, _KIND) or default
-    if list(man["keys"]) != list(keys) or man["value_col"] != value_col:
-        raise ValueError(
-            "topk-sketch store schema mismatch: built for "
-            f"({man['keys']}, {man['value_col']}), got ({keys}, "
-            f"{value_col})"
-        )
-    if int(k) != int(man["k"]):
-        raise ValueError(
-            f"topk-sketch store built with k={man['k']}, got k={k} — "
-            "per-cell truncation depth must not vary across batches"
-        )
-    if batch_id <= int(man.get("last_applied_batch", -1)):
-        return 0
-    sk = topk_sketch(batch, keys, value_col, k=k)
-    n = sk.count()
-    if n > 0:
-        sk.write.mode("overwrite").parquet(
-            f"{store}/summaries/batch={batch_id}"
-        )
-    # CAS commit updating only THIS writer's field (round 16 — ADVICE
-    # r15: the previous fresh-re-read-then-flat-write narrowed but did
-    # not close the sink-vs-compact race; the CAS retry loop does — a
-    # compact() committing ``base_upto`` in between now surfaces as a
-    # version conflict and this commit replays against the fresh copy)
-    def _bump(m: dict) -> None:
-        m["last_applied_batch"] = int(batch_id)
-
-    update_store_manifest(spark, store, _KIND, _bump, default=default)
-    return int(n)
-
-
-def _committed_parts(
-    spark, store: str, man: dict
-) -> tuple[DataFrame, DataFrame] | None:
-    """The committed merge decomposition — (per_value, cells) at the
-    STORED key granularity: the BASE snapshot (if a compaction has
-    folded one) unioned with the decomposition of the summary
-    versions in (base_upto, watermark]. Versions above the watermark
-    (a crashed, not-yet-committed batch) and at-or-below base_upto
-    (already folded; dirs may outlive a crashed cleanup) are both
-    excluded, so reads never double-count or see half-applied state.
-    None when nothing has been committed at all (every applied batch
-    was empty and no base exists)."""
-    keys = list(man["keys"])
-    base_upto = int(man.get("base_upto", -1))
-    pv_parts, cell_parts = [], []
-    if base_upto >= 0:
-        base = f"{store}/base/upto={base_upto}"
-        pv_parts.append(
-            spark.read.parquet(f"{base}/values").select(
-                *keys, "value", "count_lo", "present_err"
-            )
-        )
-        cell_parts.append(
-            spark.read.parquet(f"{base}/cells").select(
-                *keys, "total_err", "n_rows"
-            )
-        )
-    # FS pre-check before the read (round 17 — VERDICT r16 #2): a
-    # fully-folded store legitimately has no summaries dir (or an
-    # empty one after the compaction sweep), and PROBING it with the
-    # reader posts a failed-execution event that any registered
-    # QueryExecutionListener (the ObservationManager's, once any
-    # Observation has run in the session) re-raises as
-    # 'ExecutionListenerBus: Listener threw an exception' ERROR spam —
-    # the expected no-summaries case short-circuits on an FS walk and
-    # the reader only runs against data known present; the error-class
-    # classification stays as the residual-race fallback (a compaction
-    # sweep landing between the check and the read).
-    from ..fsutil import parquet_data_exists
-
-    if not parquet_data_exists(spark, f"{store}/summaries"):
-        return (pv_parts[0], cell_parts[0]) if pv_parts else None
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{store}/summaries")
-            .parquet(f"{store}/summaries")
-            .filter(
-                (F.col("batch") > base_upto)
-                & (F.col("batch") <= int(man["last_applied_batch"]))
-            )
-            .drop("batch")
-        )
-        dpv, dcells = decompose_topk_sketch(deltas, keys)
-        pv_parts.append(dpv.select(*keys, "value", "count_lo", "present_err"))
-        cell_parts.append(dcells.select(*keys, "total_err", "n_rows"))
-    except Exception as e:
-        # matched on the AnalysisException error class, not message
-        # substrings (ADVICE r15 low) — anything else propagates
-        if not is_missing_summaries_error(e):
-            raise
-        if base_upto < 0:
-            return None
-    pv = pv_parts[0]
-    cells = cell_parts[0]
-    for p in pv_parts[1:]:
-        pv = pv.unionByName(p)
-    for p in cell_parts[1:]:
-        cells = cells.unionByName(p)
-    return pv, cells
+    schema = {"keys": list(keys), "value_col": value_col, "k": int(k)}
+    return (
+        apply_batch(spark, _STORE, store_path, batch, batch_id, schema) or 0
+    )
 
 
 def serve_topk(
@@ -210,110 +129,20 @@ def serve_topk(
     a compact — never O(all batches). Raises with the honest state
     when the sink has not landed any summaries yet (manifest missing,
     or only empty batches so far)."""
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None:
-        raise FileNotFoundError(
-            f"no topk-sketch store at {store} — start the sink (or "
-            "apply_topk_sketch_batch) first"
-        )
-    if not set(keys) <= set(man["keys"]):
-        raise ValueError(
-            f"serve_topk keys {keys} must be a subset of the stored "
-            f"cell keys {man['keys']}"
-        )
-    parts = _committed_parts(spark, store, man)
-    if parts is None:
-        raise ValueError(
-            f"topk-sketch store at {store} has a manifest "
-            f"(last_applied_batch={man.get('last_applied_batch')}) but no "
-            "summaries yet — every applied batch was empty"
-        )
-    pv, cells = parts
+    _, (pv, cells) = served_parts(spark, _STORE, store_path, keys)
     return combine_topk_decomposition(pv, cells, keys, k=k)
 
 
 def compact_topk_sketch(spark, store_path: str) -> int:
-    """Fold every committed summary version into ONE base snapshot
-    (round 15): serving afterwards reads base + the summaries landed
-    since, with BIT-IDENTICAL results (pinned) — the base persists the
-    merge DECOMPOSITION (see module docstring: ``dropped_max`` is not
-    plain-summable, the four decomposed sums are).
-
-    Protocol, crash-safe at every step (compact_state_durations'):
-
-    1. write the folded decomposition to ``base/upto=<watermark>/
-       {values,cells}`` — overwrite-idempotent, invisible until the
-       manifest points at it;
-    2. bump the manifest's ``base_upto`` (the commit point: serving
-       switches atomically; already-folded summary versions are
-       EXCLUDED by the read filter even while their dirs still exist),
-       merging into a FRESH manifest read so a sink batch committing
-       during the fold is never rolled back;
-    3. cleanup — delete folded summary dirs and the previous base.
-       A crash mid-cleanup leaves dead dirs the read filter ignores;
-       the next compact() sweeps them.
-
-    Returns the number of summary versions folded (watermark delta).
-    Single writer vs other maintenance: do not run two compacts
-    concurrently — the sink itself may keep committing (its manifest
-    field is merged, never clobbered)."""
-    from ..fsutil import delete_path, list_dir_names
-
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None or int(man.get("last_applied_batch", -1)) < 0:
-        raise FileNotFoundError(
-            f"no topk-sketch store at {store} — nothing to compact"
-        )
-    keys = list(man["keys"])
-    wm = int(man["last_applied_batch"])
-    old_base = int(man.get("base_upto", -1))
-    if wm > old_base:
-        parts = _committed_parts(spark, store, man)
-        if parts is None:
-            # manifest exists but every applied batch was empty:
-            # nothing to fold (and nothing to clean)
-            n_folded = 0
-            wm = old_base
-        else:
-            pv, cells = parts
-            folded_pv = pv.groupBy(*keys, "value").agg(
-                F.sum("count_lo").cast("long").alias("count_lo"),
-                F.sum("present_err").cast("long").alias("present_err"),
-            )
-            folded_cells = cells.groupBy(*keys).agg(
-                F.sum("total_err").cast("long").alias("total_err"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-            )
-            base = f"{store}/base/upto={wm}"
-            folded_pv.write.mode("overwrite").parquet(f"{base}/values")
-            folded_cells.write.mode("overwrite").parquet(f"{base}/cells")
-            n_folded = wm - old_base
-
-            # CAS commit updating only THIS writer's field — a sink
-            # batch committing during the fold keeps its watermark
-            def _switch(m: dict) -> None:
-                m["base_upto"] = wm
-
-            update_store_manifest(spark, store, _KIND, _switch)
-    else:
-        # nothing new to fold — still run the cleanup sweep below (a
-        # crash in an earlier compaction's step 3 leaves dead dirs)
-        n_folded = 0
-        wm = old_base
-    for name in list_dir_names(spark, f"{store}/summaries"):
-        if name.startswith("batch="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if b <= wm:
-                delete_path(spark, f"{store}/summaries/{name}")
-    for name in list_dir_names(spark, f"{store}/base"):
-        if name.startswith("upto=") and name != f"upto={wm}":
-            delete_path(spark, f"{store}/base/{name}")
-    return int(n_folded)
+    """Fold every committed summary version into ONE base snapshot of
+    the merge DECOMPOSITION (see module docstring: ``dropped_max`` is
+    not plain-summable, the four decomposed sums are): serving
+    afterwards reads base + the summaries landed since, with
+    BIT-IDENTICAL results (pinned). Crash-safe base write → CAS
+    ``base_upto`` switch → idempotent sweep
+    (:func:`.store_common.compact`). Returns the number of summary
+    versions folded."""
+    return compact(spark, _STORE, store_path)
 
 
 def start_topk_sketch_sink(
@@ -334,18 +163,7 @@ def start_topk_sketch_sink(
     exactly-once EFFECTIVE application (replays overwrite
     identically). Run :func:`compact_topk_sketch` periodically to keep
     the serve cost flat as batches accrue."""
-    spark = stream.sparkSession
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_topk_sketch_batch(
-            spark, store_path, batch, batch_id, keys, value_col, k=k
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, checkpoint_dir, trigger_seconds, available_now,
+        apply_topk_sketch_batch, store_path, keys, value_col, k=k,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

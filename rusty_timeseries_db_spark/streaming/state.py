@@ -20,12 +20,10 @@ VERSIONED locations keyed by the batch id —
   mode=overwrite;
 
 and the manifest's ``last_applied_batch`` advances LAST, through the
-versioned CAS commit of streaming/store_common.py (round 16:
-old-or-new atomic, no vanish window; sink-vs-compact conflicts retry
-against the fresh snapshot, each writer mutating only its own
-fields). A crash at any point before the manifest bump replays the
-batch against the
-UNCHANGED previous carryover version and overwrites both outputs with
+shared batch-versioned delta store (streaming/store_common.py, which
+also owns the serve read and compaction). A crash at any point before
+the manifest bump replays the batch against the UNCHANGED previous
+carryover version and overwrites both outputs with
 identical content — replays converge instead of double-counting, with
 no CAS ledger needed. Carryover versions older than the replay window
 (current + predecessor) are pruned after each commit, so ``last_obs``
@@ -51,13 +49,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .. import fsutil
 from .store_common import (
-    is_missing_summaries_error,
-    read_store_manifest,
-    update_store_manifest,
+    DeltaStore,
+    apply_batch,
+    compact,
+    served_parts,
+    start_sink,
 )
 
-_KIND = "state"
+
+def _fold(parts: tuple, keys: list[str]) -> tuple:
+    return (
+        parts[0].groupBy(*keys, "state").agg(
+            F.sum("state_us").cast("long").alias("state_us"),
+            F.sum("n_intervals").cast("long").alias("n_intervals"),
+        ),
+    )
+
+
+_STORE = DeltaStore(
+    kind="state",
+    label="state-duration store",
+    apply_name="apply_state_durations_batch",
+    columns=(("state", "state_us", "n_intervals"),),
+    fold=_fold,
+    data_dir="deltas",
+    empty_error=FileNotFoundError,
+)
 
 
 def apply_state_durations_batch(
@@ -73,222 +92,122 @@ def apply_state_durations_batch(
     """Apply ONE micro-batch; returns ``{"intervals": n, "late": m}``
     (0/0 for a replayed or empty batch). Factored out of the sink so
     the replay-convergence contract is unit-testable."""
-    store = store_path.rstrip("/")
-    default = {
-        "key": key, "state": state, "ts": ts,
-        "last_applied_batch": -1,
-    }
-    man = read_store_manifest(spark, store, _KIND) or default
-    if [man["key"], man["state"], man["ts"]] != [key, state, ts]:
-        raise ValueError(
-            "state-duration store schema mismatch: built for "
-            f"({man['key']}, {man['state']}, {man['ts']}), got "
-            f"({key}, {state}, {ts})"
-        )
-    prev = int(man.get("last_applied_batch", -1))
-    if batch_id <= prev:
-        return {"intervals": 0, "late": 0}
-
-    cols = [F.col(key), F.col(state).alias("_st"), F.col(ts).alias("_ts")]
     tb = order_tiebreak
-    if tb is not None:
-        cols.append(F.col(tb).cast("long").alias("_tb"))
-    else:
-        cols.append(F.lit(0).alias("_tb"))
-    rows = batch.select(*cols)
 
-    carry = None
-    flagged = None
-    if prev >= 0:
-        carry = spark.read.parquet(f"{store}/last_obs/batch={prev}")
-        # late rows would build negative intervals — drop and count.
-        # STRICTLY older only when no tiebreak exists: a new event
-        # tied with the carryover timestamp is genuinely new data (a
-        # zero-length interval, not a negative one) and dropping it
-        # would break stream==batch parity (review round 14). With a
-        # tiebreak the tied-below comparison additionally drops exact
-        # duplicates of the carryover row.
-        bounds = carry.select(
-            F.col(key),
-            F.col("_ts").alias("_c_ts"),
-            F.col("_tb").alias("_c_tb"),
+    def land(store: str, man: dict) -> "tuple[dict, dict]":
+        prev = int(man["last_applied_batch"])
+        tb_col = F.col(tb).cast("long") if tb is not None else F.lit(0)
+        rows = batch.select(
+            F.col(key), F.col(state).alias("_st"), F.col(ts).alias("_ts"),
+            tb_col.alias("_tb"),
         )
-        flagged = rows.join(
-            F.broadcast(bounds), on=key, how="left"
-        ).persist()
-        if tb is not None:
-            late_cond = F.col("_c_ts").isNotNull() & (
-                (F.col("_ts") < F.col("_c_ts"))
-                | (
+
+        carry = flagged = None
+        n_late = 0
+        if prev >= 0:
+            carry = spark.read.parquet(f"{store}/last_obs/batch={prev}")
+            # late rows would build negative intervals — drop and
+            # count. STRICTLY older only when no tiebreak exists: a new
+            # event tied with the carryover timestamp is genuinely new
+            # data (a zero-length interval, not a negative one) and
+            # dropping it would break stream==batch parity (review
+            # round 14). With a tiebreak the tied-below comparison
+            # additionally drops exact duplicates of the carryover row.
+            bounds = carry.select(
+                F.col(key),
+                F.col("_ts").alias("_c_ts"),
+                F.col("_tb").alias("_c_tb"),
+            )
+            flagged = rows.join(
+                F.broadcast(bounds), on=key, how="left"
+            ).persist()
+            older = F.col("_ts") < F.col("_c_ts")
+            if tb is not None:
+                older = older | (
                     (F.col("_ts") == F.col("_c_ts"))
                     & (F.col("_tb") <= F.col("_c_tb"))
                 )
-            )
-        else:
-            late_cond = F.col("_c_ts").isNotNull() & (
-                F.col("_ts") < F.col("_c_ts")
-            )
-        n_late = flagged.filter(late_cond).count()
-        rows = flagged.filter(~late_cond).drop("_c_ts", "_c_tb")
-    else:
-        n_late = 0
+            late_cond = F.col("_c_ts").isNotNull() & older
+            n_late = flagged.filter(late_cond).count()
+            rows = flagged.filter(~late_cond).drop("_c_ts", "_c_tb")
 
-    # several actions read this lineage (delta write, carryover
-    # write); persist once instead of recomputing the join per action
-    inp = (rows if carry is None else carry.unionByName(rows)).persist()
-    # consecutive intervals over carryover ∪ batch: the batch's own
-    # pairs plus the boundary bridge, each counted exactly once
-    w = Window.partitionBy(key).orderBy("_ts", "_tb")
-    dt_us = F.unix_micros(F.lead("_ts").over(w)) - F.unix_micros(
-        F.col("_ts")
-    )
-    deltas = (
-        inp.select(F.col(key), F.col("_st"), dt_us.alias("_dt"))
-        .filter(F.col("_dt").isNotNull())
-        .groupBy(key, "_st")
-        .agg(
-            F.sum("_dt").cast("long").alias("state_us"),
-            F.count(F.lit(1)).cast("long").alias("n_intervals"),
+        # several actions read this lineage (delta write, carryover
+        # write); persist once instead of recomputing the join per
+        # action
+        inp = (rows if carry is None else carry.unionByName(rows)).persist()
+        # consecutive intervals over carryover ∪ batch: the batch's own
+        # pairs plus the boundary bridge, each counted exactly once
+        w = Window.partitionBy(key).orderBy("_ts", "_tb")
+        dt_us = F.unix_micros(F.lead("_ts").over(w)) - F.unix_micros(
+            F.col("_ts")
         )
-        .select(
-            F.col(key), F.col("_st").alias("state"),
-            "state_us", "n_intervals",
+        deltas = (
+            inp.select(F.col(key), F.col("_st"), dt_us.alias("_dt"))
+            .filter(F.col("_dt").isNotNull())
+            .groupBy(key, "_st")
+            .agg(
+                F.sum("_dt").cast("long").alias("state_us"),
+                F.count(F.lit(1)).cast("long").alias("n_intervals"),
+            )
+            .select(
+                F.col(key), F.col("_st").alias("state"),
+                "state_us", "n_intervals",
+            )
         )
-    )
-    try:
-        # versioned, overwrite-idempotent outputs; manifest bump LAST
-        deltas.write.mode("overwrite").parquet(
-            f"{store}/deltas/batch={batch_id}"
-        )
-        # interval count from the WRITTEN output — no extra pass over
-        # the input lineage
-        n_intervals = (
-            spark.read.parquet(f"{store}/deltas/batch={batch_id}")
-            .agg(F.coalesce(F.sum("n_intervals"), F.lit(0)))
-            .first()[0]
-        )
-        last_w = Window.partitionBy(key).orderBy(
-            F.col("_ts").desc(), F.col("_tb").desc()
-        )
-        new_last = (
-            inp.withColumn("_rn", F.row_number().over(last_w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        new_last.write.mode("overwrite").parquet(
-            f"{store}/last_obs/batch={batch_id}"
-        )
+        try:
+            # versioned, overwrite-idempotent outputs; manifest bump
+            # LAST (by apply_batch, after this returns)
+            deltas.write.mode("overwrite").parquet(
+                f"{store}/deltas/batch={batch_id}"
+            )
+            # interval count from the WRITTEN output — no extra pass
+            # over the input lineage
+            n_intervals = (
+                spark.read.parquet(f"{store}/deltas/batch={batch_id}")
+                .agg(F.coalesce(F.sum("n_intervals"), F.lit(0)))
+                .first()[0]
+            )
+            last_w = Window.partitionBy(key).orderBy(
+                F.col("_ts").desc(), F.col("_tb").desc()
+            )
+            new_last = (
+                inp.withColumn("_rn", F.row_number().over(last_w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+            new_last.write.mode("overwrite").parquet(
+                f"{store}/last_obs/batch={batch_id}"
+            )
+        finally:
+            inp.unpersist()
+            if flagged is not None:
+                flagged.unpersist()
         # prune carryover versions no longer reachable: keep the one
         # just written and its predecessor (the replay window — a
         # crash BEFORE the manifest bump still reads `prev`; anything
         # older is dead weight that would otherwise grow
         # O(batches x keys))
-        from ..fsutil import delete_path
-
         keep = {int(batch_id), prev}
         for v in man.get("last_obs_versions", []):
             if int(v) not in keep:
-                delete_path(spark, f"{store}/last_obs/batch={v}")
+                fsutil.delete_path(spark, f"{store}/last_obs/batch={v}")
+        stats = {"intervals": int(n_intervals), "late": int(n_late)}
+        return stats, {"last_obs_versions": sorted(v for v in keep if v >= 0)}
 
-        # CAS commit updating only THIS writer's fields (round 16 —
-        # ADVICE r15: the flat fresh-re-read narrowed but did not
-        # close the sink-vs-compact race; a compact() committing
-        # ``base_upto`` in between now conflicts and this commit
-        # replays against the fresh copy)
-        def _bump(m: dict) -> None:
-            m["last_applied_batch"] = int(batch_id)
-            m["last_obs_versions"] = sorted(v for v in keep if v >= 0)
-
-        update_store_manifest(spark, store, _KIND, _bump, default=default)
-    finally:
-        inp.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
-    return {"intervals": int(n_intervals), "late": int(n_late)}
-
-
-def _committed_increments(spark, store: str, man: dict) -> DataFrame:
-    """The committed (key, state, state_us, n_intervals) increment
-    rows: the BASE snapshot (if a compaction has folded one) plus the
-    delta versions in (base_upto, watermark]. Versions above the
-    watermark (a crashed, not-yet-committed batch) and at-or-below
-    base_upto (already folded; the dirs may or may not still exist —
-    a crash between the manifest bump and the cleanup leaves some)
-    are both excluded, so reads never double-count or see
-    half-applied state."""
-    key = man["key"]
-    base_upto = int(man.get("base_upto", -1))
-    parts = []
-    if base_upto >= 0:
-        parts.append(
-            spark.read.parquet(f"{store}/base/upto={base_upto}").select(
-                key, "state", "state_us", "n_intervals"
-            )
-        )
-    # FS pre-check before the read (round 17 — VERDICT r16 #2): a
-    # fully-folded store legitimately has no deltas dir (or an empty
-    # one after the compaction sweep), and PROBING it with the reader
-    # posts a failed-execution event that any registered
-    # QueryExecutionListener (the ObservationManager's, once any
-    # Observation has run) re-raises as ERROR spam — so the expected
-    # no-deltas case short-circuits on fsutil.parquet_data_exists
-    # and the reader only runs against data known present; the
-    # error-class classification stays as the residual-race fallback
-    # (a compaction sweep between check and read).
-    from ..fsutil import parquet_data_exists
-
-    if not parquet_data_exists(spark, f"{store}/deltas"):
-        if base_upto < 0:
-            raise FileNotFoundError(
-                f"state-duration store at {store} has a manifest but "
-                "no delta data yet — every applied batch was empty"
-            )
-        return parts[0]
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{store}/deltas")
-            .parquet(f"{store}/deltas")
-            .filter(
-                (F.col("batch") > base_upto)
-                & (F.col("batch") <= int(man["last_applied_batch"]))
-            )
-            .select(key, "state", "state_us", "n_intervals")
-        )
-        parts.append(deltas)
-    except Exception as e:
-        # a fully-folded store legitimately has no deltas dir (or an
-        # empty one after the compaction cleanup — schema inference
-        # then fails rather than PATH_NOT_FOUND); matched on the
-        # AnalysisException error class, not message substrings
-        # (ADVICE r15 low) — anything else propagates as itself
-        if not is_missing_summaries_error(e) or base_upto < 0:
-            raise
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    schema = {"key": key, "state": state, "ts": ts}
+    got = apply_batch(
+        spark, _STORE, store_path, batch, batch_id, schema, land
+    )
+    return got or {"intervals": 0, "late": 0}
 
 
 def serve_state_durations(spark, store_path: str) -> DataFrame:
     """Current per-(key, state) totals + per-key share — the batch
     operator's output shape, recomputed from the committed base +
-    delta increments (see ``_committed_increments``)."""
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None or int(man.get("last_applied_batch", -1)) < 0:
-        raise FileNotFoundError(
-            f"no state-duration store at {store} — start the sink (or "
-            "apply_state_durations_batch) first"
-        )
+    delta increments."""
+    man, parts = served_parts(spark, _STORE, store_path)
     key = man["key"]
-    agg = (
-        _committed_increments(spark, store, man)
-        .groupBy(key, "state")
-        .agg(
-            F.sum("state_us").cast("long").alias("state_us"),
-            F.sum("n_intervals").cast("long").alias("n_intervals"),
-        )
-    )
+    (agg,) = _fold(parts, [key])
     total = F.sum("state_us").over(Window.partitionBy(key))
     return agg.select(
         F.col(key), "state", "state_us", "n_intervals",
@@ -315,22 +234,11 @@ def start_state_durations_sink(
     """Maintain the duration store from an event stream: each
     micro-batch runs :func:`apply_state_durations_batch`; query
     current totals any time with :func:`serve_state_durations`."""
-    spark = stream.sparkSession
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_state_durations_batch(
-            spark, store_path, batch, batch_id, key, state, ts,
-            order_tiebreak=order_tiebreak,
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, checkpoint_dir, trigger_seconds, available_now,
+        apply_state_durations_batch, store_path, key, state, ts,
+        order_tiebreak=order_tiebreak,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def compact_state_durations(spark, store_path: str) -> int:
@@ -339,79 +247,9 @@ def compact_state_durations(spark, store_path: str) -> int:
     O(applied batches) — the Bm25Index/IvfIndex compact() stance
     applied to the duration store): serving afterwards reads base +
     the deltas landed since, with IDENTICAL totals (pinned).
-
-    Protocol, crash-safe at every step:
-
-    1. write the folded totals to ``base/upto=<watermark>`` —
-       overwrite-idempotent, invisible until the manifest points at
-       it;
-    2. bump the manifest's ``base_upto`` (the commit point: serving
-       switches to base + post-watermark deltas atomically, and
-       already-folded delta versions are EXCLUDED by the read filter
-       even while their dirs still exist);
-    3. cleanup — delete folded delta dirs and the previous base.
-       A crash mid-cleanup leaves dead dirs the read filter ignores;
-       the next compact() sweeps them.
-
-    Returns the number of delta versions folded. Concurrent with the
-    sink: do not run while a micro-batch is mid-apply (the same
-    single-writer contract every index maintenance call has) — the
-    sink's own outputs land at versions above the watermark this
-    compaction freezes, so a batch committed AFTER step 2 is never
-    folded or dropped.
-    """
-    from ..fsutil import delete_path, list_dir_names
-
-    store = store_path.rstrip("/")
-    man = read_store_manifest(spark, store, _KIND)
-    if man is None or int(man.get("last_applied_batch", -1)) < 0:
-        raise FileNotFoundError(
-            f"no state-duration store at {store} — nothing to compact"
-        )
-    key = man["key"]
-    wm = int(man["last_applied_batch"])
-    old_base = int(man.get("base_upto", -1))
-    if wm > old_base:
-        folded = (
-            _committed_increments(spark, store, man)
-            .groupBy(key, "state")
-            .agg(
-                F.sum("state_us").cast("long").alias("state_us"),
-                F.sum("n_intervals").cast("long").alias("n_intervals"),
-            )
-        )
-        folded.write.mode("overwrite").parquet(f"{store}/base/upto={wm}")
-        n_folded = wm - old_base
-
-        # CAS commit updating ONLY base_upto: a sink micro-batch
-        # committing between this function's opening read and here
-        # would otherwise get its last_applied_batch/last_obs_versions
-        # silently rolled back — and since the stream checkpoint has
-        # already advanced, the batch would never be replayed (ADVICE
-        # r14; the r15 flat fresh-re-read narrowed the window, the r16
-        # CAS retry loop closes it). The fold itself only covered
-        # deltas ≤ wm, so a concurrently-committed newer batch stays
-        # above base_upto and keeps serving.
-        def _switch(m: dict) -> None:
-            m["base_upto"] = wm
-
-        update_store_manifest(spark, store, _KIND, _switch)
-    else:
-        # nothing new to fold — still run the cleanup sweep below (a
-        # crash in an earlier compaction's step 3 leaves dead dirs)
-        n_folded = 0
-        wm = old_base
-    # cleanup (idempotent; a crash here is healed by the read filter
-    # and swept by the next compact)
-    for name in list_dir_names(spark, f"{store}/deltas"):
-        if name.startswith("batch="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if b <= wm:
-                delete_path(spark, f"{store}/deltas/{name}")
-    for name in list_dir_names(spark, f"{store}/base"):
-        if name.startswith("upto=") and name != f"upto={wm}":
-            delete_path(spark, f"{store}/base/{name}")
-    return int(n_folded)
+    Crash-safe base write → CAS ``base_upto`` switch → idempotent
+    sweep (:func:`.store_common.compact`): the CAS switch never rolls
+    back a sink batch that committed during the fold — the stream
+    checkpoint has already advanced past it, so it would be lost for
+    good (ADVICE r14). Returns the number of delta versions folded."""
+    return compact(spark, _STORE, store_path)

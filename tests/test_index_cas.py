@@ -218,37 +218,6 @@ def test_ivf_concurrent_add_conflicts_not_clobbers(spark, tmp_path):
     assert man["n_added"] == 1
 
 
-def test_legacy_flat_manifest_migrates_on_first_commit(spark, tmp_path):
-    """A pre-r15 index (flat ``<index>.bm25.json`` file) reads fine,
-    and the first mutation migrates it to the versioned sibling dir —
-    retiring the flat file so no reader can see stale state."""
-    import os
-
-    from rusty_timeseries_db_spark.fsutil import (
-        read_json_manifest,
-        write_json_manifest,
-    )
-
-    path = str(tmp_path / "bm25")
-    idx = Bm25Index(spark, path).build(_docs(spark))
-    # simulate the legacy layout: move the committed manifest back to
-    # the flat file and drop the versioned dir
-    import shutil
-
-    man = idx._manifest()
-    shutil.rmtree(idx._manifest_dir)
-    write_json_manifest(spark, idx.manifest_path, man)
-    assert idx._read_manifest_cas() == (None, man)  # legacy fallback
-    assert idx._manifest() == man  # reads keep working
-
-    idx.add(_docs(spark, [(10, "first post-migration write")]))
-    # versioned dir now holds the commit; the flat file is retired
-    assert os.path.isdir(idx._manifest_dir)
-    assert read_json_manifest(spark, idx.manifest_path) is None
-    assert not os.path.exists(idx.manifest_path)
-    assert idx._manifest()["n_docs"] == len(DOCS) + 1
-
-
 def test_ivf_compact_vs_add_raises_before_touching_data(spark, tmp_path):
     """IvfIndex.compact mirrors the Bm25 pre-swap CAS re-check
     (ADVICE r16): an add() landing during compact's pre-swap

@@ -266,6 +266,7 @@ def test_max_cells_guard_counts_null_levels(spark):
 
     from rusty_timeseries_db_spark.operators.profile import (
         chi_square_cells,
+        pmi_cells,
     )
 
     rows = [("x", "p"), ("y", "q"), (None, "p"), ("x", "q"), (None, "q")]
@@ -273,6 +274,11 @@ def test_max_cells_guard_counts_null_levels(spark):
     with pytest.raises(ValueError, match="3 x 2 cells"):
         chi_square_cells(df, "a", "b", max_cells=5)
     assert chi_square_cells(df, "a", "b", max_cells=6).count() == 6
+    # empty input: 0 x 0 cells, so both scans return no rows instead of
+    # failing on the guard's NULL dims
+    empty = df.limit(0)
+    assert chi_square_cells(empty, "a", "b").count() == 0
+    assert pmi_cells(empty, "a", "b").count() == 0
 
 
 # ---------------------------------------------------------------- round 14

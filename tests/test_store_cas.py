@@ -5,10 +5,9 @@ a bounded retry-on-conflict loop (``store_common.
 update_store_manifest``). Unlike the persisted indexes' serialize-or-
 RAISE contract, the sink and the compactor are COOPERATING writers —
 each mutates only its own fields — so a conflict retries against the
-fresh snapshot and BOTH commits survive; the flat-manifest
+fresh snapshot and BOTH commits survive; and the flat-manifest
 delete-then-rename vanish window is gone (versioned reads are
-old-or-new atomic); and a legacy flat ``<store>.<kind>.json`` file
-migrates in place on the first commit."""
+old-or-new atomic)."""
 
 from __future__ import annotations
 
@@ -16,17 +15,14 @@ from collections import Counter
 
 import pytest
 
-import rusty_timeseries_db_spark.streaming.store_common as sc
+import rusty_timeseries_db_spark.fsutil as fsutil
 from rusty_timeseries_db_spark.streaming.sketch import (
     apply_topk_sketch_batch,
     compact_topk_sketch,
     serve_topk,
 )
 from rusty_timeseries_db_spark.streaming.store_common import (
-    legacy_manifest_path,
-    manifest_dir,
     read_store_manifest,
-    read_store_manifest_cas,
     update_store_manifest,
 )
 
@@ -53,27 +49,27 @@ def test_conflict_between_cas_read_and_write_retries(spark, tmp_path):
     apply_topk_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v", k=2)
     apply_topk_sketch_batch(spark, store, _df(spark, b1), 1, ["g"], "v", k=2)
 
-    real = sc.read_store_manifest_cas
+    real = fsutil.read_versioned_manifest_versioned
     calls = {"n": 0}
 
-    def hooked(spark_, store_, kind_):
-        got = real(spark_, store_, kind_)
+    def hooked(spark_, dir_, stem_):
+        got = real(spark_, dir_, stem_)
         calls["n"] += 1
         # call 1 is compact's opening read; call 2 is the CAS loop's —
         # fire the interleaved sink commit AFTER that read returns, so
         # compact's first write is guaranteed stale
         if calls["n"] == 2:
-            sc.read_store_manifest_cas = real
+            fsutil.read_versioned_manifest_versioned = real
             apply_topk_sketch_batch(
                 spark, store, _df(spark, b2), 2, ["g"], "v", k=2
             )
         return got
 
-    sc.read_store_manifest_cas = hooked
+    fsutil.read_versioned_manifest_versioned = hooked
     try:
         assert compact_topk_sketch(spark, store) == 2
     finally:
-        sc.read_store_manifest_cas = real
+        fsutil.read_versioned_manifest_versioned = real
 
     man = read_store_manifest(spark, store, "sketch")
     # the interleaved batch-2 commit survived compact's retried write…
@@ -92,23 +88,19 @@ def test_cas_exhaustion_raises_instead_of_spinning(spark, tmp_path):
     """A writer that loses the CAS race on every attempt (a hostile
     tight-loop committer) gets an honest IOError after the bounded
     retries, never a silent clobber or an infinite spin."""
-    from rusty_timeseries_db_spark.fsutil import write_versioned_manifest
-
     store = str(tmp_path / "hh")
     apply_topk_sketch_batch(spark, store, _df(spark, ROWS), 0, ["g"], "v", k=2)
 
-    real = sc.read_store_manifest_cas
+    real = fsutil.read_versioned_manifest_versioned
 
-    def hooked(spark_, store_, kind_):
-        got = real(spark_, store_, kind_)
+    def hooked(spark_, dir_, stem_):
+        got = real(spark_, dir_, stem_)
         # bump the committed version after EVERY read → every CAS
         # write in the loop sees a moved token
-        write_versioned_manifest(
-            spark_, manifest_dir(store_, kind_), "manifest", dict(got[1])
-        )
+        fsutil.write_versioned_manifest(spark_, dir_, stem_, dict(got[1]))
         return got
 
-    sc.read_store_manifest_cas = hooked
+    fsutil.read_versioned_manifest_versioned = hooked
     try:
         with pytest.raises(IOError, match="CAS conflicts"):
             update_store_manifest(
@@ -116,41 +108,8 @@ def test_cas_exhaustion_raises_instead_of_spinning(spark, tmp_path):
                 lambda m: m.__setitem__("last_applied_batch", 99),
             )
     finally:
-        sc.read_store_manifest_cas = real
+        fsutil.read_versioned_manifest_versioned = real
     # the mutation was never applied from a stale snapshot
     assert read_store_manifest(spark, store, "sketch")[
         "last_applied_batch"
     ] == 0
-
-
-def test_legacy_flat_manifest_migrates_on_first_commit(spark, tmp_path):
-    """A pre-r16 store (flat ``<store>.sketch.json``) reads through
-    the fallback with CAS token None, serves correctly, and the first
-    commit migrates it to the versioned sibling dir — retiring the
-    flat file so no reader can see stale state (the index_common
-    migration contract)."""
-    import os
-    import shutil
-
-    from rusty_timeseries_db_spark.fsutil import write_json_manifest
-
-    store = str(tmp_path / "hh")
-    b0, b1 = ROWS[::2], ROWS[1::2]
-    apply_topk_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v", k=2)
-    man = read_store_manifest(spark, store, "sketch")
-
-    # simulate the legacy layout: flat file only, no versioned dir
-    shutil.rmtree(manifest_dir(store, "sketch"))
-    write_json_manifest(spark, legacy_manifest_path(store, "sketch"), man)
-    assert read_store_manifest_cas(spark, store, "sketch") == (None, man)
-    assert serve_topk(spark, store, ["g"]).count() > 0  # fallback serves
-
-    apply_topk_sketch_batch(spark, store, _df(spark, b1), 1, ["g"], "v", k=2)
-    assert os.path.isdir(manifest_dir(store, "sketch"))
-    assert not os.path.exists(legacy_manifest_path(store, "sketch"))
-    assert read_store_manifest(spark, store, "sketch")[
-        "last_applied_batch"
-    ] == 1
-    # both batches serve after the migration
-    served = serve_topk(spark, store, ["g"]).collect()
-    assert all(r.n_rows == len(ROWS) for r in served)

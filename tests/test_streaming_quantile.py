@@ -11,7 +11,7 @@ import bisect
 import pytest
 from pyspark.sql import functions as F
 
-import rusty_timeseries_db_spark.streaming.quantile as q_mod
+import rusty_timeseries_db_spark.streaming.store_common as sc
 from rusty_timeseries_db_spark.streaming.quantile import (
     apply_quantile_sketch_batch,
     compact_quantile_sketch,
@@ -62,17 +62,17 @@ def test_crash_window_replay_converges_in_effect(spark, tmp_path):
     df = _df(spark, ROWS)
     apply_quantile_sketch_batch(spark, store, df, 0, ["g"], "v")
 
-    real_write = q_mod.update_store_manifest
+    real_write = sc.update_store_manifest
 
     def dying(*args, **kwargs):
         raise RuntimeError("injected crash")
 
-    q_mod.update_store_manifest = dying
+    sc.update_store_manifest = dying
     try:
         with pytest.raises(RuntimeError, match="injected"):
             apply_quantile_sketch_batch(spark, store, df, 1, ["g"], "v")
     finally:
-        q_mod.update_store_manifest = real_write
+        sc.update_store_manifest = real_write
     # half-applied batch invisible
     assert serve_quantiles(spark, store, ["g"], (0.5,)).collect()[0].n_rows \
         == len(ROWS)
@@ -126,24 +126,24 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
     b0, b1 = ROWS[::2], ROWS[1::2]
     apply_quantile_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v")
 
-    real_read = q_mod.read_store_manifest
+    real_read = sc.read_store_manifest
     fired = {"done": False}
 
     def hooked(spark_, store_, kind_):
         man = real_read(spark_, store_, kind_)
         if not fired["done"] and man is not None:
             fired["done"] = True
-            q_mod.read_store_manifest = real_read
+            sc.read_store_manifest = real_read
             apply_quantile_sketch_batch(
                 spark, store, _df(spark, b1), 1, ["g"], "v"
             )
         return man
 
-    q_mod.read_store_manifest = hooked
+    sc.read_store_manifest = hooked
     try:
         compact_quantile_sketch(spark, store)
     finally:
-        q_mod.read_store_manifest = real_read
+        sc.read_store_manifest = real_read
 
     man = real_read(spark, store, "quantile")
     assert man["last_applied_batch"] == 1  # survived compact's write

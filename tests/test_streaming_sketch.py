@@ -13,7 +13,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-import rusty_timeseries_db_spark.streaming.sketch as sketch_mod
+import rusty_timeseries_db_spark.streaming.store_common as sc
 from rusty_timeseries_db_spark.streaming.sketch import (
     apply_topk_sketch_batch,
     compact_topk_sketch,
@@ -86,19 +86,19 @@ def test_crash_between_summary_write_and_manifest_bump(spark, tmp_path):
     before = _served(spark, store)
 
     # crash window: batch 1's summaries land, manifest commit dies
-    real_write = sketch_mod.update_store_manifest
+    real_write = sc.update_store_manifest
 
     def dying_write(*args, **kwargs):
         raise RuntimeError("injected crash before manifest bump")
 
-    sketch_mod.update_store_manifest = dying_write
+    sc.update_store_manifest = dying_write
     try:
         with pytest.raises(RuntimeError, match="injected"):
             apply_topk_sketch_batch(
                 spark, store, df, 1, ["g", "day"], "v", k=2
             )
     finally:
-        sketch_mod.update_store_manifest = real_write
+        sc.update_store_manifest = real_write
 
     # the half-applied batch is invisible to serving (watermark filter)
     assert _served(spark, store) == before
@@ -191,64 +191,189 @@ def test_compact_served_identical_and_cost_flat(spark, tmp_path):
     assert _served(spark, store, ("g",)) == three
 
 
-def test_compact_crash_points_recover(spark, tmp_path):
-    """Crash (a) after the base write but before the manifest bump —
-    serving still reads the old state and a re-run converges; crash
-    (b) after the bump but before cleanup — dead dirs are invisible
-    and the next compact sweeps them."""
-    store = str(tmp_path / "hh")
-    b0, b1 = ROWS[::2], ROWS[1::2]
-    apply_topk_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v", k=2)
-    apply_topk_sketch_batch(spark, store, _df(spark, b1), 1, ["g"], "v", k=2)
-    before = _served(spark, store)
+def _topk_kind():
+    def apply(spark, store, rows, i):
+        apply_topk_sketch_batch(
+            spark, store, _df(spark, rows), i, ["g"], "v", k=2
+        )
+
+    def check(spark, store, before, rows):
+        assert _served(spark, store) == before  # bit-identical
+
+    return apply, _served, compact_topk_sketch, check, (
+        ROWS[::2], ROWS[1::2], ROWS,
+    )
+
+
+def _quantile_kind():
+    import bisect
+
+    from rusty_timeseries_db_spark.streaming.quantile import (
+        apply_quantile_sketch_batch,
+        compact_quantile_sketch,
+        serve_quantiles,
+    )
+
+    rows_q = [
+        ("g", d, float(v)) for d in range(3)
+        for v in range(d * 40, d * 40 + 40)
+    ]
+
+    def apply(spark, store, rows, i):
+        df = spark.createDataFrame(rows, "g string, day int, v double")
+        apply_quantile_sketch_batch(spark, store, df, i, ["g"], "v")
+
+    def served(spark, store):
+        return serve_quantiles(spark, store, ["g"], (0.5,)).collect()
+
+    def check(spark, store, before, rows):
+        # exact n_rows accounting; p50 inside the suite's post-compact
+        # rank bound (test_streaming_quantile.py)
+        (row,) = served(spark, store)
+        assert row.n_rows == before[0].n_rows == len(rows)
+        vals = sorted(v for _, _, v in rows)
+        rank = bisect.bisect_right(vals, row.p50) / len(vals)
+        assert abs(rank - 0.5) <= 0.07
+
+    extra = [("g", 3, float(v)) for v in range(120, 160)]
+    return apply, served, compact_quantile_sketch, check, (
+        rows_q[::2], rows_q[1::2], extra,
+    )
+
+
+def _theta_kind():
+    from rusty_timeseries_db_spark.streaming.theta import (
+        apply_theta_sketch_batch,
+        compact_theta_sketch,
+        serve_theta,
+    )
+
+    rows_t = (
+        [("A", u) for u in range(0, 40)] + [("B", u) for u in range(20, 60)]
+    )
+
+    def apply(spark, store, rows, i):
+        df = spark.createDataFrame(rows, "g string, u long")
+        apply_theta_sketch_batch(spark, store, df, i, ["g"], "u")
+
+    def served(spark, store):
+        return {r.g: r for r in serve_theta(spark, store, ["g"]).collect()}
+
+    def check(spark, store, before, rows):
+        # exact n_rows accounting; distinct estimates within the suite's
+        # 5% of exact (test_streaming_theta.py)
+        got = served(spark, store)
+        assert {g: r.n_rows for g, r in got.items()} == {
+            g: r.n_rows for g, r in before.items()
+        } == {g: sum(1 for s, _ in rows if s == g) for g in got}
+        for g, r in got.items():
+            truth = len({u for s, u in rows if s == g})
+            assert abs(r.distinct_est - truth) <= max(1, 0.05 * truth), g
+
+    extra = [("C", u) for u in range(40, 80)]
+    return apply, served, compact_theta_sketch, check, (
+        rows_t[::2], rows_t[1::2], extra,
+    )
+
+
+def _state_kind():
+    from datetime import datetime, timedelta
+
+    from rusty_timeseries_db_spark.streaming.state import (
+        apply_state_durations_batch,
+        compact_state_durations,
+        serve_state_durations,
+    )
+
+    t0 = datetime(2024, 1, 1)
+
+    def apply(spark, store, rows, i):
+        df = spark.createDataFrame(
+            [
+                (u, st, t0 + timedelta(seconds=off), e)
+                for u, st, off, e in rows
+            ],
+            "user_id bigint, state string, ts timestamp, event_id bigint",
+        )
+        apply_state_durations_batch(
+            spark, store, df, i, "user_id", "state",
+            order_tiebreak="event_id",
+        )
+
+    def served(spark, store):
+        return sorted(
+            tuple(r) for r in serve_state_durations(spark, store).collect()
+        )
+
+    def check(spark, store, before, rows):
+        assert served(spark, store) == before  # exact totals
+
+    return apply, served, compact_state_durations, check, (
+        [(1, "A", 0, 1), (1, "B", 10, 2), (2, "X", 5, 1)],
+        [(1, "A", 30, 3), (2, "Y", 50, 2)],
+        [(1, "C", 60, 4), (2, "X", 90, 3)],
+    )
+
+
+@pytest.mark.parametrize(
+    "kind", [_topk_kind, _quantile_kind, _theta_kind, _state_kind],
+    ids=["topk", "quantile", "theta", "state"],
+)
+def test_compact_crash_points_recover(spark, tmp_path, kind):
+    """For every store kind: crash (a) after the base write but before
+    the manifest bump — serving still reads the old state and a re-run
+    converges; crash (b) after the bump but before cleanup — dead dirs
+    are invisible and the next compact sweeps them."""
+    apply, served, compact, check, (b0, b1, b2) = kind()
+    store = str(tmp_path / "st")
+    apply(spark, store, b0, 0)
+    apply(spark, store, b1, 1)
+    before = served(spark, store)
 
     # (a) die on the manifest commit: base/upto=1 is on disk, invisible
-    real_write = sketch_mod.update_store_manifest
+    real_write = sc.update_store_manifest
 
     def dying_write(*args, **kwargs):
         raise RuntimeError("injected crash before base commit")
 
-    sketch_mod.update_store_manifest = dying_write
+    sc.update_store_manifest = dying_write
     try:
         with pytest.raises(RuntimeError, match="injected"):
-            compact_topk_sketch(spark, store)
+            compact(spark, store)
     finally:
-        sketch_mod.update_store_manifest = real_write
+        sc.update_store_manifest = real_write
     import os
 
     assert os.path.isdir(store + "/base/upto=1")
-    assert _served(spark, store) == before  # old state still served
+    check(spark, store, before, b0 + b1)  # old state still served
     # re-run converges: overwrites the base, commits, cleans up
-    assert compact_topk_sketch(spark, store) == 2
-    assert _served(spark, store) == before
+    assert compact(spark, store) == 2
+    check(spark, store, before, b0 + b1)
 
     # (b) die after the bump, before cleanup: land a new batch, then
     # crash the second compact's cleanup by injecting into delete_path
-    b2 = ROWS  # anything
-    apply_topk_sketch_batch(spark, store, _df(spark, b2), 2, ["g"], "v", k=2)
-    after_b2 = _served(spark, store)
+    apply(spark, store, b2, 2)
+    after_b2 = served(spark, store)
     import rusty_timeseries_db_spark.fsutil as fsutil
 
     real_dp = fsutil.delete_path
-    calls = {"n": 0}
 
     def dying_delete(spark_, path):
         raise RuntimeError("injected crash mid-cleanup")
 
-    # patch the name compact imports (from ..fsutil import delete_path
-    # resolves at call time inside the function via the module)
+    # patch the module attribute the store's sweep calls at run time
     fsutil.delete_path = dying_delete
     try:
         with pytest.raises(RuntimeError, match="mid-cleanup"):
-            compact_topk_sketch(spark, store)
+            compact(spark, store)
     finally:
         fsutil.delete_path = real_dp
     # manifest committed upto=2; stale dirs (old base, folded summary)
     # are invisible to serving
-    assert _served(spark, store) == after_b2
+    check(spark, store, after_b2, b0 + b1 + b2)
     # next compact sweeps the dead dirs
-    assert compact_topk_sketch(spark, store) == 0
-    assert _served(spark, store) == after_b2
+    assert compact(spark, store) == 0
+    check(spark, store, after_b2, b0 + b1 + b2)
     assert not os.path.isdir(store + "/base/upto=1")
 
 
@@ -261,7 +386,7 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
     b0, b1 = ROWS[::2], ROWS[1::2]
     apply_topk_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v", k=2)
 
-    real_read = sketch_mod.read_store_manifest
+    real_read = sc.read_store_manifest
     fired = {"done": False}
 
     def hooked_read(spark_, store_, kind_):
@@ -270,17 +395,17 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
             fired["done"] = True
             # interleave a sink commit between compact's opening read
             # and everything after (runs with the real read/write)
-            sketch_mod.read_store_manifest = real_read
+            sc.read_store_manifest = real_read
             apply_topk_sketch_batch(
                 spark, store, _df(spark, b1), 1, ["g"], "v", k=2
             )
         return man
 
-    sketch_mod.read_store_manifest = hooked_read
+    sc.read_store_manifest = hooked_read
     try:
         compact_topk_sketch(spark, store)
     finally:
-        sketch_mod.read_store_manifest = real_read
+        sc.read_store_manifest = real_read
 
     man = real_read(spark, store, "sketch")
     # batch 1's commit survived compact's manifest write...

@@ -323,7 +323,7 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
     last_applied_batch rolled back (the checkpoint has advanced — the
     batch would be lost forever). compact now merges base_upto into a
     FRESH manifest re-read."""
-    import rusty_timeseries_db_spark.streaming.state as state_mod
+    import rusty_timeseries_db_spark.streaming.store_common as sc
     from rusty_timeseries_db_spark.streaming.state import (
         compact_state_durations,
     )
@@ -336,7 +336,7 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
         order_tiebreak="event_id",
     )
 
-    real_read = state_mod.read_store_manifest
+    real_read = sc.read_store_manifest
     fired = {"done": False}
 
     def hooked_read(spark_, store_, kind_):
@@ -345,18 +345,18 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
             fired["done"] = True
             # interleave batch 1's commit between compact's opening
             # read and its manifest write (real read/write inside)
-            state_mod.read_store_manifest = real_read
+            sc.read_store_manifest = real_read
             apply_state_durations_batch(
                 spark, store, _df(spark, b1), 1, "user_id", "state",
                 order_tiebreak="event_id",
             )
         return man
 
-    state_mod.read_store_manifest = hooked_read
+    sc.read_store_manifest = hooked_read
     try:
         compact_state_durations(spark, store)
     finally:
-        state_mod.read_store_manifest = real_read
+        sc.read_store_manifest = real_read
 
     man = real_read(spark, store, "state")
     # batch 1's commit survived compact's write; only batch 0 folded

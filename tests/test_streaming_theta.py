@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import rusty_timeseries_db_spark.streaming.theta as theta_mod
+import rusty_timeseries_db_spark.streaming.store_common as sc
 from rusty_timeseries_db_spark.streaming.theta import (
     apply_theta_sketch_batch,
     compact_theta_sketch,
@@ -79,17 +79,17 @@ def test_crash_window_replay_converges_in_effect(spark, tmp_path):
     b0, b1 = ROWS[::2], ROWS[1::2]
     apply_theta_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "u")
 
-    real_write = theta_mod.update_store_manifest
+    real_write = sc.update_store_manifest
 
     def dying(*args, **kwargs):
         raise RuntimeError("injected crash")
 
-    theta_mod.update_store_manifest = dying
+    sc.update_store_manifest = dying
     try:
         with pytest.raises(RuntimeError, match="injected"):
             apply_theta_sketch_batch(spark, store, _df(spark, b1), 1, ["g"], "u")
     finally:
-        theta_mod.update_store_manifest = real_write
+        sc.update_store_manifest = real_write
 
     # half-applied batch invisible: accounting reflects batch 0 only
     served = {r.g: r for r in serve_theta(spark, store, ["g"]).collect()}
@@ -147,22 +147,22 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
     b0, b1 = ROWS[::2], ROWS[1::2]
     apply_theta_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "u")
 
-    real_read = theta_mod.read_store_manifest
+    real_read = sc.read_store_manifest
     fired = {"done": False}
 
     def hooked(spark_, store_, kind_):
         man = real_read(spark_, store_, kind_)
         if not fired["done"] and man is not None:
             fired["done"] = True
-            theta_mod.read_store_manifest = real_read
+            sc.read_store_manifest = real_read
             apply_theta_sketch_batch(spark, store, _df(spark, b1), 1, ["g"], "u")
         return man
 
-    theta_mod.read_store_manifest = hooked
+    sc.read_store_manifest = hooked
     try:
         compact_theta_sketch(spark, store)
     finally:
-        theta_mod.read_store_manifest = real_read
+        sc.read_store_manifest = real_read
 
     man = real_read(spark, store, "theta")
     assert man["last_applied_batch"] == 1  # survived compact's commit
