@@ -8,7 +8,10 @@ Routes, matching the reference exactly:
 - ``POST /telemetry`` — JSON body ``{sensor_name, timestamp, value,
   fc1_flag, timeseries_id}`` → ingest one row; replies ``200
   "Inserted"`` (log_and_store_telemetry, main.rs:347-363) or ``500
-  "Table Full"`` when the quota guard trips (main.rs:353-356).
+  "Table Full"`` when the quota guard trips (main.rs:353-356). A row
+  the ingest schema rejects (no ``timeseries_id``, ``value: null``, a
+  flag past 255) gets ``400 "Bad Request: ..."``. Concurrent inserts
+  are serialized by the engine's write lock.
 - ``GET /query_by_id?timeseries_id=&start_time=&end_time=`` — R3 range
   scan; replies a JSON array of rows in the POST body shape, with
   ``timestamp`` carrying the stored raw string (query_telemetry_by_id,
@@ -20,6 +23,10 @@ Capability extension beyond the reference's two routes:
   statement (sql_ext: plain Spark SQL plus the ASOF JOIN / QUALIFY
   rewrites) and reply a JSON array of row objects. Same bounded-output
   discipline as /query_by_id: ``toLocalIterator`` + row cap + 413.
+  It runs through ``engine.sql``, which re-registers the ``telemetry``
+  views per request, so a row inserted a moment ago is counted (a
+  re-registration lists the warehouse on the driver: 0.15-0.17 s and
+  no Spark job over 64 bucket dirs).
 - ``GET /latest`` — current state: the latest row per series
   (engine.latest, the batch face of the streaming last-value cache).
   One row per series, same row cap. ``?prefer_snapshot=false`` (r10,
@@ -132,10 +139,18 @@ class TelemetryHttpServer:
                     # (main.rs:353-356)
                     self._reply(500, b"Table Full", "text/plain")
                     return
+                except (ValueError, TypeError) as e:
+                    # a row the ingest schema rejects
+                    self._reply(
+                        400,
+                        f"Bad Request: {type(e).__name__}: {e}"[:2000].encode(),
+                        "text/plain",
+                    )
+                    return
                 self._reply(200, b"Inserted", "text/plain")
 
             def _do_sql(self) -> None:
-                from .sql_ext import is_query_statement, sql as _dialect_sql
+                from .sql_ext import is_query_statement
 
                 length = int(self.headers.get("Content-Length", 0))
                 try:
@@ -160,7 +175,7 @@ class TelemetryHttpServer:
                     )
                     return
                 try:
-                    df = _dialect_sql(engine.spark, query)
+                    df = engine.sql(query)
                 except Exception as e:  # parse/analysis errors → 400
                     self._reply(
                         400,

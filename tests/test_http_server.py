@@ -91,6 +91,86 @@ def test_table_full_maps_to_500(server):
     assert (code, text) == (500, "Table Full")
 
 
+def _post_json(base, path, body):
+    req = urllib.request.Request(
+        f"{base}{path}", data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"}, method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req) as resp:
+            return resp.status, resp.read().decode()
+    except urllib.error.HTTPError as e:
+        return e.code, e.read().decode()
+
+
+def test_malformed_telemetry_row_maps_to_400(server):
+    """A row the ingest schema rejects gets 400, not a dropped socket;
+    nothing lands, and the route keeps serving."""
+    base = server.base_url
+    good = {"sensor_name": "s", "timestamp": "2024-08-28T12:00:00Z",
+            "value": 0.5, "fc1_flag": None, "timeseries_id": "s-1"}
+    no_id = {k: v for k, v in good.items() if k != "timeseries_id"}
+    for body in (no_id, {**good, "value": None}, {**good, "fc1_flag": 300}):
+        code, text = _post_json(base, "/telemetry", body)
+        assert code == 400 and text.startswith("Bad Request"), (body, text)
+    assert server.engine.telemetry().count() == 0
+    assert _post_json(base, "/telemetry", good) == (200, "Inserted")
+    assert _query(base, "s-1", "2024", "2025")[0]["value"] == 0.5
+
+
+def test_sql_route_sees_rows_inserted_after_start(spark, tmp_path):
+    """POST /sql re-registers the telemetry views per request: a row
+    inserted after the server registered them is counted."""
+    eng = TimeseriesEngine(spark, str(tmp_path / "wh"))
+    eng.ingest_rows([{"sensor_name": "s", "timestamp": "2024-08-28T12:00:00Z",
+                      "value": 0.1, "fc1_flag": None, "timeseries_id": "old"}])
+    eng.register_views()
+    srv = TelemetryHttpServer(eng, port=0).start()
+    try:
+        base = srv.base_url
+        assert _insert(base, "s", "2024-08-28T12:01:00Z", 0.2, "new") == (
+            200, "Inserted")
+        code, text = _post_json(base, "/sql", {"query": (
+            "SELECT timeseries_id, count(*) AS n FROM telemetry "
+            "GROUP BY timeseries_id ORDER BY timeseries_id")})
+        assert code == 200
+        assert json.loads(text) == [{"timeseries_id": "new", "n": 1},
+                                    {"timeseries_id": "old", "n": 1}]
+    finally:
+        srv.stop()
+
+
+def test_concurrent_posts_all_land_with_unique_seqs(spark, tmp_path):
+    """8 concurrent POST /telemetry into one engine: every insert
+    succeeds, every row reads back, and no two rows share a seq."""
+    import threading
+
+    eng = TimeseriesEngine(spark, str(tmp_path / "wh"))
+    srv = TelemetryHttpServer(eng, port=0).start()
+    try:
+        base = srv.base_url
+        codes = [None] * 8
+
+        def post(i):
+            codes[i] = _insert(
+                base, "s", f"2024-08-28T12:00:0{i}Z", float(i), f"w{i}")
+
+        threads = [threading.Thread(target=post, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert codes == [(200, "Inserted")] * 8
+        for i in range(8):
+            got = _query(base, f"w{i}", "2024", "2025")
+            assert [r["value"] for r in got] == [float(i)]
+    finally:
+        srv.stop()
+    seqs = [r.ingest_seq for r in eng.telemetry().collect()]
+    assert sorted(seqs) == list(range(8))
+
+
 def test_reference_client_end_to_end(spark, tmp_path):
     """Run the reference's OWN client file, unmodified, as a subprocess
     against the adapter (py_client.py:52-65). BASE_URL is hardcoded to
