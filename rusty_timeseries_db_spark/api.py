@@ -23,15 +23,17 @@ import threading
 from collections.abc import Iterable, Mapping
 from typing import Callable, NamedTuple, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.overlay import apply_overlay
-from pyspark.sql.types import DateType, StructField, StructType
+from pyspark.sql.types import DateType, IntegerType, StructField, StructType
 
 from .schema import (
     STORED_TELEMETRY_SCHEMA,  # canonical home moved to schema.py (r11)
     TELEMETRY_INGEST_SCHEMA,
+    TELEMETRY_SCHEMA,
     normalize_ingest,
     normalize_payload,
     series_bucket,
@@ -80,6 +82,15 @@ DEFAULT_FLAG_VALUE = 1
 #: result stays in range for every non-negative seq, so ANSI mode
 #: never trips).
 _EO_SEQ_OFFSET = -(1 << 63)
+
+#: Overlay rows as ``update_rows``/``run_fault_detection`` append them.
+#: Read with this schema, building a read over an overlay runs no
+#: schema-inference job; a file written before ``overlay_version``
+#: existed reads it as null, which ``apply_overlay`` orders last.
+_OVERLAY_SCHEMA = StructType(
+    list(TELEMETRY_SCHEMA.fields)
+    + [StructField("overlay_version", IntegerType(), True)]
+)
 
 
 def _local_frame(
@@ -301,11 +312,18 @@ class TimeseriesEngine:
         return base
 
     def _read_overlay(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.overlay_path):
+        """The overlay rows, or None when no overlay file exists."""
+        try:
+            names = os.listdir(self.overlay_path)
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+        if not any(n.endswith(".parquet") for n in names):
             return None
         try:
-            return self.spark.read.parquet(self.overlay_path)
-        except Exception:
+            return self.spark.read.schema(_OVERLAY_SCHEMA).parquet(
+                self.overlay_path
+            )
+        except AnalysisException:  # removed meanwhile by compact()
             return None
 
     def telemetry(
@@ -619,40 +637,49 @@ class TimeseriesEngine:
             # __retained, and numbering below them would let the next
             # recovery merge resurrect stale values over newer ones
             for path in (self.overlay_path, self.overlay_path + "__retained"):
-                if not os.path.isdir(path):
+                # an empty/partial dir carries no versions to beat
+                if not os.path.isdir(path) or not any(
+                    n.endswith(".parquet") for n in os.listdir(path)
+                ):
                     continue
+                # read with the fixed schema, not one inferred from
+                # whichever part file lists first: a file written
+                # before overlay_version existed reads it as null,
+                # which max() skips
                 try:
-                    df = self.spark.read.parquet(path)
-                except Exception:
-                    # same damage split as compact()'s recovery (4th
-                    # review pass): silently skipping an unreadable
+                    top = (
+                        self.spark.read.schema(_OVERLAY_SCHEMA)
+                        .parquet(path)
+                        .agg(F.max("overlay_version"))
+                        .first()[0]
+                    )
+                except Exception as e:
+                    # same damage split as compact()'s recovery:
+                    # silently skipping an unreadable
                     # dir that HOLDS parquet files would seed the
                     # counter low and let a later recovery merge
                     # resurrect stale higher-versioned rows over this
-                    # instance's updates — raise actionably; an
-                    # empty/partial dir carries no versions to beat
-                    if any(
-                        n.endswith(".parquet") for n in os.listdir(path)
-                    ):
-                        raise IOError(
-                            f"overlay dir {path} holds parquet files "
-                            "but cannot be read — refusing to number "
-                            "new updates below its (unknown) versions; "
-                            "repair or remove it deliberately"
-                        )
-                    continue
-                if "overlay_version" in df.columns:
-                    row = df.agg(
-                        F.max("overlay_version").alias("v")
-                    ).collect()[0]
-                    base = max(base, int(row.v or 0))
+                    # instance's updates — raise actionably
+                    raise IOError(
+                        f"overlay dir {path} holds parquet files "
+                        "but cannot be read — refusing to number "
+                        "new updates below its (unknown) versions; "
+                        "repair or remove it deliberately"
+                    ) from e
+                base = max(base, int(top or 0))
             self._overlay_ver = base
         self._overlay_ver += 1
         return self._overlay_ver
 
     # -------------------------------------------------------- queries
 
-    def query_by_id(self, timeseries_id: str, start: str, end: str) -> DataFrame:
+    def query_by_id(
+        self,
+        timeseries_id: str,
+        start: str,
+        end: str,
+        limit: Optional[int] = None,
+    ) -> DataFrame:
         """R3 (main.rs:119-139): ``timeseries_id = ? AND ts BETWEEN ? AND ?``,
         both bounds inclusive, results in insertion order.
 
@@ -667,6 +694,11 @@ class TimeseriesEngine:
         match — its own round-trip test intent (main.rs:412-436) is
         unsatisfiable as written. We truncate the probe identically,
         preserving the intent instead of the bug.
+
+        ``limit`` keeps the first ``limit`` rows: a limit over the sort
+        plans as one top-k pass (``TakeOrderedAndProject``), which
+        ``toLocalIterator`` runs as one Spark job, where the full sort
+        runs three (range sampling, shuffle stage, result).
         """
         days = None
         if self.partition_by_date:
@@ -679,11 +711,12 @@ class TimeseriesEngine:
                 )
             except ValueError:
                 pass  # non-ISO bounds: no date pruning, full fidelity scan
-        return (
+        df = (
             self._series_rows(timeseries_id[:32], days)
             .filter((F.col("ts_raw") >= start) & (F.col("ts_raw") <= end))
             .orderBy("ingest_seq")
         )
+        return df if limit is None else df.limit(limit)
 
     def _series_rows(
         self, timeseries_id: str, days: Optional[tuple] = None
@@ -716,26 +749,40 @@ class TimeseriesEngine:
         ``SELECT ... FROM telemetry``). Returns the registered frame."""
         df = self.telemetry()
         df.createOrReplaceTempView(name)
-        catalog = self.build_series_catalog()
+        catalog = self.build_series_catalog(df)
         catalog.createOrReplaceTempView(f"{name}_series_catalog")
         return df
 
-    def sql(self, query: str, right_order: str | None = None) -> DataFrame:
+    def sql(
+        self,
+        query: str,
+        right_order: str | None = None,
+        limit: Optional[int] = None,
+    ) -> DataFrame:
         """Dialect SQL over the live engine (the REPL/HTTP verbs'
         programmatic twin): registers the telemetry views fresh — so
         overlay updates and new ingests are visible — and runs the
-        statement through the ASOF JOIN / QUALIFY rewrites."""
+        statement through the ASOF JOIN / QUALIFY rewrites. ``limit``
+        keeps the first ``limit`` rows (see ``sql_ext.sql``)."""
         from .sql_ext import sql as _dialect_sql
 
         self.register_views()
-        return _dialect_sql(self.spark, query, right_order=right_order)
+        return _dialect_sql(
+            self.spark, query, right_order=right_order, limit=limit
+        )
 
-    def build_series_catalog(self) -> DataFrame:
+    def build_series_catalog(
+        self, telemetry: Optional[DataFrame] = None
+    ) -> DataFrame:
         """Realize the reference's dead ``TimeseriesReference`` struct
         (main.rs:32-36) as a real dimension: one row per distinct series
-        with its first-seen metadata. Broadcast-sized by construction."""
+        with its first-seen metadata. Broadcast-sized by construction.
+        ``telemetry`` is an already-built ``telemetry()`` frame to
+        aggregate (built here when omitted)."""
+        if telemetry is None:
+            telemetry = self.telemetry()
         return (
-            self.telemetry()
+            telemetry
             .groupBy("timeseries_id")
             .agg(
                 F.min_by("sensor_name", "ingest_seq").alias("sensor_name"),
@@ -1416,11 +1463,12 @@ class TimeseriesEngine:
         ``timeseries_id`` (round 9) narrows to ONE series — "what is
         sensor X now", the single most common serving question. On the
         snapshot face that is a point read of an O(#series) file; on
-        the batch face the equality predicate is applied BEFORE the
-        argmax so it pushes down to the parquet scan (files are sorted
-        by (timeseries_id, ts) within partitions — row-group min/max
-        skip non-matching groups), and only the series' own
-        ``series_bucket`` dir is read, as in ``query_by_id``. The probe
+        the batch face the equality predicate is applied BEFORE a
+        top-1 on (ts, ingest_seq), one Spark job, so it pushes down to
+        the parquet scan (files are sorted by (timeseries_id, ts)
+        within partitions — row-group min/max skip non-matching
+        groups), and only the series' own ``series_bucket`` dir is
+        read, as in ``query_by_id``. The probe
         is 32-char truncated like ``query_by_id``'s (stored ids are
         truncated on ingest, main.rs:179).
 
@@ -1464,7 +1512,23 @@ class TimeseriesEngine:
                 if probe is not None:
                     snap = snap.filter(F.col("timeseries_id") == probe)
                 return snap
-        t = self.telemetry() if probe is None else self._series_rows(probe)
+        if probe is not None:
+            # one series: a top-1 (one Spark job) in place of the
+            # argmax aggregate (two). ts desc nulls last then
+            # ingest_seq desc is max_by's struct order, in which a
+            # null ts sorts first
+            t = self._series_rows(probe)
+            return (
+                t.select(
+                    "timeseries_id",
+                    *[c for c in t.columns if c != "timeseries_id"],
+                )
+                .orderBy(
+                    F.col("ts").desc_nulls_last(), F.col("ingest_seq").desc()
+                )
+                .limit(1)
+            )
+        t = self.telemetry()
         order = F.struct(F.col("ts"), F.col("ingest_seq"))
         return (
             t.groupBy("timeseries_id")

@@ -29,24 +29,20 @@ def apply_overlay(base: DataFrame, overlay: DataFrame) -> DataFrame:
     stamped at write time — NOT by any scan-order artifact (a
     monotonically_increasing_id at read time follows file enumeration
     order, which is not write order; caught by the overlay property
-    test)."""
-    version = (
-        F.col("overlay_version")
-        if "overlay_version" in overlay.columns
-        else F.lit(0)
-    )
+    test). A file written before that column existed reads its version
+    as null, which sorts last."""
     latest = (
         overlay.withColumn(
             "_rn",
             F.row_number().over(
-                Window.partitionBy("ingest_seq").orderBy(version.desc())
+                Window.partitionBy("ingest_seq").orderBy(
+                    F.col("overlay_version").desc()
+                )
             ),
         )
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "overlay_version")
     )
-    if "overlay_version" in overlay.columns:
-        latest = latest.drop("overlay_version")
     o = latest.select(
         F.col("ingest_seq").alias("_o_seq"),
         *[F.col(c).alias(f"_o_{c}") for c in _PAYLOAD],

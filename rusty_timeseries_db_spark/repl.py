@@ -90,17 +90,14 @@ class Repl:
             return "Exiting..."  # main.rs:316-318
         if line.startswith("sql "):
             # capability extension beyond the reference's 3 verbs: full
-            # SQL with the dialect rewrites (ASOF JOIN, QUALIFY) —
-            # sql_ext routes plain statements straight to spark.sql
-            from .sql_ext import sql as _dialect_sql
-
-            return _dialect_sql(self.engine.spark, line[4:])
+            # SQL with the dialect rewrites (ASOF JOIN, QUALIFY) over
+            # freshly registered views, so rows inserted since the last
+            # statement are visible
+            return self.engine.sql(line[4:])
         if line.startswith("explain "):
             # physical plan of a dialect statement — what a user checks
             # before running something expensive
-            from .sql_ext import sql as _dialect_sql
-
-            df = _dialect_sql(self.engine.spark, line[8:])
+            df = self.engine.sql(line[8:])
             return df._jdf.queryExecution().explainString(
                 self.engine.spark._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("formatted")

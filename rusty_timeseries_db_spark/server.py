@@ -15,18 +15,21 @@ Routes, matching the reference exactly:
 - ``GET /query_by_id?timeseries_id=&start_time=&end_time=`` — R3 range
   scan; replies a JSON array of rows in the POST body shape, with
   ``timestamp`` carrying the stored raw string (query_telemetry_by_id,
-  main.rs:365-375).
+  main.rs:365-375). The engine frame carries the row cap as
+  ``limit=max_query_rows + 1`` over its ``ingest_seq`` order, which
+  Spark plans as one top-k pass: one Spark job per request.
 
 Capability extension beyond the reference's two routes:
 
 - ``POST /sql`` — JSON body ``{"query": "..."}`` → run a dialect SQL
   statement (sql_ext: plain Spark SQL plus the ASOF JOIN / QUALIFY
   rewrites) and reply a JSON array of row objects. Same bounded-output
-  discipline as /query_by_id: ``toLocalIterator`` + row cap + 413.
-  It runs through ``engine.sql``, which re-registers the ``telemetry``
-  views per request, so a row inserted a moment ago is counted (a
-  re-registration lists the warehouse on the driver: 0.15-0.17 s and
-  no Spark job over 64 bucket dirs).
+  discipline as /query_by_id: ``toLocalIterator`` + row cap + 413, with
+  the cap in the plan as ``limit=max_query_rows + 1`` (over an ORDER BY
+  a top-k pass). It runs through ``engine.sql``, which
+  re-registers the ``telemetry`` views per request, so a row inserted
+  a moment ago is counted (a re-registration builds ``telemetry()``
+  once and lists the warehouse on the driver: no Spark job).
 - ``GET /latest`` — current state: the latest row per series
   (engine.latest, the batch face of the streaming last-value cache).
   One row per series, same row cap. ``?prefer_snapshot=false`` (r10,
@@ -87,13 +90,16 @@ class TelemetryHttpServer:
         self.engine = engine
         self.host = host
         self.port = port
-        #: Row cap for GET /query_by_id. The reference serializes its whole
+        #: Row cap of every read route. The reference serializes its whole
         #: result Vec (main.rs:374) but its storage is hard-capped at 3,900
         #: rows (main.rs:21), so an unbounded reply is safe *there*; this
-        #: engine has no storage cap, so the route bounds driver memory:
+        #: engine has no storage cap, so the routes bound driver memory:
         #: rows are pulled via ``toLocalIterator()`` (one partition at a
-        #: time, never a full collect) and a range wider than the cap gets
-        #: a 413 instead of an OOM.
+        #: time, never a full collect) and a result wider than the cap
+        #: gets a 413 instead of an OOM. /query_by_id and /sql also put
+        #: the bound into the plan (a limit of cap + 1 rows, a top-k over
+        #: an ordered result), so Spark never sorts or ships more than
+        #: the 413 check reads.
         self.max_query_rows = max_query_rows
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
@@ -149,6 +155,39 @@ class TelemetryHttpServer:
                     return
                 self._reply(200, b"Inserted", "text/plain")
 
+            def _reply_rows(self, build, too_large: str, shape,
+                            error: str) -> None:
+                """Reply the rows of the frame ``build()`` returns as a
+                JSON array, each shaped by ``shape``. Rows are pulled
+                with ``toLocalIterator`` (one partition at a time,
+                never a full collect); past ``max_query_rows`` rows the
+                reply is ``413 too_large``. A failure while building
+                the frame or executing it (analysis errors, ANSI
+                runtime errors, corrupt files) replies ``400
+                "<error>: <type>: <message>"``, never a dropped socket
+                from an uncaught handler exception (ADVICE r8 #3)."""
+                payload = []
+                try:
+                    for r in build().toLocalIterator():
+                        if len(payload) >= max_query_rows:
+                            self._reply(
+                                413, too_large.encode(), "text/plain"
+                            )
+                            return
+                        payload.append(shape(r))
+                except Exception as e:
+                    self._reply(
+                        400,
+                        f"{error}: {type(e).__name__}: {e}"[:2000].encode(),
+                        "text/plain",
+                    )
+                    return
+                self._reply(
+                    200,
+                    json.dumps(payload, default=_json_default).encode(),
+                    "application/json",
+                )
+
             def _do_sql(self) -> None:
                 from .sql_ext import is_query_statement
 
@@ -174,48 +213,16 @@ class TelemetryHttpServer:
                         "text/plain",
                     )
                     return
-                try:
-                    df = engine.sql(query)
-                except Exception as e:  # parse/analysis errors → 400
-                    self._reply(
-                        400,
-                        f"SQL Error: {type(e).__name__}: {e}"[:2000].encode(),
-                        "text/plain",
-                    )
-                    return
-                payload = []
-                try:
-                    # execution-time failures (ANSI runtime errors,
-                    # corrupt files) surface HERE, not at spark.sql —
-                    # they must map to the same error contract, not a
-                    # dropped socket from an uncaught handler exception
-                    for r in df.toLocalIterator():
-                        if len(payload) >= max_query_rows:
-                            self._reply(
-                                413,
-                                (
-                                    f"Result Too Large: > {max_query_rows} "
-                                    "rows; add a LIMIT"
-                                ).encode(),
-                                "text/plain",
-                            )
-                            return
-                        payload.append(r.asDict(recursive=True))
-                except Exception as e:
-                    self._reply(
-                        400,
-                        f"SQL Error: {type(e).__name__}: {e}"[:2000].encode(),
-                        "text/plain",
-                    )
-                    return
-                self._reply(
-                    200,
-                    json.dumps(payload, default=_json_default).encode(),
-                    "application/json",
+                self._reply_rows(
+                    lambda: engine.sql(query, limit=max_query_rows + 1),
+                    f"Result Too Large: > {max_query_rows} rows; add a LIMIT",
+                    lambda r: r.asDict(recursive=True),
+                    "SQL Error",
                 )
 
             def do_GET(self) -> None:
                 url = urlparse(self.path)
+                qs = parse_qs(url.query)
                 if url.path == "/summary":
                     # capability extension (round 18 — VERDICT r17
                     # next-round #5): serve a facade-managed summary
@@ -227,11 +234,10 @@ class TelemetryHttpServer:
                     # (topk|quantile|state|theta), optional ?name=
                     # the named instance; kind-specific knobs map
                     # 1:1 onto engine.serve_summary, which RAISES on
-                    # knobs the kind cannot honor (ADVICE r17) — that
-                    # and the store's own not-started-yet errors map
-                    # to 400 like /sql. Output is O(stored cells),
-                    # same row cap + 413 as every other route.
-                    qs = parse_qs(url.query)
+                    # knobs the kind cannot honor (ADVICE r17) — that,
+                    # a malformed knob and the store's own
+                    # not-started-yet errors map to 400 like /sql.
+                    # Output is O(stored cells).
                     kind = qs.get("kind", [None])[0]
                     if not kind:
                         self._reply(
@@ -239,8 +245,8 @@ class TelemetryHttpServer:
                             "text/plain",
                         )
                         return
-                    payload = []
-                    try:
+
+                    def summary():
                         kwargs = {}
                         if "keys" in qs:
                             kwargs["keys"] = [
@@ -257,38 +263,15 @@ class TelemetryHttpServer:
                             kwargs["overlap_key"] = qs["overlap_key"][0]
                         if "overlap_k" in qs:
                             kwargs["overlap_k"] = int(qs["overlap_k"][0])
-                        df = engine.serve_summary(
-                            kind,
-                            name=qs.get("name", [None])[0],
-                            **kwargs,
+                        return engine.serve_summary(
+                            kind, name=qs.get("name", [None])[0], **kwargs
                         )
-                        for r in df.toLocalIterator():
-                            if len(payload) >= max_query_rows:
-                                self._reply(
-                                    413,
-                                    (
-                                        "Result Too Large: > "
-                                        f"{max_query_rows} cells"
-                                    ).encode(),
-                                    "text/plain",
-                                )
-                                return
-                            payload.append(r.asDict(recursive=True))
-                    except Exception as e:
-                        self._reply(
-                            400,
-                            f"Query Error: {type(e).__name__}: {e}"[
-                                :2000
-                            ].encode(),
-                            "text/plain",
-                        )
-                        return
-                    self._reply(
-                        200,
-                        json.dumps(
-                            payload, default=_json_default
-                        ).encode(),
-                        "application/json",
+
+                    self._reply_rows(
+                        summary,
+                        f"Result Too Large: > {max_query_rows} cells",
+                        lambda r: r.asDict(recursive=True),
+                        "Query Error",
                     )
                     return
                 if url.path == "/latest":
@@ -300,9 +283,9 @@ class TelemetryHttpServer:
                     # full-scan anti-query), falling back to the batch
                     # argmax otherwise. Optional ?timeseries_id=
                     # narrows to one series (the "what is sensor X
-                    # now" point read). Output is one row per series,
-                    # so the same row cap bounds driver memory.
-                    qs = parse_qs(url.query)
+                    # now" point read, a one-job top-1). Output is one
+                    # row per series, so the row cap bounds driver
+                    # memory.
                     sid = qs.get("timeseries_id", [None])[0]
                     # ?prefer_snapshot=false (ADVICE r9 #2): the
                     # _batch_ingested mixed-path guard is per-engine-
@@ -317,98 +300,46 @@ class TelemetryHttpServer:
                     prefer_snapshot = prefer.strip().lower() not in (
                         "false", "0", "no",
                     )
-                    payload = []
-                    try:
-                        # execution-time Spark failures must map to the
-                        # same error contract as /sql, not a dropped
-                        # socket from an uncaught handler exception
-                        # (ADVICE r8 #3)
-                        for r in engine.latest(
+                    self._reply_rows(
+                        lambda: engine.latest(
                             prefer_snapshot=prefer_snapshot,
                             timeseries_id=sid,
-                        ).toLocalIterator():
-                            if len(payload) >= max_query_rows:
-                                self._reply(
-                                    413,
-                                    (
-                                        "Result Too Large: > "
-                                        f"{max_query_rows} series"
-                                    ).encode(),
-                                    "text/plain",
-                                )
-                                return
-                            payload.append(
-                                {
-                                    "timeseries_id": r.timeseries_id,
-                                    "sensor_name": r.sensor_name,
-                                    "timestamp": r.ts_raw,
-                                    "value": r.value,
-                                    "fc1_flag": r.fc1_flag,
-                                }
-                            )
-                    except Exception as e:
-                        self._reply(
-                            400,
-                            f"Query Error: {type(e).__name__}: {e}"[
-                                :2000
-                            ].encode(),
-                            "text/plain",
-                        )
-                        return
-                    self._reply(
-                        200, json.dumps(payload).encode(), "application/json"
+                        ),
+                        f"Result Too Large: > {max_query_rows} series",
+                        lambda r: {
+                            "timeseries_id": r.timeseries_id,
+                            "sensor_name": r.sensor_name,
+                            "timestamp": r.ts_raw,
+                            "value": r.value,
+                            "fc1_flag": r.fc1_flag,
+                        },
+                        "Query Error",
                     )
                     return
                 if url.path != "/query_by_id":
                     self._reply(404, b"Not Found", "text/plain")
                     return
-                qs = parse_qs(url.query)
                 try:
                     sid = qs["timeseries_id"][0]
                     start, end = qs["start_time"][0], qs["end_time"][0]
                 except (KeyError, IndexError):
                     self._reply(400, b"Bad Request", "text/plain")
                     return
-                # Bounded driver memory: toLocalIterator pulls one
-                # partition at a time; stop at cap+1 and 413 rather than
-                # materialize an unbounded range on the driver.
-                payload = []
-                try:
-                    # same execution-time error contract as /sql and
-                    # /latest (ADVICE r8 #3 named this route's gap too)
-                    for r in engine.query_by_id(
-                        sid, start, end
-                    ).toLocalIterator():
-                        if len(payload) >= max_query_rows:
-                            self._reply(
-                                413,
-                                (
-                                    f"Result Too Large: > {max_query_rows} "
-                                    "rows; narrow the time range"
-                                ).encode(),
-                                "text/plain",
-                            )
-                            return
-                        payload.append(
-                            {
-                                "sensor_name": r.sensor_name,
-                                # the reference serializes the stored
-                                # raw string
-                                "timestamp": r.ts_raw,
-                                "value": r.value,
-                                "fc1_flag": r.fc1_flag,
-                                "timeseries_id": r.timeseries_id,
-                            }
-                        )
-                except Exception as e:
-                    self._reply(
-                        400,
-                        f"Query Error: {type(e).__name__}: {e}"[:2000].encode(),
-                        "text/plain",
-                    )
-                    return
-                self._reply(
-                    200, json.dumps(payload).encode(), "application/json"
+                self._reply_rows(
+                    lambda: engine.query_by_id(
+                        sid, start, end, limit=max_query_rows + 1
+                    ),
+                    f"Result Too Large: > {max_query_rows} rows; "
+                    "narrow the time range",
+                    lambda r: {
+                        "sensor_name": r.sensor_name,
+                        # the reference serializes the stored raw string
+                        "timestamp": r.ts_raw,
+                        "value": r.value,
+                        "fc1_flag": r.fc1_flag,
+                        "timeseries_id": r.timeseries_id,
+                    },
+                    "Query Error",
                 )
 
         self._httpd = ThreadingHTTPServer((self.host, self.port), Handler)

@@ -1948,7 +1948,12 @@ def _rewrite_from_first(query: str) -> str:
     )
 
 
-def sql(spark: SparkSession, query: str, right_order: str | None = None) -> DataFrame:
+def sql(
+    spark: SparkSession,
+    query: str,
+    right_order: str | None = None,
+    limit: int | None = None,
+) -> DataFrame:
     """DuckDB-dialect entry point: applies the ``* REPLACE`` and
     ``* EXCLUDE`` spelling rewrites, then the DISTINCT ON rewrite
     (nested blocks innermost-first, then top-level), then the ASOF
@@ -1979,7 +1984,12 @@ def sql(spark: SparkSession, query: str, right_order: str | None = None) -> Data
     ``_maybe_pivot``'s value discovery runs its distinct scan at
     rewrite time exactly as the bare statement would; on a large
     table that scan is real work. Pass an explicit ``IN (...)`` list
-    to make EXPLAIN PIVOT plan-only too."""
+    to make EXPLAIN PIVOT plan-only too.
+
+    ``limit`` keeps the first ``limit`` rows of the result, as
+    ``DataFrame.limit`` does; over an ORDER BY Spark plans that as one
+    top-k pass (``TakeOrderedAndProject``). An EXPLAIN's one plan row
+    comes back as is."""
     # match on a comment-blanked masked copy (length-preserving, so
     # em.end() indexes into the original): the gate admits
     # "/* audit */ EXPLAIN ..." and this entry must recognize the
@@ -2008,22 +2018,20 @@ def sql(spark: SparkSession, query: str, right_order: str | None = None) -> Data
     # verb/rewrite looks at the statement — downstream passes only
     # ever see the canonical SELECT-first spelling
     query = _rewrite_from_first(query)
-    summarized = _maybe_summarize(spark, query)
-    if summarized is not None:
-        return summarized
-    pivoted = _maybe_pivot(spark, query)
-    if pivoted is not None:
-        return pivoted
-    unpivoted = _maybe_unpivot(spark, query)
-    if unpivoted is not None:
-        return unpivoted
-    rewritten = _rewrite_asof(
-        spark,
-        _rewrite_distinct_on_nested(
-            _rewrite_exclude(
-                _rewrite_star_replace(_rewrite_columns(spark, query))
-            )
-        ),
-        right_order=right_order,
-    )
-    return sql_with_qualify(spark, rewritten)
+    df = _maybe_summarize(spark, query)
+    if df is None:
+        df = _maybe_pivot(spark, query)
+    if df is None:
+        df = _maybe_unpivot(spark, query)
+    if df is None:
+        rewritten = _rewrite_asof(
+            spark,
+            _rewrite_distinct_on_nested(
+                _rewrite_exclude(
+                    _rewrite_star_replace(_rewrite_columns(spark, query))
+                )
+            ),
+            right_order=right_order,
+        )
+        df = sql_with_qualify(spark, rewritten)
+    return df if limit is None else df.limit(limit)

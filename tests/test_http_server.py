@@ -120,7 +120,8 @@ def test_malformed_telemetry_row_maps_to_400(server):
 
 def test_sql_route_sees_rows_inserted_after_start(spark, tmp_path):
     """POST /sql re-registers the telemetry views per request: a row
-    inserted after the server registered them is counted."""
+    inserted after the server registered them is counted, in the
+    telemetry view and in the series-catalog view."""
     eng = TimeseriesEngine(spark, str(tmp_path / "wh"))
     eng.ingest_rows([{"sensor_name": "s", "timestamp": "2024-08-28T12:00:00Z",
                       "value": 0.1, "fc1_flag": None, "timeseries_id": "old"}])
@@ -136,6 +137,37 @@ def test_sql_route_sees_rows_inserted_after_start(spark, tmp_path):
         assert code == 200
         assert json.loads(text) == [{"timeseries_id": "new", "n": 1},
                                     {"timeseries_id": "old", "n": 1}]
+        code, text = _post_json(base, "/sql", {"query": (
+            "SELECT timeseries_id, n_rows FROM telemetry_series_catalog "
+            "ORDER BY timeseries_id")})
+        assert code == 200
+        assert json.loads(text) == [{"timeseries_id": "new", "n_rows": 1},
+                                    {"timeseries_id": "old", "n_rows": 1}]
+    finally:
+        srv.stop()
+
+
+def test_sql_row_cap_on_ordered_results(spark, tmp_path):
+    """/sql carries the row cap in its plan (a limit of cap + 1 rows, a
+    top-k over an ordered result): over the cap is still a 413, exactly
+    the cap a 200 with every row, ordered or not."""
+    eng = TimeseriesEngine(spark, str(tmp_path / "wh"))
+    srv = TelemetryHttpServer(eng, port=0, max_query_rows=10).start()
+    try:
+        base = srv.base_url
+        for n, order in ((11, "ORDER BY id DESC"), (11, "")):
+            code, text = _post_json(base, "/sql", {
+                "query": f"SELECT id FROM range({n}) {order}"})
+            assert (code, text) == (
+                413, "Result Too Large: > 10 rows; add a LIMIT")
+        code, text = _post_json(base, "/sql", {
+            "query": "SELECT id FROM range(10) ORDER BY id DESC"})
+        assert code == 200
+        assert json.loads(text) == [{"id": i} for i in range(9, -1, -1)]
+        code, text = _post_json(base, "/sql", {
+            "query": "SELECT id FROM range(10)"})
+        assert code == 200
+        assert sorted(r["id"] for r in json.loads(text)) == list(range(10))
     finally:
         srv.stop()
 

@@ -325,6 +325,21 @@ def test_repl_explain_verb(repl):
     assert isinstance(out, str) and "Physical Plan" in out
 
 
+def test_repl_sql_and_explain_verbs_see_new_rows(repl, tmp_path):
+    """The `sql` and `explain` verbs run over freshly registered views:
+    a row inserted after ``register_views()`` is counted, and the plan
+    reads this engine's warehouse."""
+    repl.execute("insert s 2024-08-28T12:00:00Z 0.5 old")
+    repl.engine.register_views()
+    repl.execute("insert s 2024-08-28T12:01:00Z 0.6 newid")
+    out = repl.execute(
+        "sql SELECT count(*) AS n FROM telemetry WHERE timeseries_id = 'newid'"
+    )
+    assert out.collect()[0].n == 1
+    plan = repl.execute("explain SELECT * FROM telemetry_series_catalog")
+    assert str(tmp_path / "wh") in plan
+
+
 def test_engine_sql_facade(spark, tmp_path):
     """engine.sql(): dialect SQL over the live views — sees overlay
     updates, supports QUALIFY."""
