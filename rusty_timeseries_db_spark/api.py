@@ -18,12 +18,14 @@ since Parquet files are immutable.
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 from collections.abc import Iterable, Mapping
 from typing import Callable, NamedTuple, Optional
 
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +39,7 @@ from .schema import (
     normalize_ingest,
     normalize_payload,
     series_bucket,
+    series_bucket_of,
 )
 from .streaming import quantile as _quantile
 from .streaming import sketch as _sketch
@@ -91,6 +94,113 @@ _OVERLAY_SCHEMA = StructType(
     list(TELEMETRY_SCHEMA.fields)
     + [StructField("overlay_version", IntegerType(), True)]
 )
+
+
+#: The series catalog's columns after ``timeseries_id``: one row per
+#: series with its first-seen metadata (``build_series_catalog``).
+_CATALOG_AGGS = (
+    "min_by(sensor_name, ingest_seq) AS sensor_name",
+    "min(ts_raw) AS stored_at",
+    "count(*) AS n_rows",
+)
+
+#: Physical leaves that read no table.
+_TABLELESS_LEAVES = frozenset(
+    {"LocalTableScanExec", "OneRowRelationExec", "RangeExec", "RDDScanExec"}
+)
+
+
+def _in_session(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``session``, so a temp view made from
+    it is registered there."""
+    return DataFrame(
+        session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            session._jsparkSession, df._jdf.logicalPlan()
+        ),
+        session,
+    )
+
+
+def _register_views(
+    session: SparkSession, telemetry: DataFrame, name: str = "telemetry"
+) -> None:
+    """Register ``telemetry`` as ``name`` in ``session``, and beside it a
+    ``<name>_series_catalog`` view defined by SQL text, which aggregates
+    whatever ``name`` refers to when a statement runs."""
+    _in_session(telemetry, session).createOrReplaceTempView(name)
+    session.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW `{name}_series_catalog` AS "
+        f"SELECT timeseries_id, {', '.join(_CATALOG_AGGS)} "
+        f"FROM `{name}` GROUP BY timeseries_id"
+    )
+
+
+def _named_series(plan) -> Optional[set]:
+    """The ``timeseries_id`` values a physical plan (a py4j ``SparkPlan``)
+    can read rows of, or None when it may read any: every file scan must
+    carry a data filter ``timeseries_id = 'lit'``, ``IN ('lit', ...)`` or
+    the ``InSet`` a long ``IN`` list becomes, no other leaf may read a
+    table, and no subquery may hide a scan."""
+    if not plan.subqueriesAll().isEmpty():
+        return None
+    ids: set = set()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind in _TABLELESS_LEAVES:
+            continue
+        if kind != "FileSourceScanExec":
+            return None
+        named = None
+        filters = leaf.dataFilters()
+        for j in range(filters.size()):
+            got = _id_literals(filters.apply(j))
+            if got is not None:
+                named = got if named is None else named | got
+        if named is None:
+            return None
+        ids |= named
+    return ids
+
+
+def _id_literals(expr) -> Optional[set]:
+    """The string literals of an ``=``/``IN``/``InSet`` predicate on
+    ``timeseries_id`` (a py4j ``Expression``), or None for any other
+    predicate. Null literals match no row and are left out."""
+    nodes = json.loads(expr.toJSON())  # the tree in pre-order
+    kind = nodes[0]["class"].rsplit(".", 1)[-1]
+
+    def is_id(n):
+        return (
+            n["class"].endswith(".AttributeReference")
+            and n["name"] == "timeseries_id"
+            and n["dataType"] == "string"
+        )
+
+    def literals(ns):
+        if all(
+            n["class"].endswith(".Literal") and n["dataType"] == "string"
+            for n in ns
+        ):
+            return {n["value"] for n in ns if n["value"] is not None}
+        return None
+
+    if kind == "EqualTo" and len(nodes) == 3:
+        if is_id(nodes[1]):
+            return literals(nodes[2:])
+        if is_id(nodes[2]):
+            return literals(nodes[1:2])
+    elif kind == "In" and len(nodes) > 1 and is_id(nodes[1]):
+        return literals(nodes[2:])
+    elif kind == "InSet" and len(nodes) == 2 and is_id(nodes[1]):
+        values = expr.hset().toIndexedSeq()
+        return {
+            v.toString()
+            for v in (values.apply(k) for k in range(values.size()))
+            if v is not None
+        }
+    return None
 
 
 def _local_frame(
@@ -171,9 +281,13 @@ class TimeseriesEngine:
         #: from disk
         self._seq: Optional[int] = None
         #: serializes this instance's appends (seq seeding + advance +
-        #: the parquet write) and overlay appends: concurrent writes into
-        #: one dir share FileOutputCommitter's ``_temporary/0`` and fail
-        self._write_lock = threading.Lock()
+        #: the parquet write), overlay appends, and the maintenance
+        #: methods that replace or delete base dirs: concurrent writes
+        #: into one dir share FileOutputCommitter's ``_temporary/0`` and
+        #: fail, and an append that lands in a base dir between a
+        #: rewrite's read and its delete of that dir is lost. Re-entrant,
+        #: because ``optimize_storage`` runs ``compact`` under it.
+        self._write_lock = threading.RLock()
         #: set once a batch append SUCCEEDS on this instance: from then
         #: on latest() must not prefer a streaming snapshot, which
         #: cannot see batch-path rows (code-review r9)
@@ -197,16 +311,37 @@ class TimeseriesEngine:
 
     # ---------------------------------------------------------- reads
 
-    def _read_base(self, keep_ds: bool = False) -> DataFrame:
+    def _read_base(
+        self, keep_ds: bool = False, buckets: Optional[Iterable[int]] = None
+    ) -> DataFrame:
+        """The batch base. ``buckets`` reads only those ``series_bucket=``
+        dirs (through ``basePath``, so the bucket and ``ds`` stay columns)
+        instead of listing all of them; a bucket without a dir, like a
+        missing base, reads as the empty frame."""
         schema = STORED_TELEMETRY_SCHEMA
         if self.partition_by_date:
             schema = StructType(
                 list(schema.fields) + [StructField("ds", DateType(), True)]
             )
-        if not os.path.isdir(self.telemetry_path):
+        root = self.telemetry_path
+        paths = [root] if os.path.isdir(root) else []
+        if buckets is not None and paths:
+            paths = [
+                p
+                for p in (
+                    os.path.join(root, f"series_bucket={b}")
+                    for b in sorted(set(buckets))
+                )
+                if os.path.isdir(p)
+            ]
+        if not paths:
             df = _local_frame(self.spark, schema)
         else:
-            df = self.spark.read.schema(schema).parquet(self.telemetry_path)
+            df = (
+                self.spark.read.schema(schema)
+                .option("basePath", root)
+                .parquet(*paths)
+            )
         if self.partition_by_date and not keep_ds:
             df = df.drop("ds")
         return df
@@ -248,10 +383,12 @@ class TimeseriesEngine:
             visible_batch_dirs,
         )
 
-        if max_batch_id is not None:
+        path = os.path.join(self.warehouse_dir, "telemetry_eo")
+        if not os.path.isdir(path):
+            df = None  # no sink ever wrote here: no manifest to read
+        elif max_batch_id is not None:
             import re as _re
 
-            path = os.path.join(self.warehouse_dir, "telemetry_eo")
             keep = []
             for d in visible_batch_dirs(path, self.spark):
                 m = _re.match(r"batch_id=(\d+)", d)
@@ -288,7 +425,9 @@ class TimeseriesEngine:
             )
         return df
 
-    def _read_base_union_eo(self, keep_ds: bool = False) -> DataFrame:
+    def _read_base_union_eo(
+        self, keep_ds: bool = False, buckets: Optional[Iterable[int]] = None
+    ) -> DataFrame:
         """Base telemetry ∪ committed exactly-once rows — the physical
         row set every read surface serves. The two stores hold
         disjoint rows by construction (batch appends write
@@ -299,25 +438,38 @@ class TimeseriesEngine:
         (round 11, measured): the synthesized zero-row base frame is
         semantically a no-op but still adds a scan to every action —
         a constant tax on every serving read of an exactly-once
-        deployment."""
+        deployment.
+
+        ``buckets`` reads only those base bucket dirs (``_read_base``)
+        and filters the union on ``series_bucket``: the literal filter
+        prunes the EO dirs and keeps the base scan's partition filter
+        in its plan."""
         eo = self._read_committed_eo(keep_ds=keep_ds)
         if eo is not None and not os.path.isdir(self.telemetry_path):
             cols = [f.name for f in STORED_TELEMETRY_SCHEMA.fields]
             if self.partition_by_date and keep_ds:
                 cols.append("ds")
-            return eo.select(*cols)
-        base = self._read_base(keep_ds=keep_ds)
-        if eo is not None:
-            base = base.unionByName(eo.select(*base.columns))
-        return base
+            df = eo.select(*cols)
+        else:
+            df = self._read_base(keep_ds=keep_ds, buckets=buckets)
+            if eo is not None:
+                df = df.unionByName(eo.select(*df.columns))
+        if buckets is not None:
+            df = df.filter(F.col("series_bucket").isin(sorted(set(buckets))))
+        return df
 
-    def _read_overlay(self) -> Optional[DataFrame]:
-        """The overlay rows, or None when no overlay file exists."""
+    def _has_overlay(self) -> bool:
+        """True when the overlay dir holds a parquet file (a listing, no
+        Spark call)."""
         try:
             names = os.listdir(self.overlay_path)
         except (FileNotFoundError, NotADirectoryError):
-            return None
-        if not any(n.endswith(".parquet") for n in names):
+            return False
+        return any(n.endswith(".parquet") for n in names)
+
+    def _read_overlay(self) -> Optional[DataFrame]:
+        """The overlay rows, or None when no overlay file exists."""
+        if not self._has_overlay():
             return None
         try:
             return self.spark.read.schema(_OVERLAY_SCHEMA).parquet(
@@ -685,8 +837,8 @@ class TimeseriesEngine:
 
         The reference compares ISO-8601 strings lexicographically
         (main.rs:132-133); we filter on ``ts_raw`` for bit-exact fidelity
-        (identical for valid fixed-width ISO-8601 UTC) and additionally
-        constrain ``series_bucket`` so the Parquet scan prunes partitions.
+        (identical for valid fixed-width ISO-8601 UTC) and read only the
+        series' own ``series_bucket`` dir (``_series_rows``).
 
         Probe normalization: stored ids are 32-char-truncated
         (main.rs:179) but the reference compares the *raw* query param
@@ -722,12 +874,16 @@ class TimeseriesEngine:
         self, timeseries_id: str, days: Optional[tuple] = None
     ) -> DataFrame:
         """The overlay-merged rows of one (already truncated) series,
-        read from its own ``series_bucket`` dir only. ``days`` — a
-        ``(first, last)`` date pair — also prunes ``ds`` dirs on a
-        date-partitioned warehouse."""
-        bucket = series_bucket(F.lit(timeseries_id))
-        df = self._read_base_union_eo(keep_ds=days is not None).filter(
-            F.col("series_bucket") == bucket
+        read from its own ``series_bucket`` dir only: the bucket is
+        computed on the driver, so no other bucket dir is listed. An
+        overlay row that rewrites a row's id leaves it in the old id's
+        bucket, so neither id's read returns it (``telemetry()`` and
+        ``sql`` do). ``days`` — a ``(first, last)``
+        date pair — also prunes ``ds`` dirs on a date-partitioned
+        warehouse."""
+        df = self._read_base_union_eo(
+            keep_ds=days is not None,
+            buckets=[series_bucket_of(timeseries_id)],
         )
         if days is not None:
             # rows with unparseable ts live in the 9999-12-31 sentinel
@@ -746,11 +902,10 @@ class TimeseriesEngine:
 
     def register_views(self, name: str = "telemetry") -> DataFrame:
         """Expose the telemetry view to ``spark.sql`` (the SQL surface:
-        ``SELECT ... FROM telemetry``). Returns the registered frame."""
+        ``SELECT ... FROM telemetry``) with ``<name>_series_catalog``
+        beside it. Returns the registered frame."""
         df = self.telemetry()
-        df.createOrReplaceTempView(name)
-        catalog = self.build_series_catalog(df)
-        catalog.createOrReplaceTempView(f"{name}_series_catalog")
+        _register_views(self.spark, df, name)
         return df
 
     def sql(
@@ -760,35 +915,93 @@ class TimeseriesEngine:
         limit: Optional[int] = None,
     ) -> DataFrame:
         """Dialect SQL over the live engine (the REPL/HTTP verbs'
-        programmatic twin): registers the telemetry views fresh — so
-        overlay updates and new ingests are visible — and runs the
-        statement through the ASOF JOIN / QUALIFY rewrites. ``limit``
-        keeps the first ``limit`` rows (see ``sql_ext.sql``)."""
-        from .sql_ext import sql as _dialect_sql
+        programmatic twin), run through the ASOF JOIN / QUALIFY
+        rewrites. ``limit`` keeps the first ``limit`` rows (see
+        ``sql_ext.sql``).
 
-        self.register_views()
-        return _dialect_sql(
-            self.spark, query, right_order=right_order, limit=limit
+        The statement is planned in a session cloned from
+        ``self.spark``: it sees the caller's temp views and runtime
+        confs, and this call registers fresh ``telemetry`` and
+        ``telemetry_series_catalog`` views in the clone only — so
+        overlay updates and new ingests are visible, concurrent calls
+        never re-register one shared view, and the caller's views are
+        left as they were (``spark.sql`` users call ``register_views``
+        themselves).
+
+        Bucket pruning: when the statement is a read-only query and the
+        warehouse has no overlay file and no committed exactly-once
+        rows, the statement is first planned over a stand-in
+        ``telemetry`` that reads one bucket dir. If every file scan in
+        that plan filters ``timeseries_id`` to literals (``=``, ``IN``)
+        and no subquery hides a scan, the views are registered over the
+        named series' bucket dirs only; otherwise over the whole
+        warehouse."""
+        from . import sql_ext
+
+        session = SparkSession(
+            self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
         )
+        stand_in = self._sql_stand_in(query)
+        _register_views(
+            session, self.telemetry() if stand_in is None else stand_in
+        )
+        if stand_in is not None:
+            try:
+                ids = _named_series(
+                    session.sql(query)._jdf.queryExecution().sparkPlan()
+                )
+            except (PySparkException, Py4JError):
+                ids = None  # e.g. dialect syntax plain Spark cannot parse
+            telemetry = (
+                self.telemetry()
+                if ids is None
+                else self._read_base(
+                    buckets={series_bucket_of(i) for i in ids}
+                ).drop("series_bucket")
+            )
+            _in_session(telemetry, session).createOrReplaceTempView(
+                "telemetry"
+            )
+        return sql_ext.sql(session, query, right_order=right_order, limit=limit)
 
-    def build_series_catalog(
-        self, telemetry: Optional[DataFrame] = None
-    ) -> DataFrame:
+    def _sql_stand_in(self, query: str) -> Optional[DataFrame]:
+        """A one-bucket-dir read shaped like ``telemetry()``, to plan
+        ``query`` over before choosing its buckets; None when ``query``
+        cannot be pruned: not a read-only query (``spark.sql`` runs
+        DDL/DML as it plans), an overlay (an update can rewrite a row's
+        ``timeseries_id``), committed exactly-once rows, or no bucket
+        dir."""
+        from .sql_ext import is_query_statement
+        from .streaming.ingest import visible_batch_dirs
+
+        if not is_query_statement(query) or self._has_overlay():
+            return None
+        eo = os.path.join(self.warehouse_dir, "telemetry_eo")
+        if (
+            self.exactly_once is not False
+            and os.path.isdir(eo)
+            and visible_batch_dirs(eo, self.spark)
+        ):
+            return None
+        root = self.telemetry_path
+        try:
+            names = os.listdir(root)
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+        bucket = next(
+            (n.split("=", 1)[1] for n in names if n.startswith("series_bucket=")),
+            None,
+        )
+        if bucket is None:
+            return None
+        return self._read_base(buckets=[int(bucket)]).drop("series_bucket")
+
+    def build_series_catalog(self) -> DataFrame:
         """Realize the reference's dead ``TimeseriesReference`` struct
         (main.rs:32-36) as a real dimension: one row per distinct series
-        with its first-seen metadata. Broadcast-sized by construction.
-        ``telemetry`` is an already-built ``telemetry()`` frame to
-        aggregate (built here when omitted)."""
-        if telemetry is None:
-            telemetry = self.telemetry()
-        return (
-            telemetry
-            .groupBy("timeseries_id")
-            .agg(
-                F.min_by("sensor_name", "ingest_seq").alias("sensor_name"),
-                F.min("ts_raw").alias("stored_at"),
-                F.count("*").alias("n_rows"),
-            )
+        with its first-seen metadata. Broadcast-sized by construction."""
+        return self.telemetry().groupBy("timeseries_id").agg(
+            *[F.expr(a) for a in _CATALOG_AGGS]
         )
 
     def link_external_names(
@@ -858,120 +1071,121 @@ class TimeseriesEngine:
         """
         import shutil
 
-        # crash recovery: a previous compact() that died between its
-        # overlay clear and the retained-rows rename (the one narrow
-        # loss window below) leaves the EO overlay stranded in the
-        # sibling dir — restore it before anything else. When new
-        # updates have ALREADY recreated the overlay dir since the
-        # crash, the stranded rows are APPENDED rather than skipped
-        # (2nd review pass: the rename-only recovery was defeated by
-        # any intervening update_rows/run_fault_detection, and the
-        # cleanup below would then delete the stranded flags forever);
-        # duplicates from a pre-swap crash re-append identical rows,
-        # which the version-desc row_number merge resolves to the same
-        # content.
-        retained_tmp = self.overlay_path + "__retained"
-        if os.path.isdir(retained_tmp):
-            if not os.path.isdir(self.overlay_path):
-                os.rename(retained_tmp, self.overlay_path)
-            else:
-                try:
-                    retained = self.spark.read.parquet(retained_tmp)
-                except Exception:
-                    # unreadable sibling (3rd review pass): an
-                    # EMPTY/partial dir — a crash before any part file
-                    # landed, or external cleanup — holds nothing to
-                    # recover and must not block every future
-                    # compact(); a dir that DOES hold part files but
-                    # cannot be read is damage, and deleting it would
-                    # silently discard flags — raise actionably.
-                    if any(
-                        n.endswith(".parquet")
-                        for n in os.listdir(retained_tmp)
-                    ):
-                        raise IOError(
-                            f"stranded retained overlay {retained_tmp} "
-                            "holds parquet files but cannot be read — "
-                            "refusing to delete it (it may carry the "
-                            "only copy of exactly-once flag updates); "
-                            "repair or remove it deliberately"
-                        )
-                    shutil.rmtree(retained_tmp, ignore_errors=True)
+        with self._write_lock:
+            # crash recovery: a previous compact() that died between its
+            # overlay clear and the retained-rows rename (the one narrow
+            # loss window below) leaves the EO overlay stranded in the
+            # sibling dir — restore it before anything else. When new
+            # updates have ALREADY recreated the overlay dir since the
+            # crash, the stranded rows are APPENDED rather than skipped
+            # (2nd review pass: the rename-only recovery was defeated by
+            # any intervening update_rows/run_fault_detection, and the
+            # cleanup below would then delete the stranded flags forever);
+            # duplicates from a pre-swap crash re-append identical rows,
+            # which the version-desc row_number merge resolves to the same
+            # content.
+            retained_tmp = self.overlay_path + "__retained"
+            if os.path.isdir(retained_tmp):
+                if not os.path.isdir(self.overlay_path):
+                    os.rename(retained_tmp, self.overlay_path)
                 else:
-                    retained.write.mode("append").parquet(
-                        self.overlay_path
-                    )
-                    shutil.rmtree(retained_tmp, ignore_errors=True)
-        overlay = self._read_overlay()
-        if overlay is None:
-            return self.count()
-        # split by target store BEFORE any mutation; the retained EO
-        # rows are written to a sibling dir NOW (pre-swap) so the
-        # post-swap step is just a rename — never a Spark job reading
-        # the directory it replaces, and the loss window is one rename
-        eo_overlay = overlay.filter(F.col("ingest_seq") < 0)
-        shutil.rmtree(retained_tmp, ignore_errors=True)
-        n_eo = eo_overlay.count()
-        if n_eo:
-            eo_overlay.write.mode("overwrite").parquet(retained_tmp)
-        overlay = overlay.filter(F.col("ingest_seq") >= 0)
-        old_version = self._active_version()
-        new_version = 1 if old_version is None else old_version + 1
-        new_path = os.path.join(
-            self.warehouse_dir, f"telemetry__v{new_version}"
-        )
-        merged = apply_overlay(self._read_base(), overlay)
-        if self.partition_by_date:
-            merged = merged.withColumn(
-                "ds", F.coalesce(F.to_date("ts"), F.lit("9999-12-31").cast("date"))
+                    try:
+                        retained = self.spark.read.parquet(retained_tmp)
+                    except Exception:
+                        # unreadable sibling (3rd review pass): an
+                        # EMPTY/partial dir — a crash before any part file
+                        # landed, or external cleanup — holds nothing to
+                        # recover and must not block every future
+                        # compact(); a dir that DOES hold part files but
+                        # cannot be read is damage, and deleting it would
+                        # silently discard flags — raise actionably.
+                        if any(
+                            n.endswith(".parquet")
+                            for n in os.listdir(retained_tmp)
+                        ):
+                            raise IOError(
+                                f"stranded retained overlay {retained_tmp} "
+                                "holds parquet files but cannot be read — "
+                                "refusing to delete it (it may carry the "
+                                "only copy of exactly-once flag updates); "
+                                "repair or remove it deliberately"
+                            )
+                        shutil.rmtree(retained_tmp, ignore_errors=True)
+                    else:
+                        retained.write.mode("append").parquet(
+                            self.overlay_path
+                        )
+                        shutil.rmtree(retained_tmp, ignore_errors=True)
+            overlay = self._read_overlay()
+            if overlay is None:
+                return self.count()
+            # split by target store BEFORE any mutation; the retained EO
+            # rows are written to a sibling dir NOW (pre-swap) so the
+            # post-swap step is just a rename — never a Spark job reading
+            # the directory it replaces, and the loss window is one rename
+            eo_overlay = overlay.filter(F.col("ingest_seq") < 0)
+            shutil.rmtree(retained_tmp, ignore_errors=True)
+            n_eo = eo_overlay.count()
+            if n_eo:
+                eo_overlay.write.mode("overwrite").parquet(retained_tmp)
+            overlay = overlay.filter(F.col("ingest_seq") >= 0)
+            old_version = self._active_version()
+            new_version = 1 if old_version is None else old_version + 1
+            new_path = os.path.join(
+                self.warehouse_dir, f"telemetry__v{new_version}"
             )
-        # the new-base row count rides the rewrite itself as an
-        # observe() metric (round 20 — guide §1.4/§5, the ingest_df
-        # pattern): previously the ENTIRE merged base was persist()ed
-        # just to keep a count job and the write consistent — at scale
-        # that doubles the rewrite's storage footprint. The write is a
-        # single pass (local sortWithinPartitions, no range sampling),
-        # so the observation counts exactly the rows written.
-        from pyspark.sql import Observation
+            merged = apply_overlay(self._read_base(), overlay)
+            if self.partition_by_date:
+                merged = merged.withColumn(
+                    "ds", F.coalesce(F.to_date("ts"), F.lit("9999-12-31").cast("date"))
+                )
+            # the new-base row count rides the rewrite itself as an
+            # observe() metric (round 20 — guide §1.4/§5, the ingest_df
+            # pattern): previously the ENTIRE merged base was persist()ed
+            # just to keep a count job and the write consistent — at scale
+            # that doubles the rewrite's storage footprint. The write is a
+            # single pass (local sortWithinPartitions, no range sampling),
+            # so the observation counts exactly the rows written.
+            from pyspark.sql import Observation
 
-        obs = Observation("compact_rows")
-        (
-            merged.observe(obs, F.count(F.lit(1)).alias("n"))
-            .sortWithinPartitions("timeseries_id", "ts")
-            .write.mode("overwrite")
-            .partitionBy(*self._partition_cols)
-            .parquet(new_path)
-        )
-        n = int(obs.get["n"])
-        # -- the swap point: one atomic rename flips readers to the new
-        # base; everything before this line leaves the old base intact
-        tmp_ptr = self._version_file + ".tmp"
-        with open(tmp_ptr, "w") as f:
-            f.write(str(new_version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_ptr, self._version_file)
-        shutil.rmtree(self.overlay_path, ignore_errors=True)
-        if n_eo:
-            # re-seed the overlay with the retained EO-targeting rows.
-            # Crash windows: before the pointer swap nothing changed
-            # (the retained dir is overwritten next run); after the
-            # swap but before the rmtree, the FULL old overlay
-            # re-applies onto the new base — idempotent for the folded
-            # rows, EO rows untouched; between rmtree and this rename
-            # the EO flags are absent from reads until compact()
-            # re-runs (the narrowest achievable window: one rename)
-            os.rename(retained_tmp, self.overlay_path)
-        # reclaim superseded bases (incl. orphans from crashed compacts)
-        for name in os.listdir(self.warehouse_dir):
-            full = os.path.join(self.warehouse_dir, name)
-            if full == new_path or not os.path.isdir(full):
-                continue
-            if name == "telemetry" or (
-                name.startswith("telemetry__v") and full != new_path
-            ):
-                shutil.rmtree(full, ignore_errors=True)
-        return n
+            obs = Observation("compact_rows")
+            (
+                merged.observe(obs, F.count(F.lit(1)).alias("n"))
+                .sortWithinPartitions("timeseries_id", "ts")
+                .write.mode("overwrite")
+                .partitionBy(*self._partition_cols)
+                .parquet(new_path)
+            )
+            n = int(obs.get["n"])
+            # -- the swap point: one atomic rename flips readers to the new
+            # base; everything before this line leaves the old base intact
+            tmp_ptr = self._version_file + ".tmp"
+            with open(tmp_ptr, "w") as f:
+                f.write(str(new_version))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp_ptr, self._version_file)
+            shutil.rmtree(self.overlay_path, ignore_errors=True)
+            if n_eo:
+                # re-seed the overlay with the retained EO-targeting rows.
+                # Crash windows: before the pointer swap nothing changed
+                # (the retained dir is overwritten next run); after the
+                # swap but before the rmtree, the FULL old overlay
+                # re-applies onto the new base — idempotent for the folded
+                # rows, EO rows untouched; between rmtree and this rename
+                # the EO flags are absent from reads until compact()
+                # re-runs (the narrowest achievable window: one rename)
+                os.rename(retained_tmp, self.overlay_path)
+            # reclaim superseded bases (incl. orphans from crashed compacts)
+            for name in os.listdir(self.warehouse_dir):
+                full = os.path.join(self.warehouse_dir, name)
+                if full == new_path or not os.path.isdir(full):
+                    continue
+                if name == "telemetry" or (
+                    name.startswith("telemetry__v") and full != new_path
+                ):
+                    shutil.rmtree(full, ignore_errors=True)
+            return n
 
     def optimize_storage(self, target_files: int | None = None) -> int:
         """Rewrite the base range-clustered and sorted on
@@ -986,35 +1200,36 @@ class TimeseriesEngine:
 
         from .operators.layout import optimize_layout
 
-        self.compact()  # folds overlay; no-op if none pending
-        old_version = self._active_version()
-        new_version = 1 if old_version is None else old_version + 1
-        new_path = os.path.join(
-            self.warehouse_dir, f"telemetry__v{new_version}"
-        )
-        base = self._read_base(keep_ds=self.partition_by_date).persist()
-        n = base.count()
-        optimize_layout(
-            base,
-            new_path,
-            sort_cols=["timeseries_id", "ts"],
-            partition_cols=list(self._partition_cols) or None,
-            target_files=target_files,
-        )
-        base.unpersist()
-        tmp_ptr = self._version_file + ".tmp"
-        with open(tmp_ptr, "w") as f:
-            f.write(str(new_version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_ptr, self._version_file)
-        for name in os.listdir(self.warehouse_dir):
-            full = os.path.join(self.warehouse_dir, name)
-            if full == new_path or not os.path.isdir(full):
-                continue
-            if name == "telemetry" or name.startswith("telemetry__v"):
-                shutil.rmtree(full, ignore_errors=True)
-        return n
+        with self._write_lock:
+            self.compact()  # folds overlay; no-op if none pending
+            old_version = self._active_version()
+            new_version = 1 if old_version is None else old_version + 1
+            new_path = os.path.join(
+                self.warehouse_dir, f"telemetry__v{new_version}"
+            )
+            base = self._read_base(keep_ds=self.partition_by_date).persist()
+            n = base.count()
+            optimize_layout(
+                base,
+                new_path,
+                sort_cols=["timeseries_id", "ts"],
+                partition_cols=list(self._partition_cols) or None,
+                target_files=target_files,
+            )
+            base.unpersist()
+            tmp_ptr = self._version_file + ".tmp"
+            with open(tmp_ptr, "w") as f:
+                f.write(str(new_version))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp_ptr, self._version_file)
+            for name in os.listdir(self.warehouse_dir):
+                full = os.path.join(self.warehouse_dir, name)
+                if full == new_path or not os.path.isdir(full):
+                    continue
+                if name == "telemetry" or name.startswith("telemetry__v"):
+                    shutil.rmtree(full, ignore_errors=True)
+            return n
 
     def compact_small_files(
         self, target_file_mb: int = 128, min_files: int = 4
@@ -1033,14 +1248,15 @@ class TimeseriesEngine:
         col, depth = (
             ("ds", 1) if self.partition_by_date else ("series_bucket", 0)
         )
-        return compact_partitions(
-            self.spark,
-            self.telemetry_path,
-            col,
-            target_file_mb=target_file_mb,
-            min_files=min_files,
-            depth=depth,
-        )
+        with self._write_lock:
+            return compact_partitions(
+                self.spark,
+                self.telemetry_path,
+                col,
+                target_file_mb=target_file_mb,
+                min_files=min_files,
+                depth=depth,
+            )
 
     def drop_chunks_before(self, cutoff_date: str) -> list[str]:
         """Retention: delete every ``ds`` partition older than
@@ -1068,9 +1284,10 @@ class TimeseriesEngine:
             )
         from .operators.maintenance import drop_partitions_older_than
 
-        return drop_partitions_older_than(
-            self.spark, self.telemetry_path, "ds", cutoff_date, depth=1
-        )
+        with self._write_lock:
+            return drop_partitions_older_than(
+                self.spark, self.telemetry_path, "ds", cutoff_date, depth=1
+            )
 
     def compact_exactly_once(self) -> int:
         """Fold the exactly-once table's visible ``batch_id=N`` /

@@ -150,3 +150,64 @@ N_SERIES_BUCKETS = 64
 def series_bucket(col: Column, n_buckets: int = N_SERIES_BUCKETS) -> Column:
     """Deterministic bucket for a series id (partition-pruning key)."""
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+#: XXH64's primes (Spark's ``XXH64``, the function behind ``xxhash64``).
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+_U64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _U64, 31) * _P1 & _U64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int."""
+    n, i = len(data), 0
+
+    def word(at: int, width: int) -> int:
+        return int.from_bytes(data[at:at + width], "little")
+
+    if n >= 32:
+        acc = [(seed + _P1 + _P2) & _U64, (seed + _P2) & _U64, seed,
+               (seed - _P1) & _U64]
+        while i + 32 <= n:
+            acc = [_xxh_round(a, word(i + 8 * k, 8)) for k, a in enumerate(acc)]
+            i += 32
+        h = (_rotl(acc[0], 1) + _rotl(acc[1], 7) + _rotl(acc[2], 12)
+             + _rotl(acc[3], 18)) & _U64
+        for a in acc:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _U64
+    else:
+        h = (seed + _P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _xxh_round(0, word(i, 8)), 27) * _P1 + _P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (word(i, 4) * _P1 & _U64), 23) * _P2 + _P3) & _U64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _U64), 11) * _P1 & _U64
+    h = (h ^ (h >> 33)) * _P2 & _U64
+    h = (h ^ (h >> 29)) * _P3 & _U64
+    return h ^ (h >> 32)
+
+
+def series_bucket_of(timeseries_id: str) -> int:
+    """``series_bucket`` of one id, computed on the driver in Python:
+    ``xxhash64`` is XXH64 with seed 42 over the id's UTF-8 bytes, and
+    ``pmod`` of the signed hash by ``N_SERIES_BUCKETS`` (a power of two)
+    equals ``%`` of the unsigned one. No py4j call and no Spark job, so
+    a read names its bucket dir for free."""
+    return _xxh64(timeseries_id.encode("utf-8"), 42) % N_SERIES_BUCKETS

@@ -17,7 +17,8 @@ Routes, matching the reference exactly:
   ``timestamp`` carrying the stored raw string (query_telemetry_by_id,
   main.rs:365-375). The engine frame carries the row cap as
   ``limit=max_query_rows + 1`` over its ``ingest_seq`` order, which
-  Spark plans as one top-k pass: one Spark job per request.
+  Spark plans as one top-k pass: one Spark job per request, over the
+  series' own ``series_bucket`` dir only (as ``/latest?timeseries_id=``).
 
 Capability extension beyond the reference's two routes:
 
@@ -26,10 +27,14 @@ Capability extension beyond the reference's two routes:
   rewrites) and reply a JSON array of row objects. Same bounded-output
   discipline as /query_by_id: ``toLocalIterator`` + row cap + 413, with
   the cap in the plan as ``limit=max_query_rows + 1`` (over an ORDER BY
-  a top-k pass). It runs through ``engine.sql``, which
-  re-registers the ``telemetry`` views per request, so a row inserted
-  a moment ago is counted (a re-registration builds ``telemetry()``
-  once and lists the warehouse on the driver: no Spark job).
+  a top-k pass). It runs through ``engine.sql``, which registers the
+  ``telemetry`` views per request in a session cloned from the
+  server's, so a row inserted a moment ago is counted and concurrent
+  requests never share a view. A statement whose every file scan
+  filters ``timeseries_id`` to literals (``=``/``IN``), over a
+  warehouse with no overlay and no exactly-once rows, reads only those
+  series' bucket dirs; any other reads the whole warehouse. Building
+  the views lists bucket dirs on the driver: no Spark job.
 - ``GET /latest`` — current state: the latest row per series
   (engine.latest, the batch face of the streaming last-value cache).
   One row per series, same row cap. ``?prefer_snapshot=false`` (r10,
