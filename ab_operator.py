@@ -1,7 +1,7 @@
-"""Same-session interleaved A/B for operator changes (round 20).
+"""Same-session interleaved A/B for operator changes.
 
 Loads the CONTROL implementation of one or more package modules from a
-git commit (default: the round-19 final tree) into shadow modules, then
+git commit (default: a19c924) into shadow modules, then
 times a declared query with control vs candidate attrs swapped in,
 interleaved in ONE session with ``clearCache()`` between reps — the
 only decision-grade protocol on this box (OPTIMIZATION_r19.md method).

@@ -14,8 +14,8 @@ Flags per query (plan-string scan, no execution):
                      documents/embeddings under a BroadcastExchange
                      that came from a hint — heuristic: ResolvedHint in
                      the optimized plan)
-- ``global_window``  a Window node with an EMPTY partition spec (round
-                     14 — VERDICT r13 next-round #5): Spark moves ALL
+- ``global_window``  a Window node with an EMPTY partition spec: Spark moves
+ALL
                      rows to one partition for it, the one scale-killer
                      class the other flags cannot see. WindowExec
                      prints ``Window [exprs], [partSpec], [orderSpec]``

@@ -46,103 +46,91 @@ HEADLINE = [
     "q_tpch_q5_local_supplier",
     "q_quality_filter_pipeline",
     "q_session_window",
-    # added round 4 (compare r04+ totals minus these four for an
-    # apples-to-apples r03 comparison): TPC-H Q18/Q21 shapes, the SQL
-    # ASOF surface, and the deterministic split family
+    # TPC-H Q18/Q21 shapes, the SQL ASOF surface, and the
+    # deterministic split family
     "q_tpch_q18_large_volume",
     "q_tpch_q21_suppliers_who_wait",
     "q_asof_sql",
     "q_hash_split",
-    # added round 6 (subtract for apples-to-apples vs r05): sequence
-    # packing, TPC-H Q7 shape, closed-form EWMA, corpus TF-IDF
+    # sequence packing, TPC-H Q7 shape, closed-form EWMA, corpus TF-IDF
     "q_sequence_packing",
     "q_tpch_q7_volume_shipping",
     "q_ewma",
     "q_tfidf_top_terms",
-    # added round 7 (subtract for apples-to-apples vs r06): the
-    # end-to-end training-corpus pipeline — the flagship composition,
-    # regression-gated now that it is oracle-checked — plus the widest
-    # new TPC-H join (Q8), the zero-preserving outer distribution
+    # the end-to-end training-corpus pipeline (the flagship
+    # composition, oracle-checked), the widest TPC-H join (Q8), the
+    # zero-preserving outer distribution
     # (Q13), and the min-max downsampler
     "q_training_corpus_pipeline",
     "q_tpch_q8_market_share",
     "q_tpch_q13_custdist",
     "q_minmax_decimate",
-    # added round 8 (subtract for apples-to-apples vs r07): the
-    # decomposable histogram quantile, the dashboard top-N-with-others
+    # the decomposable histogram quantile, the dashboard top-N-with-others
     # rollup, and the composed ASOF+QUALIFY dialect statement
     "q_histogram_quantile",
     "q_topn_with_others",
     "q_asof_qualify_sql",
     "q_moving_median",
     "q_series_align_ratio",
-    # added round 8, second half: the OHLC candlestick downsample (the
+    # the OHLC candlestick downsample (the
     # single-shuffle window+agg shape) and the full Lloyd step over the
     # embeddings (explode → per-dim agg → broadcast argmin — the
     # distributed vector-aggregation stress test)
     "q_ohlc_bars",
     "q_kmeans_step",
-    # added round 11 (subtract for apples-to-apples vs r10): the two
-    # new LLM-pipeline flagships — SemDeDup cluster-bounded semantic
+    # the two LLM-pipeline flagships — SemDeDup cluster-bounded semantic
     # dedup (broadcast assignment + within-cluster pair join) and the
     # train/test shingle-contamination report (distinct-collapsed
     # inverted-index left join)
     "q_semantic_dedup",
     "q_contamination_ngram",
-    # added round 11, second half (subtract for apples-to-apples vs the
-    # first r11 runs): CCNet paragraph dedup (md5-keyed decision groupBy
+    # CCNet paragraph dedup (md5-keyed decision groupBy
     # + doc-keyed rebuild — the text-heaviest shuffle in the registry)
     # and the DSIR scoring pipeline (three aggregates, 1024-row
     # broadcast model)
     "q_paragraph_dedup",
     "q_dsir_weights",
-    # added round 12 (subtract for apples-to-apples vs r11): the
-    # span-removal rewrite (the gram self-join + interval merge + HOF
-    # token splice — the heaviest new text shape), cross-corpus span
+    # the span-removal rewrite (the gram self-join + interval merge +
+    # HOF token splice — the heaviest text shape), cross-corpus span
     # decontamination (same machinery, two-sided), and BM25 top-k
     # retrieval (filtered-explode inverted index + broadcast idf)
     "q_duplicate_span_removal",
     "q_span_decontamination",
     "q_bm25_topk",
-    # added round 13 (subtract for apples-to-apples vs r12): the
-    # persisted BM25 index lifecycle (build + incremental add + a
+    # the persisted BM25 index lifecycle (build + incremental add + a
     # shard-pruned query — gates the INDEX-build path, the one-time
     # cost the serving deployment amortizes) and hybrid RRF retrieval
     # (both retrievers + the bounded-union fusion)
     "q_bm25_index",
     "q_hybrid_rrf",
-    # added round 13, second half: bigram-LM quality scoring — the
-    # heaviest new corpus-statistics shape (positional bigram explode
+    # bigram-LM quality scoring — the heaviest corpus-statistics
+    # shape (positional bigram explode
     # joined to both model tables, content-keyed)
     "q_bigram_surprisal",
-    # added round 14 (subtract for apples-to-apples vs r13): the
-    # char-trigram language classifier — O(corpus chars) trigram
-    # explode + broadcast profile join + struct-max argmax, the new
-    # widest text expression pipeline
+    # the char-trigram language classifier — O(corpus chars) trigram
+    # explode + broadcast profile join + struct-max argmax, the widest
+    # text expression pipeline
     "q_language_id",
-    # added round 14, second half: state residence durations (full
+    # state residence durations (full
     # events scan through lead-window + two co-keyed aggs — the
     # categorical sibling of the TWA shape) and the Mann-Kendall
     # trend test (the guarded per-series pair join over the daily
     # resample)
     "q_state_durations",
     "q_mann_kendall",
-    # added round 15 (subtract for apples-to-apples vs r14): the
-    # mergeable KLL quantile rollup (per-day sketch agg + merge —
+    # the mergeable KLL quantile rollup (per-day sketch agg + merge —
     # the decomposable-percentile cell every 100 TB rollup needs)
     # and the series-catalog fuzzy linkage through the engine
     # surface (warehouse build + blocked edit-distance join)
     "q_kll_quantile_rollup",
     "q_catalog_fuzzy_link",
-    # added round 16 (subtract for apples-to-apples vs r15): RFM
-    # quintile segmentation (grouped reduce + three ntile windows over
+    # RFM quintile segmentation (grouped reduce + three ntile windows over
     # the per-user aggregate — the window-over-reduced-table shape)
     # and the k-way Theta overlap (per-segment sketch agg + chained
     # intersections over the dims-only combination grid)
     "q_rfm_segmentation",
     "q_theta_overlap_kway",
-    # added round 17 (subtract for apples-to-apples vs r16): the
-    # fastText-style linear quality gate (corpus-wide unigram+bigram
+    # the fastText-style linear quality gate (corpus-wide unigram+bigram
     # explode + broadcast weight join — the hashed-feature scoring
     # shape every model-based curation pass pays) and the per-cohort
     # Kaplan-Meier churn curve (user-keyed reduce + attach-scalar +
@@ -154,15 +142,13 @@ HEADLINE = [
     # (NOTE: this entry deliberately pays the in-plan training
     # recompute — read it as train+score+gate, not scoring cost)
     "q_quality_classifier_trained",
-    # added round 18 (subtract for apples-to-apples vs r17): the
-    # log-rank cohort-survival contrast (user-keyed reduce, then
+    # the log-rank cohort-survival contrast (user-keyed reduce, then
     # dimension-sized grid windows — the statistical-test-over-
     # reduced-table shape) and the per-language trained quality heads
-    # (the r17 trained-gate shape with a lang-keyed model join)
+    # (the trained-gate shape with a lang-keyed model join)
     "q_logrank_cohorts",
     "q_quality_classifier_by_lang",
-    # added round 19 (subtract for apples-to-apples vs r18): the
-    # survival-family completion — Nelson-Aalen + RMST share the KM
+    # the survival-family completion — Nelson-Aalen + RMST share the KM
     # reduce-then-dims-windows shape; the omnibus adds one k-row
     # aggregate over the logrank grid — and the k-class router head
     # (the trained-gate shape with a k-way broadcast fan-out; like
@@ -178,14 +164,6 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # A/B knob (VERDICT r7 next-round #4 bisect): comma-separated query
-    # names to drop from this run — lets the same harness measure the
-    # suite with/without a suspect entry in the same session shape.
-    exclude = {
-        n for n in os.environ.get("SPARK_GRAFT_BENCH_EXCLUDE", "").split(",")
-        if n
-    }
-    headline = [n for n in HEADLINE if n not in exclude]
     spark = get_spark(app_name="rtsdb-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -198,7 +176,7 @@ def main() -> None:
     # the timed data.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in headline:
+        for name in HEADLINE:
             try:
                 fns[name](spark, warm_dir).write.format("noop").mode(
                     "overwrite"
@@ -226,8 +204,8 @@ def main() -> None:
     # operators/dedup.py) — a genuine one-off cache materialization that
     # the sf0.001 warmup cannot amortize because the cache is keyed on
     # the scan path. Materialize it once at the timed sf so the timed
-    # figure is the steady-state cost (VERDICT r3 task #1; Spark's
-    # CacheManager matches the identical analyzed plan, so the timed
+    # figure is the steady-state cost (Spark's CacheManager matches the
+    # identical analyzed plan, so the timed
     # run below reuses this cache).
     try:
         fns["q_minhash_pairs"](spark, sf_dir).write.format("noop").mode(
@@ -236,7 +214,7 @@ def main() -> None:
     except Exception:
         pass
     timings: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         fn = fns[name]
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
@@ -244,13 +222,11 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 4)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
-    _bench_serving_reads(spark, sf_dir, timings, exclude)
+    _bench_serving_reads(spark, sf_dir, timings)
     calibration = _calibration_seconds(spark)
     calibration_io = _calibration_io_seconds(spark, sf_dir)
-    # 3-dp per-query values (round 20 — VERDICT r19 #8): at 67 entries
-    # the one-line JSON outgrew the driver's tail capture once (r18's
-    # comparison was lost to head truncation); 3 dp shaves ~70 bytes
-    # and the driver convention is >10% deltas, so nothing is lost.
+    # 3-dp per-query values keep the one-line record short; the
+    # comparisons read >10% deltas, so nothing is lost.
     timings = {k: round(v, 3) for k, v in timings.items()}
     total = round(sum(timings.values()), 3)
     record = json.dumps(
@@ -260,48 +236,30 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # machine-drift normalizer (VERDICT r9 next-round #4):
-                # fixed CPU-bound work that never touches parquet or
-                # the JSON-recorded queries. Two rounds in a row the
-                # suite moved ~1.3x for purely environmental reasons,
-                # each costing a hand-run code-pinned bisect (SCALE.md
-                # r8/r9 drift notes); dividing suite ratios by the
-                # calibration ratio separates machine drift from code
-                # regressions without a worktree A/B.
+                # machine-drift normalizer: fixed CPU-bound work that
+                # never touches parquet or the JSON-recorded queries.
+                # The suite has moved ~1.3x for purely environmental
+                # reasons (SCALE.md drift notes); dividing suite ratios
+                # by the calibration ratio separates machine drift
+                # from code regressions without a worktree A/B.
                 "calibration_seconds": calibration,
-                # second, I/O-SHAPED probe (VERDICT r12 what's-wrong
-                # #1): the r12 driver run slowed the parquet-heavy
-                # suite ~1.3x while the CPU probe read FASTER — one
-                # scalar cannot normalize contention that hits
-                # compute and I/O differently. Drift attribution now
+                # second, I/O-SHAPED probe: a run has slowed the
+                # parquet-heavy suite ~1.3x while the CPU probe read
+                # FASTER — one scalar cannot normalize contention that
+                # hits compute and I/O differently. Drift attribution
                 # requires BOTH ratios to agree (SCALE.md two-probe
                 # rule); disagreement marks the run's suite delta
                 # unattributable environment skew, not a code signal.
                 "calibration_io_seconds": calibration_io,
             }
         )
-    # double-write the record (round 20 — VERDICT r19 #8): the stdout
-    # line stays the driver contract; the sibling file survives a
-    # truncated tail capture so a round's comparison can never be lost
-    # again. Same object, byte-identical.
-    try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_LAST.json",
-            ),
-            "w",
-        ) as fh:
-            fh.write(record + "\n")
-    except OSError:
-        pass  # a read-only checkout must not fail the bench
     print(record)
 
 
 def _calibration_seconds(spark) -> float:
     """Fixed-work calibration: xxhash64+sum over an in-memory range
     with one small groupBy shuffle — deterministic CPU-bound work, no
-    file I/O, so its per-round ratio measures the MACHINE, not the
+    file I/O, so its run-to-run ratio measures the MACHINE, not the
     code or the data layout. One untimed warm run removes codegen
     compile noise, matching the suite's steady-state protocol; the
     reported figure is the median of 3 timed runs (a single run still
@@ -373,8 +331,8 @@ def _calibration_io_seconds(spark, sf_dir: str) -> float | None:
     return cal
 
 
-def _bench_serving_reads(spark, sf_dir: str, timings: dict, exclude) -> None:
-    """Serving-read entries (VERDICT r8 next-round #7): time the
+def _bench_serving_reads(spark, sf_dir: str, timings: dict) -> None:
+    """Serving-read entries: time the
     current-state read on BOTH faces so the route a dashboard polls
     has a regression gate like every analytic query —
 
@@ -398,8 +356,6 @@ def _bench_serving_reads(spark, sf_dir: str, timings: dict, exclude) -> None:
         _write_latest_manifest_atomic,
     )
 
-    if {"serve_latest_scan", "serve_latest_snapshot"} <= exclude:
-        return
     wh = os.path.join(
         tempfile.gettempdir(), f"rtsdb_bench_serving_{os.getpid()}"
     )
@@ -420,110 +376,98 @@ def _bench_serving_reads(spark, sf_dir: str, timings: dict, exclude) -> None:
         eng.ingest_df(raw, dense_seq=False)  # bulk parallel path
         eng.count()  # warm listing + footers (steady-state protocol)
 
-        if "serve_latest_scan" not in exclude:
-            t0 = time.perf_counter()
-            eng.latest(prefer_snapshot=False).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings["serve_latest_scan"] = round(
-                time.perf_counter() - t0, 4
-            )
-            print(
-                f"# serve_latest_scan: {timings['serve_latest_scan']:.3f}s",
-                file=sys.stderr,
-            )
+        t0 = time.perf_counter()
+        eng.latest(prefer_snapshot=False).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        timings["serve_latest_scan"] = round(time.perf_counter() - t0, 4)
+        print(
+            f"# serve_latest_scan: {timings['serve_latest_scan']:.3f}s",
+            file=sys.stderr,
+        )
 
-        if "serve_latest_snapshot" not in exclude:
-            # materialize the snapshot the streaming sink would have
-            # committed (same directory + manifest layout)
-            latest_root = os.path.join(wh, "latest")
-            eng.latest(prefer_snapshot=False).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(latest_root, "snap=0"))
-            _write_latest_manifest_atomic(
-                latest_root, {"dir": "snap=0", "batch_id": 0}, spark
+        # materialize the snapshot the streaming sink would have
+        # committed (same directory + manifest layout)
+        latest_root = os.path.join(wh, "latest")
+        eng.latest(prefer_snapshot=False).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(latest_root, "snap=0"))
+        _write_latest_manifest_atomic(
+            latest_root, {"dir": "snap=0", "batch_id": 0}, spark
+        )
+        # time on a FRESH engine instance: the instance above
+        # batch-ingested, so ITS latest() takes the _batch_ingested
+        # mixed-path guard and re-runs the batch argmax — timing two
+        # scans, not the snapshot read. A fresh instance over the same
+        # warehouse is exactly the serving process the route runs in.
+        snap_eng = TimeseriesEngine(spark, wh)
+        snap_df = snap_eng.latest()
+        # fail LOUDLY if the guard ever redirects this entry back
+        # to the batch face: the snapshot plan must read only the
+        # snap dir, never the telemetry base
+        snap_files = set(snap_df.inputFiles())
+        assert snap_files and all(
+            "/latest/snap=" in f for f in snap_files
+        ), (
+            "serve_latest_snapshot is NOT reading the snapshot dir "
+            f"— gate is timing the wrong path: {sorted(snap_files)[:3]}"
+        )
+        t0 = time.perf_counter()
+        snap_df.write.format("noop").mode("overwrite").save()
+        timings["serve_latest_snapshot"] = round(time.perf_counter() - t0, 4)
+        print(
+            "# serve_latest_snapshot: "
+            f"{timings['serve_latest_snapshot']:.3f}s",
+            file=sys.stderr,
+        )
+
+        # the exactly-once union read path (engine.telemetry() over
+        # manifest-committed batch dirs — api._read_base_union_eo) gets
+        # its own regression gate: every engine read rides this plan on
+        # EO-wired warehouses, so a manifest-glob or union regression
+        # would tax the whole serving surface. A SEPARATE warehouse:
+        # committing an EO manifest into `wh` would flip the
+        # auto-detect for the entries above.
+        from rusty_timeseries_db_spark.streaming.ingest import (
+            commit_batch_exactly_once,
+            normalize_batch,
+        )
+
+        wh_eo = wh + "_eo"
+        shutil.rmtree(wh_eo, ignore_errors=True)
+        try:
+            path = os.path.join(wh_eo, "telemetry_eo")
+            half = F.col("timeseries_id").substr(-1, 1).isin(
+                *[str(d) for d in range(5)]
             )
-            # time on a FRESH engine instance (ADVICE r9 #1): the
-            # instance above batch-ingested, so ITS latest() takes the
-            # _batch_ingested mixed-path guard and re-runs the batch
-            # argmax — timing two scans, not the snapshot read. A
-            # fresh instance over the same warehouse is exactly the
-            # serving process the route runs in.
-            snap_eng = TimeseriesEngine(spark, wh)
-            snap_df = snap_eng.latest()
-            # fail LOUDLY if the guard ever redirects this entry back
-            # to the batch face: the snapshot plan must read only the
-            # snap dir, never the telemetry base
-            snap_files = set(snap_df.inputFiles())
-            assert snap_files and all(
-                "/latest/snap=" in f for f in snap_files
+            commit_batch_exactly_once(
+                normalize_batch(raw.filter(half), 0), 0, path
+            )
+            commit_batch_exactly_once(
+                normalize_batch(raw.filter(~half), 1), 1, path
+            )
+            eo_eng = TimeseriesEngine(spark, wh_eo)
+            eo_df = eo_eng.telemetry()
+            eo_files = set(eo_df.inputFiles())
+            assert eo_files and all(
+                "/telemetry_eo/" in f for f in eo_files
             ), (
-                "serve_latest_snapshot is NOT reading the snapshot dir "
-                f"— gate is timing the wrong path: {sorted(snap_files)[:3]}"
+                "serve_eo_union is NOT reading only committed EO "
+                f"dirs: {sorted(eo_files)[:3]}"
             )
+            # steady-state protocol like every other entry: one
+            # untimed run warms footers/pages so the timed figure
+            # is the repeat-read cost a serving process pays
+            eo_df.write.format("noop").mode("overwrite").save()
             t0 = time.perf_counter()
-            snap_df.write.format("noop").mode("overwrite").save()
-            timings["serve_latest_snapshot"] = round(
-                time.perf_counter() - t0, 4
-            )
+            eo_df.write.format("noop").mode("overwrite").save()
+            timings["serve_eo_union"] = round(time.perf_counter() - t0, 4)
             print(
-                "# serve_latest_snapshot: "
-                f"{timings['serve_latest_snapshot']:.3f}s",
+                f"# serve_eo_union: {timings['serve_eo_union']:.3f}s",
                 file=sys.stderr,
             )
-
-        if "serve_eo_union" not in exclude:
-            # round 11: the exactly-once union read path
-            # (engine.telemetry() over manifest-committed batch dirs —
-            # api._read_base_union_eo) gets its own regression gate:
-            # every engine read now rides this plan on EO-wired
-            # warehouses, so a manifest-glob or union regression
-            # would tax the whole serving surface. A SEPARATE
-            # warehouse: committing an EO manifest into `wh` would
-            # flip the auto-detect for the entries above.
-            from rusty_timeseries_db_spark.streaming.ingest import (
-                commit_batch_exactly_once,
-                normalize_batch,
-            )
-
-            wh_eo = wh + "_eo"
+        finally:
             shutil.rmtree(wh_eo, ignore_errors=True)
-            try:
-                path = os.path.join(wh_eo, "telemetry_eo")
-                half = F.col("timeseries_id").substr(-1, 1).isin(
-                    *[str(d) for d in range(5)]
-                )
-                commit_batch_exactly_once(
-                    normalize_batch(raw.filter(half), 0), 0, path
-                )
-                commit_batch_exactly_once(
-                    normalize_batch(raw.filter(~half), 1), 1, path
-                )
-                eo_eng = TimeseriesEngine(spark, wh_eo)
-                eo_df = eo_eng.telemetry()
-                eo_files = set(eo_df.inputFiles())
-                assert eo_files and all(
-                    "/telemetry_eo/" in f for f in eo_files
-                ), (
-                    "serve_eo_union is NOT reading only committed EO "
-                    f"dirs: {sorted(eo_files)[:3]}"
-                )
-                # steady-state protocol like every other entry: one
-                # untimed run warms footers/pages so the timed figure
-                # is the repeat-read cost a serving process pays
-                eo_df.write.format("noop").mode("overwrite").save()
-                t0 = time.perf_counter()
-                eo_df.write.format("noop").mode("overwrite").save()
-                timings["serve_eo_union"] = round(
-                    time.perf_counter() - t0, 4
-                )
-                print(
-                    "# serve_eo_union: "
-                    f"{timings['serve_eo_union']:.3f}s",
-                    file=sys.stderr,
-                )
-            finally:
-                shutil.rmtree(wh_eo, ignore_errors=True)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
 

@@ -76,7 +76,7 @@ GROUPS = [
     ("Data quality & CDC",
      ["q_data_quality", "q_merge_upsert", "q_scd2"]),
     # NOTE group_of is FIRST-match: a prefix listed here must not also
-    # match an earlier group (review round 12 — q_histogram_quantile
+    # match an earlier group (q_histogram_quantile
     # stays under Aggregation via its q_histogram prefix)
     ("PromQL / counters",
      ["q_promql", "q_predict_linear", "q_counter", "q_rate_per_second"]),
@@ -123,9 +123,9 @@ def main() -> None:
         "(`q_approx_aggregates`, `q_approx_top_k`) are rows-only for",
         "the same reason — HLL/quantile/heavy-hitter sketch internals",
         "differ by engine — with accuracy-vs-exact assertions in tests.",
-        "(The end-to-end composite `q_training_corpus_pipeline` was",
-        "rows-only through round 6; since round 7 it carries a full",
-        "7-stage CTE oracle and hash-matches — see its DuckDB row",
+        "(The end-to-end composite `q_training_corpus_pipeline`",
+        "carries a full 7-stage CTE oracle and hash-matches — see",
+        "its DuckDB row",
         "below. tests/test_pipelines.py additionally asserts stage",
         "effects and partitioning-determinism end-to-end.)",
         "",
@@ -150,9 +150,9 @@ def main() -> None:
         f.write("\n".join(lines))
     print(f"QUERIES.md: {len(specs)} queries, {n_oracle} with oracles")
 
-    # README carries the same counts in its module table (ADVICE r11
-    # #2: hand-maintained copies drift) — regenerate them here so one
-    # command refreshes every count the judge reads.
+    # README carries the same counts in its module table (hand-maintained
+    # copies drift) — regenerate them here so one
+    # command refreshes every count a reader sees.
     import re
 
     readme_path = os.path.join(_REPO, "README.md")

@@ -33,7 +33,7 @@ from .operators.overlay import apply_overlay
 from pyspark.sql.types import DateType, IntegerType, StructField, StructType
 
 from .schema import (
-    STORED_TELEMETRY_SCHEMA,  # canonical home moved to schema.py (r11)
+    STORED_TELEMETRY_SCHEMA,  # canonical home moved to schema.py
     TELEMETRY_INGEST_SCHEMA,
     TELEMETRY_SCHEMA,
     normalize_ingest,
@@ -63,8 +63,8 @@ class _SummaryKind(NamedTuple):
 DEFAULT_FAULT_THRESHOLD = 0.95
 DEFAULT_FLAG_VALUE = 1
 
-#: Read-time remap offset for exactly-once rows' ingest_seq (round 10,
-#: code-review): the EO sink and the batch path assign seqs from two
+#: Read-time remap offset for exactly-once rows' ingest_seq: the EO sink and
+#: the batch path assign seqs from two
 #: UNRELATED lineages (stream batch_id * 1e12 + i vs engine-local
 #: dense/bulk counters), so raw values collide — and the overlay merge
 #: keys row identity on ingest_seq alone, which would let a flag
@@ -72,7 +72,7 @@ DEFAULT_FLAG_VALUE = 1
 #: row's whole payload (or vice versa). The union therefore serves EO
 #: rows with seq' = seq - 2^63: a bijective, order-preserving shift of
 #: the ENTIRE non-negative long range into the strictly NEGATIVE band
-#: [-2^63, -1] (2nd review pass: a 2^62 offset ran out after ~4.6M
+#: [-2^63, -1] (a 2^62 offset ran out after ~4.6M
 #: micro-batches — 53 days at 1 batch/s — and silently re-entered the
 #: batch band; the full-range shift cannot, for any representable
 #: seq; the stream's own stride arithmetic ANSI-fails loudly near
@@ -252,8 +252,8 @@ class TimeseriesEngine:
     ) -> None:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
-        #: exactly-once serving mode (round 10 — VERDICT r9 next-round
-        #: #2): rows committed by the exactly-once streaming sink
+        #: exactly-once serving mode: rows committed by the exactly-once
+        #: streaming sink
         #: (``start_streaming_ingest(exactly_once=True)``) land in the
         #: manifest-committed ``telemetry_eo`` table, not the plain
         #: ``telemetry`` dir. None (default) = AUTO-DETECT: every read
@@ -263,7 +263,7 @@ class TimeseriesEngine:
         #: the full query surface without configuration. True = the
         #: committed table is REQUIRED (reads before the first commit
         #: see an empty table rather than silently falling back).
-        #: False = never read it (pre-round-10 behavior).
+        #: False = never read it.
         self.exactly_once = exactly_once
         #: atomic-compaction pointer: when present, names the active
         #: versioned base dir; absent -> the plain ``telemetry`` dir.
@@ -290,7 +290,7 @@ class TimeseriesEngine:
         self._write_lock = threading.RLock()
         #: set once a batch append SUCCEEDS on this instance: from then
         #: on latest() must not prefer a streaming snapshot, which
-        #: cannot see batch-path rows (code-review r9)
+        #: cannot see batch-path rows
         self._batch_ingested = False
 
     def _active_version(self) -> Optional[int]:
@@ -364,8 +364,8 @@ class TimeseriesEngine:
         filter, not a partition — EO dirs are partitioned by
         series_bucket only.
 
-        ``max_batch_id`` (round 11 — EO time travel, VERDICT r10
-        next-round #2): serve only rows from committed micro-batches
+        ``max_batch_id`` (EO time travel): serve only rows from committed
+        micro-batches
         with id <= N. Uncompacted ``batch_id=M`` dirs with M > N are
         PRUNED from the read entirely (dir-level partition pruning on
         the commit sequence); compacted ``compact=K`` dirs — which mix
@@ -435,7 +435,7 @@ class TimeseriesEngine:
         ``telemetry_eo``), so the union is duplication-free.
 
         Pure-EO warehouses (no batch dir) skip the union entirely
-        (round 11, measured): the synthesized zero-row base frame is
+        (measured): the synthesized zero-row base frame is
         semantically a no-op but still adds a scan to every action —
         a constant tax on every serving read of an exactly-once
         deployment.
@@ -486,7 +486,7 @@ class TimeseriesEngine:
     ) -> DataFrame:
         """The public telemetry view: base ∪ overlay, last-write-wins.
 
-        ``keep_ds`` (round 16 — VERDICT r15 #4) retains the ``ds``
+        ``keep_ds`` retains the ``ds``
         day-partition column on a date-partitioned warehouse so a
         downstream day filter prunes ``ds=<day>`` directories — the
         continuous rollup's ``invalidate_days`` rides this. Only
@@ -499,15 +499,15 @@ class TimeseriesEngine:
         travel a filter, not a file operation). Overlay updates are
         ignored for snapshot reads — they represent later mutations.
 
-        Round 10: when this warehouse carries a committed exactly-once
+        When this warehouse carries a committed exactly-once
         manifest (``start_streaming_ingest(exactly_once=True)``), the
         committed rows are unioned in — so query_by_id / latest / the
         REPL and every HTTP route serve the stronger-guarantee table
-        through the SAME surface (VERDICT r9 next-round #2; see
+        through the SAME surface (see
         ``exactly_once`` on the constructor for the mode switch).
 
-        Snapshot cursors are PER LINEAGE (round 11 — VERDICT r10
-        next-round #2): the batch path and the exactly-once stream
+        Snapshot cursors are PER LINEAGE: the batch path and the
+        exactly-once stream
         assign sequence numbers from two unrelated counters, so one
         number cannot address both. ``as_of_seq`` (from
         ``current_seq()``) cuts the BATCH lineage; ``as_of_eo_hwm``
@@ -640,8 +640,8 @@ class TimeseriesEngine:
         partition-prefixed monotonic id) while the write remains fully
         parallel — the 100 TB path, where global arrival order within a
         batch is not observable anyway."""
-        # Round 20 (guide §1.4 — VERDICT r19 #6): when the quota guard
-        # is OFF the batch size rides the ingest write itself as an
+        # When the quota guard is OFF the batch size rides the ingest write
+        # itself as an
         # ``observe()`` metric — one pass over the ingest frame instead
         # of count-then-write. With ``max_rows`` set, the count must
         # stay a SEPARATE pass: the Table-Full contract rejects before
@@ -654,8 +654,8 @@ class TimeseriesEngine:
                 n = raw.count()
                 if self.count() + n > self.max_rows:
                     raise RuntimeError("Table Full")
-            # Write-time mixed-lineage signal (round 11 — VERDICT r10
-            # next-round #4): a warehouse whose streaming lineage is
+            # Write-time mixed-lineage signal: a warehouse whose streaming
+            # lineage is
             # purely exactly-once gets its dual-lineage ambiguity CREATED
             # by the first batch append — previously the only warning
             # fired much later, when latest() happened to serve a
@@ -696,8 +696,8 @@ class TimeseriesEngine:
             # re-densify); dense mode stays exactly sequential.
             if not (dense_seq and observe_count):
                 self._seq += n if dense_seq else (1 << 53)
-            # set BEFORE the write, deliberately (code-review r9, 3rd
-            # pass): a write that FAILS midway can still have committed
+            # set BEFORE the write, deliberately: a write that FAILS midway
+            # can still have committed
             # some rows on a non-atomic committer — rows a snapshot cannot
             # see. Err on the fail-safe side: an uncertain append disables
             # snapshot preference (worst case: the O(history) scan — a
@@ -752,7 +752,7 @@ class TimeseriesEngine:
 
         updates = normalize_payload(self._payload_frame(rows))
         with self._write_lock:
-            # target the FULL read surface (2nd review pass): updates
+            # target the FULL read surface: updates
             # keyed to exactly-once rows must bind their remapped
             # negative seqs — building from the batch base alone made
             # R2 updates against stream-committed rows a silent no-op.
@@ -765,7 +765,7 @@ class TimeseriesEngine:
             ).withColumn(
                 "overlay_version", F.lit(self._next_overlay_version())
             )
-            # count rides the append (round 20 — guide §1.4): one job,
+            # count rides the append (guide §1.4): one job,
             # and the write is the single realization of the overlay
             obs = Observation("update_rows_n")
             overlay.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
@@ -775,8 +775,8 @@ class TimeseriesEngine:
 
     def _next_overlay_version(self) -> int:
         """Monotonic last-write-wins version for overlay appends.
-        Seeded from the on-disk maximum on first use (2nd review
-        pass): a fresh engine instance over a warehouse whose overlay
+        Seeded from the on-disk maximum on first use: a fresh engine
+        instance over a warehouse whose overlay
         survived — which compaction now makes the steady state for
         EO-targeting rows — must number ABOVE the surviving rows, or
         its updates silently lose the version-desc tie-break to stale
@@ -784,7 +784,7 @@ class TimeseriesEngine:
         if not hasattr(self, "_overlay_ver"):
             base = 0
             # scan the live overlay AND the crash-stranded retained
-            # sibling (3rd review pass): after a compact() crash in
+            # sibling: after a compact() crash in
             # the rename window the highest versions live only in
             # __retained, and numbering below them would let the next
             # recovery merge resurrect stale values over newer ones
@@ -1012,7 +1012,7 @@ class TimeseriesEngine:
         blocker=None,
     ) -> DataFrame:
         """Resolve DIRTY external sensor names onto the series catalog
-        (round 15 — VERDICT r14 next-round #7; the natural home of
+        (the natural home of
         :func:`..operators.linkage.fuzzy_join`): the reference keys
         every series by a free-text ``sensor_name`` and offers only
         exact-match lookup (main.rs:92-140), but real external feeds
@@ -1062,7 +1062,7 @@ class TimeseriesEngine:
         4. best-effort delete the previous base dir (a crash leaves an
            orphan dir that the next compact removes).
 
-        Round 10 (code-review): overlay rows targeting EXACTLY-ONCE
+        Overlay rows targeting EXACTLY-ONCE
         rows (negative remapped seqs — FDD write-back / update_rows
         against stream-committed data) cannot fold into the batch
         base; they are RETAINED in the overlay instead of deleted —
@@ -1078,7 +1078,7 @@ class TimeseriesEngine:
             # sibling dir — restore it before anything else. When new
             # updates have ALREADY recreated the overlay dir since the
             # crash, the stranded rows are APPENDED rather than skipped
-            # (2nd review pass: the rename-only recovery was defeated by
+            # (the rename-only recovery was defeated by
             # any intervening update_rows/run_fault_detection, and the
             # cleanup below would then delete the stranded flags forever);
             # duplicates from a pre-swap crash re-append identical rows,
@@ -1092,7 +1092,7 @@ class TimeseriesEngine:
                     try:
                         retained = self.spark.read.parquet(retained_tmp)
                     except Exception:
-                        # unreadable sibling (3rd review pass): an
+                        # unreadable sibling: an
                         # EMPTY/partial dir — a crash before any part file
                         # landed, or external cleanup — holds nothing to
                         # recover and must not block every future
@@ -1140,7 +1140,7 @@ class TimeseriesEngine:
                     "ds", F.coalesce(F.to_date("ts"), F.lit("9999-12-31").cast("date"))
                 )
             # the new-base row count rides the rewrite itself as an
-            # observe() metric (round 20 — guide §1.4/§5, the ingest_df
+            # observe() metric (guide §1.4/§5, the ingest_df
             # pattern): previously the ENTIRE merged base was persist()ed
             # just to keep a count job and the write consistent — at scale
             # that doubles the rewrite's storage footprint. The write is a
@@ -1292,9 +1292,8 @@ class TimeseriesEngine:
     def compact_exactly_once(self) -> int:
         """Fold the exactly-once table's visible ``batch_id=N`` /
         ``compact=N`` directories into one compacted generation
-        (round 11 — the engine facade the maintenance pair was
-        missing: retention got ``drop_exactly_once_before`` in r10
-        while compaction required importing the streaming module).
+        (the engine facade pairs it with ``drop_exactly_once_before``,
+        so compaction needs no import of the streaming module).
         Small-files control for the per-micro-batch dir layout; the
         replay ledger folds into (hwm, pooled fingerprints) so the
         per-batch manifest stops growing — see
@@ -1306,7 +1305,7 @@ class TimeseriesEngine:
         return compact_exactly_once(self.spark, self.warehouse_dir)
 
     def drop_exactly_once_before(self, cutoff_ts: str) -> list[str]:
-        """Retention for the exactly-once table (round 10): drop every
+        """Retention for the exactly-once table: drop every
         committed ``telemetry_eo`` directory whose rows are all older
         than ``cutoff_ts``, manifest-atomically — the
         :meth:`drop_chunks_before` analog for the ``batch_id=N`` /
@@ -1344,7 +1343,7 @@ class TimeseriesEngine:
         # date-partitioned warehouse: keep the ds partition column in
         # the rollup's base view and tell the rollup about it, so
         # invalidate_days prunes ds=<day> directories instead of
-        # leaning on row-group ts stats (round 16 — VERDICT r15 #4)
+        # leaning on row-group ts stats
         keep_ds = self.partition_by_date
         if keep_ds:
             cols.append("ds")
@@ -1362,8 +1361,8 @@ class TimeseriesEngine:
     def schedule_rollup_refresh(
         self, rollup, interval_seconds: float = 300
     ):
-        """R5/R6 cadence parity for the AGGREGATE surface (VERDICT r7
-        next-round #9): start a re-arming refresh loop on a
+        """R5/R6 cadence parity for the AGGREGATE surface: start a re-arming
+        refresh loop on a
         :class:`~..operators.rollup.ContinuousRollup` (typically one
         from :meth:`continuous_rollup`). Returns the started
         :class:`~..operators.rollup.RollupScheduler` — call
@@ -1373,12 +1372,12 @@ class TimeseriesEngine:
 
         return RollupScheduler(rollup, interval_seconds).start()
 
-    #: facade summary-store kinds (round 17 — VERDICT r16 next-round
-    #: #3), one table: public kind -> the store's manifest tag; its
+    #: facade summary-store kinds, one table: public kind -> the store's
+    #: manifest tag; its
     #: streaming module's sink starter, server and compactor; the
     #: serve_summary knobs the server honors (an explicitly-passed
     #: knob outside the set raises instead of being silently dropped —
-    #: ADVICE r17: a caller passing ``keys`` to a 'state' store
+    #: a caller passing ``keys`` to a 'state' store
     #: expects key-subset coarsening); and the facade arguments the
     #: sink starter takes, by its parameter names. The four stores
     #: share one protocol (streaming/store_common.py); these doors
@@ -1429,7 +1428,7 @@ class TimeseriesEngine:
         (and vice versa — derive the module-side path with this
         method).
 
-        The kind is ALWAYS part of the layout (ADVICE r17): keying on
+        The kind is ALWAYS part of the layout: keying on
         ``name or kind`` alone let a topk store and a quantile store
         that shared a ``name`` collide on one directory — and, worse,
         one streaming CHECKPOINT, so the second sink resumed the
@@ -1454,7 +1453,7 @@ class TimeseriesEngine:
         available_now: bool = False,
     ):
         """Keep a mergeable summary store current from the telemetry
-        drop directory (round 17 — VERDICT r16 next-round #3, facade
+        drop directory (facade
         symmetry with ``start_telemetry_sink``): one call wires the
         JSON-lines source through per-batch normalization into one of
         the four CAS-manifest summary stores, so "keep a quantile
@@ -1497,8 +1496,8 @@ class TimeseriesEngine:
                 "kind='state' tracks durations per ONE key column "
                 f"— got keys={keys}"
             )
-        # checkpoint mirrors the store layout (kind always included —
-        # ADVICE r17: a shared name across kinds must not share source
+        # checkpoint mirrors the store layout (kind always included: a
+        # shared name across kinds must not share source
         # offsets, or the second sink silently skips every file the
         # first already processed)
         checkpoint = os.path.join(
@@ -1534,7 +1533,7 @@ class TimeseriesEngine:
         overlap_key: Optional[str] = None,
         overlap_k: Optional[int] = None,
     ) -> DataFrame:
-        """Serve a facade-managed summary store (round 17): merged
+        """Serve a facade-managed summary store: merged
         estimates over everything the sink has committed — O(stored
         summaries), never O(events). ``keys`` may be any subset of the
         stored cell keys (default: the stored keys, read from the
@@ -1546,14 +1545,14 @@ class TimeseriesEngine:
         sink has not committed anything yet.
 
         A knob the selected kind cannot honor RAISES when explicitly
-        passed (ADVICE r17) — previously ``keys`` on a ``'state'``
+        passed — previously ``keys`` on a ``'state'``
         store (or ``quantiles``/``k``/``overlap_key`` on the wrong
         kind) was silently dropped, so a caller expecting key-subset
         coarsening got full-granularity output with no signal. Every
         knob defaults to None so "explicitly passed" is detectable;
         ``quantiles`` falls back to ``(0.5, 0.95, 0.99)`` and
         ``overlap_k`` to 2 when applicable-but-unset. Two follow-on
-        guards (ADVICE r18): ``overlap_k`` without ``overlap_key``
+        guards: ``overlap_k`` without ``overlap_key``
         raises (it only means anything in overlap mode — accepting it
         on a plain ``'theta'`` serve would be the same silent-drop
         class), and a falsy-but-explicit value (``quantiles=()``,
@@ -1582,7 +1581,7 @@ class TimeseriesEngine:
                 "one or the other"
             )
         if overlap_k is not None and overlap_key is None:
-            # ADVICE r18: overlap_k only means anything in overlap
+            # overlap_k only means anything in overlap
             # mode — on a plain serve it would be silently ignored,
             # the exact drop class the knob validation exists to stop
             raise ValueError(
@@ -1596,7 +1595,7 @@ class TimeseriesEngine:
                 f"got {overlap_k!r}"
             )
         if quantiles is not None and len(quantiles) == 0:
-            # ADVICE r18: an explicitly-passed empty tuple would fall
+            # an explicitly-passed empty tuple would fall
             # through an `or`-default into (0.5, 0.95, 0.99) — the
             # caller asked for nothing and would silently get the
             # defaults instead of an answer-shaped error
@@ -1626,7 +1625,7 @@ class TimeseriesEngine:
         self, kind: str, name: Optional[str] = None
     ) -> int:
         """Fold a facade-managed summary store's committed summaries
-        into its base snapshot (round 17): the maintenance verb that
+        into its base snapshot: the maintenance verb that
         keeps :meth:`serve_summary` O(base + post-compact batches) as
         micro-batches accrue — same cadence stance as
         :meth:`compact_exactly_once`. Safe beside the live sink (the
@@ -1662,8 +1661,7 @@ class TimeseriesEngine:
         """Current state: the latest row per series. Also a REPL verb
         (``latest``) and the GET /latest route's source.
 
-        Serving strategy (VERDICT r8 what's-wrong #1, fixed round 9):
-        when a streaming last-value sink
+        Serving strategy: when a streaming last-value sink
         (streaming/ingest.py start_latest_value_sink) has committed a
         snapshot into this warehouse, serve THAT — an O(#series) read
         of one snapshot directory, never touching history — with the
@@ -1677,7 +1675,7 @@ class TimeseriesEngine:
         or when the caller needs overlay updates that MOVE a row's ts,
         which the snapshot path cannot re-rank — see below).
 
-        ``timeseries_id`` (round 9) narrows to ONE series — "what is
+        ``timeseries_id`` narrows to ONE series — "what is
         sensor X now", the single most common serving question. On the
         snapshot face that is a point read of an O(#series) file; on
         the batch face the equality predicate is applied BEFORE a
@@ -1700,7 +1698,7 @@ class TimeseriesEngine:
         enforceable for a last-value sink attached later to a
         warehouse whose telemetry checkpoint already advanced — there
         the overlay keys miss the snapshot's rows and flag updates
-        silently stay invisible on the snapshot face (code-review r9).
+        silently stay invisible on the snapshot face.
         For such retrofitted wirings serve ``prefer_snapshot=False``
         (or restart both sinks with fresh checkpoints). An overlay
         update that changes a NON-latest row, or changes WHICH row is
@@ -1714,7 +1712,7 @@ class TimeseriesEngine:
         probe = (
             timeseries_id[:32] if timeseries_id is not None else None
         )
-        # Mixed-path guard (code-review r9): a snapshot only reflects
+        # Mixed-path guard: a snapshot only reflects
         # STREAM-ingested rows. Once this engine instance appends
         # through the batch path (REPL insert / ingest_rows /
         # ingest_df), the snapshot may be stale relative to the base
@@ -1767,8 +1765,7 @@ class TimeseriesEngine:
         streaming/ingest.py), but this is a READER with a fully
         correct fallback one line away (the batch argmax), so a
         damaged pointer degrades to the fallback with a warning
-        instead of turning every dashboard poll into a 400
-        (code-review r9, 3rd pass)."""
+        instead of turning every dashboard poll into a 400."""
         from .streaming.ingest import read_latest_values
 
         try:
@@ -1785,7 +1782,7 @@ class TimeseriesEngine:
         if snap is None:
             return None
         if self._eo_wired():
-            # pure exactly-once wiring (2nd review pass): the
+            # pure exactly-once wiring: the
             # last-value sink shares the EO sink's source and batch
             # numbering, so the snapshot's raw seqs belong to the EO
             # lineage — remap them exactly like _read_committed_eo
@@ -1826,7 +1823,7 @@ class TimeseriesEngine:
         warehouse carrying BOTH checkpoints has an unknowable snapshot
         lineage — it is treated as batch-lineage and
         ``_warn_if_retrofitted_snapshot`` warns on the AMBIGUITY
-        itself (3rd review pass: a stale at-least-once checkpoint
+        itself (a stale at-least-once checkpoint
         from an earlier wiring previously made flags vanish from the
         snapshot face with no signal, since the epoch comparison
         alone stayed quiet)."""
@@ -1837,7 +1834,7 @@ class TimeseriesEngine:
 
     def _warn_if_retrofitted_snapshot(self) -> None:
         """Turn the one SILENT snapshot-face divergence window into an
-        operational signal (VERDICT r9 next-round #3): a last-value
+        operational signal: a last-value
         sink retrofitted onto a warehouse whose telemetry checkpoint
         already advanced numbers its micro-batches from 0 while the
         telemetry rows carry higher batch-id-embedded ``ingest_seq`` —
@@ -1864,7 +1861,7 @@ class TimeseriesEngine:
             # is unknowable (it numbered with whichever sink shared
             # its source), so overlay keys may or may not match — the
             # one case the epoch comparison below cannot adjudicate.
-            # Warn on the ambiguity itself (3rd review pass).
+            # Warn on the ambiguity itself.
             self._retrofit_warned = True
             import warnings
 
@@ -1881,7 +1878,7 @@ class TimeseriesEngine:
         if tel is None:
             # exactly-once wiring checkpoints under ingest_eo — the
             # same retrofit geometry applies to that sink's lineage
-            # (2nd review pass)
+            #
             tel = eo
         if tel is None or lat is None:
             return  # not a dual-sink streaming warehouse (or remote FS)
@@ -1925,17 +1922,16 @@ class TimeseriesEngine:
 
         ``exactly_once=True`` routes ingest through the manifest-
         committed sink instead — the table lands in ``telemetry_eo``
-        and, since round 10, is SERVED through the same engine surface
+        and is SERVED through the same engine surface
         as everything else: ``telemetry()`` / ``query_by_id`` /
         ``latest()`` / REPL / HTTP auto-detect the committed manifest
         and union the committed rows in (constructor ``exactly_once``
         pins the mode explicitly; the raw reader remains
         ``streaming.ingest.read_committed_telemetry``).
         ``quarantine_dir``/``rollup`` forward to whichever sink is
-        wired — since round 11 the exactly-once sink supports both
-        (quarantine is per-batch-dir OVERWRITE there, so replays do
-        not duplicate bad lines; rollup refreshes only on batches
-        that actually wrote), closing the r9 pick-one guard.
+        wired — the exactly-once sink supports both (quarantine is
+        per-batch-dir OVERWRITE there, so replays do not duplicate bad
+        lines; rollup refreshes only on batches that actually wrote).
         """
         from .streaming.ingest import (
             read_telemetry_stream,

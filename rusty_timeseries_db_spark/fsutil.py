@@ -63,7 +63,7 @@ def write_json_manifest(spark: SparkSession, path: str, payload: dict) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Versioned manifest protocol (round 9): old-or-new atomicity on any FS
+# Versioned manifest protocol: old-or-new atomicity on any FS
 # ---------------------------------------------------------------------------
 #
 # ``write_json_manifest`` above commits via delete→rename, which is two
@@ -118,7 +118,7 @@ def _is_manifest_read_error(e: Exception) -> bool:
     ``java.io.FileNotFoundException`` a GC race surfaces between the
     exists probe and the open. False for everything else (JVM/Py4J
     connectivity, FS auth, ...) — those are environment failures, not
-    manifest damage, and must propagate (ADVICE r9 #3)."""
+    manifest damage, and must propagate."""
     if isinstance(e, (ValueError, OSError)):
         return True
     jexc = getattr(e, "java_exception", None)
@@ -146,22 +146,21 @@ def read_versioned_manifest_versioned(
 ) -> tuple[int, dict] | None:
     """(version N, dict) of the highest readable manifest version, or
     None when NO version exists (cold start). The N is the CAS token
-    for ``write_versioned_manifest(expected_version=N)`` (round 11).
+    for ``write_versioned_manifest(expected_version=N)``.
     A version that vanished (raced the GC — even between the exists
     probe and the open) or fails to decode (torn bytes on a store
     without atomic rename) falls back to the predecessor — the commit
     protocol keeps one. If versions EXIST but none is readable, raise:
     returning None there would let the caller treat a live-but-damaged
     manifest as a cold start and rebuild over it, silently discarding
-    the ledger/pointer it held (code-review r9) — crashing keeps the
+    the ledger/pointer it held — crashing keeps the
     data and lets an operator repair."""
     last_exc: Exception | None = None
     prev_versions = None
     # nothing-readable is re-listed before raising: an external reader
     # can race TWO writer commits (every version it globbed GC'd away)
     # — the re-list sees the newer, healthy versions and succeeds; only
-    # a STABLE unreadable set is genuine damage (code-review r9, 3rd
-    # pass)
+    # a STABLE unreadable set is genuine damage
     for _attempt in range(3):
         versions = _manifest_versions(spark, dir_path, stem)
         if not versions:
@@ -175,7 +174,7 @@ def read_versioned_manifest_versioned(
                     # FS connectivity/auth): propagate with its own
                     # message — misreporting it as 'every version
                     # unreadable' would direct the operator to repair
-                    # healthy manifest files (ADVICE r9 #3)
+                    # healthy manifest files
                     raise
                 # torn JSON, or vanished post-glob — try the predecessor
                 last_exc = e
@@ -203,7 +202,7 @@ def write_versioned_manifest(
     """Commit the next version of ``{dir_path}/{stem}.v{N}.json`` and
     GC versions older than the predecessor. Returns the committed N.
 
-    ``expected_version`` (round 11 — VERDICT r10 next-round #3) makes
+    ``expected_version`` makes
     the commit a compare-and-swap: pass the N the caller's read
     observed (or None for 'no version existed yet'), and the write
     raises :class:`ManifestVersionConflict` when the committed highest
@@ -260,7 +259,7 @@ def parquet_data_exists(spark: SparkSession, path: str) -> bool:
     (recursive; ``_``/``.``-prefixed bookkeeping files don't count) —
     the FS-level stand-in for "``spark.read.parquet(path)`` would
     succeed" that lets an expected-missing read short-circuit WITHOUT
-    a probing read (round 17 — VERDICT r16 next-round #2). Probing
+    a probing read. Probing
     with the reader posts a failed-execution event on analysis
     failure, and once any ``Observation`` has run in the session,
     Spark 4's ObservationManager listener re-analyzes the failed plan
@@ -271,7 +270,7 @@ def parquet_data_exists(spark: SparkSession, path: str) -> bool:
     One FS existence walk costs less than the failed analysis did.
 
     Bookkeeping filtering applies to every path component BELOW
-    ``path``, not just the file's own basename (ADVICE r17): a
+    ``path``, not just the file's own basename: a
     data-named file inside ``_spark_metadata/`` or a leftover
     ``_tmp/`` staging dir is invisible to ``spark.read.parquet`` too
     (the reader's InMemoryFileIndex prunes hidden DIRECTORIES), so
@@ -280,7 +279,7 @@ def parquet_data_exists(spark: SparkSession, path: str) -> bool:
     file whose fully-qualified path does not prefix-match the base
     (a URI-rendering mismatch that should be unreachable — both come
     from the same FileSystem) is treated as UNKNOWN-HIDDEN and
-    skipped rather than judged by basename alone (ADVICE r18): the
+    skipped rather than judged by basename alone: the
     basename fallback silently reverted to the pre-fix behavior of
     counting data-named files inside bookkeeping directories, and a
     false True here only re-admits the failed-read probe this
@@ -304,7 +303,7 @@ def _is_visible_data_file(base: str, fpath: str) -> bool:
     no ``_``/``.``-prefixed component below it — the pure filter under
     :func:`parquet_data_exists`, extracted so the unreachable-by-
     construction mismatch branch is pinnable. Fail closed on a base
-    mismatch (ADVICE r18): the components cannot be verified, and
+    mismatch: the components cannot be verified, and
     counting the file by basename alone would re-admit bookkeeping-
     dir contents."""
     if not fpath.startswith(base):
@@ -322,14 +321,14 @@ def delete_path(spark: SparkSession, path: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Crash-safe directory swap (round 14): rename-aside, never delete-first
+# Crash-safe directory swap: rename-aside, never delete-first
 # ---------------------------------------------------------------------------
 #
 # The index compactors rewrite a live directory (postings/, the IVF cell
 # tree) with a filtered copy. A delete-src-then-rename-tmp swap has a
 # window where the live directory is GONE — a crash there strands the
-# data in the temp dir and every later read raises path-not-found
-# (ADVICE r13 #1). The safe order keeps a complete copy on disk at
+# data in the temp dir and every later read raises path-not-found.
+# The safe order keeps a complete copy on disk at
 # every instant:
 #
 #   1. write the rewrite to  src + SWAP_NEW   (src untouched)

@@ -73,7 +73,7 @@ def merge_rollup(
 # ------------------------------------------- mergeable top-k sketch
 #
 # Heavy hitters with the same decomposition story as the HLL rollup
-# above (round 14): exact per-cell top-k truncation IS a mergeable
+# above: exact per-cell top-k truncation IS a mergeable
 # summary with deterministic error bounds (the SpaceSaving/Misra-Gries
 # merge, Agarwal et al. "Mergeable Summaries", PODS'12) — and because
 # every number in it is an exact integer count, it is fully
@@ -166,7 +166,7 @@ def decompose_topk_sketch(
     - per-cell: ``total_err`` (sum of ALL ``dropped_max``) and
       ``n_rows``.
 
-    Exposed (round 15) because these four quantities — unlike the
+    Exposed because these four quantities — unlike the
     finished summary's per-cell ``dropped_max``, which is a MAX-shaped
     bound and NOT plain-summable — are all sums over disjoint summary
     rows, so they commute with any further coarsening: decompose per
@@ -261,8 +261,8 @@ def merge_topk_sketch(
 
 # ------------------------------------------- mergeable quantile sketch
 #
-# The percentile member of the decomposable-aggregate family (round 15
-# — VERDICT r14 next-round #6): percentile_approx per rollup cell is
+# The percentile member of the decomposable-aggregate family:
+# percentile_approx per rollup cell is
 # NOT mergeable across cells (quantiles don't sum), which is exactly
 # the gap the HLL cells above fill for COUNT DISTINCT. Spark 4 ships
 # Apache DataSketches KLL natively (kll_sketch_agg_double /
@@ -335,7 +335,7 @@ def merge_quantile_rollup(
 
 # ------------------------------------------- mergeable theta sketches
 #
-# The SET-OPERATION member of the sketch family (round 15): HLL cells
+# The SET-OPERATION member of the sketch family: HLL cells
 # union losslessly but cannot INTERSECT — "how many users do segments
 # A and B share" needs Apache DataSketches Theta (Spark-native:
 # theta_sketch_agg / theta_union / theta_intersection /
@@ -357,7 +357,7 @@ def theta_rollup(
     """Per-cell Theta sketch of ``value_col`` (one row per ``keys``
     cell, with the cell's exact row count): the segment-membership
     summary every overlap/retention question reads from. Rows with a
-    NULL in any key column are EXCLUDED (ADVICE r15 low: a NULL-key
+    NULL in any key column are EXCLUDED (a NULL-key
     sketch row would appear in the rollup yet silently vanish from
     every :func:`theta_overlap` pair — the ``seg_a < seg_b`` predicate
     is NULL for it — so excluding it here keeps rollup and overlap
@@ -444,7 +444,7 @@ def theta_overlap_kway(
     sketch_col: str = "theta_sketch",
 ) -> DataFrame:
     """k-way segment intersection estimates from a
-    :func:`theta_rollup` (round 16 — VERDICT r15 next-round #6): for
+    :func:`theta_rollup`: for
     every ordered combination ``seg_1 < seg_2 < ... < seg_k`` the
     distinct-count estimate of members in ALL k segments — the
     question pairwise Jaccard cannot answer (A∩B and B∩C being large

@@ -42,7 +42,7 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 
 
 def quantize_symmetric(vec: Column | str, bits: int = 8) -> Column:
-    """Per-vector symmetric scalar quantization (round 12): returns a
+    """Per-vector symmetric scalar quantization: returns a
     struct ``(scale double, q array<smallint>)`` with
     ``scale = max(|x|) / (2^(bits-1) - 1)`` and
     ``q_i = round(x_i / scale)`` — the int8 storage recipe a 100 TB
@@ -57,7 +57,7 @@ def quantize_symmetric(vec: Column | str, bits: int = 8) -> Column:
     if not 2 <= bits <= 16:
         # bits=1 makes qmax 0 (division by zero -> NULL scales, all-zero
         # codes, silent empty search results); bits>16 overflows the
-        # smallint codes (review round 12)
+        # smallint codes
         raise ValueError(f"quantize bits must be in [2, 16], got {bits}")
     v = _c(vec)
     qmax = float(2 ** (bits - 1) - 1)

@@ -41,7 +41,7 @@ def asof_join(
     - ``nearest``: whichever of the two is closer in time (backward wins
       exact ties, matching pandas).
 
-    ``how`` (round 12): ``"left"`` (default — pandas.merge_asof
+    ``how``: ``"left"`` (default — pandas.merge_asof
     parity) keeps left rows with no match, NULL payloads;
     ``"inner"`` drops them (DuckDB's bare ``ASOF JOIN`` semantics —
     its ``ASOF LEFT JOIN`` is the default form here). The match test
@@ -272,7 +272,7 @@ def pit_join(
     right_order: str | None = None,
     tolerance_seconds: int | None = None,
 ) -> DataFrame:
-    """Point-in-time multi-table join (round 12) — the feature-store
+    """Point-in-time multi-table join — the feature-store
     primitive (Feast/Tecton's ``get_historical_features`` shape): for
     every spine row, attach each feature table's latest row at or
     before the spine timestamp, named ``<col>_<feature name>``. No

@@ -84,7 +84,7 @@ def assign_nearest(
     Adds (assigned_label, dist2).
 
     The argmin is ``min_by`` over a grouped aggregate, NOT a
-    row_number window (code-review r8): the k-times-expanded scored
+    row_number window: the k-times-expanded scored
     stream collapses back to one row per vector in the map-side
     partial aggregate, so the only exchange moves ~|df| combined rows
     — a window would shuffle all k·|df| expanded rows just to rank

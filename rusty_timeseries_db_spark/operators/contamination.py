@@ -58,15 +58,15 @@ def ngram_contamination(
         F.col(id_col),
         F.explode(word_shingles(word_tokens(text_col), k=n)).alias("gram"),
     )
-    # round 20 (guide §3.2 — reduce the big side before shuffling it):
-    # only train grams that ALSO occur in the test set can ever hit,
-    # so the train stream is semi-joined against the broadcast test
-    # gram set BEFORE the corpus-sized distinct aggregate —
-    # output-invariant (the left join below scores exactly the same
-    # test grams), and the train-side shuffle shrinks from |unique
-    # train shingles| to |matching shingles|. The broadcast is the
-    # operator's standing asymmetry: ``test`` is the eval set —
-    # benchmark-sized by definition — while ``train`` is the corpus.
+    # reduce the big side before shuffling it: only train grams that
+    # ALSO occur in the test set can ever hit, so the train stream is
+    # semi-joined against the test gram set BEFORE the corpus-sized
+    # distinct aggregate — output-invariant (the left join below
+    # scores exactly the same test grams), and the train-side shuffle
+    # shrinks from |unique train shingles| to |matching shingles|. No
+    # broadcast hint: the join strategy is left to
+    # ``autoBroadcastJoinThreshold`` and AQE, so an eval set larger
+    # than the threshold shuffles instead of flooding every executor.
     test_gram_set = test.select(
         F.explode(word_shingles(word_tokens(text_col), k=n)).alias("gram")
     ).distinct()
@@ -74,7 +74,7 @@ def ngram_contamination(
         train.select(
             F.explode(word_shingles(word_tokens(text_col), k=n)).alias("gram")
         )
-        .join(F.broadcast(test_gram_set), "gram", "left_semi")
+        .join(test_gram_set, "gram", "left_semi")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -173,7 +173,7 @@ def bigram_surprisal(
     text_col: str = "text",
     rare_max_count: int = 2,
 ) -> DataFrame:
-    """Bigram-LM quality scoring (round 13) — the perplexity-style
+    """Bigram-LM quality scoring — the perplexity-style
     filter CCNet applies with a wiki LM, expressed against the
     corpus's OWN bigram statistics and kept cross-engine
     deterministic by the q_unigram_surprisal discipline: no ``ln()``

@@ -434,7 +434,7 @@ def ngram_containment_pairs(
     threshold: float = 0.5,
 ) -> DataFrame:
     """DIRECTIONAL n-gram containment of eval docs in train docs
-    (round 14; the asymmetric cousin of :func:`ngram_jaccard_pairs`
+    (the asymmetric cousin of :func:`ngram_jaccard_pairs`
     above): containment = |grams(eval) ∩ grams(train)| / |grams(eval)|
     — the metric decontamination actually wants. Jaccard UNDER-FLAGS
     a short eval doc buried verbatim inside a long train doc (the
@@ -490,7 +490,7 @@ def dedup_clusters(
     representative per cluster requires the transitive closure (a~b,
     b~c ⇒ {a,b,c} is one cluster even if (a,c) was never emitted).
 
-    Iterative min-label propagation with pointer jumping (round 20):
+    Iterative min-label propagation with pointer jumping:
     each round every node adopts the minimum label among itself, its
     neighbors, AND the label of its current label (path doubling), so
     convergence takes O(log component diameter) rounds instead of
@@ -539,7 +539,7 @@ def dedup_clusters(
                     "spark.sparkContext.setCheckpointDir(<reliable storage>)"
                 )
             return df.checkpoint()
-        # LAZY local checkpoint (round 20 — guide §1.2, job-count cut):
+        # LAZY local checkpoint (guide §1.2, job-count cut):
         # eager=False lets the round's convergence count materialize
         # the checkpointed blocks as part of ITS job — one job per
         # round instead of checkpoint-then-count. Reliable checkpoints
@@ -549,7 +549,7 @@ def dedup_clusters(
         return df.localCheckpoint(eager=False)
 
     # symmetrize in ONE pass over `pairs` via a 2-element explode
-    # (round 19 optimization — guide §1.2): the union form
+    # (guide §1.2): the union form
     # ``e.union(e.swapped)`` references `pairs` twice, so the full
     # pair-generation join (Jaccard/MinHash upstream) ran twice while
     # materializing this persist. Same rows, same types; order is
@@ -572,8 +572,8 @@ def dedup_clusters(
         .repartition("dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # fused identity-init + first propagation round (round 19
-    # optimization — guide §1.2): with identity labels, round 1's
+    # fused identity-init + first propagation round (guide §1.2):
+    # with identity labels, round 1's
     # "min label among self and neighbors" is simply
     # least(id, min(neighbor)) — one aggregate over the cached edges
     # instead of a distinct+checkpoint followed by a full join round.
@@ -585,9 +585,8 @@ def dedup_clusters(
         .select(F.col("src").alias("id"), "label")
     )
     # the fused init above IS propagation round 1, so the loop runs at
-    # most max_iter - 1 further rounds — the documented max_iter bound
-    # holds again (round 20 — ADVICE r19; the r19 fusion left the loop
-    # at range(max_iter), i.e. up to max_iter + 1 rounds)
+    # most max_iter - 1 further rounds and the documented max_iter
+    # bound holds (range(max_iter) would run up to max_iter + 1 rounds)
     for _ in range(max(0, max_iter - 1)):
         # 1-hop neighbor minimum over the cached symmetric edges
         neigh = (
@@ -598,7 +597,7 @@ def dedup_clusters(
             .groupBy("src")
             .agg(F.min("_nl").alias("_min_nl"))
         )
-        # POINTER JUMP (round 20 — guide §1.2, VERDICT r19 #3): also
+        # POINTER JUMP (guide §1.2): also
         # adopt the label OF the current label — path doubling, so the
         # distance covered per round doubles and the round count drops
         # from O(diameter) to O(log diameter). Both jump references
@@ -705,7 +704,7 @@ def semantic_dedup_pairs(
     # (measured 1.5x end-to-end at sf0.1). The pair score below uses
     # the same d/(na*nb) arithmetic as functions.vectors.cosine, so
     # results are bit-identical to the unfactored form.
-    # persisted (round 19 optimization — guide §1.2): both sides of the
+    # persisted (guide §1.2): both sides of the
     # within-cluster pair join reference this frame, and the
     # assignment argmin (k centroid folds per vector) plus the norm
     # fold are the dominant per-row compute — unpersisted they run
@@ -819,7 +818,7 @@ def duplicate_spans(
     diagonal). Pass ``None`` to disable the cap on corpora known to
     carry no boilerplate (e.g. already-cleaned eval sets).
 
-    ``persist_intermediate`` (round 20 — VERDICT r19 #9): the cached
+    ``persist_intermediate``: the cached
     gram streams below are corpus × ~(n−k+1) rows at MEMORY_AND_DISK —
     disk-backed, so they spill instead of OOMing, but at 100 TB they
     roughly double the operator's disk footprint (cache + the shuffle
@@ -837,7 +836,7 @@ def duplicate_spans(
     # (doc, pos, gram) with pos 0-based; docs shorter than k emit no
     # grams (a span must be k full tokens to match exactly), and the
     # sequence runs only to n-k+1 so no truncated tail shingles exist.
-    # Persisted (round 19 optimization — guide §1.2/§2.4): the gram
+    # Persisted (guide §1.2/§2.4): the gram
     # stream is referenced by the df-cap aggregate AND both sides of
     # the self equi-join; unpersisted, the tokenize+posexplode pass
     # re-runs once per reference (Spark shares no subplans across
@@ -856,8 +855,8 @@ def duplicate_spans(
             .distinct()
             .groupBy("gram")
             .agg(F.count(F.lit(1)).alias("_df"))
-            # round 20 (guide §3.2 — shrink the join inputs before the
-            # shuffle): a gram occurring in exactly ONE document can
+            # shrink the join inputs before the shuffle (guide §3.2): a gram
+            # occurring in exactly ONE document can
             # never satisfy the self-join's id_a < id_b, so dropping
             # df==1 grams from the matchable vocabulary is
             # output-invariant — and most grams are unique, so the
@@ -905,8 +904,8 @@ def cross_duplicate_spans(
     min_span_tokens: int = 10,
     max_gram_df: int | None = 50,
 ) -> DataFrame:
-    """Maximal duplicated token spans BETWEEN two corpora (round 12 —
-    the cross-corpus face of :func:`duplicate_spans`): every (doc in
+    """Maximal duplicated token spans BETWEEN two corpora (the cross-corpus
+    face of :func:`duplicate_spans`): every (doc in
     ``df_a``, doc in ``df_b``) pair sharing a run of >=
     ``min_span_tokens`` identical consecutive tokens yields one row
     ``(id_a, id_b, start_a, start_b, span_tokens)`` — ``id_a`` from
@@ -925,7 +924,7 @@ def cross_duplicate_spans(
     def _grams(df, side):
         toks = word_tokens(text_col)
         # NOT persisted, unlike duplicate_spans' single-corpus stream:
-        # a round-19 same-session A/B measured the three candidate
+        # a same-session A/B measured the three candidate
         # persists here (per-side streams + the rare vocabulary) at
         # 3.40 s -> 4.21 s on q_span_decontamination's shape — each
         # side is referenced only twice with different downstream
@@ -943,9 +942,9 @@ def cross_duplicate_spans(
             .select("_side", id_col, "gram")
             .distinct()
             .groupBy("gram")
-            # round 20 (guide §3.2 — the semi-join reduction VERDICT
-            # r19 #5 asked for, computed INSIDE the df-cap aggregate
-            # for free): a gram present on only one side can never
+            # the semi-join reduction (guide §3.2), computed INSIDE the
+            # df-cap aggregate for free: a gram present on only one side can
+            # never
             # match the cross-side equi-join, so the matchable
             # vocabulary additionally requires presence in BOTH
             # corpora. Output-invariant (the a⋈b inner join drops
@@ -995,7 +994,7 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Rewrite the corpus with duplicated spans CUT (round 12 — the
+    """Rewrite the corpus with duplicated spans CUT (the
     removal half of Lee et al. 2021 that :func:`duplicate_spans` only
     reports): for every span row ``(id_a, id_b, start_b,
     span_tokens)`` the tokens ``[start_b, start_b + span_tokens)`` are
@@ -1210,7 +1209,7 @@ def soft_dedup_weights(
     n: int = 3,
     weight_decimals: int = 6,
 ) -> DataFrame:
-    """Soft deduplication weights (round 12 — the reweight-don't-delete
+    """Soft deduplication weights (the reweight-don't-delete
     alternative to hard dedup, after SoftDeDup, Xia et al. 2024): score
     every document by the corpus-wide COMMONNESS of its content and
     emit a down-weight for common (duplicated / boilerplate-heavy)

@@ -19,8 +19,7 @@ Two operators with different contracts:
   logic (functions/udfs.py policy). Scale: parallelism = #series;
   a single series larger than ``max_group_rows`` is pre-decimated
   (min/max per equi-count bucket, JVM-side) before the pandas pick,
-  so one pandas group is BOUNDED BY CONSTRUCTION — the round-7
-  docstring caveat is now code (VERDICT r7 next-round #3).
+  so one pandas group is BOUNDED BY CONSTRUCTION.
 """
 
 from __future__ import annotations
@@ -45,8 +44,8 @@ def minmax_decimate(
     """Keep the min-valued and max-valued row per (keys, bucket).
 
     Deterministic: within a bucket, ties on value break by ``id_col``
-    (required for a total order when duplicate values exist — ADVICE
-    r7). Passing ``id_col=None`` EXPLICITLY is allowed for inputs
+    (required for a total order when duplicate values exist). Passing
+    ``id_col=None`` EXPLICITLY is allowed for inputs
     whose values cannot tie, and warns: the row_number pick is then
     partition-arrival-ordered and may differ across runs. Output
     columns = input columns + ``bucket_start``; a row that is both the
@@ -71,7 +70,7 @@ def minmax_decimate(
     ).alias("bucket_start")
     b = df.withColumn("bucket_start", bucket)
     part = Window.partitionBy(*key_cols, "bucket_start")
-    # nulls LAST on both directions (round 15): Spark's default asc is
+    # nulls LAST on both directions: Spark's default asc is
     # nulls-first, which would crown a NULL reading as the bucket
     # "min" — a NULL is a missing measurement, not an extreme. With
     # nulls-last a NULL row can only survive in an all-NULL bucket
@@ -99,7 +98,7 @@ def m4_decimate(
     id_col=_REQUIRED,
     bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """M4 visualization aggregation (round 15; Jugel et al., VLDB'14
+    """M4 visualization aggregation (Jugel et al., VLDB'14
     "M4: A Visualization-Oriented Time Series Data Aggregation"): keep
     per (keys, bucket) the FOUR pixel-defining rows — min-valued,
     max-valued, FIRST (earliest ts) and LAST (latest ts) — the

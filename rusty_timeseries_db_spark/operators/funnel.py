@@ -1,4 +1,4 @@
-"""Ordered-event funnel analysis (round 14) — the product-analytics
+"""Ordered-event funnel analysis — the product-analytics
 staple over an event stream: of the users who did stage 1, how many
 went on to do stage 2 within the horizon, then stage 3, in order?
 
@@ -95,7 +95,7 @@ def cohort_retention(
     ts_col: str = "ts",
     granularity: str = "week",
 ) -> DataFrame:
-    """Cohort retention matrix (round 14) — the other half of the
+    """Cohort retention matrix — the other half of the
     product-analytics pair: group users by the period of their FIRST
     event (the cohort), then for each later period count how many of
     them came back. Returns one row per ``(cohort, period_offset)``:
@@ -170,7 +170,7 @@ def attribute_conversions(
     value_col: str = "value",
     order_tiebreak: str | None = None,
 ) -> DataFrame:
-    """Last-touch conversion attribution (round 14; the revenue-facing
+    """Last-touch conversion attribution (the revenue-facing
     companion of :func:`funnel`): every ``conversion`` event is
     attributed to the user's most recent STRICTLY-PRECEDING
     non-conversion event type — ``last(..., ignorenulls) OVER (ROWS
@@ -242,7 +242,7 @@ def user_lifetimes(
 ) -> DataFrame:
     """Per-subject survival lifetimes from an event stream — the
     shared derivation under :func:`kaplan_meier` and
-    :func:`logrank_cohorts` (factored out round 18 so the estimator
+    :func:`logrank_cohorts` (factored out so the estimator
     and the test read the SAME durations by construction).
 
     One row per user: ``(cohort, t, churned)`` —
@@ -299,8 +299,8 @@ def kaplan_meier(
     survival_decimals: int = 9,
     logstep_decimals: int = 12,
 ) -> DataFrame:
-    """Kaplan-Meier survival / churn curve per cohort (round 17 —
-    VERDICT r16 next-round #5): the classic-analytics face beside
+    """Kaplan-Meier survival / churn curve per cohort: the classic-analytics
+    face beside
     :func:`cohort_retention` — instead of "how many came back in
     period k", the KM estimator answers "what fraction of the cohort
     SURVIVES past duration t", correctly crediting users the
@@ -411,7 +411,7 @@ def logrank(
     stat_decimals: int = 6,
 ) -> DataFrame:
     """Log-rank (Mantel-Cox) test per group vs the pooled rest
-    (round 18 — VERDICT r17 next-round #2): the question the
+    the question the
     Kaplan-Meier curve alone cannot answer — do this cohort's
     survival times DIFFER from everyone else's, or is the gap chance?
     The every-churn-A/B readout ("did the onboarding change actually
@@ -640,8 +640,8 @@ def nelson_aalen(
     hazard_decimals: int = 12,
     survival_decimals: int = 9,
 ) -> DataFrame:
-    """Nelson-Aalen cumulative hazard per group (round 19 — VERDICT
-    r18 next-round #2): the survival family's third face.
+    """Nelson-Aalen cumulative hazard per group: the survival family's third
+    face.
     :func:`kaplan_meier` plots the survival curve, :func:`logrank`
     tests whether curves differ; the NA estimator answers "how much
     churn PRESSURE has accumulated by duration t" — the cumulative
@@ -771,8 +771,8 @@ def rmst(
     survival_decimals: int = 9,
 ) -> DataFrame:
     """Restricted mean survival time to ``horizon`` — the area under
-    the Kaplan-Meier step curve on ``[0, horizon]`` (round 19 —
-    VERDICT r18 next-round #2): the single number churn dashboards
+    the Kaplan-Meier step curve on ``[0, horizon]``: the single number churn
+    dashboards
     actually report ("average retained days by day 90"), robust where
     the unrestricted mean is undefined under censoring (Royston &
     Parmar 2013). Input is the step table :func:`kaplan_meier`
@@ -870,8 +870,8 @@ def logrank_omnibus(
     term_decimals: int = 12,
     stat_decimals: int = 6,
 ) -> DataFrame:
-    """k-sample omnibus log-rank test (round 19 — VERDICT r18
-    next-round #4): ONE statistic for "do these k survival curves
+    """k-sample omnibus log-rank test: ONE statistic for "do these k
+    survival curves
     differ anywhere", df = k - 1, beside :func:`logrank`'s per-group
     group-vs-rest drill-downs (which answer WHICH group differs once
     the omnibus fires).

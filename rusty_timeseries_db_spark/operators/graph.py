@@ -1,4 +1,4 @@
-"""Link-graph analytics — PageRank (round 13).
+"""Link-graph analytics — PageRank.
 
 Web-scale corpus curation weights documents by link authority
 (Common-Crawl-derived corpora carry a link graph; OPIC/harmonic-
@@ -49,8 +49,8 @@ def pagerank(
     where ``rank_micro`` is the rank in millionths (see module
     docstring for the determinism/variant contract).
 
-    NOT a probability distribution (round 14 — the contract stated
-    plainly, VERDICT r13 "what's wrong" #2): every node initializes at
+    NOT a probability distribution (the contract stated
+    plainly): every node initializes at
     FULL mass ``SCALE`` (not SCALE/N) and dangling-node mass is
     dropped each step, so the ranks do NOT sum to SCALE — they are an
     ORDERING-quality prior, exactly what corpus weighting needs, and
@@ -60,7 +60,7 @@ def pagerank(
     N-1 units of SCALE; a per-node exact-sum variant would need
     rationals). The relative ORDER is identical either way.
 
-    Edge multiplicity (ADVICE r13 #3): the edge list is
+    Edge multiplicity: the edge list is
     ``distinct()``-ed first — parallel edges collapse to weight 1, so
     a multigraph ranks as its simple-graph projection (the DuckDB
     oracle does the same, so behavior is consistent cross-engine; it
@@ -127,7 +127,7 @@ def markov_stationary(
 ) -> DataFrame:
     """Integer-exact power iteration toward the stationary
     distribution of the WEIGHTED random walk on a transition-count
-    edge list (round 16) — "where does user behavior settle": feed it
+    edge list — "where does user behavior settle": feed it
     the consecutive-event transition counts (q_event_transitions'
     shape) and read the equilibrium share of attention per state,
     the Markov-chain summary a raw transition matrix cannot give.
@@ -138,7 +138,7 @@ def markov_stationary(
     floor division — order-independent, so results are bit-identical
     on any engine or partitioning, and a DuckDB oracle can replay the
     unrolled iterations exactly. The per-term product ``p(i) * w_ij``
-    runs in DECIMAL(38,0) (round 17, the ``_normalize_micro``
+    runs in DECIMAL(38,0) (the ``_normalize_micro``
     overflow class): mass can reach ``~N_states*SCALE`` and the
     transition count is unbounded, so a bigint product wraps past
     2^63 on large weighted graphs; the oracle mirrors with HUGEINT. Every state starts at full mass
@@ -175,8 +175,8 @@ def markov_stationary(
             .join(out_w, "_src")
             .select(
                 F.col("_dst").alias("state"),
-                # Per-term product in DECIMAL(38,0) (review round 16,
-                # the _normalize_micro class): mass _p can reach
+                # Per-term product in DECIMAL(38,0) (the _normalize_micro
+                # class): mass _p can reach
                 # ~N_states*SCALE and _w is an unbounded transition
                 # count, so the bigint product wraps past 2^63 on
                 # large weighted graphs while the DuckDB oracle
@@ -204,8 +204,8 @@ def _normalize_micro(out: DataFrame, col: str) -> DataFrame:
     broadcast join (the attach-scalar shape) — keeps the cross-engine
     determinism contract. The multiply runs in DECIMAL(38,0): a hub
     node on a large graph can hold rank ~0.85·N·SCALE, and
-    ``col * SCALE`` in bigint wraps negative past ~9.2e18 (review
-    round 14) — exactly for the top-ranked node, inverting the order
+    ``col * SCALE`` in bigint wraps negative past ~9.2e18 — exactly for the
+    top-ranked node, inverting the order
     the flag promises to preserve. The total is summed in decimal for
     the same reason."""
     key = [c for c in out.columns if c != col]

@@ -1,7 +1,7 @@
 """Shared deletion-lifecycle plumbing for the persisted indexes
-(round 14 review: ``Bm25Index`` and ``IvfIndex`` carried verbatim
-copies of these four helpers — crash-safety-critical code must have
-ONE implementation, or a fix lands in one index and not the other).
+(``Bm25Index`` and ``IvfIndex`` share these four helpers —
+crash-safety-critical code must have ONE implementation, or a fix
+lands in one index and not the other).
 
 The mixin owns what is genuinely identical across index layouts: the
 compacting-marker guard, the tombstone sidecar read, the existence
@@ -14,8 +14,8 @@ Host-class contract: ``self.spark``, ``self.index_path``,
 and ``_ROWS_FIELD`` (the manifest key holding the LIVE row/doc count
 — ``"n_docs"`` for BM25, ``"n_rows"`` for IVF).
 
-Manifest writes are compare-and-swap (round 15 — VERDICT r14
-next-round #5): every mutator reads a CAS token with its manifest
+Manifest writes are compare-and-swap: every mutator reads a CAS token with
+its manifest
 snapshot and commits through :meth:`_commit_manifest`, which raises
 ``fsutil.ManifestVersionConflict`` when another writer committed in
 between — the single-writer contract is now ENFORCED (serialize or
@@ -111,7 +111,7 @@ class IndexLifecycleMixin:
             )
 
     def _verify_manifest_unmoved(self, expected: "int | None") -> None:
-        """Pre-destruction CAS re-check (review round 16): re-read the
+        """Pre-destruction CAS re-check: re-read the
         committed token and raise
         :class:`..fsutil.ManifestVersionConflict` if another writer
         committed since ``expected`` was pinned at compact()'s opening
@@ -146,7 +146,7 @@ class IndexLifecycleMixin:
         interleaved writer's rows may have been PHYSICALLY DROPPED by
         the just-completed rewrite (it committed accounting for rows
         the swap never saw). Re-raises with that wording instead of
-        the generic 're-read and retry' (review round 16): retrying
+        the generic 're-read and retry': retrying
         compact() would silently converge over the lost rows via the
         tomb-is-None healing path, so the honest fix is a rebuild."""
         from ..fsutil import ManifestVersionConflict

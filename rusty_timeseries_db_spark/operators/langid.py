@@ -1,7 +1,7 @@
 """Character-trigram language identification (Cavnar & Trenkle 1994,
 "N-Gram-Based Text Categorization") — the per-document classifier the
-CCNet-style corpus pipeline was missing as its stage 0 (VERDICT r13
-next-round #3): paragraph dedup, LM-quality scoring and dedup all
+CCNet-style corpus pipeline was missing as its stage 0: paragraph dedup,
+LM-quality scoring and dedup all
 existed, but nothing assigned a language before them.
 
 Method, deliberately EXACT-integer so DuckDB can recompute it (the

@@ -18,11 +18,11 @@ image/audio libraries exist in this container):
 - ``audio/wav`` — 16-bit PCM RIFF/WAVE (``decode_wav``): chunk walk,
   interleaved int16 samples.
 
-``image/jpeg`` additionally gets a real HEADER parser (round 13):
+``image/jpeg`` additionally gets a real HEADER parser:
 ``decode_jpeg_meta`` walks the marker stream to the first SOFn frame
 header — width/height/components for baseline AND progressive JPEGs,
 no PIL — feeding the ``probe_asset_meta`` metadata pass. ``video/mp4``
-gets the same treatment (round 14): ``decode_mp4_meta`` walks the
+gets the same treatment: ``decode_mp4_meta`` walks the
 ISO-BMFF box tree — ftyp brand, mvhd duration/timescale (v0+v1),
 tkhd track dimensions — no ffmpeg, O(box headers) per asset. Full
 JPEG pixel decode and MP4 sample decode still raise
@@ -235,8 +235,8 @@ _JPEG_SOF_MARKERS = frozenset(
 
 
 def decode_jpeg_meta(data: bytes) -> tuple[int, int, int]:
-    """JPEG dimensions WITHOUT PIL (round 13 — VERDICT r12 next-round
-    #8): a pure-stdlib marker walk to the first SOFn frame header →
+    """JPEG dimensions WITHOUT PIL: a pure-stdlib marker walk to the first
+    SOFn frame header →
     ``(width, height, n_components)``. Works for baseline (SOF0),
     progressive (SOF2) and every other SOFn flavor; full pixel decode
     still raises ``NotImplementedError`` in the codec paths (a real
@@ -297,8 +297,8 @@ def _mp4_boxes(data: bytes, start: int, end: int):
 
 
 def decode_mp4_meta(data: bytes) -> tuple[str, int | None, int | None, int | None]:
-    """MP4/ISO-BMFF metadata WITHOUT ffmpeg (round 14 — VERDICT r13
-    next-round #4): a pure-stdlib box walk → ``(major_brand,
+    """MP4/ISO-BMFF metadata WITHOUT ffmpeg: a pure-stdlib box walk →
+    ``(major_brand,
     duration_ms, width, height)``. ``ftyp`` gives the brand; ``moov/
     mvhd`` gives duration/timescale (version 0 and 1 layouts);
     ``moov/trak/tkhd`` gives the presentation width/height as 16.16
@@ -354,7 +354,7 @@ def decode_mp4_meta(data: bytes) -> tuple[str, int | None, int | None, int | Non
 
 
 def probe_asset_meta(assets: DataFrame) -> DataFrame:
-    """Header-only metadata pass (round 13): fill ``meta.width/height``
+    """Header-only metadata pass: fill ``meta.width/height``
     (image/bmp, image/png, image/jpeg) and ``meta.duration_ms``
     (audio/wav) by parsing ONLY the format headers — no pixel/sample
     decode, so this runs over mimes the full codecs cannot (JPEG) and
@@ -403,7 +403,7 @@ def probe_asset_meta(assets: DataFrame) -> DataFrame:
                     # must never fail a 100 TB metadata sweep's task
                     # (IndexError belt-and-braces: a decoder bound the
                     # guards missed must degrade to meta-kept, not to
-                    # a task abort — review round 14)
+                    # a task abort)
                     pass
                 metas.append(out)
             pdf = pdf.copy()

@@ -46,7 +46,7 @@ def profile_columns(
     e.g. ``F.unix_micros("ts")`` for timestamps); columns absent from
     ``numeric`` and not castable stay NULL in min_num/max_num.
 
-    ``percentiles=True`` (round 13 — VERDICT r12 next-round #6) adds
+    ``percentiles=True`` adds
     ``q25/q50/q75`` via ``percentile_approx`` over the same numeric
     view, IN the same one-pass aggregate (no second scan; the sketch
     rides the partial-agg pipeline like every other entry). Approx by
@@ -188,7 +188,7 @@ def data_quality_report(
     rules: "list[dict]",
     refs: "dict[str, DataFrame] | None" = None,
 ) -> DataFrame:
-    """Declarative data-quality assertion suite (round 12 — the
+    """Declarative data-quality assertion suite (the
     expectations surface every warehouse runs before serving a
     table): evaluate ``rules`` against ``df`` and return one row per
     rule: ``(rule_id, rule, column, n_violations, n_checked,
@@ -337,7 +337,7 @@ def _joint_and_marginals(
     what: str,
 ):
     """Shared scaffolding of the two-column dependence scans
-    (chi_square_cells / pmi_cells — review round 14, deduplicated):
+    (chi_square_cells / pmi_cells, deduplicated):
     the (a,b) joint counts, the marginals DERIVED from them (one data
     scan total), the 1-row grand total, and the eager dims-only
     ``max_cells`` guard. Returns (counts, ma, mb, total)."""
@@ -348,7 +348,7 @@ def _joint_and_marginals(
     )
     ma = counts.groupBy("_a").agg(F.sum("_o").alias("_na"))
     mb = counts.groupBy("_b").agg(F.sum("_o").alias("_nb"))
-    # ONE guard job instead of two (round 20 — guide §1.2): both level
+    # ONE guard job instead of two (guide §1.2): both level
     # counts come from a single aggregate over the joint counts.
     # count(DISTINCT) skips NULL while groupBy emits a NULL group, so
     # a null-presence flag keeps n_a/n_b exactly ma.count()/mb.count().
@@ -379,7 +379,7 @@ def chi_square_cells(
     max_cells: int = 10_000,
 ) -> DataFrame:
     """Chi-square independence scan over two CATEGORICAL columns
-    (round 13) — the dependence check a data-quality pass runs before
+    — the dependence check a data-quality pass runs before
     trusting a stratification or a supposedly-independent feature
     pair: one row per contingency cell ``(a_value, b_value, observed,
     expected_r6, chi2_term_r9)`` including ZERO-observed cells (their
@@ -448,7 +448,7 @@ def char_entropy(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-document character-level Shannon entropy (round 14) — the
+    """Per-document character-level Shannon entropy — the
     classic gibberish/repetition quality signal: natural prose sits
     around 4-4.5 bits/char, a run of one repeated character reads
     ~0 bits, base64/hex blobs read high with a flat distribution.
@@ -506,7 +506,7 @@ def zipf_slope(
     text_col: str = "text",
     top_n: int = 100,
 ) -> DataFrame:
-    """Per-group Zipf rank-frequency slope (round 14) — the corpus-
+    """Per-group Zipf rank-frequency slope — the corpus-
     level naturalness signal: token frequencies of natural language
     follow a power law with log-log slope near -1 (Zipf's law), while
     template spam, boilerplate floods, and synthetic token soup bend
@@ -594,7 +594,7 @@ def winsorize(
     lower: float = 0.05,
     upper: float = 0.95,
 ) -> DataFrame:
-    """Per-group winsorization (round 14): clip ``value_col`` to its
+    """Per-group winsorization: clip ``value_col`` to its
     group's [``lower``, ``upper``] percentile bounds — the standard
     robust pre-treatment before means/OLS when MAD flagging
     (q_outlier_mad) is too blunt to *remove* rows but tails would
@@ -606,8 +606,8 @@ def winsorize(
     decimal aggregation downstream still works, and both engines pick
     the identical bound (ties in value share the value, so the picked
     VALUE needs no tiebreak). NULL values are EXCLUDED from the rank
-    universe (they would otherwise sort first and shift every bound —
-    review round 14) and pass through with ``<value_col>_w`` NULL; a
+    universe (they would otherwise sort first and shift every bound) and
+    pass through with ``<value_col>_w`` NULL; a
     group whose values are all NULL keeps its rows, bounds NULL.
 
     Returns the input plus ``p_lo`` / ``p_hi`` / ``<value_col>_w``.
@@ -656,8 +656,8 @@ def k_anonymity_report(
     quasi_cols: list[str],
     thresholds: list[int] = (2, 5, 10),
 ) -> DataFrame:
-    """k-anonymity audit over a quasi-identifier tuple (round 14 —
-    the privacy face of the data-quality suite): rows whose
+    """k-anonymity audit over a quasi-identifier tuple (the privacy face of
+    the data-quality suite): rows whose
     quasi-identifier equivalence class holds fewer than k records are
     re-identifiable at that k. Emits one row per threshold:
     ``(k, n_classes_below, n_rows_below, frac_rows_below)`` plus the
@@ -699,7 +699,7 @@ def k_anonymity_report(
     stats = classes.agg(*aggs)
     # one explode over per-threshold structs, not a |thresholds|-branch
     # union of selects: the class-size aggregate is computed exactly
-    # once by construction (review round 14), not by hoping the
+    # once by construction, not by hoping the
     # optimizer reuses the exchange
     rows_arr = F.array(
         *[
@@ -725,8 +725,8 @@ def benford_profile(
     df: DataFrame,
     value_col: str = "value",
 ) -> DataFrame:
-    """First-significant-digit distribution vs Benford's law (round
-    14 — the forensic data-quality check for fabricated or truncated
+    """First-significant-digit distribution vs Benford's law (the forensic
+    data-quality check for fabricated or truncated
     numeric feeds): per digit 1-9, the observed count/share and
     Benford's expected share log10(1 + 1/d), plus the per-digit
     chi-square contribution ((obs - exp)^2 / exp over counts) so the
@@ -778,8 +778,8 @@ def pmi_cells(
     max_cells: int = 10_000,
 ) -> DataFrame:
     """Pointwise mutual information per observed (a, b) cell — the
-    information-theoretic sibling of :func:`chi_square_cells` (round
-    14): chi-square answers "are the columns dependent AT ALL"; PMI
+    information-theoretic sibling of :func:`chi_square_cells`: chi-square
+    answers "are the columns dependent AT ALL"; PMI
     says WHICH value pairs co-occur more (positive) or less
     (negative) than independence predicts, and summing the
     contribution column yields the columns' mutual information in

@@ -3,8 +3,7 @@ gate over hashed bag-of-n-grams features — the fastText-style quality
 face (Joulin et al. 2016, "Bag of Tricks for Efficient Text
 Classification") that CCNet/LLaMA-style pipelines run BESIDE the
 heuristic family the engine already has (surprisal, repetition,
-entropy, langid, Zipf/dispersion/KL). Round 17 — VERDICT r16
-next-round #4.
+entropy, langid, Zipf/dispersion/KL).
 
 The reference (main.rs) has no model-scoring surface at all; this is
 part of the mandated LLM-data-pipeline extension. The design follows
@@ -103,7 +102,7 @@ def quality_classifier_score(
 
     Returns ``(id_col, n_feats, quality_score, keep)``.
 
-    ``group_col`` (round 18 — the CCNet per-language heads): when the
+    ``group_col`` (the CCNet per-language heads): when the
     weight table came from ``train_quality_weights(group_col=...)``,
     pass the same column here — each document's features join against
     ITS group's head on ``(group, bucket)`` instead of the shared
@@ -208,7 +207,7 @@ def train_quality_weights(
     exact below 2^53), so train→gate composes into an oracle-checkable
     end-to-end pipeline.
 
-    ``group_col`` (round 18 — VERDICT r17 next-round #3, the CCNet
+    ``group_col`` (the CCNet
     per-language classifier heads) trains one INDEPENDENT head per
     group value: counts, the full bucket spine, the smoothing totals,
     and the log-odds all carry the group key, so each group's weight
@@ -259,7 +258,7 @@ def train_quality_weights(
             F.sum(F.when(~F.col("_pos"), 1).otherwise(0))
             .cast("bigint").alias("_cn"),
         )
-        # persisted (round 19 optimization, guide §1.2): this
+        # persisted (guide §1.2): this
         # model-sized aggregate ([groups ×] n_buckets rows) is
         # referenced TWICE below — the spine fill and the smoothing
         # totals — and Spark shares no subplans across DataFrame
@@ -394,7 +393,7 @@ def binary_auc(
     # the doubled rank-sum terms run in DECIMAL(38,0): cnt_pos x
     # (2*cum_before + cnt + 1) is ~2n^2 at the group tail, which wraps
     # bigint past ~2.1e9 rows per group (the markov per-term overflow
-    # class, ADVICE r16) — decimal keeps the identity exact at any
+    # class) — decimal keeps the identity exact at any
     # group size; the oracle mirrors with HUGEINT
     agg = spans.groupBy(*gcols).agg(
         F.sum("_cnt_pos").cast("bigint").alias("n_pos"),
@@ -430,8 +429,8 @@ def train_multiclass_weights(
     n_buckets: int = 1024,
     alpha: float = 1.0,
 ) -> DataFrame:
-    """Train the k-class quality/router head (round 19 — VERDICT r18
-    next-round #3): one NB log-odds weight table PER CLASS, each the
+    """Train the k-class quality/router head: one NB log-odds weight table
+    PER CLASS, each the
     one-vs-rest form of :func:`train_quality_weights` — so a mixture
     pipeline can route documents into k quality tiers / source
     domains instead of a single keep/drop gate. Per class ``c`` and
@@ -597,7 +596,7 @@ def multiclass_classify(
     logit_decimals: int = 12,
 ) -> DataFrame:
     """Route every document to its argmax class under the k-class
-    head (round 19 — VERDICT r18 next-round #3), with a CALIBRATED
+    head, with a CALIBRATED
     per-class probability: per class ``logit_c = bias_c/SCALE +
     dot_c/(n * SCALE)`` (the fastText mean-of-features form
     :func:`quality_classifier_score` uses, plus the trained prior),

@@ -307,8 +307,8 @@ def counter_irate(
             F.unix_micros(F.col(ts)).alias("_tus"),
             # decimal(28,12), not the engine-wide display precision:
             # PromQL counters are float64 and increments below 0.01
-            # must not quantize to an idelta of 0 (verdict r12 — the
-            # exact-stats family precedent); the output casts to
+            # must not quantize to an idelta of 0 (the exact-stats
+            # family precedent); the output casts to
             # DOUBLE either way, this only governs the subtraction
             F.col(value).cast("decimal(28,12)").alias("_v"),
             F.row_number().over(w).alias("_rn"),
@@ -324,7 +324,7 @@ def counter_irate(
     delta = F.col("_vl") - F.col("_vp")
     # single-sample series: _vp is NULL, so delta's >= test is NULL
     # (falsy) — without the explicit first branch the otherwise() would
-    # leak _vl as a phantom "increase" (review round 12)
+    # leak _vl as a phantom "increase"
     iinc = (
         F.when(F.col("_vp").isNull(), F.lit(None).cast("decimal(29,12)"))
         .when(delta >= 0, delta)
@@ -501,7 +501,7 @@ def gauge_changes(
     order_tiebreak: str | None = None,
 ) -> DataFrame:
     """PromQL ``changes()`` — how many times the value CHANGED between
-    consecutive samples per series (round 13; completes the counter/
+    consecutive samples per series (completes the counter/
     gauge range family next to rate/increase/irate/resets): the alert
     primitive for flapping detection (a config gauge that "changed 40
     times in 10 minutes" is an incident). The first sample has no
@@ -513,7 +513,7 @@ def gauge_changes(
     Scale shape: one ``lag`` window + one aggregate on the series key
     — a single co-keyed shuffle, the same plan as counter_increase.
     Values compare at ``decimal(28,12)`` (the counter_irate precision
-    contract, review round 13): a CHANGE detector must see sub-0.01
+    contract): a CHANGE detector must see sub-0.01
     transitions the engine-wide 2-dp display model would quantize
     away — a milliunits-flapping gauge reading "0 changes" is exactly
     the false negative this operator exists to prevent. Returns
@@ -547,7 +547,7 @@ def state_durations(
 ) -> DataFrame:
     """Per-(series, state) residence time for a state-change stream —
     TimescaleDB ``state_agg``'s duration query generalized to any
-    categorical column (round 14; the categorical sibling of
+    categorical column (the categorical sibling of
     time_weighted_avg above, which answers the same "what held, for
     how long" question for numeric levels). Each observation pins the
     series to its ``state`` from its own timestamp until the NEXT

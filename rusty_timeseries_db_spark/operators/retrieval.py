@@ -148,8 +148,8 @@ from .index_common import IndexLifecycleMixin
 
 
 class Bm25Index(IndexLifecycleMixin):
-    """Persisted BM25 postings index (round 13 — VERDICT r12
-    next-round #3; the :class:`..similarity.IvfIndex` precedent):
+    """Persisted BM25 postings index (the :class:`..similarity.IvfIndex`
+    precedent):
     :func:`bm25_topk` recomputes N/avgdl/df and re-tokenizes the whole
     corpus on EVERY call — the right shape for a one-shot analytic,
     corpus-sized work per query for a serving deployment. Build ONCE —
@@ -180,9 +180,9 @@ class Bm25Index(IndexLifecycleMixin):
     quantizer, so unlike IVF there is no recall drift to watch).
 
     Writer contract: ONE writer at a time per index — now ENFORCED
-    (round 15 — VERDICT r14 next-round #5): staging dirs are per-call
-    (a concurrent build/add cannot interleave staged batches — review
-    round 14), and the manifest commit is a compare-and-swap
+    staging dirs are per-call
+    (a concurrent build/add cannot interleave staged batches), and the
+    manifest commit is a compare-and-swap
     (``IndexLifecycleMixin._commit_manifest``): a mutator whose
     manifest snapshot was overtaken by another writer raises
     ``fsutil.ManifestVersionConflict`` instead of silently losing the
@@ -190,8 +190,8 @@ class Bm25Index(IndexLifecycleMixin):
     streaming sink (streaming/index.py) is the supported
     concurrent-ingest path — it serializes adds per micro-batch.
 
-    Removed-id re-admission (the two doors, documented in ONE place —
-    review round 13/14): a doc id that was :meth:`remove`d cannot
+    Removed-id re-admission (the two doors, documented in ONE place):
+    a doc id that was :meth:`remove`d cannot
     simply be re-added while its tombstone is live — the tombstone
     would hide the new postings, and clearing it would resurrect the
     old, still-physical postings alongside the new (a double-counted
@@ -234,15 +234,15 @@ class Bm25Index(IndexLifecycleMixin):
         then comes from ONE materialization, so a NONDETERMINISTIC
         source (a seedless ``sample()``, a re-listed stream directory)
         cannot write postings that disagree with the stats/df recorded
-        beside them (review round 13; the same reason IvfIndex.add
+        beside them (the same reason IvfIndex.add
         materializes its cell assignment before appending). The dir is
         unique per call — a fixed path would let two concurrent
-        writers silently interleave staged batches (ADVICE r13 #4) —
+        writers silently interleave staged batches —
         and the CALLER deletes it after its last action over the
         staged rows.
 
-        Round 20 (guide §1.4 — VERDICT r19 #1, lifecycle job cuts):
-        the batch stats (doc count, total token length) ride the
+        Lifecycle job cuts (guide §1.4): the batch stats (doc count, total
+        token length) ride the
         staging write itself as an ``observe()`` metric instead of a
         separate ``_staged_stats`` pass — same rows by construction
         (the observation is computed on exactly the frame written).
@@ -279,8 +279,8 @@ class Bm25Index(IndexLifecycleMixin):
 
     @staticmethod
     def _parallel_writes(*thunks) -> None:
-        """Run independent write jobs concurrently (guide §2.6 —
-        round 20, VERDICT r19 #1): the postings / terms / docs writes
+        """Run independent write jobs concurrently (guide §2.6): the
+        postings / terms / docs writes
         all derive from the SAME frozen staging parquet and target
         disjoint directories, so submitting them from a small thread
         pool overlaps their per-job scheduling floors instead of
@@ -309,8 +309,8 @@ class Bm25Index(IndexLifecycleMixin):
             )
             .groupBy("term", "_doc", "dl")
             .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-            # per-doc cosine norm² for nnc TF-IDF scoring (round 14 —
-            # query_tfidf): Σ tf² over ALL the doc's terms, duplicated
+            # per-doc cosine norm² for nnc TF-IDF scoring (query_tfidf): Σ
+            # tf² over ALL the doc's terms, duplicated
             # per posting exactly like dl. Raw-tf (nnc) on purpose: it
             # is an EXACT INTEGER (engine-reproducible, no ln() ulp
             # drift) and df-independent, so incremental add() can
@@ -360,7 +360,7 @@ class Bm25Index(IndexLifecycleMixin):
         try:
             # corpus stats count EVERY doc (a token-less doc has no
             # posting but still dilutes avgdl); observed ON the staging
-            # write (round 20 — guide §1.4) and still checked BEFORE
+            # write (guide §1.4) and still checked BEFORE
             # the postings land (an all-empty partitioned write would
             # leave nothing to re-read for df)
             if n == 0 or sum_dl == 0.0:
@@ -374,7 +374,7 @@ class Bm25Index(IndexLifecycleMixin):
             # written files came from — `staged` is a materialized
             # parquet freeze, so this describes EXACTLY the rows just
             # written (the add() df-delta has always been derived this
-            # way); round 19 optimization: skips a full re-read
+            # way); skips a full re-read
             # (listing + footers + decode) of the postings dir
             terms = (
                 post.groupBy("term")
@@ -385,8 +385,8 @@ class Bm25Index(IndexLifecycleMixin):
             )
             # the three writes are independent derivations of the
             # frozen staging parquet into disjoint dirs — overlapped
-            # (round 20, guide §2.6; the docs/ sidecar is the round-13
-            # deletion story: remove() needs each doc's length to
+            # (guide §2.6; the docs/ sidecar is the deletion story:
+            # remove() needs each doc's length to
             # decrement sum_dl exactly, token-less docs included)
             self._parallel_writes(
                 lambda: (
@@ -413,7 +413,7 @@ class Bm25Index(IndexLifecycleMixin):
         delete_path(self.spark, self.marker_path)
         # reclaim staging orphans from hard-crashed earlier calls
         # (each call's try/finally cleans its OWN dir, but kill -9
-        # between write and finally strands one — review round 14)
+        # between write and finally strands one)
         delete_path(self.spark, self.index_path + "/_staging")
         self._commit_manifest({
             "n_docs": n,
@@ -423,11 +423,11 @@ class Bm25Index(IndexLifecycleMixin):
             "n_added": 0,
             "n_removed": 0,
             # feature flag: remove() requires the per-doc sidecar this
-            # build wrote — a pre-r13 index must rebuild to delete
+            # build wrote — an index without it must rebuild to delete
             "docs_sidecar": True,
             # feature flag: query_tfidf() requires the per-doc tfn2
-            # norms in postings (round 14) — a pre-r14 index must
-            # rebuild to serve cosine scoring
+            # norms in postings — an index without them must rebuild to
+            # serve cosine scoring
             "tfn2": True,
         }, expected=ver)
         return self
@@ -520,7 +520,7 @@ class Bm25Index(IndexLifecycleMixin):
         :meth:`remove`'s df adjustments can never stale them; an
         idf-weighted doc norm would go stale on every df change.
         The stored ``tfn2`` rides in the postings rows like ``dl``
-        (round 14; pre-r14 indexes must rebuild — manifest flag).
+        (indexes without it must rebuild — manifest flag).
 
         Same serving cost model as :meth:`query`: work bounded by the
         probed shards' bytes. The query-side norm is a ≤|terms|-row
@@ -700,7 +700,7 @@ class Bm25Index(IndexLifecycleMixin):
                     # the manifest re-read picks up compact()'s state.
                     # _sweep_staging=False: THIS call's staged batch
                     # lives under _staging/ and must survive the
-                    # maintenance sweep (review round 14)
+                    # maintenance sweep
                     self.compact(_sweep_staging=False)
                     ver, man = self._manifest_cas()
             if n == 0:
@@ -714,8 +714,8 @@ class Bm25Index(IndexLifecycleMixin):
                 )
             )
             # independent appends into disjoint dirs, overlapped
-            # (round 20, guide §2.6 — same shape as build()); no
-            # sidecar append on a pre-r13 index: a PARTIAL sidecar
+            # (guide §2.6 — same shape as build()); no
+            # sidecar append on an index without one: a PARTIAL sidecar
             # would let remove() silently miss old docs
             writes = [
                 lambda: (
@@ -752,11 +752,11 @@ class Bm25Index(IndexLifecycleMixin):
     # -- delete ------------------------------------------------------
     # (_dir_exists / _tombstones / _check_not_compacting /
     # should_compact come from IndexLifecycleMixin — one
-    # implementation for both persisted indexes, review round 14)
+    # implementation for both persisted indexes)
 
     def remove(self, doc_ids) -> int:
         """Delete documents from the SERVING index without a rebuild
-        (round 13 — the GDPR/right-to-erasure story a corpus index
+        (the GDPR/right-to-erasure story a corpus index
         needs): append the LIVE subset of ``doc_ids`` to a tombstone
         list; the manifest's N / total-doc-length are then RE-DERIVED
         from the docs-sidecar-minus-tombstones state (not
@@ -777,7 +777,7 @@ class Bm25Index(IndexLifecycleMixin):
         ``doc_ids``: a list of ids or a single-column DataFrame.
         Idempotent: ids already removed (or never present) are
         ignored. Returns the number of docs newly removed. Requires
-        the r13 ``docs/`` sidecar (raises on an index built by an
+        the ``docs/`` sidecar (raises on an index built by an
         older build() — rebuild to enable deletion; a partial sidecar
         would silently miss pre-upgrade docs)."""
         from ..fsutil import delete_path
@@ -812,8 +812,8 @@ class Bm25Index(IndexLifecycleMixin):
         from pyspark.sql import Observation
 
         staging = f"{self.index_path}/_staging/remove_{uuid.uuid4().hex}"
-        # the newly-removed count rides the staging write (round 20 —
-        # guide §1.4): it counts exactly the frozen rows, one job
+        # the newly-removed count rides the staging write (guide §1.4): it
+        # counts exactly the frozen rows, one job
         # instead of write + count
         obs = Observation("bm25_remove_count")
         (
@@ -833,7 +833,7 @@ class Bm25Index(IndexLifecycleMixin):
         # manifest DERIVED from authoritative state (docs minus
         # tombstones): self-healing under interrupted earlier calls.
         # ONE docs-sidecar scan computes live count, live length sum
-        # AND the tombstoned count (round 14 — the anti-join + count
+        # AND the tombstoned count (the anti-join + count
         # pair scanned the sidecar twice)
         docs_all = self.spark.read.parquet(self.docs_path)
         tomb_now = self._tombstones()
@@ -871,8 +871,8 @@ class Bm25Index(IndexLifecycleMixin):
         applied. Cost: one full index rewrite — run it like any
         compaction job, when the tombstone fraction warrants.
 
-        Crash safety (reworked round 14 — ADVICE r13 #1): a
-        ``_compacting`` marker is written before the directory swaps
+        Crash safety: a ``_compacting`` marker is written before the
+        directory swaps
         and cleared after the tombstones drop; :meth:`query` /
         :meth:`add` / :meth:`remove` all REFUSE while the marker
         exists (the intermediate states are internally inconsistent —
@@ -921,13 +921,13 @@ class Bm25Index(IndexLifecycleMixin):
                 # crash landed between the tombstone drop and the
                 # manifest reset: without this heal, should_compact()
                 # stays True forever while compact() is a permanent
-                # no-op (review round 14 — the convergence claim must
+                # no-op (the convergence claim must
                 # cover the bookkeeping too)
                 man0["n_removed"] = 0
                 self._commit_manifest(man0, expected=ver0)
             return 0
         n_tomb = tomb.count()
-        # CAS token taken BEFORE the rewrite (ADVICE r15 — matching
+        # CAS token taken BEFORE the rewrite (matching
         # IvfIndex.compact): an add() interleaving during the
         # postings/terms/docs rewrite would otherwise CAS-commit its
         # accounting while the swapped-in directories silently drop
@@ -954,7 +954,7 @@ class Bm25Index(IndexLifecycleMixin):
         write_json_manifest(self.spark, self.marker_path, {
             "n_tombstones": int(n_tomb),
         })
-        # last cheap exit (review round 16): re-verify the pinned CAS
+        # last cheap exit: re-verify the pinned CAS
         # token now that the marker blocks new mutators — a writer
         # that committed during the n_live_postings count above is
         # detected HERE, while the index is untouched, instead of by
@@ -1072,7 +1072,7 @@ def ranking_metrics(
     k: int = 10,
 ) -> DataFrame:
     """Offline ranking evaluation — the metrics a retrieval deployment
-    regresses on (round 14; closes the loop the bm25/tfidf/hybrid
+    regresses on (closes the loop the bm25/tfidf/hybrid
     retrievers opened: generate → fuse → EVALUATE):
 
     - ``ndcg`` — NDCG@k with graded gains (2^rel - 1) and the standard
@@ -1089,8 +1089,8 @@ def ranking_metrics(
     ``labels`` one row per (query, doc) with integer ``rel_col`` >= 0
     (missing pairs read rel 0). One row out per query appearing in
     ``results`` OR in ``labels`` with rel > 0 — a query whose
-    retriever returned NOTHING still emits its all-zero row (review
-    round 14: dropping it would overstate every downstream mean by
+    retriever returned NOTHING still emits its all-zero row (dropping it
+    would overstate every downstream mean by
     skipping exactly the queries that scored worst).
 
     Determinism (the q_bigram_surprisal discipline): each position's

@@ -37,7 +37,7 @@ are a documented loss (same watermark contract as the streaming
 surface, streaming/ingest.py) — call ``refresh(full=True)`` to
 rebuild everything when late data must be folded in.
 
-Storage-agnostic (round-8 fix, VERDICT r7 "What's wrong" #2): the
+Storage-agnostic: the
 high-water-mark manifest and the data-file probe go through the Hadoop
 FileSystem API resolved FROM the rollup path's own scheme, so an
 HDFS/S3A ``rollup_path`` works identically to a local one — previously
@@ -137,7 +137,7 @@ class ContinuousRollup:
         #: numeric columns and value-level idempotency for the sketch.
         self.distinct_col = distinct_col
         self.lg_k = lg_k
-        #: optional mergeable PERCENTILES (round 15 — the KLL twin of
+        #: optional mergeable PERCENTILES (the KLL twin of
         #: distinct_col): each cell also stores a KLL quantile sketch
         #: of ``quantile_col``, so ``quantile_estimate`` can merge
         #: across materialized days AND the live tail — the operation
@@ -147,7 +147,7 @@ class ContinuousRollup:
         #: refresh orders.
         self.quantile_col = quantile_col
         self.kll_k = kll_k
-        #: optional mergeable SET ALGEBRA (round 16 — the Theta member
+        #: optional mergeable SET ALGEBRA (the Theta member
         #: completing the sketch-cell family beside HLL count-distinct
         #: and KLL quantiles): each cell also stores a Theta sketch of
         #: ``theta_col``, so ``segment_overlap_estimate`` can
@@ -158,7 +158,7 @@ class ContinuousRollup:
         #: may differ across refresh orders.
         self.theta_col = theta_col
         #: optional name of a DAY PARTITION column in the base view
-        #: (round 16 — VERDICT r15 #4): when the base is stored
+        #: when the base is stored
         #: day-partitioned (the engine warehouse's
         #: ``series_bucket=*/ds=*`` layout), ``invalidate_days`` also
         #: emits ``<col> IN (<days>)`` so late-day repair prunes whole
@@ -193,7 +193,7 @@ class ContinuousRollup:
         # while window_day=to_date(w.start) and the hwm date casts use
         # the session zone. On e.g. +05:30 with a '1 hour' window, a
         # window straddles local midnight at the high-water mark and
-        # read() would count it on BOTH sides (ADVICE r7, medium).
+        # read() would count it on BOTH sides.
         tz = spark.conf.get("spark.sql.session.timeZone")
         for off in _tz_offsets_seconds(tz):
             if off % secs != 0:
@@ -296,7 +296,7 @@ class ContinuousRollup:
         (default: the rollup keys) over the COMPLETE view — KLL
         sketches from materialized days and the live tail MERGE
         losslessly within the sketch's rank-error bound, which
-        per-cell percentile_approx cannot do (round 15; the quantile
+        per-cell percentile_approx cannot do (the quantile
         twin of :meth:`distinct_estimate`). Returns (group_cols,
         n_rows, p<q> per requested quantile, rounded 6 dp)."""
         if self.quantile_col is None:
@@ -323,7 +323,7 @@ class ContinuousRollup:
         live tail UNION losslessly per segment, then every pairwise
         (``k=2``: intersection/union/Jaccard) or k-way (``k>=3``:
         members in ALL k segments) overlap is computed from sketch
-        bytes (round 16; the set-algebra member of the sketch-cell
+        bytes (the set-algebra member of the sketch-cell
         family — the question :meth:`distinct_estimate`'s HLL cells
         cannot answer). Never re-scans raw events: O(cells) merge +
         a dims-only segment grid. NULL segments are excluded (the
@@ -424,7 +424,7 @@ class ContinuousRollup:
         return int(obs.get["n"])
 
     def invalidate_days(self, days) -> int:
-        """Writer-driven late-data repair (round 15; the role
+        """Writer-driven late-data repair (the role
         TimescaleDB's invalidation log plays): re-aggregate exactly
         the named ALREADY-MATERIALIZED window-days from base and
         dynamically overwrite their partitions. The WRITER knows which
@@ -443,7 +443,7 @@ class ContinuousRollup:
         extend to the sketch binaries — DataSketches compaction makes
         level/coupon decisions the merge order can shift, so a re-run
         may rewrite different sketch BYTES encoding the same estimates
-        (ADVICE r15 low; the class-level cell comments pin the same
+        (the class-level cell comments pin the same
         contract). Day boundaries are window boundaries by the
         constructor's contract, so a day's re-aggregation is
         self-contained. Scope: repairs late ARRIVALS — dynamic
@@ -451,7 +451,7 @@ class ContinuousRollup:
         vanished entirely keeps its stale cells (deletions need
         ``refresh(full=True)``, the documented rebuild hatch).
 
-        Scale path (round 16 — VERDICT r15 #4): when the rollup was
+        Scale path: when the rollup was
         built with ``partition_day_col`` (the engine warehouse's
         ``ds`` layout), the named days are ALSO emitted as a
         partition-column ``IN`` list, so the repair scan prunes whole
@@ -554,7 +554,7 @@ class RollupScheduler:
         self._lock = threading.Lock()
         self._timer: object | None = None
         self._active = False
-        # Generation token (code-review r8): Timer.cancel() is a no-op
+        # Generation token: Timer.cancel() is a no-op
         # on a timer whose thread has already fired and is blocked on
         # the lock — without the token, a set_interval()/start() racing
         # such a tick would arm a SECOND re-arming chain and double the

@@ -385,7 +385,7 @@ def token_budget_sample(
     default_budget: int | None = None,
     salt: str = "budget",
 ) -> DataFrame:
-    """Per-domain TOKEN-budget selection (round 13): training mixtures
+    """Per-domain TOKEN-budget selection: training mixtures
     are specified in tokens, not documents — "50 M tokens of code,
     10 M of forums" — so the selection unit must be the running token
     count. Per domain, documents are ordered by their deterministic

@@ -128,7 +128,7 @@ def merge_upsert(
     keys: Sequence[str],
     update_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """MERGE INTO semantics on immutable frames (round 12 — the
+    """MERGE INTO semantics on immutable frames (the
     SET-level sibling of the reference's R2 point update,
     main.rs:106-117, and of this module's SCD2 history merge): WHEN
     MATCHED, update ``update_cols`` to the source's values (source
@@ -192,7 +192,7 @@ def merge_upsert(
     # keys + update_cols: a narrowed update_cols scopes WHEN MATCHED
     # assignment only (SQL MERGE's UPDATE SET list) — a brand-new row
     # has no old value to preserve, so discarding carried source values
-    # there would silently NULL data the caller supplied (advice r12)
+    # there would silently NULL data the caller supplied
     target_types = {f.name: f.dataType for f in target.schema.fields}
     src_carried = set(source.columns)
     inserts = source.join(
@@ -213,7 +213,7 @@ def table_diff(
     keys: Sequence[str],
     compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Snapshot diff (round 13) — the release-validation primitive a
+    """Snapshot diff — the release-validation primitive a
     100 TB pipeline runs before swapping a rebuilt table in: one row
     per key whose presence or compared values CHANGED between the two
     snapshots, ``(keys..., change_type added|removed|changed,

@@ -392,13 +392,13 @@ class IvfIndex(IndexLifecycleMixin):
     Hadoop-FS helpers (fsutil.py) so the index can live on object
     storage.
 
-    Deletion lifecycle (round 14 — the ``Bm25Index`` pattern):
+    Deletion lifecycle (the ``Bm25Index`` pattern):
     :meth:`remove` appends tombstones (query-time anti-join on the
     same pruned scan, EXACT post-delete results), :meth:`compact`
     makes the deletion physical with identical results, and
     :meth:`add`'s ``removed_ids`` policy (error|skip|readmit) governs
     re-publication of a removed id. Writer contract: ONE writer at a
-    time per index — ENFORCED since round 15 (the ``Bm25Index``
+    time per index — ENFORCED (the ``Bm25Index``
     stance): the manifest commit is a compare-and-swap
     (``IndexLifecycleMixin._commit_manifest``), so an interleaved
     writer raises ``fsutil.ManifestVersionConflict`` instead of
@@ -409,8 +409,8 @@ class IvfIndex(IndexLifecycleMixin):
     def __init__(self, spark, index_path: str):
         self.spark = spark
         self.index_path = index_path
-        # deletion-lifecycle sidecars (round 14 — VERDICT r13
-        # next-round #2, the Bm25Index pattern): SIBLINGS of the cell
+        # deletion-lifecycle sidecars (the Bm25Index pattern): SIBLINGS of
+        # the cell
         # tree, never inside it — the index_path IS the parquet root,
         # so a nested dir would be read as data files
         self.tombstones_path = index_path + ".tombstones"
@@ -418,7 +418,7 @@ class IvfIndex(IndexLifecycleMixin):
 
     # (_dir_exists / _tombstones / _check_not_compacting /
     # should_compact come from IndexLifecycleMixin — one
-    # implementation for both persisted indexes, review round 14;
+    # implementation for both persisted indexes;
     # _ROWS_FIELD defaults to "n_rows", which is this class's key)
 
     def build(
@@ -430,7 +430,7 @@ class IvfIndex(IndexLifecycleMixin):
         seed: int = 42,
         quantize_bits: int | None = None,
     ) -> "IvfIndex":
-        """``quantize_bits`` (round 12 — IVF+SQ, the standard serving
+        """``quantize_bits`` (IVF+SQ, the standard serving
         deployment; FAISS's ``IVF,SQ8``): store each vector as
         per-vector-scaled integer codes instead of floats — int8 cuts
         index bytes ~4x, which at 100 TB of embeddings is the
@@ -472,8 +472,8 @@ class IvfIndex(IndexLifecycleMixin):
             )
         else:
             stored = assigned.select("_cid", "_cvec", "_cell")
-        # n_rows rides the index write as an observe() metric (round 20
-        # — guide §1.4, the Bm25Index lifecycle pattern): it counts
+        # n_rows rides the index write as an observe() metric (guide §1.4,
+        # the Bm25Index lifecycle pattern): it counts
         # exactly the rows written, and skips the full re-read count of
         # the just-written cell tree
         from pyspark.sql import Observation
@@ -499,7 +499,7 @@ class IvfIndex(IndexLifecycleMixin):
             "seed": seed,
             "corpus_id": corpus_id,
             "quantize_bits": quantize_bits,
-            # seeded at build (round 14) so remove()'s accounting and
+            # seeded at build so remove()'s accounting and
             # the drift ratio never need a lazy backfill count
             "n_rows": n_rows,
             "n_added": 0,
@@ -559,8 +559,8 @@ class IvfIndex(IndexLifecycleMixin):
         return self.DEFAULT_MAX_ADDED_FRAC
 
     def should_rebuild(self, max_added_frac: float | None = None) -> bool:
-        """The recall-drift contract of :meth:`add`, as a method
-        (VERDICT r9 next-round #5): True when incrementally-added rows
+        """The recall-drift contract of :meth:`add`, as a method: True when
+        incrementally-added rows
         are no longer small relative to the index — cells have grown
         away from their frozen centroids and ``build()`` should be
         re-run. Logs the observed ratio either way so operators can
@@ -624,7 +624,7 @@ class IvfIndex(IndexLifecycleMixin):
             # cosine is SCALE-invariant: cos(s*q, v) == cos(q, v) for
             # s > 0, and s == 0 means all-zero codes (NULL either
             # way) — score the raw codes and skip the per-candidate
-            # dequantize multiply entirely (review round 12; the
+            # dequantize multiply entirely (the
             # transform would otherwise run inside both the dot and
             # norm folds of every probed-cell candidate)
             corpus_vec_col = F.col("_qcodes")
@@ -649,7 +649,7 @@ class IvfIndex(IndexLifecycleMixin):
         corpus_vec: str = "embedding",
         removed_ids: str = "error",
     ) -> int:
-        """Incremental add (VERDICT r8 next-round #4): assign the new
+        """Incremental add: assign the new
         vectors to the EXISTING cells — ``_probe_cells`` with
         n_probe=1, i.e. each vector goes to its nearest frozen
         centroid — and append them to the matching cell partitions.
@@ -665,7 +665,7 @@ class IvfIndex(IndexLifecycleMixin):
         trade-off; FAISS's add-vs-train distinction). Rebuild
         (``build()``) when :meth:`should_rebuild` says so — it checks
         the manifest's n_added/n_rows ratio against the documented
-        threshold, and :meth:`query` warns past it (round 10); queries
+        threshold, and :meth:`query` warns past it; queries
         are exact *within probed cells* regardless, so only which
         cells are probed — never the rerank — is affected.
 
@@ -674,7 +674,7 @@ class IvfIndex(IndexLifecycleMixin):
         array<float> and array<double> files under one parquet root
         would otherwise poison the read-side schema merge.
 
-        ``removed_ids`` (round 14 — same three-policy contract as
+        ``removed_ids`` (same three-policy contract as
         ``Bm25Index.add``, see its class docstring): a batch carrying
         a previously-:meth:`remove`d id cannot simply be appended
         while its tombstone is live — the tombstone would hide the new
@@ -743,13 +743,13 @@ class IvfIndex(IndexLifecycleMixin):
                 # BOTH stored columns are cast to the build-time types —
                 # a long-id add into a string-id index (or double vectors
                 # into float) would otherwise poison the parquet
-                # schema merge for every later read (code-review r9)
+                # schema merge for every later read
                 F.col("_qid").cast(stored["_cid"].dataType).alias("_cid"),
                 F.col("_qvec").cast(stored["_cvec"].dataType).alias("_cvec"),
                 "_cell",
             )
         # ONE realization: the batch count rides the append itself as
-        # an observe() metric (round 20 — guide §1.4). This is strictly
+        # an observe() metric (guide §1.4). This is strictly
         # tighter than the previous persist+count+write: the write IS
         # the only computation of the assignment, so a nondeterministic
         # source cannot double-assign between a count and a write, and
@@ -778,11 +778,11 @@ class IvfIndex(IndexLifecycleMixin):
         self._commit_manifest(man, expected=ver)
         return n
 
-    # -- delete (round 14 — the Bm25Index lifecycle, ported) ---------
+    # -- delete (the Bm25Index lifecycle, ported) ---------
     def remove(self, vec_ids) -> int:
         """Delete vectors from the SERVING index without a rebuild —
-        the right-to-erasure path the ANN store was missing (VERDICT
-        r13 next-round #2; the BM25 side landed in r13): append the
+        the right-to-erasure path of the ANN store (the BM25 side has
+        its own): append the
         LIVE subset of ``vec_ids`` to a tombstone sidecar
         (``<index>.tombstones``, a SIBLING of the cell tree);
         :meth:`query` anti-joins it on the same cell-pruned scan, so
@@ -827,8 +827,8 @@ class IvfIndex(IndexLifecycleMixin):
             live = live.join(tomb, "_cid", "left_anti")
         staging = f"{self.index_path}.staging/remove_{uuid.uuid4().hex}"
         try:
-            # the newly-removed count rides the staging write (round 20
-            # — guide §1.4): one job instead of write + count
+            # the newly-removed count rides the staging write (guide §1.4):
+            # one job instead of write + count
             from pyspark.sql import Observation
 
             obs = Observation("ivf_remove_count")
@@ -846,8 +846,8 @@ class IvfIndex(IndexLifecycleMixin):
             delete_path(self.spark, staging)
         # manifest DERIVED from authoritative state (index minus
         # tombstones): self-healing under interrupted earlier calls.
-        # ONE index scan computes live AND tombstoned counts (round 14
-        # — the anti-join + count pair scanned the cell tree twice)
+        # ONE index scan computes live AND tombstoned counts (the anti-join
+        # + count pair scanned the cell tree twice)
         rows_all = self.spark.read.parquet(self.index_path).select("_cid")
         tomb_now = self._tombstones()
         if tomb_now is None:
@@ -905,7 +905,7 @@ class IvfIndex(IndexLifecycleMixin):
                 delete_path(self.spark, self.marker_path)
             ver0, man0 = self._manifest_cas()
             if int(man0.get("n_removed", 0)) != 0:
-                # heal the bookkeeping too (review round 14): a crash
+                # heal the bookkeeping too: a crash
                 # between the tombstone drop and the manifest reset
                 # would otherwise pin should_compact() True forever
                 man0["n_removed"] = 0
@@ -928,8 +928,8 @@ class IvfIndex(IndexLifecycleMixin):
         write_json_manifest(self.spark, self.marker_path, {
             "n_tombstones": int(n_tomb),
         })
-        # last cheap exit before the destructive swap (review round
-        # 16, mirroring Bm25Index.compact): a writer that committed
+        # last cheap exit before the destructive swap (mirroring
+        # Bm25Index.compact): a writer that committed
         # during the live-count above raises HERE, index untouched
         self._verify_manifest_unmoved(ver)
         live.write.mode("overwrite").partitionBy("_cell").parquet(

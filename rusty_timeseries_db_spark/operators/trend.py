@@ -18,7 +18,7 @@ is keyed per series (shuffle on the series key only, co-partitioned
 with the input agg) and bounded by the resample granularity, not the
 row count; the ``max_points`` guard makes the bound explicit by
 raising before the join if any series exceeds it. The guard is ON by
-default (5000 points ≈ 12.5M pairs/series — review round 15: opt-in
+default (5000 points ≈ 12.5M pairs/series — opt-in
 guards don't get used, and a caller who passes raw ticks instead of
 bucketed series would otherwise get a silent per-series quadratic
 explosion); pass ``max_points=None`` to opt out deliberately.
@@ -100,13 +100,13 @@ def mann_kendall(
     the tie correction is a separate (key, value) count — skew-immune
     (map-side combine on exact values).
     """
-    # persisted (round 19 optimization — guide §1.2): the bucketed
+    # persisted (guide §1.2): the bucketed
     # input is referenced FIVE times (guard count, both pair-join
     # sides, n, ties) and is typically an aggregate over the raw
     # event stream — unpersisted, that upstream re-runs per
     # reference. The cached frame is series × periods rows (already
     # reduced), and the eager guard below materializes it anyway.
-    # Round 20 (VERDICT r19 #7 / ADVICE): cache an INTERNAL projection
+    # Cache an INTERNAL projection
     # (never the caller's frame — no side effect on a caller-owned
     # object), and a guard rejection unpersists before raising so an
     # over-limit call leaks no cache entry. The cache itself lives in
@@ -159,7 +159,7 @@ def mann_kendall(
     return (
         # LEFT join + coalesce: a single-point series has no pair rows
         # (no s row) but must still emit n=1, S=0, var 0, z NULL — the
-        # documented contract (review round 14; previously the inner
+        # documented contract (previously the inner
         # join silently dropped the series)
         n.join(s, on=key, how="left")
         .withColumn("s_stat", F.coalesce(F.col("s_stat"), F.lit(0)))
@@ -195,7 +195,7 @@ def theil_sen(
     Emits (key, n_pairs, slope). Series with < 2 points emit nothing.
     Same pair-join shape and ``max_points`` guard as mann_kendall.
     """
-    # persisted — same rationale (and same round-20 hygiene: internal
+    # persisted — same rationale (and same hygiene: internal
     # projection, unpersist-on-guard-reject) as mann_kendall
     df = df.select(key, order, value).persist(StorageLevel.MEMORY_AND_DISK)
     if max_points is not None:

@@ -20,7 +20,7 @@ TABLES = [
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    # Pin the session zone (code-review r8): DuckDB's to_timestamp
+    # Pin the session zone: DuckDB's to_timestamp
     # yields TIMESTAMPTZ and strftime/CAST render it in the session
     # TimeZone (host default), while the Spark side pins
     # spark.sql.session.timeZone=UTC — on a non-UTC host every

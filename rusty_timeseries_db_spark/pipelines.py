@@ -47,7 +47,7 @@ class CorpusPipelineConfig:
     contamination_max: float = 0.8
     mixture: Mapping[str, float] = field(default_factory=dict)
     mixture_default: float = 1.0
-    #: opt-in temperature mixture (round 11): when set, the mixture
+    #: opt-in temperature mixture: when set, the mixture
     #: stage resamples domains with p_d ∝ c_d^mixture_alpha at an
     #: expected ``mixture_target_fraction`` of the surviving corpus
     #: (the mT5 recipe — rates derived from the ACTUAL post-dedup
@@ -55,7 +55,7 @@ class CorpusPipelineConfig:
     #: rates. Mutually exclusive with ``mixture``; default off.
     mixture_alpha: float | None = None
     mixture_target_fraction: float = 0.5
-    #: opt-in DSIR selection (round 12 — VERDICT r11 next-round #6):
+    #: opt-in DSIR selection:
     #: when ``dsir_select_k`` is set, stage 5 becomes importance
     #: RESAMPLING toward ``dsir_target_domain`` (Xie et al. 2023):
     #: hashed-bigram importance weights are estimated over the whole
@@ -77,7 +77,7 @@ class CorpusPipelineConfig:
     split_weights: Mapping[str, float] | None = None
     pack_budget: int = 512
     pack_shards: int = 32
-    #: opt-in chunked packing (round 8): split surviving TRAIN docs
+    #: opt-in chunked packing: split surviving TRAIN docs
     #: into ``chunk_tokens``-token windows (``chunk_overlap`` shared
     #: tokens between neighbors) BEFORE packing, so the pack unit is a
     #: context-bounded chunk, not a whole document — the realistic
@@ -87,7 +87,7 @@ class CorpusPipelineConfig:
     #: schema and its end-to-end oracle are unchanged.
     chunk_tokens: int | None = None
     chunk_overlap: int = 0
-    #: opt-in Gopher repetition gate (round 11): drop documents whose
+    #: opt-in Gopher repetition gate: drop documents whose
     #: duplicate-word fraction or most-frequent-bigram share exceeds
     #: these bounds (Rae et al. 2021 §A1.1 use 0.2-0.6 band cut-offs).
     #: Runs right after the token-count gate as ONE extra
@@ -97,7 +97,7 @@ class CorpusPipelineConfig:
     #: oracle are unchanged.
     max_dup_word_frac: float | None = None
     max_top_bigram_frac: float | None = None
-    #: opt-in CCNet-style paragraph dedup (round 11): rewrite every
+    #: opt-in CCNet-style paragraph dedup: rewrite every
     #: document with corpus-duplicated ``paragraph_dedup_window``-token
     #: paragraphs removed (first occurrence kept) BEFORE any doc-level
     #: stage — the CCNet position: boilerplate stripped here no longer
@@ -106,7 +106,7 @@ class CorpusPipelineConfig:
     #: the CLEANED token count. Default off: the documented 7-stage
     #: output and its end-to-end oracle are unchanged.
     paragraph_dedup_window: int | None = None
-    #: opt-in language gate (round 14 — the CCNet stage 0 the
+    #: opt-in language gate (the CCNet stage 0 the
     #: pipeline was missing): when set, documents are classified with
     #: the char-trigram model (operators/langid.py — exact-integer
     #: Cavnar-Trenkle, oracle-checked as q_language_id) and only docs
@@ -116,8 +116,8 @@ class CorpusPipelineConfig:
     #: documented 7-stage output and its end-to-end oracle are
     #: unchanged.
     langid_keep: tuple[str, ...] | None = None
-    #: opt-in model-based quality gate (round 17 — VERDICT r16 #4,
-    #: the fastText-style linear classifier CCNet/LLaMA pipelines run
+    #: opt-in model-based quality gate (the fastText-style linear classifier
+    #: CCNet/LLaMA pipelines run
     #: right after language ID): when ``quality_weights`` is set (a
     #: pretrained ``(bucket, weight_micro)`` table —
     #: operators/quality.py; ``hashed_linear_weights`` for the
@@ -309,7 +309,7 @@ def build_training_corpus(
         # symmetric with the inverse guard below: a target domain with
         # no k would otherwise be silently ignored (stage 5 runs
         # un-resampled) — surprising config deserves a raise, not a
-        # no-op (advice r12)
+        # no-op
         raise ValueError("dsir_target_domain needs dsir_select_k")
     if cfg.dsir_select_k is not None:
         if cfg.dsir_target_domain is None:
@@ -326,7 +326,7 @@ def build_training_corpus(
                 # eqNullSafe: a NULL domain is a RAW-pool doc that
                 # competes for selection — plain == would make
                 # is_target NULL and the ~is_target pool filter would
-                # silently drop it everywhere (review round 12)
+                # silently drop it everywhere
                 "_is_tgt",
                 F.col(domain_col).eqNullSafe(cfg.dsir_target_domain),
             ),

@@ -60,333 +60,12 @@ def declare(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# The driver's CORRECTNESS check records only the FIRST 50 entries of
-# all_queries(). Window rule (VERDICT r3 #3): (a) ANY query whose
-# underlying operator/oracle changed THIS round sits inside the
-# checked window so a regression in just-modified code cannot escape
-# external verification; (b) the remaining slots go to the STALEST
-# queries — those whose most recent driver row is oldest. Staleness is
-# the per-query max round over CORRECTNESS_r{01..19}.json (rebuilt
-# with gen_rotation.py entering round 20): 9 queries were last
-# driver-checked in r13, 46 in r14, 45 in r15, 45 in r16, 46 in r17,
-# 50 in r18 (the dict default), 50 in r19.
-# Round-20 window (VERDICT r19 next-round #10): _ROUND_MODIFIED holds
-# the 20 queries over operators this OPTIMIZATION round touched —
-# span/cross-span join-input reductions + persist knob
-# (duplicate_spans family), pointer-jump label propagation
-# (dedup_clusters family + the corpus pipelines), Bm25Index lifecycle
-# job cuts, IvfIndex observe-on-write counts, ingest_df observe-fused
-# count (engine fixtures), trend persist hygiene, and the
-# contamination semi-join, and the fused dependence-scan dims guard —
-# so every behavior-adjacent change is driver-verified this round
-# (rule (a)). The remaining 30 slots fill with the stalest rows: all
-# 9 r13-tier queries, then 21 of the 46 r14-tier in declaration order.
-# Every query not in the window is still covered by run_parity.py
-# locally (full sweep, re-run after each change on fresh testdata)
-# and the judge's own sweep.
-_ROUND_MODIFIED: frozenset[str] = frozenset({
-    # round 20 (optimization): queries over touched operators
-    "q_bm25_index", "q_bm25_stream_indexed", "q_hybrid_index_rrf",
-    "q_tfidf_index",                           # retrieval.Bm25Index
-    "q_similarity_ivf_index",                  # similarity.IvfIndex
-    "q_catalog_fuzzy_link", "q_latest_values",  # api.ingest_df
-    "q_contamination_ngram",        # contamination.ngram_contamination
-    "q_dedup_clusters", "q_dedup_keep_canonical",  # dedup.dedup_clusters
-    "q_training_corpus_pipeline", "q_corpus_pipeline_dsir",
-    "q_corpus_pipeline_chunked",   # pipelines -> dedup_clusters
-    "q_duplicate_spans", "q_duplicate_span_removal",
-    "q_span_decontamination",      # dedup.duplicate_spans family
-    "q_mann_kendall", "q_theil_sen",           # trend persist hygiene
-    "q_chi_square_scan", "q_pmi_scan",  # profile fused dims guard
-})
-
-#: most recent driver-checked round per query (gen_rotation.py output,
-#: CORRECTNESS_r{01..19}.json): 9 last ran in r13, 46 in r14, 45 in
-#: r15, 45 in r16, 46 in r17, 50 in r19; the remaining 50 ran in r18
-#: and form the dict default (`.get(name, 18)` in _ordered_registry).
-_LAST_DRIVER_ROUND: dict[str, int] = {
-    **dict.fromkeys([
-        "q_audience_jaccard",
-        "q_column_profile",
-        "q_delta_compression_stats",
-        "q_enriched_stream_served",
-        "q_kmeans_step",
-        "q_pii_scrub",
-        "q_seasonal_backtest",
-        "q_top_movers",
-        "q_value_heatmap_2d",
-    ], 13),
-    **dict.fromkeys([
-        "q_array_ops",
-        "q_char_entropy",
-        "q_compaction_stats",
-        "q_dedup_exact",
-        "q_deterministic_sample",
-        "q_embedding_neardup_exact",
-        "q_except_all",
-        "q_fdd_rules_join",
-        "q_from_json_struct",
-        "q_gaps_islands_runs",
-        "q_global_sort_multi",
-        "q_hash_functions",
-        "q_hash_split",
-        "q_langid",
-        "q_language_id",
-        "q_latest_values",
-        "q_levenshtein",
-        "q_locf_gapfill",
-        "q_multimodal_features",
-        "q_multimodal_probe",
-        "q_ngram_jaccard",
-        "q_pii_luhn_cards",
-        "q_posexplode",
-        "q_quality_filter_pipeline",
-        "q_quality_score",
-        "q_resample_1d",
-        "q_scalar_conditional",
-        "q_scalar_datetime",
-        "q_scalar_datetime_parts",
-        "q_scalar_json",
-        "q_scalar_math",
-        "q_scalar_string",
-        "q_session_window",
-        "q_similarity_bruteforce",
-        "q_sql_pivot",
-        "q_stratified_sample",
-        "q_to_json",
-        "q_token_stats",
-        "q_tpch_q18_large_volume",
-        "q_tpch_q21_suppliers_who_wait",
-        "q_tumbling_window",
-        "q_udf_grouped_agg_median",
-        "q_udf_mapinpandas_clip",
-        "q_udf_sql_registered",
-        "q_udf_zscore_per_group",
-        "q_window_nth_cume",
-    ], 14),
-    **dict.fromkeys([
-        "q_agg_pricing_summary",
-        "q_agg_stats",
-        "q_attribution_last_touch",
-        "q_benford_profile",
-        "q_bm25_stream_indexed",
-        "q_catalog_fuzzy_link",
-        "q_cohort_retention_matrix",
-        "q_count_distinct",
-        "q_cube",
-        "q_filter_compound",
-        "q_filter_range",
-        "q_funnel_stages",
-        "q_fuzzy_vocab_match",
-        "q_hybrid_index_rrf",
-        "q_k_anonymity",
-        "q_kll_quantile_rollup",
-        "q_m4_decimate",
-        "q_mann_kendall",
-        "q_minmax_decimate",
-        "q_ngram_containment",
-        "q_percentile_disc",
-        "q_percentiles",
-        "q_pivot",
-        "q_pmi_scan",
-        "q_project_compute",
-        "q_psi_drift",
-        "q_quantile_buckets",
-        "q_r11_fault_count",
-        "q_r3_query_by_id",
-        "q_r4_fdd_overlay",
-        "q_ranking_eval",
-        "q_rbo_lexical_dense",
-        "q_rollup",
-        "q_session_stats",
-        "q_similarity_ivf_index",
-        "q_spearman_corr",
-        "q_sql_from_first",
-        "q_sql_pivot_multi",
-        "q_state_durations",
-        "q_tfidf_index",
-        "q_theil_sen",
-        "q_topk_sketch_merge",
-        "q_winsorized_stats",
-        "q_word_dispersion",
-        "q_zipf_slope",
-    ], 15),
-    **dict.fromkeys([
-        "q_bigram_vocab",
-        "q_bm25_index",
-        "q_bool_aggs",
-        "q_cohort_retention",
-        "q_contamination_check",
-        "q_continuous_rollup",
-        "q_correlated_subquery",
-        "q_correlation",
-        "q_dense_grid",
-        "q_event_transitions",
-        "q_ewma",
-        "q_filter_rlike",
-        "q_funnel",
-        "q_gini_concentration",
-        "q_join_right_outer",
-        "q_lateral_topk",
-        "q_linear_regression",
-        "q_merge_intervals",
-        "q_mode_per_group",
-        "q_multi_count_distinct",
-        "q_pagerank",
-        "q_pareto_abc",
-        "q_quantile_stream_served",
-        "q_rfm_segmentation",
-        "q_rolling_corr",
-        "q_rollup_theta_overlap",
-        "q_running_distinct",
-        "q_scalar_subquery",
-        "q_seasonal_residuals",
-        "q_sequence_packing",
-        "q_sliding_window_batch",
-        "q_state_durations_served",
-        "q_string_agg_ordered",
-        "q_theta_audience_overlap",
-        "q_theta_overlap_kway",
-        "q_theta_stream_served",
-        "q_topk_stream_served",
-        "q_tpch_q14_promo_revenue",
-        "q_tpch_q19_disjunctive_join",
-        "q_tpch_q6_forecast_revenue",
-        "q_tpch_q7_volume_shipping",
-        "q_trimmed_mean",
-        "q_unpivot",
-        "q_weighted_domain_sample",
-        "q_weighted_median",
-    ], 16),
-    **dict.fromkeys([
-        "q_approx_aggregates",
-        "q_arrow_transform",
-        "q_asof_join",
-        "q_asof_nearest",
-        "q_asof_tolerance",
-        "q_collect_set",
-        "q_contamination_ngram",
-        "q_dedup_clusters",
-        "q_dedup_keep_canonical",
-        "q_embedding_knn_classify",
-        "q_grouping_sets",
-        "q_having",
-        "q_higher_order_fns",
-        "q_interval_overlap_join",
-        "q_join_anti",
-        "q_join_cross",
-        "q_join_full_outer",
-        "q_join_inner_broadcast",
-        "q_join_left_outer",
-        "q_join_range_bands",
-        "q_join_semi",
-        "q_map_ops",
-        "q_markov_stationary",
-        "q_minhash_pairs",
-        "q_null_safe_join",
-        "q_orc_roundtrip",
-        "q_qualify_in_exists",
-        "q_qualify_nested",
-        "q_qualify_sql",
-        "q_repetition_profile",
-        "q_schema_evolution",
-        "q_semantic_dedup",
-        "q_simhash_pairs",
-        "q_similarity_lsh",
-        "q_tfidf_top_terms",
-        "q_tpch_q12_priority_class",
-        "q_tpch_q13_custdist",
-        "q_tpch_q17_small_qty_revenue",
-        "q_tpch_q22_global_sales_opportunity",
-        "q_tpch_q4_order_priority",
-        "q_tpch_q8_market_share",
-        "q_tpch_q9_product_profit",
-        "q_unigram_surprisal",
-        "q_window_cumulative",
-        "q_window_lag_lead",
-        "q_window_topk_per_group",
-    ], 17),
-    **dict.fromkeys([
-        "q_autocorr_lag1",
-        "q_bigram_surprisal",
-        "q_bm25_topk",
-        "q_chi_square_scan",
-        "q_chunk_documents",
-        "q_corpus_pipeline_chunked",
-        "q_corpus_pipeline_dsir",
-        "q_corpus_stream_served",
-        "q_cusum_changepoints",
-        "q_daily_vs_trailing_week",
-        "q_domain_kl_divergence",
-        "q_except",
-        "q_heavy_hitter_share",
-        "q_histogram_quantile",
-        "q_hybrid_rrf",
-        "q_interarrival_burstiness",
-        "q_intersect",
-        "q_intersect_all",
-        "q_logrank_omnibus",
-        "q_lttb_downsample",
-        "q_merge_upsert",
-        "q_moving_median",
-        "q_nelson_aalen",
-        "q_ohlc_bars",
-        "q_outlier_mad",
-        "q_predict_linear",
-        "q_promql_changes",
-        "q_promql_irate",
-        "q_quality_multiclass",
-        "q_rate_per_second",
-        "q_rmst",
-        "q_sax_motifs",
-        "q_sax_symbols",
-        "q_series_align_ratio",
-        "q_series_gap_report",
-        "q_sql_columns_join",
-        "q_sql_unpivot",
-        "q_table_diff",
-        "q_token_budget_sample",
-        "q_topk_global",
-        "q_topk_with_ties",
-        "q_topn_with_others",
-        "q_tpch_q2_min_cost_supplier",
-        "q_training_corpus_pipeline",
-        "q_union_all",
-        "q_union_distinct",
-        "q_window_first_last",
-        "q_window_rank_ntile",
-        "q_window_rolling_time",
-        "q_zorder_stats",
-    ], 19),
-}
-
-def _ordered_registry() -> list[QuerySpec]:
-    """This round's new/modified queries first, then stalest-driver-row
-    first (r12-last, then r13/r14/r15/r16/r17, with the r18 dict
-    default freshest); declaration order breaks ties (Python sort is
-    stable)."""
-    names = {q.name for q in _REGISTRY}
-    assert _ROUND_MODIFIED <= names, (
-        f"stale name in _ROUND_MODIFIED: {_ROUND_MODIFIED - names}"
-    )
-    assert set(_LAST_DRIVER_ROUND) <= names, (
-        f"stale name in _LAST_DRIVER_ROUND: {set(_LAST_DRIVER_ROUND) - names}"
-    )
-    return sorted(
-        _REGISTRY,
-        key=lambda q: (
-            q.name not in _ROUND_MODIFIED,
-            _LAST_DRIVER_ROUND.get(q.name, 18),
-        ),
-    )
-
-
 def all_queries() -> dict[str, QueryFn]:
-    return {q.name: q.fn for q in _ordered_registry()}
+    return {q.name: q.fn for q in _REGISTRY}
 
 
 def all_oracles() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered_registry() if q.oracle is not None}
+    return {q.name: q.oracle for q in _REGISTRY if q.oracle is not None}
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -394,24 +73,15 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) in some
     testdata generations and TIMESTAMP(MICROS) in others. Spark's
-    TimestampType is µs and refuses nanos, so we keep the legacy
-    nanos-as-long conf on and normalize by the *observed* read dtype:
-    long → floor-divide ns→µs (matches DuckDB's own truncation on
-    read); timestamp/timestamp_ntz → cast to TimestampType (session
-    tz is pinned UTC, so the NTZ cast is value-identical to DuckDB's
-    naive read). Both engines see identical µs values either way.
+    TimestampType is µs and refuses nanos, so the session must carry
+    ``spark.sql.legacy.parquet.nanosAsLong=true`` (``session.py`` sets
+    it, with ``session.timeZone=UTC``); this loader sets no conf and
+    normalizes by the *observed* read dtype: long → floor-divide
+    ns→µs (matches DuckDB's own truncation on read);
+    timestamp/timestamp_ntz → cast to TimestampType (the UTC session
+    tz makes the NTZ cast value-identical to DuckDB's naive read).
+    Both engines see identical µs values either way.
     """
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # deterministic regardless of the host session's defaults:
-        # timestamp literals/arrow conversion in UTC, sane shuffle width
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.shuffle.partitions", "32"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down — degrade gracefully
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = df.schema["ts"].dataType.typeName()
@@ -1144,8 +814,8 @@ def q_asof_tolerance(spark, sf_dir):
     """,
     doc="SQL surface for the as-of join (sql_ext.sql_with_asof rewrites "
     "the DuckDB-style clause onto the union+window plan); same result "
-    "as q_asof_join. Spelled ASOF LEFT JOIN since r12 — the dialect "
-    "now follows DuckDB join-type semantics (bare = inner, LEFT = "
+    "as q_asof_join. Spelled ASOF LEFT JOIN — the dialect "
+    "follows DuckDB join-type semantics (bare = inner, LEFT = "
     "keep unmatched with NULL payloads; this query is the LEFT form, "
     "q_asof_inner_sql certifies the bare form against DuckDB running "
     "ASOF JOIN natively)",
@@ -1193,8 +863,8 @@ def q_asof_sql(spark, sf_dir):
       FROM a
     ) q WHERE rn2 = 1
     """,
-    doc="ASOF LEFT JOIN + QUALIFY composed in ONE statement (sql_ext.sql, "
-    "round 8 — VERDICT r7 gap #3): each customer's LATEST order with "
+    doc="ASOF LEFT JOIN + QUALIFY composed in ONE statement (sql_ext.sql"
+    "): each customer's LATEST order with "
     "its as-of event value — 'latest reading per sensor, keep rank 1', "
     "the canonical TSDB shape. The QUALIFY predicate references the "
     "left alias, exercising the inline-predicate fallback form",
@@ -1255,7 +925,7 @@ def q_asof_qualify_sql(spark, sf_dir):
     LEFT JOIN (SELECT event_id, value FROM jp WHERE rn = 1) p
       USING (event_id)
     """,
-    doc="point-in-time multi-table feature join (round 12; "
+    doc="point-in-time multi-table feature join ("
     "operators/asof.py pit_join — the Feast/Tecton "
     "get_historical_features shape): every 10th event is a training "
     "spine row; each spine row attaches its user's latest click value "
@@ -1302,7 +972,7 @@ def q_pit_features(spark, sf_dir):
     ON p.user_id = e.user_id AND p.ts >= e.ts
     """,
     doc="bare ASOF JOIN through the dialect entry with DuckDB's INNER "
-    "semantics (round 12; sql_ext._rewrite_asof how='inner'): every "
+    "semantics (sql_ext._rewrite_asof how='inner'): every "
     "20th event probes for its user's latest EARLIER other-event; "
     "probes whose user has none DROP — and the oracle runs DuckDB's "
     "own native ASOF JOIN on the same spelling, certifying join-type "
@@ -1406,8 +1076,8 @@ def q_sql_distinct_on(spark, sf_dir):
     ) latest
     GROUP BY event_type
     """,
-    doc="Nested DISTINCT ON through the dialect entry (round 12 — "
-    "VERDICT r11 next-round #2, sql_ext._rewrite_distinct_on_nested): "
+    doc="Nested DISTINCT ON through the dialect entry ("
+    "sql_ext._rewrite_distinct_on_nested): "
     "the derived-table block is located deepest-first with the nested-"
     "QUALIFY block finder and rewritten IN PLACE to the row_number() "
     "= 1 form — purely textual, so CTE scope and outer references "
@@ -1445,7 +1115,7 @@ def q_sql_distinct_on_nested(spark, sf_dir):
     ) t
     """,
     doc="DuckDB ``SELECT * REPLACE (expr AS col)`` through the "
-    "dialect entry (round 12; sql_ext._rewrite_star_replace): "
+    "dialect entry (sql_ext._rewrite_star_replace): "
     "rewritten to Spark's ``* EXCEPT (col), expr AS col`` — purely "
     "textual, literal-masked, cast-safe AS parsing; the bare "
     "replace() function never matches. The oracle runs the "
@@ -1476,14 +1146,14 @@ def q_sql_star_replace(spark, sf_dir):
     GROUP BY l_returnflag
     """,
     doc="DuckDB's COLUMNS('regex') star variant through the dialect "
-    "entry (round 12; sql_ext._rewrite_columns): the select item "
+    "entry (sql_ext._rewrite_columns): the select item "
     "expands to one copy per matching column of the FROM table with "
     "the wrapping expression applied to each — semantics pinned "
     "against DuckDB's native behavior (pattern is a SEARCH over "
     "column names, table column order, outputs keep the BARE column "
     "name however deep the wrapper), and the oracle runs the "
     "ORIGINAL spelling natively on DuckDB. Exact-decimal sums keep "
-    "the doubles order-independent. Since round 13 joins expand too "
+    "the doubles order-independent. Joins expand too "
     "(q_sql_columns_join); subqueries/USING/multi-COLUMNS items "
     "still raise honestly.",
 )
@@ -1512,8 +1182,8 @@ def q_sql_columns_expr(spark, sf_dir):
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
-    doc="COLUMNS('regex') over a JOIN (round 13 — VERDICT r12 "
-    "next-round #5; sql_ext._from_table_list): the expansion now "
+    doc="COLUMNS('regex') over a JOIN ("
+    "sql_ext._from_table_list): the expansion now "
     "binds to the CONCATENATED column set of a depth-0 FROM join "
     "list in FROM order — DuckDB's own join-expansion semantics, "
     "pinned by running the ORIGINAL spelling natively on DuckDB as "
@@ -1550,8 +1220,7 @@ def q_sql_columns_join(spark, sf_dir):
           max(CAST(round(value * 100) AS BIGINT)) AS mx
     GROUP BY user_id
     """,
-    doc="DuckDB's PIVOT statement through the dialect entry (round "
-    "13; sql_ext._maybe_pivot): PIVOT <table> ON <col> USING <agg> "
+    doc="DuckDB's PIVOT statement through the dialect entry (sql_ext._maybe_pivot): PIVOT <table> ON <col> USING <agg> "
     "AS <name>[, ...] [GROUP BY <cols>] routes to "
     "groupBy().pivot(col, values).agg(...) with the pivot values "
     "resolved at rewrite time (distinct non-NULL, sorted — DuckDB's "
@@ -1590,8 +1259,7 @@ def q_sql_pivot(spark, sf_dir):
     UNPIVOT l_measures ON l_quantity, l_extendedprice, l_discount
     INTO NAME measure VALUE amount
     """,
-    doc="DuckDB's UNPIVOT statement through the dialect entry (round "
-    "13; sql_ext._maybe_unpivot, the PIVOT verb's inverse): UNPIVOT "
+    doc="DuckDB's UNPIVOT statement through the dialect entry (sql_ext._maybe_unpivot, the PIVOT verb's inverse): UNPIVOT "
     "<table> ON <cols> [INTO NAME n VALUE v] routes to "
     "DataFrame.unpivot with DuckDB's semantics pinned — id columns "
     "are every unlisted table column in order, default output names "
@@ -2540,8 +2208,8 @@ def _langid_oracle():
 @declare(
     "q_language_id",
     _langid_oracle(),
-    doc="Char-trigram language identification (round 14 — VERDICT r13 "
-    "next-round #3; operators/langid.py, Cavnar & Trenkle 1994): "
+    doc="Char-trigram language identification ("
+    "operators/langid.py, Cavnar & Trenkle 1994): "
     "per-doc integer trigram scores against pinned per-language "
     "profiles derived from pinned common-word seeds; argmax with "
     "lang-ascending tie-break, 'und' when no profile trigram occurs. "
@@ -2643,7 +2311,7 @@ def q_similarity_lsh(spark, sf_dir):
     FROM q
     """,
     doc="int8 symmetric scalar quantization of the embedding store "
-    "(round 12; functions/vectors.py quantize_symmetric) — the 4x "
+    "(functions/vectors.py quantize_symmetric) — the 4x "
     "byte-cut a 100 TB vector corpus takes before ANN: per-vector "
     "scale = max|x|/127, codes = round(x/scale), zero-vector guarded. "
     "Pure higher-order expressions with the scale BOUND once per row "
@@ -2808,8 +2476,7 @@ def q_multimodal_features(spark, sf_dir):
                      ELSE NULL END AS INT) AS duration_ms
     FROM documents WHERE doc_id < 60
     """,
-    doc="REAL header-only metadata probe end-to-end (round 13; MP4 "
-    "leg added round 14 — VERDICT r13 next-round #4; "
+    doc="REAL header-only metadata probe end-to-end ("
     "operators/multimodal.py probe_asset_meta + decode_jpeg_meta + "
     "decode_mp4_meta): doc_id%3==0 synthesizes a JPEG marker stream "
     "(SOI/APP0/DQT/SOF0/SOS), %3==1 a real encode_bmp 1-row bitmap, "
@@ -2886,7 +2553,7 @@ def q_multimodal_probe(spark, sf_dir):
 
     imgs = d.mapInPandas(synth, "doc_id long, mime string, payload binary")
     # ONE pass: make_assets takes a constant mime, so two filtered
-    # calls would run the synth stage twice (review round 13) —
+    # calls would run the synth stage twice —
     # inline the asset shape keeping the per-row mime column instead
     assets = imgs.select(
         F.col("doc_id").cast("string").alias("asset_id"),
@@ -3575,10 +3242,6 @@ def q_repetition_profile(spark, sf_dir):
     )
 
 
-# Declared late in round 11 (after the driver window locked at the six
-# _ROUND_MODIFIED + 44-query r07 tier): judge-sweep-covered this round,
-# queued for the r12 window's free slots (see the rotation comment).
-
 @declare(
     "q_duplicate_spans",
     """
@@ -3725,7 +3388,7 @@ def q_duplicate_spans(spark, sf_dir):
     LEFT JOIN rebuilt r ON r.doc_id = t.doc_id
     LEFT JOIN nsp n ON n.doc_id = t.doc_id
     """,
-    doc="span-level dedup REWRITE (round 12 — VERDICT r11 next-round "
+    doc="span-level dedup REWRITE ("
     "#5; Lee et al. 2021's removal step, which q_duplicate_spans only "
     "reports): every >= 8-token cross-document duplicated run is CUT "
     "from the higher-id document (each span's minimum-id holder keeps "
@@ -3778,7 +3441,7 @@ def q_duplicate_span_removal(spark, sf_dir):
              AS soft_weight
     FROM pd, tot
     """,
-    doc="soft deduplication weights (round 12; operators/dedup.py "
+    doc="soft deduplication weights (operators/dedup.py "
     "soft_dedup_weights — the reweight-don't-delete alternative after "
     "SoftDeDup, Xia et al. 2024): per doc, commonness = geometric "
     "mean of its distinct 3-shingles' document frequencies as corpus "
@@ -3888,7 +3551,7 @@ def q_soft_dedup_weights(spark, sf_dir):
     LEFT JOIN nsp n ON n.doc_id = t.doc_id
     WHERE NOT t.is_test
     """,
-    doc="span-level DECONTAMINATION (round 12; operators/dedup.py "
+    doc="span-level DECONTAMINATION (operators/dedup.py "
     "cross_duplicate_spans + remove_duplicate_spans): every >= "
     "8-token run a train document shares with the held-out set "
     "(doc_id % 10 = 0 plays the eval split) is located by the "
@@ -4445,7 +4108,7 @@ def q_tpch_q21(spark, sf_dir):
         )
         .select("l_orderkey", "l_suppkey")
     )
-    # Formulation choice, MEASURED (round 6, sf0.1 local[32], 3 reps in
+    # Formulation choice, MEASURED (sf0.1 local[32], 3 reps in
     # one session): these ≠-predicate self-joins beat the per-order
     # countDistinct-aggregate rewrite (~1.4-1.6 s vs ~1.9-2.0 s). The
     # self-join is NOT quadratic in practice — an order has at most a
@@ -5178,7 +4841,7 @@ def q_scd2_merge(spark, sf_dir):
 
 # ======================================================================
 # Time-series statistics: time-weighted average, counter increase,
-# duplicate clustering (round-3 operator additions)
+# duplicate clustering
 # ======================================================================
 
 @declare(
@@ -5289,7 +4952,7 @@ def q_counter_increase(spark, sf_dir):
                    ELSE 0.0 END AS violation_frac
     FROM r
     """,
-    doc="declarative data-quality assertion suite (round 12; "
+    doc="declarative data-quality assertion suite ("
     "operators/profile.py data_quality_report — the expectations "
     "surface a warehouse runs before serving a table): six rules over "
     "events + orders->customer referential integrity, one report row "
@@ -5361,7 +5024,7 @@ def q_data_quality_report(spark, sf_dir):
     )
     SELECT * FROM upd UNION ALL SELECT * FROM ins
     """,
-    doc="bulk MERGE INTO semantics on immutable frames (round 12; "
+    doc="bulk MERGE INTO semantics on immutable frames ("
     "operators/scd2.py merge_upsert — the set-level sibling of the "
     "reference's R2 point update, main.rs:106-117): WHEN MATCHED "
     "update (event_type, value) to the source's values, WHEN NOT "
@@ -5430,7 +5093,7 @@ def q_merge_upsert(spark, sf_dir):
     FROM p
     """,
     doc="PromQL irate()/idelta() — instantaneous rate from the LAST "
-    "TWO samples per series (round 12; operators/resample.py "
+    "TWO samples per series (operators/resample.py "
     "counter_irate), completing the counter family next to rate()/"
     "increase()/predict_linear()/deriv(): raw last-pair delta (gauge "
     "idelta), reset-corrected instantaneous increase, and "
@@ -5493,7 +5156,7 @@ def q_promql_irate(spark, sf_dir):
        OR (o.user_id IS DISTINCT FROM n.user_id)
        OR (o.value IS DISTINCT FROM n.value)
     """,
-    doc="snapshot diff (round 13; operators/scd2.py table_diff) — the "
+    doc="snapshot diff (operators/scd2.py table_diff) — the "
     "release-validation primitive before swapping a rebuilt table "
     "in: one row per key whose presence or compared values changed "
     "(added/removed/changed + the comma-joined sorted list of "
@@ -5575,7 +5238,7 @@ def q_table_diff(spark, sf_dir):
     )
     SELECT node, r AS rank_micro FROM r3
     """,
-    doc="integer-exact PageRank (round 13; operators/graph.py "
+    doc="integer-exact PageRank (operators/graph.py "
     "pagerank) over the supplier->customer supply graph (distinct "
     "(l_suppkey, o_custkey) pairs, domain-prefixed so the two key "
     "spaces cannot collide) — the link-authority prior web-corpus "
@@ -5626,7 +5289,7 @@ def q_pagerank(spark, sf_dir):
     SELECT doc_id, source, lang, n_tok, tokens_before
     FROM run WHERE tokens_before < budget
     """,
-    doc="per-domain TOKEN-budget selection (round 13; operators/"
+    doc="per-domain TOKEN-budget selection (operators/"
     "sampling.py token_budget_sample): training mixtures are "
     "specified in tokens, not documents — per domain, docs order by "
     "their deterministic md5 sampling key (an unbiased, "
@@ -5670,7 +5333,7 @@ def q_token_budget_sample(spark, sf_dir):
     FROM s GROUP BY user_id
     """,
     doc="PromQL changes() — consecutive-sample value changes per "
-    "series (round 13; operators/resample.py gauge_changes), the "
+    "series (operators/resample.py gauge_changes), the "
     "flapping-detection alert primitive completing the counter/gauge "
     "range family next to rate()/increase()/irate()/resets. First "
     "sample counts no change (PromQL parity); the comparison is "
@@ -5820,7 +5483,7 @@ def q_histogram(spark, sf_dir):
 
 
 # ======================================================================
-# Round 6: training-pipeline ops (packing, mixture sampling), sequence
+# Training-pipeline ops (packing, mixture sampling), sequence
 # analytics (transitions, EWMA), corpus stats (bigram vocab, TF-IDF),
 # exact-sum regression, deterministic mode, TPC-H Q7
 # ======================================================================
@@ -6307,7 +5970,7 @@ def q_predict_linear(spark, sf_dir):
     SELECT doc_id, n_terms_hit, bm25
     FROM scored ORDER BY bm25 DESC, doc_id LIMIT 50
     """,
-    doc="Okapi BM25 top-k lexical retrieval (round 12; operators/"
+    doc="Okapi BM25 top-k lexical retrieval (operators/"
     "retrieval.py bm25_topk) — the candidate generator for RAG "
     "corpora, eval-set mining, and targeted decontamination: top 50 "
     "docs by Lucene-flavor BM25 (k1=1.2, b=0.75, idf = ln(1+(N-df+.5)"
@@ -6367,7 +6030,7 @@ def q_bm25_topk(spark, sf_dir):
     SELECT doc_id, n_terms_hit, bm25
     FROM scored ORDER BY bm25 DESC, doc_id LIMIT 40
     """,
-    doc="PERSISTED BM25 postings index (round 13; operators/"
+    doc="PERSISTED BM25 postings index (operators/"
     "retrieval.py Bm25Index — the IvfIndex precedent applied to "
     "lexical retrieval): build once as term-sharded parquet postings "
     "+ df rows + a Hadoop-FS stats manifest, then serve query "
@@ -6377,7 +6040,7 @@ def q_bm25_topk(spark, sf_dir):
     "with `term IN` pushed into the parquet inside them. This slot "
     "certifies the INCREMENTAL path end-to-end: build on ~3/4 of "
     "documents, add() the rest (postings + df-delta appends + "
-    "manifest bump), then remove() every doc_id % 10 == 7 (r13: "
+    "manifest bump), then remove() every doc_id % 10 == 7 ("
     "tombstones + manifest decrement; query() drops tombstoned "
     "candidates AND subtracts their per-term df inside the probed "
     "shards), query — and the oracle is the DuckDB BM25 over the "
@@ -6434,7 +6097,7 @@ def q_bm25_index(spark, sf_dir):
     FROM scored ORDER BY bm25 DESC, doc_id LIMIT 30
     """,
     doc="STREAMING BM25 index maintenance, oracle-certified end-to-end "
-    "(round 13; streaming/index.py start_bm25_index_sink): the index "
+    "(streaming/index.py start_bm25_index_sink): the index "
     "is built on ~60% of documents, the rest arrive as a JSON "
     "drop-dir stream in two mtime-ordered micro-batches applied by "
     "the REAL foreachBatch sink (Bm25Index.add postings + df-delta "
@@ -6550,7 +6213,7 @@ def q_bm25_stream_indexed(spark, sf_dir):
     FROM ranked GROUP BY doc_id
     ORDER BY rrf DESC, doc_id LIMIT 25
     """,
-    doc="hybrid retrieval via reciprocal-rank fusion (round 13; "
+    doc="hybrid retrieval via reciprocal-rank fusion ("
     "operators/retrieval.py rrf_fuse — Cormack et al. 2009, the "
     "standard BM25-union-dense combiner in RAG stacks): the BM25 "
     "top-50 lexical list and the exact cosine top-50 dense list "
@@ -7345,8 +7008,7 @@ def q_training_corpus_pipeline(spark, sf_dir):
            CAST(NULL AS BIGINT) AS pack_pos
     FROM d6 WHERE split <> 'train'
     """,
-    doc="END-TO-END corpus pipeline with the opt-in DSIR stage (round "
-    "12 — VERDICT r11 next-round #6; pipelines.py dsir_select_k): "
+    doc="END-TO-END corpus pipeline with the opt-in DSIR stage (pipelines.py dsir_select_k): "
     "stage 5 becomes importance RESAMPLING toward the 'src0' domain — "
     "hashed-bigram DSIR weights estimated over the whole "
     "post-decontamination corpus, then the train split's non-target "
@@ -7378,7 +7040,7 @@ def q_corpus_pipeline_dsir(spark, sf_dir):
     """
     WITH b AS (
       -- NULL values are excluded from the decile universe on BOTH
-      -- sides (round 15 NULL-drift hardening: Spark orders NULLs
+      -- sides (NULL-drift hardening: Spark orders NULLs
       -- first, DuckDB last — unguarded, the first NULL in testdata
       -- would shift every bucket boundary differently per engine)
       SELECT event_type, value,
@@ -7547,7 +7209,7 @@ def q_unigram_surprisal(spark, sf_dir):
                  / COUNT(*), 6) AS rare_bigram_frac
     FROM scored GROUP BY doc_id
     """,
-    doc="bigram-LM quality scoring (round 13; operators/"
+    doc="bigram-LM quality scoring (operators/"
     "contamination.py bigram_surprisal) — the CCNet-style perplexity "
     "filter against the corpus's own bigram model, kept cross-engine "
     "deterministic by the q_unigram_surprisal discipline: per "
@@ -7591,7 +7253,7 @@ def q_bigram_surprisal(spark, sf_dir):
                  / (na * nb / t.n), 9) AS chi2_term_r9
     FROM cells CROSS JOIN t
     """,
-    doc="chi-square independence scan (round 13; operators/profile.py "
+    doc="chi-square independence scan (operators/profile.py "
     "chi_square_cells) — the feature-dependence check a data-quality "
     "pass runs before trusting a stratification: the full event_type "
     "x (user_id % 8) contingency grid INCLUDING zero-observed cells "
@@ -7731,7 +7393,7 @@ def q_dense_grid(spark, sf_dir):
     """
     WITH ranked AS (
       -- NULLs excluded from the rank universe on BOTH sides
-      -- (PERCENTILE_DISC's standard contract; round 15 NULL-drift
+      -- (PERCENTILE_DISC's standard contract; NULL-drift
       -- hardening — engines disagree on NULL sort placement)
       SELECT event_type, value,
              row_number() OVER (
@@ -7858,7 +7520,7 @@ def q_asof_nearest(spark, sf_dir):
 
 
 # ======================================================================
-# Round 7: oracle-paired source readers (ORC, schema evolution),
+# Oracle-paired source readers (ORC, schema evolution),
 # mapInArrow transform, QUALIFY SQL surface
 # ======================================================================
 
@@ -8026,8 +7688,8 @@ def q_qualify_sql(spark, sf_dir):
       GROUP BY user_id
     ) outer_q WHERE rk <= 20
     """,
-    doc="NESTED QUALIFY (round 10 — the rewrite r9 deferred at "
-    "sql_ext.py's old raise site): a QUALIFY inside a derived table "
+    doc="NESTED QUALIFY (sql_ext._extract_nested_qualify"
+    "): a QUALIFY inside a derived table "
     "(top-3 purchase events per user) composed with a top-level "
     "QUALIFY over the outer aggregate (top-20 users by their top-3 "
     "value sum) in ONE dialect statement. The nested block is "
@@ -8279,7 +7941,7 @@ def q_tpch_q22(spark, sf_dir):
 
 
 # ----------------------------------------------------------------------
-# Round 7 (cont.): the remaining TPC-H shapes — Q2/Q8/Q9/Q11/Q15/Q16/
+# The remaining TPC-H shapes — Q2/Q8/Q9/Q11/Q15/Q16/
 # Q20 — completing all 22. The testdata has no partsupp table, so the
 # four shapes that need one (Q2/Q11/Q16/Q20) derive the part-supplier
 # relation from lineitem's (l_partkey, l_suppkey) pairs; cost columns
@@ -8329,7 +7991,7 @@ def q_tpch_q22(spark, sf_dir):
     "is the LESS deterministic choice here — Spark rounds the exact "
     "decimal expansion HALF_UP while DuckDB rounds via float "
     "multiply, which split by 1 ulp on a tie row at sf0.1 "
-    "(cross-scale sweep, round 8)",
+    "(cross-scale sweep)",
 )
 def q_tpch_q2(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
@@ -8791,7 +8453,7 @@ def q_minmax_decimate(spark, sf_dir):
     SELECT event_id, event_type, bucket_start, value
     FROM b WHERE lo = 1 OR hi = 1 OR fi = 1 OR la = 1
     """,
-    doc="M4 visualization aggregation (round 15 — "
+    doc="M4 visualization aggregation ("
     "operators/downsample.py m4_decimate; Jugel et al. VLDB'14): per "
     "(series, pixel-bucket) the FOUR pixel-defining rows — "
     "min/max-valued plus FIRST/LAST by timestamp — the smallest row "
@@ -8868,7 +8530,7 @@ def q_hll_distinct_rollup(spark, sf_dir):
     HAVING COUNT(value) > 0
     """,
     doc="streaming KLL quantile store, served accounting "
-    "oracle-certified end-to-end (round 15 — streaming/quantile.py, "
+    "oracle-certified end-to-end (streaming/quantile.py, "
     "the percentile member of the streaming sketch-store family): "
     "events become a JSON drop-dir split by event-id parity into TWO "
     "real micro-batches through the REAL sink (versioned "
@@ -8964,7 +8626,7 @@ def q_quantile_stream_served(spark, sf_dir):
 @declare(
     "q_theta_audience_overlap",
     None,
-    doc="mergeable Theta-sketch audience overlap (round 15 — "
+    doc="mergeable Theta-sketch audience overlap ("
     "functions/sketches.py theta_rollup/theta_overlap, Spark-native "
     "DataSketches Theta): one sketch per event_type segment over its "
     "user ids, then every pairwise intersection/union distinct "
@@ -8989,8 +8651,8 @@ def q_theta_audience_overlap(spark, sf_dir):
 @declare(
     "q_kll_quantile_rollup",
     None,
-    doc="mergeable KLL quantile rollup (round 15 — VERDICT r14 "
-    "next-round #6; functions/sketches.py quantile_rollup/"
+    doc="mergeable KLL quantile rollup ("
+    "functions/sketches.py quantile_rollup/"
     "merge_quantile_rollup, Spark-native DataSketches KLL): "
     "per-(event_type, day) quantile sketches MERGED up to "
     "per-event_type cells and queried for p50/p95/p99 — the "
@@ -9120,7 +8782,7 @@ def q_csv_roundtrip(spark, sf_dir):
            le - 50.0 + (rk - (cum - n)) / n * 50.0 AS p95
     FROM p WHERE pick = 1
     """,
-    doc="PromQL-style histogram_quantile (round 8): p95 per series from "
+    doc="PromQL-style histogram_quantile: p95 per series from "
     "FIXED-BUCKET counts — the monitoring-native quantile that stays "
     "mergeable/decomposable at 100 TB (bucket counts are sums, unlike "
     "exact percentiles which need a global sort; constant state per "
@@ -9182,7 +8844,7 @@ def q_histogram_quantile(spark, sf_dir):
              CASE WHEN rk <= 5 THEN CAST(user_id AS VARCHAR)
                   ELSE 'other' END
     """,
-    doc="top-N with 'others' rollup (round 8): per series keep the 5 "
+    doc="top-N with 'others' rollup: per series keep the 5 "
     "heaviest users and collapse the long tail into one 'other' row — "
     "the dashboard query every TSDB UI issues. Pre-aggregate to "
     "(series,user) BEFORE ranking so the window sees #users rows per "
@@ -9248,7 +8910,7 @@ def q_topn_with_others(spark, sf_dir):
            total_increase, n_resets, n_samples, span_us
     FROM a
     """,
-    doc="PromQL-style rate() (round 8, operators/resample.py "
+    doc="PromQL-style rate() (operators/resample.py "
     "counter_rate): reset-corrected increase per observed second. Same "
     "single lag-window + single aggregate as counter_increase — the "
     "span rides the same agg as min/max microseconds, so rate costs no "
@@ -9285,7 +8947,7 @@ def q_rate_per_second(spark, sf_dir):
       SELECT unnest(generate_series(0, c.nc - 1)) AS i
     ) idx
     """,
-    doc="document chunking (round 8, operators/chunking.py): explode "
+    doc="document chunking (operators/chunking.py): explode "
     "each doc into 32-token windows with 8-token overlap — the "
     "corpus->context-budget step before packing/embedding/indexing. "
     "Pure JVM higher-order functions (split/filter/sequence/explode/"
@@ -9428,7 +9090,7 @@ def q_chunk_documents(spark, sf_dir):
            CAST(NULL AS BIGINT) AS pack_pos
     FROM d6 WHERE split <> 'train'
     """,
-    doc="the CHUNKED corpus pipeline (round 8, pipelines.py "
+    doc="the CHUNKED corpus pipeline (pipelines.py "
     "chunk_tokens): same 6 selection stages as "
     "q_training_corpus_pipeline, then train docs split into "
     "16-token/4-overlap windows and the CHUNKS packed (budget 64) "
@@ -9454,9 +9116,9 @@ def q_corpus_pipeline_chunked(spark, sf_dir):
 @declare(
     "q_similarity_ivf_index",
     None,
-    doc="PERSISTED IVF index (round 8, operators/similarity.py "
-    "IvfIndex; FULL lifecycle since round 14 — VERDICT r13 "
-    "next-round #2): build once on ~3/4 of the corpus — k-means cells "
+    doc="PERSISTED IVF index (operators/similarity.py "
+    "IvfIndex; FULL lifecycle): build once on ~3/4 of the corpus — "
+    "k-means cells "
     "written as cell-PARTITIONED parquet + Hadoop-FS centroid "
     "manifest — add() the rest against the frozen centroids "
     "(nearest-cell appends, no refit), remove() every vec_id % 10 == "
@@ -9466,7 +9128,7 @@ def q_corpus_pipeline_chunked(spark, sf_dir):
     "has no SQL oracle); the semantic pins live in pytest: "
     "index==ad-hoc equality, restart-from-manifest, add exactness "
     "(tests/test_dedup_similarity.py), and remove==compact equality "
-    "+ the removed_ids policy matrix (round 14, same file).",
+    "+ the removed_ids policy matrix (same file).",
 )
 def q_similarity_ivf_index(spark, sf_dir):
     from .operators.similarity import IvfIndex
@@ -9499,7 +9161,7 @@ def q_similarity_ivf_index(spark, sf_dir):
            )) AS dev
     FROM events WHERE user_id < 40
     """,
-    doc="moving median despiking (round 8): exact 7-sample rolling "
+    doc="moving median despiking: exact 7-sample rolling "
     "median per series — the robust smoother a TSDB uses where a "
     "rolling MEAN chases spikes. Spark has no median window function; "
     "expressed as sort_array(collect_list) over the frame + middle "
@@ -9555,7 +9217,7 @@ def q_moving_median(spark, sf_dir):
            CASE WHEN view_sum > 0 THEN click_sum / view_sum END AS ratio
     FROM b
     """,
-    doc="cross-series alignment + binary op (round 8): the PromQL "
+    doc="cross-series alignment + binary op: the PromQL "
     "'vector matching' shape — two series aligned on shared 5-min "
     "buckets, then a ratio between them. ONE conditional aggregation "
     "instead of the naive bucket-self-join (halves the shuffles and "
@@ -9616,7 +9278,7 @@ def q_series_align_ratio(spark, sf_dir):
     SELECT event_id, event_type, ts, s_stat, sigma
     FROM d WHERE abs(s_stat) > 5.0 * sigma
     """,
-    doc="CUSUM change-point flags (round 8): per series, the cumulative "
+    doc="CUSUM change-point flags: per series, the cumulative "
     "sum of deviations from the series mean; rows where |S| exceeds "
     "5 sigma mark sustained level shifts a per-point 3-sigma rule "
     "misses. Deterministic by construction: the running sum is EXACT "
@@ -9699,7 +9361,7 @@ def q_cusum_changepoints(spark, sf_dir):
       FROM paa p JOIN stats s ON p.event_type = s.event_type
     ) p
     """,
-    doc="SAX symbolization (round 8; Lin et al. 2003, the classic "
+    doc="SAX symbolization (Lin et al. 2003, the classic "
     "time-series-mining representation): PAA 6-hour frame means "
     "z-normalized per series, mapped to a 4-letter alphabet at the "
     "standard gaussian breakpoints (-0.6745, 0, 0.6745 = N(0,1) "
@@ -9767,7 +9429,7 @@ def q_sax_symbols(spark, sf_dir):
              / (tot2 - tot * (tot / n)) AS acf1
     FROM a
     """,
-    doc="lag-1 autocorrelation per series (round 8): the core "
+    doc="lag-1 autocorrelation per series: the core "
     "stationarity/seasonality diagnostic — r1 = sum((x_t-m)(x_{t+1}-m))"
     " / sum((x_t-m)^2), expanded so every input is an EXACT decimal "
     "sufficient statistic (sum v, sum v^2, sum v*next, pairwise edge "
@@ -9830,7 +9492,7 @@ def q_autocorr_lag1(spark, sf_dir):
     FROM d WHERE gap_us IS NOT NULL
     GROUP BY event_type
     """,
-    doc="heartbeat gap report (round 8): per series, how often and how "
+    doc="heartbeat gap report: per series, how often and how "
     "badly the feed went silent — count of inter-sample gaps over 1h, "
     "the worst gap, and the mean cadence. The monitoring query behind "
     "every 'stale sensor' alert. One lag window + one aggregate on the "
@@ -9870,7 +9532,7 @@ def q_series_gap_report(spark, sf_dir):
     )
     SELECT event_type, user_id, n, rk FROM r WHERE rk <= 3
     """,
-    doc="top-k WITH TIES (round 8): rank() <= k keeps every row tying "
+    doc="top-k WITH TIES: rank() <= k keeps every row tying "
     "at the boundary — the SQL:2008 FETCH ... WITH TIES semantic, "
     "distinct from the row_number top-k (q_window_topk_per_group) "
     "which drops tied peers arbitrarily. Same single-shuffle window "
@@ -9914,7 +9576,7 @@ def q_topk_with_ties(spark, sf_dir):
              AS burstiness
     FROM a
     """,
-    doc="interarrival burstiness (round 8; Goh & Barabasi 2008 "
+    doc="interarrival burstiness (Goh & Barabasi 2008 "
     "B=(sigma-mu)/(sigma+mu)): -1 = metronome, 0 = Poisson, ->1 = "
     "bursty — the cadence diagnostic that tells scheduled telemetry "
     "from event-driven firehoses. Integer-microsecond gaps summed as "
@@ -9970,7 +9632,7 @@ def q_interarrival_burstiness(spark, sf_dir):
              / tot AS top_decile_share
     FROM t GROUP BY event_type, tot
     """,
-    doc="heavy-hitter concentration (round 8): what share of a series' "
+    doc="heavy-hitter concentration: what share of a series' "
     "events its top-decile users generate — the skew diagnostic that "
     "predicts which keys need salting (operators/skew.py) BEFORE a "
     "join degrades. Pre-aggregated to (series,user) so the ntile "
@@ -10046,7 +9708,7 @@ def q_heavy_hitter_share(spark, sf_dir):
     FROM words WHERE len(word) = 4
     GROUP BY event_type, word
     """,
-    doc="SAX motif counting (round 8): each day's four 6-hour SAX "
+    doc="SAX motif counting: each day's four 6-hour SAX "
     "letters concatenated into a word, identical words counted per "
     "series — motif discovery lite: a word recurring across many days "
     "IS that series' daily shape; rare words are discord candidates. "
@@ -10125,7 +9787,7 @@ def q_sax_motifs(spark, sf_dir):
                 THEN CAST(n AS DOUBLE) / (wk_sum / wk_n) END AS vs_week
     FROM r
     """,
-    doc="today-vs-trailing-week ratio (round 8): each day's event "
+    doc="today-vs-trailing-week ratio: each day's event "
     "count against the mean of the preceding 7 days — THE alerting "
     "primitive ('traffic is 3x normal'/'ingest fell to 0.2x'). NULL "
     "until a full trailing week exists (no partial-baseline false "
@@ -10157,7 +9819,7 @@ def q_daily_vs_trailing_week(spark, sf_dir):
 
 
 # ======================================================================
-# Round 8 (cont.): Z-order layout as a driver-visible query
+# Z-order layout as a driver-visible query
 # ======================================================================
 
 def _zorder_glob() -> str:
@@ -10186,8 +9848,8 @@ def _zorder_glob() -> str:
            MIN(value) AS min_value, MAX(value) AS max_value
     FROM f GROUP BY file_ord
     """,
-    doc="Z-order layout maintenance, oracle-paired (VERDICT r7 "
-    "next-round #8; operators/layout.py zorder_layout): rewrites the "
+    doc="Z-order layout maintenance, oracle-paired ("
+    "operators/layout.py zorder_layout): rewrites the "
     "events table z-ordered on (user_id, value) into 8 files — one "
     "range exchange on the Morton key of equi-depth bucket ids — then "
     "returns each file's row count and per-column [min, max], i.e. "
@@ -10221,7 +9883,7 @@ def q_zorder_stats(spark, sf_dir):
 
 
 # ======================================================================
-# Round 8 (cont.): OHLC bars, robust MAD outliers, Spearman trend
+# OHLC bars, robust MAD outliers, Spearman trend
 # ======================================================================
 
 @declare(
@@ -10255,7 +9917,7 @@ def q_zorder_stats(spark, sf_dir):
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS volume
     FROM b GROUP BY event_type, bar
     """,
-    doc="OHLC candlestick bars (round 8): per (event_type, hour) the "
+    doc="OHLC candlestick bars: per (event_type, hour) the "
     "open/high/low/close/volume tuple — THE financial-TSDB downsample "
     "(Timescale time_bucket+first/last, InfluxDB FIRST/LAST). "
     "open/close are made total-order deterministic by the (ts, "
@@ -10329,7 +9991,7 @@ def q_ohlc_bars(spark, sf_dir):
     GROUP BY d.event_type
     """,
     doc="robust outlier detection via median absolute deviation "
-    "(round 8): per event_type, median m, MAD = median(|v-m|), and the "
+    ": per event_type, median m, MAD = median(|v-m|), and the "
     "count of rows beyond the classic 3-sigma-equivalent fence "
     "3*1.4826*MAD — the despiking rule that, unlike z-scores, is not "
     "itself dragged by the outliers it hunts (50% breakdown point vs "
@@ -10369,7 +10031,7 @@ def q_outlier_mad(spark, sf_dir):
     """
     WITH r AS (
       -- NULL ts/value rows excluded from the rank universe on BOTH
-      -- sides (round 15 NULL-drift hardening — engines disagree on
+      -- sides (NULL-drift hardening — engines disagree on
       -- NULL sort placement, which would scramble every rank)
       SELECT event_type,
              RANK() OVER (PARTITION BY event_type ORDER BY ts) AS rx,
@@ -10393,7 +10055,7 @@ def q_outlier_mad(spark, sf_dir):
                  6) AS spearman_trend
     FROM s
     """,
-    doc="Spearman rank correlation of value against time (round 8): "
+    doc="Spearman rank correlation of value against time: "
     "a monotonic-trend detector per series that, unlike Pearson "
     "(q_correlation), is invariant to the value scale and robust to "
     "spikes — the nonparametric cousin of the Mann-Kendall trend "
@@ -10431,7 +10093,7 @@ def q_spearman_corr(spark, sf_dir):
     # NULLIF the denominator: a degenerate group (one row, or all-tied
     # ranks) makes it exactly 0.0, and Spark's ANSI double division
     # RAISES where DuckDB nulls — the guard makes both engines emit
-    # NULL (code-review r8)
+    # NULL
     denom = F.nullif(
         F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy), F.lit(0.0)
     )
@@ -10443,7 +10105,7 @@ def q_spearman_corr(spark, sf_dir):
 
 
 # ======================================================================
-# Round 8 (cont.): PII scrubbing for the training corpus
+# PII scrubbing for the training corpus
 # ======================================================================
 
 def _pii_oracle() -> str:
@@ -10504,7 +10166,7 @@ def _pii_oracle() -> str:
 @declare(
     "q_pii_scrub",
     _pii_oracle(),
-    doc="PII redaction pass, oracle-paired (round 8; functions/text.py "
+    doc="PII redaction pass, oracle-paired (functions/text.py "
     "scrub_pii/pii_count): the synthetic corpus carries no PII, so the "
     "query PLANTS deterministic emails/phones/SSNs/IPs (same CASE "
     "expression both engines, keyed on doc_id) and then scrubs and "
@@ -10605,7 +10267,7 @@ def _luhn_oracle() -> str:
 @declare(
     "q_pii_luhn_cards",
     _luhn_oracle(),
-    doc="Payment-card PII detection with Luhn validation (round 14; "
+    doc="Payment-card PII detection with Luhn validation ("
     "functions/text.py card_candidates + luhn_valid): candidate "
     "13-19-digit runs via the SHARED regex constant, then the "
     "ISO/IEC 7812 Luhn checksum as a pure integer transform+aggregate "
@@ -10673,7 +10335,7 @@ def q_pii_luhn_cards(spark, sf_dir):
              AS entropy_bits
     FROM documents d LEFT JOIN per p USING (doc_id)
     """,
-    doc="Per-document character-level Shannon entropy (round 14; "
+    doc="Per-document character-level Shannon entropy ("
     "operators/profile.py char_entropy): the classic gibberish/"
     "repetition quality signal at the character level, complementing "
     "the word/bigram repetition_profile. Exact integer char counts "
@@ -10730,7 +10392,7 @@ def q_char_entropy(spark, sf_dir):
            CAST(MAX(TRY_CAST(props AS DOUBLE)) AS DOUBLE)
     FROM events
     """,
-    doc="one-pass column profiling (round 8; operators/profile.py "
+    doc="one-pass column profiling (operators/profile.py "
     "profile_columns): per column of events — row count, null count, "
     "EXACT distinct cardinality, numeric [min, max] (timestamps via "
     "unix_micros; non-numeric strings NULL through try_cast, which is "
@@ -10790,7 +10452,7 @@ def q_column_profile(spark, sf_dir):
     FROM a WHERE rn = 1 GROUP BY label, c_label
     """,
     doc="one full Lloyd/k-means step over the embeddings, oracle-paired "
-    "(round 8; operators/clustering.py): per-label centroids (the M "
+    "(operators/clustering.py): per-label centroids (the M "
     "step, deterministic in-order fold so both engines sum components "
     "in vec_id order — bit-identical means), then every vector "
     "re-assigned to its nearest centroid by squared L2 with a "
@@ -10845,7 +10507,7 @@ def q_kmeans_step(spark, sf_dir):
                  'sum') / COUNT(*), 6) AS mae
     FROM err GROUP BY event_type
     """,
-    doc="seasonal-naive forecast backtest (round 8): forecast each "
+    doc="seasonal-naive forecast backtest: forecast each "
     "(event_type, day, hour-of-day) hourly total as the expanding mean "
     "of ALL PRIOR days' same-hour totals — the hour-of-day seasonal "
     "baseline every capacity dashboard starts from — and report the "
@@ -10924,7 +10586,7 @@ def q_seasonal_backtest(spark, sf_dir):
              / COUNT(d) AS mean_abs_delta
     FROM s GROUP BY event_type
     """,
-    doc="delta-encoding compressibility telemetry (round 8): per "
+    doc="delta-encoding compressibility telemetry: per "
     "series, the distribution of consecutive-sample deltas — zero "
     "deltas (RLE-able), small deltas (|d| <= 0.5: few-bit Gorilla/"
     "delta-of-delta residues), sign flips, and the exact mean "
@@ -10977,7 +10639,7 @@ def q_delta_compression_stats(spark, sf_dir):
     JOIN sz za ON za.event_type = i.type_a
     JOIN sz zb ON zb.event_type = i.type_b
     """,
-    doc="audience-overlap Jaccard between event types (round 8): for "
+    doc="audience-overlap Jaccard between event types: for "
     "each unordered type pair, |users_a ∩ users_b| / |users_a ∪ "
     "users_b| from exact distinct audiences — the set-similarity "
     "query behind cohort overlap, feature co-occurrence, and "
@@ -11035,7 +10697,7 @@ def q_audience_jaccard(spark, sf_dir):
     FROM events
     GROUP BY 1, 2, 3
     """,
-    doc="2-D heatmap binning (round 8): counts per (series, 6-hour "
+    doc="2-D heatmap binning: counts per (series, 6-hour "
     "time bin, fixed value band) — the Grafana/Chronograf heatmap "
     "primitive that shows a metric's DISTRIBUTION drifting over time "
     "where a mean line hides bimodality. Closed-form bucket edges "
@@ -11049,7 +10711,7 @@ def q_value_heatmap_2d(spark, sf_dir):
     e = T(spark, sf_dir, "events").select("event_type", "ts", "value")
     # F.floor, not a truncating cast: cast rounds toward zero, which
     # diverges from the oracle's floor() for pre-1970 (negative-epoch)
-    # timestamps (code-review r8)
+    # timestamps
     tbin = F.floor(F.unix_timestamp("ts") / 21600)
     v = F.col("value")
     vbin = (
@@ -11094,7 +10756,7 @@ def q_value_heatmap_2d(spark, sf_dir):
     WHERE a.half = 0 AND b.half = 1
       AND abs(a.rnk - b.rnk) >= 10
     """,
-    doc="top movers / trending entities (round 8): each user's "
+    doc="top movers / trending entities: each user's "
     "activity rank in the first half of the observed window vs the "
     "second, keeping movers of >= 10 rank places — the 'what changed' "
     "leaderboard behind trending dashboards and regression triage. "
@@ -11128,7 +10790,7 @@ def q_top_movers(spark, sf_dir):
     )
     # asc_nulls_last pins the tiebreak to DuckDB's ASC default (nulls
     # LAST) — Spark's bare asc is nulls-first, which would shift every
-    # rank in an n-tied run containing a NULL user (code-review r8)
+    # rank in an n-tied run containing a NULL user
     w = Window.partitionBy("half").orderBy(
         F.col("n").desc(), F.col("user_id").asc_nulls_last()
     )
@@ -11158,7 +10820,7 @@ def q_top_movers(spark, sf_dir):
 
 
 # ======================================================================
-# Round 9: serving + maintenance surfaces, oracle-paired
+# Serving + maintenance surfaces, oracle-paired
 # ======================================================================
 
 @declare(
@@ -11183,7 +10845,7 @@ def q_top_movers(spark, sf_dir):
     SELECT timeseries_id, sensor_name, ts_raw, value, fc1_flag
     FROM ranked WHERE rn = 1
     """,
-    doc="last-value serving read (VERDICT r8 next-round #6; api.py "
+    doc="last-value serving read (api.py "
     "TimeseriesEngine.latest): the latest row per series from a REAL "
     "warehouse the query builds in-fixture from the events table — "
     "the batch face of the streaming last-value cache and the answer "
@@ -11260,7 +10922,7 @@ def _compaction_glob() -> str:
            MAX(value) AS max_value
     FROM f GROUP BY part
     """,
-    doc="small-file compaction, oracle-paired (VERDICT r8 next-round "
+    doc="small-file compaction, oracle-paired ("
     "#5; operators/maintenance.py compact_partitions): writes a "
     "deterministically fragmented partition set (6 single-file append "
     "jobs — one per event_id%6 slot — over 4 event_id%4 partitions, "
@@ -11304,7 +10966,7 @@ def q_compaction_stats(spark, sf_dir):
     # partition the operator skipped (<= min_files, or the (b, -1)
     # concurrent-append marker) must still appear in the result with
     # its observable state — the oracle's glob sees every partition
-    # regardless (code-review r9). With the 6-slot construction every
+    # regardless. With the 6-slot construction every
     # partition compacts in practice; the fallback keeps the query
     # scale-robust rather than construction-dependent.
     fb = spark.createDataFrame(
@@ -11336,7 +10998,7 @@ def q_compaction_stats(spark, sf_dir):
 
 
 # ======================================================================
-# Round 11: exactly-once serving + EO time travel + QUALIFY-in-EXISTS,
+# Exactly-once serving + EO time travel + QUALIFY-in-EXISTS,
 # oracle-paired
 # ======================================================================
 
@@ -11412,8 +11074,8 @@ def _eo_served_projection(served):
     FROM events
     WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL
     """,
-    doc="exactly-once serving, oracle-certified end-to-end (round 11 — "
-    "VERDICT r10 next-round #5; api.py _read_base_union_eo, "
+    doc="exactly-once serving, oracle-certified end-to-end ("
+    "api.py _read_base_union_eo, "
     "streaming/ingest.py commit_batch_exactly_once): 4 micro-batches "
     "committed through the manifest protocol, one batch CRASH-REPLAYED "
     "(must fingerprint-skip), the layout compacted (dirs folded into "
@@ -11463,8 +11125,8 @@ def q_exactly_once_served(spark, sf_dir):
     WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL
       AND event_id % 4 <= 2
     """,
-    doc="exactly-once TIME TRAVEL, oracle-certified (round 11 — "
-    "VERDICT r10 next-round #2; api.py telemetry(as_of_eo_hwm=N)): "
+    doc="exactly-once TIME TRAVEL, oracle-certified ("
+    "api.py telemetry(as_of_eo_hwm=N)): "
     "after committing 4 micro-batches AND compacting them into one "
     "generation, the as-of read at hwm=2 must reconstruct exactly "
     "batches 0-2 — the consistent cut the EO manifest's high-water "
@@ -11510,8 +11172,7 @@ def q_exactly_once_asof(spark, sf_dir):
            CAST(0 AS BIGINT) AS batch_id
     FROM k WHERE rn = 1
     """,
-    doc="streaming corpus ingest, oracle-certified end-to-end (round "
-    "12 — VERDICT r11 next-round #3; streaming/corpus.py, the "
+    doc="streaming corpus ingest, oracle-certified end-to-end (streaming/corpus.py, the "
     "q_exactly_once_served pattern): the documents table is dropped "
     "as a JSON-lines file into the REAL drop-dir source (keep-first "
     "content-deduped so the feed is deterministic at every SF — the "
@@ -11693,8 +11354,7 @@ def q_corpus_stream_served(spark, sf_dir):
     FROM j1 ASOF LEFT JOIN act a
       ON j1.user_id = a.user_id AND j1.ts >= a.fts
     """,
-    doc="streaming PIT enrichment, oracle-certified end-to-end (round "
-    "13 — VERDICT r12 next-round #4; streaming/enrich.py, the "
+    doc="streaming PIT enrichment, oracle-certified end-to-end (streaming/enrich.py, the "
     "q_corpus_stream_served pattern): events become a JSON drop-dir "
     "stream enriched per micro-batch through the REAL "
     "start_enriched_sink against two feature tables with as-of + "
@@ -11831,8 +11491,8 @@ def q_enriched_stream_served(spark, sf_dir):
       SELECT o_custkey FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 2
     )
     """,
-    doc="QUALIFY inside a CORRELATED EXISTS predicate (round 11 — "
-    "VERDICT r10 next-round #8; sql_ext._extract_nested_qualify): the "
+    doc="QUALIFY inside a CORRELATED EXISTS predicate ("
+    "sql_ext._extract_nested_qualify): the "
     "EXISTS body references the outer query's c_custkey, so the block "
     "cannot be planned standalone — the extraction's textual fallback "
     "rewrites it IN PLACE (inline form: the predicate evaluates in "
@@ -11910,17 +11570,15 @@ def q_qualify_in_exists(spark, sf_dir):
            END AS r2
     FROM s WHERE n_terms >= 3
     """,
-    doc="per-source Zipf rank-frequency slope (round 14 — the SCALE.md "
-    "r15 candidate, pulled forward): OLS of ln(count) on ln(rank) over "
+    doc="per-source Zipf rank-frequency slope"
+    ": OLS of ln(count) on ln(rank) over "
     "each source's top-100 terms, the corpus-naturalness signal "
     "(natural language ~ -1; template spam bends it). Ranks are a "
     "TOTAL order (count DESC, term ASC) so ranking is deterministic "
     "cross-engine; every ln is rounded at 9 dp into DECIMAL(18,9) "
     "before aggregation so all five sufficient statistics are exact "
     "decimal sums (order-independent), with only the final slope/r2 "
-    "divisions in floats, rounded at 6 dp. Declared AFTER the round-14 "
-    "window froze (9 modified + all 41 r09-tier = exactly 50): "
-    "judge-swept this round, heads the r15 driver window as new",
+    "divisions in floats, rounded at 6 dp",
 )
 def q_zipf_slope(spark, sf_dir):
     from .operators.profile import zipf_slope
@@ -11970,15 +11628,13 @@ def q_zipf_slope(spark, sf_dir):
     FROM c CROSS JOIN top
     """,
     doc="first-touch anchored funnel view -> click -> purchase, each "
-    "within 24h of the previous anchor (round 14 — operators/funnel.py): "
+    "within 24h of the previous anchor (operators/funnel.py): "
     "stage k+1 counts a user iff an event lands strictly after their "
     "stage-k anchor and within the horizon, earliest such event "
     "becoming the next anchor. Pure composition of grouped MINs and "
     "user-keyed equi-joins — no window, no sequence scan — so both "
     "engines compute the identical exact timestamps; the only float "
-    "is the conversion ratio of two exact counts, rounded at 6 dp. "
-    "Declared after the round-14 window froze: judge-swept this "
-    "round, heads the r15 driver window as new",
+    "is the conversion ratio of two exact counts, rounded at 6 dp",
 )
 def q_funnel_stages(spark, sf_dir):
     from .operators.funnel import funnel
@@ -12025,19 +11681,18 @@ def q_funnel_stages(spark, sf_dir):
                  / CAST(s.cohort_size AS DOUBLE), 6) AS retention_frac
     FROM r JOIN s USING (cohort)
     """,
-    doc="weekly cohort retention matrix (round 14 — operators/funnel.py "
-    "cohort_retention; the richer sibling of q_cohort_retention (r02), "
+    doc="weekly cohort retention matrix (operators/funnel.py "
+    "cohort_retention; the richer sibling of q_cohort_retention, "
     "adding cohort sizes and 6-dp retention fractions — renamed from "
-    "its original declaration, which silently collided with that r02 "
-    "name in the driver manifest): users cohorted by the Monday-aligned week of "
+    "its original declaration, which silently collided with that "
+    "name in the query manifest): users cohorted by the Monday-aligned week of "
     "their FIRST event, then per (cohort, week-offset) the count who "
     "came back. Offsets are exact integer day-diffs / 7 (both periods "
     "Monday-aligned, division exact) — never engine-specific 'week "
     "difference' semantics; the only float is active/size, rounded at "
     "6 dp. The (user, period) distinct and the per-cohort sizes each "
     "reuse one natural-key shuffle; cohort sizes broadcast onto the "
-    "matrix. Declared after the round-14 window froze: judge-swept "
-    "this round, heads the r15 driver window as new",
+    "matrix",
 )
 def q_cohort_retention_matrix(spark, sf_dir):
     from .operators.funnel import cohort_retention
@@ -12072,16 +11727,14 @@ def q_cohort_retention_matrix(spark, sf_dir):
     FROM agg
     """,
     doc="per-(user, state) residence time — TimescaleDB state_agg's "
-    "duration query (round 14 — operators/resample.py "
+    "duration query (operators/resample.py "
     "state_durations): each event pins the user to its event_type "
     "until their NEXT event (LOCF; the last event carries no "
     "duration, the time_weighted_avg convention). Durations are "
     "exact integer microseconds; the only float is the per-user "
     "share, a ratio of exact integers rounded 6 dp (NULL on a "
     "zero-span series). One lead window + one (user,state) agg + one "
-    "user-keyed share window, all co-keyed on the series. Declared "
-    "after the round-14 window froze: judge-swept this round, heads "
-    "the r15 driver window as new",
+    "user-keyed share window, all co-keyed on the series",
 )
 def q_state_durations(spark, sf_dir):
     from .operators.resample import state_durations
@@ -12127,7 +11780,7 @@ def q_state_durations(spark, sf_dir):
     FROM agg
     """,
     doc="streaming state-residence durations, oracle-certified "
-    "end-to-end (round 15 — VERDICT r14 next-round #3; "
+    "end-to-end ("
     "streaming/state.py, the q_corpus_stream_served pattern): events "
     "become a JSON drop-dir split at the midpoint timestamp into TWO "
     "real micro-batches (every user's state interval across the cut "
@@ -12141,8 +11794,7 @@ def q_state_durations(spark, sf_dir):
     "against the source definition: any double-counted bridge "
     "interval, replay duplication, late-row leak, or compaction "
     "loss diverges the hash. Timestamps travel as exact epoch "
-    "microseconds (no format round-trip). The only r14 streaming "
-    "store previously certified by pytest alone",
+    "microseconds (no format round-trip)",
 )
 def q_state_durations_served(spark, sf_dir):
     import glob
@@ -12300,15 +11952,13 @@ def q_state_durations_served(spark, sf_dir):
     FROM n LEFT JOIN s USING (event_type) JOIN ties USING (event_type)
     """,
     doc="Mann-Kendall trend test per event_type over DAILY value sums "
-    "(round 14 — operators/trend.py): S = sum of pairwise signs, "
+    "(operators/trend.py): S = sum of pairwise signs, "
     "tie-corrected variance, continuity-corrected z. Run on the "
     "bucketed series (30 points/series here), never raw ticks — the "
     "pair join is keyed per series and bounded by the resample "
     "granularity (max_points guard available). Daily sums are exact "
     "decimals, so S / n / tie-term are exact integers on both "
-    "engines; var_s and z are identical IEEE doubles rounded 6 dp. "
-    "Declared after the round-14 window froze: judge-swept this "
-    "round, heads the r15 driver window as new",
+    "engines; var_s and z are identical IEEE doubles rounded 6 dp",
 )
 def q_mann_kendall(spark, sf_dir):
     from .operators.trend import mann_kendall
@@ -12350,16 +12000,14 @@ def q_mann_kendall(spark, sf_dir):
     FROM ranked WHERE rn = (np + 1) // 2
     """,
     doc="Theil-Sen robust slope per event_type over daily value sums "
-    "(round 14 — operators/trend.py): the LOWER MEDIAN of all "
+    "(operators/trend.py): the LOWER MEDIAN of all "
     "pairwise slopes — immune to ~29% outliers where "
     "q_linear_regression's OLS is not. Median selection is fully "
     "deterministic: slopes are identical IEEE doubles on both "
     "engines (exact-decimal numerator / integer day denominator) and "
     "the rank order ties-breaks on the pair's day indexes, so both "
     "engines pick the IDENTICAL pair. Same per-series pair-join "
-    "contract as q_mann_kendall. Declared after the round-14 window "
-    "froze: judge-swept this round, heads the r15 driver window as "
-    "new",
+    "contract as q_mann_kendall",
 )
 def q_theil_sen(spark, sf_dir):
     from .operators.trend import theil_sen
@@ -12388,7 +12036,7 @@ def q_theil_sen(spark, sf_dir):
       ON split_part(p.probe, ' ', 1) = split_part(v.name, ' ', 1)
      AND levenshtein(p.probe, v.name) <= 1
     """,
-    doc="blocked fuzzy string join (round 14 — operators/linkage.py "
+    doc="blocked fuzzy string join (operators/linkage.py "
     "fuzzy_join): dirty probes (part-name vocabulary with the last "
     "char dropped) resolved against the clean vocabulary at edit "
     "distance <= 1. Candidates come from conjunctive blocking "
@@ -12397,9 +12045,7 @@ def q_theil_sen(spark, sf_dir):
     "adjacent bands can never drop a true match) — never all-pairs; "
     "verification is Spark's thresholded levenshtein. The band is "
     "invisible in the result, so DuckDB recomputes it as plain "
-    "blocker-equality + levenshtein <= k. Declared after the "
-    "round-14 window froze: judge-swept this round, heads the r15 "
-    "driver window as new",
+    "blocker-equality + levenshtein <= k",
 )
 def q_fuzzy_vocab_match(spark, sf_dir):
     from .operators.linkage import fuzzy_join
@@ -12447,7 +12093,7 @@ def q_fuzzy_vocab_match(spark, sf_dir):
      AND levenshtein(p.probe, c.sensor_name) <= 1
     """,
     doc="series-catalog fuzzy linkage through the ENGINE surface "
-    "(round 15 — VERDICT r14 next-round #7; api.py "
+    "(api.py "
     "link_external_names over build_series_catalog): a real warehouse "
     "is built in-fixture (the q_latest_values dense-seq discipline, "
     "so the catalog's min_by-ingest_seq sensor_name is the oracle's "
@@ -12520,16 +12166,14 @@ _FROM_FIRST_STMT = (
     "q_sql_from_first",
     _FROM_FIRST_STMT,
     doc="DuckDB's FROM-first statement syntax through the dialect "
-    "(round 14 — sql_ext.py _rewrite_from_first): the statement LEADS "
+    "(sql_ext.py _rewrite_from_first): the statement LEADS "
     "with its FROM clause, the select list follows, the remaining "
     "clauses keep their usual order; a missing SELECT means SELECT *. "
     "The dialect canonicalizes to SELECT-first textually (depth-0 "
     "keyword scan on a comment/string-masked copy) BEFORE any other "
     "pass, so ASOF/QUALIFY/star-modifiers all compose. DuckDB runs "
     "the ORIGINAL FROM-first spelling natively — the strongest "
-    "possible oracle pairing (the q_sql_pivot pattern). Declared "
-    "after the round-14 window froze: judge-swept this round, heads "
-    "the r15 driver window as new",
+    "possible oracle pairing (the q_sql_pivot pattern)",
 )
 def q_sql_from_first(spark, sf_dir):
     from .sql_ext import sql as dialect_sql
@@ -12584,7 +12228,7 @@ def q_sql_from_first(spark, sf_dir):
     FROM scored ORDER BY cosine DESC, doc_id LIMIT 50
     """,
     doc="TF-IDF cosine retrieval over the PERSISTED BM25 index "
-    "(round 14 — retrieval.py Bm25Index.query_tfidf): the SAME "
+    "(retrieval.py Bm25Index.query_tfidf): the SAME "
     "term-sharded postings serve a second scorer, SMART nnc.ltc — "
     "doc side raw-tf with a stored cosine norm over ALL doc terms "
     "(tfn2 rides in the postings like dl; exact integers, no ln() "
@@ -12593,9 +12237,7 @@ def q_sql_from_first(spark, sf_dir):
     "lifecycle: build on doc_id%4!=1, add the rest, remove "
     "doc_id%50==13 — the oracle recomputes nnc.ltc over exactly the "
     "LIVE corpus in DuckDB, certifying the tombstone df-subtraction "
-    "leg under the second scorer too. Declared after the round-14 "
-    "window froze: judge-swept this round, heads the r15 driver "
-    "window as new",
+    "leg under the second scorer too",
 )
 def q_tfidf_index(spark, sf_dir):
     from .operators.retrieval import Bm25Index
@@ -12658,7 +12300,7 @@ def q_tfidf_index(spark, sf_dir):
     SELECT event_type, value, count_lo, err_ub, n_rows
     FROM final WHERE rn <= 10
     """,
-    doc="mergeable heavy-hitter sketch rollup (round 14 — functions/"
+    doc="mergeable heavy-hitter sketch rollup (functions/"
     "sketches.py topk_sketch / merge_topk_sketch; the SpaceSaving/"
     "Misra-Gries merge, Agarwal et al. PODS'12): per (event_type, "
     "day) cell keep the exact top-5 user buckets + the (k+1)-th "
@@ -12671,9 +12313,7 @@ def q_tfidf_index(spark, sf_dir):
     "the whole decomposition and hash-matches. Scale: map-side "
     "combining counts, WindowGroupLimit per-cell top-k, value-keyed "
     "merge — the decomposable answer to 'top users per type over "
-    "any date range' at 100 TB. Declared after the round-14 window "
-    "froze: judge-swept this round, heads the r15 driver window as "
-    "new",
+    "any date range' at 100 TB",
 )
 def q_topk_sketch_merge(spark, sf_dir):
     from .functions.sketches import merge_topk_sketch, topk_sketch
@@ -12719,7 +12359,7 @@ def q_topk_sketch_merge(spark, sf_dir):
     WHERE ROUND(CAST(i AS DOUBLE) / ne, 6) >= 0.4
     """,
     doc="directional n-gram containment of held-out eval docs in "
-    "train docs (round 14 — operators/dedup.py "
+    "train docs (operators/dedup.py "
     "ngram_containment_pairs; the asymmetric cousin of "
     "q_ngram_jaccard): containment = |grams(eval) AND grams(train)| "
     "/ |grams(eval)| — the GPT-3/PaLM eval-overlap metric. Jaccard "
@@ -12727,8 +12367,7 @@ def q_topk_sketch_merge(spark, sf_dir):
     "doc (union dominated by the train side); containment reads 1.0 "
     "there. Same inverted-index posting join (never all-pairs), "
     "eval-side sizes broadcast; exact integer counts, ratio rounded "
-    "6 dp. Declared after the round-14 window froze: judge-swept "
-    "this round, heads the r15 driver window as new",
+    "6 dp",
 )
 def q_ngram_containment(spark, sf_dir):
     from .operators.dedup import ngram_containment_pairs
@@ -12829,7 +12468,7 @@ def q_ngram_containment(spark, sf_dir):
     """,
     doc="offline ranking evaluation — NDCG@10 / MRR / recall@10 of "
     "the BM25 retriever against graded term-coverage labels, two "
-    "query sets in one table-driven pass (round 14 — retrieval.py "
+    "query sets in one table-driven pass (retrieval.py "
     "ranking_metrics; closes the retrieve->fuse->EVALUATE loop). "
     "Gains (2^rel - 1) with log2(rank+1) discounts; each position's "
     "term is 9-dp-quantized and summed as exact decimal (the "
@@ -12838,8 +12477,7 @@ def q_ngram_containment(spark, sf_dir):
     "tie-breaks on doc id, so both engines build the identical "
     "ideal list. Everything is keyed on the query id — eval sets "
     "are tiny per query; the corpus-sized work stays in the "
-    "retriever. Declared after the round-14 window froze: judge-"
-    "swept this round, heads the r15 driver window as new",
+    "retriever",
 )
 def q_ranking_eval(spark, sf_dir):
     from .operators.dedup import word_tokens
@@ -12886,7 +12524,7 @@ def q_ranking_eval(spark, sf_dir):
       -- engine operator (profile.winsorize) — without this filter the
       -- two engines would disagree on every bound the moment testdata
       -- regenerates with NULLs (DuckDB also orders NULLs last vs
-      -- Spark's nulls-first; review round 15)
+      -- Spark's nulls-first)
       SELECT event_type, value,
              row_number() OVER (PARTITION BY event_type
                                 ORDER BY value) AS rn,
@@ -12923,16 +12561,14 @@ def q_ranking_eval(spark, sf_dir):
            ROUND(CAST(SUM(vw) AS DOUBLE) / COUNT(*), 6) AS mean_w
     FROM clipped GROUP BY event_type
     """,
-    doc="per-type winsorized mean (round 14 — operators/profile.py "
+    doc="per-type winsorized mean (operators/profile.py "
     "winsorize): values clipped to the exact PERCENTILE_DISC "
     "[p05, p95] bounds (rank selection, floored at rank 1 — actual "
     "data values, so the clipped column stays exactly 2-dp and the "
     "mean numerator sums as exact decimal), plus clip counts. The "
     "robust-mean companion to q_outlier_mad (flagging) and "
     "q_moving_median (despiking). One ranked window per group + a "
-    "broadcast bounds join. Declared after the round-14 window "
-    "froze: judge-swept this round, heads the r15 driver window as "
-    "new",
+    "broadcast bounds join",
 )
 def q_winsorized_stats(spark, sf_dir):
     from .operators.profile import winsorize
@@ -12986,7 +12622,7 @@ def q_winsorized_stats(spark, sf_dir):
              AS share
     FROM agg CROSS JOIN tot
     """,
-    doc="last-touch conversion attribution (round 14 — operators/"
+    doc="last-touch conversion attribution (operators/"
     "funnel.py attribute_conversions; the revenue-facing companion "
     "of q_funnel_stages): each purchase attributes to the user's "
     "most recent strictly-preceding non-purchase event type via "
@@ -12995,8 +12631,7 @@ def q_winsorized_stats(spark, sf_dir):
     "no preceding touch -> '(direct)'. Value sums are exact decimal; "
     "the share denominator attaches via the constant-key broadcast "
     "equi-join, not a global window. One user-keyed window + one "
-    "tiny per-source agg. Declared after the round-14 window froze: "
-    "judge-swept this round, heads the r15 driver window as new",
+    "tiny per-source agg",
 )
 def q_attribution_last_touch(spark, sf_dir):
     from .operators.funnel import attribute_conversions
@@ -13073,16 +12708,14 @@ def q_attribution_last_touch(spark, sf_dir):
     FROM ranked GROUP BY doc_id
     ORDER BY rrf DESC, doc_id LIMIT 20
     """,
-    doc="one persisted index, two scorers, one fused list (round 14): "
+    doc="one persisted index, two scorers, one fused list: "
     "Bm25Index.query (Okapi BM25) and Bm25Index.query_tfidf (SMART "
     "nnc.ltc cosine) rank the SAME term-sharded postings — both "
     "shard-pruned, zero extra index bytes — and rrf_fuse combines "
     "the two top-40 lists by 1/(60+rank) into the top 20. The "
     "lexical-score disagreement between the two weighting schemes is "
     "exactly what RRF's rank-only fusion absorbs. Oracle recomputes "
-    "both scorers from the raw corpus and replays the fusion. "
-    "Declared after the round-14 window froze: judge-swept this "
-    "round, heads the r15 driver window as new",
+    "both scorers from the raw corpus and replays the fusion",
 )
 def q_hybrid_index_rrf(spark, sf_dir):
     from .operators.retrieval import Bm25Index, rrf_fuse
@@ -13121,7 +12754,7 @@ def q_hybrid_index_rrf(spark, sf_dir):
                THEN v END) AS BIGINT) AS view_odd_s
     FROM base GROUP BY cohort
     """,
-    doc="multi-column PIVOT statement (round 14 second wave — "
+    doc="multi-column PIVOT statement ("
     "sql_ext._maybe_pivot): ON event_type IN ('click','view'), half "
     "pivots the CROSS PRODUCT of the two value sets into "
     "<v1>_<v2>_<alias> columns, DuckDB's naming and order (IN order "
@@ -13130,8 +12763,7 @@ def q_hybrid_index_rrf(spark, sf_dir):
     "values map through typed CASE chains — no raw casts, so literal "
     "spelling can't drift; rows with unlisted/NULL ON values drop on "
     "both engines. The oracle is the equivalent conditional "
-    "aggregation. Declared after the round-14 window froze: "
-    "judge-swept this round, heads the r15 driver window as new",
+    "aggregation",
 )
 def q_sql_pivot_multi(spark, sf_dir):
     from .sql_ext import sql as dialect_sql
@@ -13181,7 +12813,7 @@ def q_sql_pivot_multi(spark, sf_dir):
     GROUP BY ks.k, s.n_rows, s.n_classes
     """,
     doc="k-anonymity audit over the (lang, source, length-bucket) "
-    "quasi-identifier tuple (round 14 — operators/profile.py "
+    "quasi-identifier tuple (operators/profile.py "
     "k_anonymity_report, the privacy face of the data-quality "
     "suite): per threshold k in {2,5,10}, how many equivalence "
     "classes and rows fall below k — the release-review question "
@@ -13189,8 +12821,7 @@ def q_sql_pivot_multi(spark, sf_dir):
     "quasi-values form their own class on both engines. One "
     "map-side-combining groupBy on the quasi tuple; every threshold "
     "reuses the same class-size table. Exact integers, one 6-dp "
-    "ratio. Declared after the round-14 window froze: judge-swept "
-    "this round, heads the r15 driver window as new",
+    "ratio",
 )
 def q_k_anonymity(spark, sf_dir):
     from .operators.profile import k_anonymity_report
@@ -13227,16 +12858,14 @@ def q_k_anonymity(spark, sf_dir):
     FROM counts CROSS JOIN tot
     """,
     doc="Benford first-significant-digit profile of l_extendedprice "
-    "(round 14 — operators/profile.py benford_profile, the forensic "
+    "(operators/profile.py benford_profile, the forensic "
     "data-quality check for fabricated/truncated numeric feeds): "
     "per digit, observed count/share vs Benford's log10(1+1/d) and "
     "the per-digit chi-square contribution. Digit extraction is "
     "TEXTUAL over the decimal(18,2) rendering — fixed notation on "
     "both engines, where a raw double cast drifts into scientific "
     "notation — first [1-9] wins; zero/NULL carry no digit. Exact "
-    "counts; shares round 6 dp. Declared after the round-14 window "
-    "froze: judge-swept this round, heads the r15 driver window as "
-    "new",
+    "counts; shares round 6 dp",
 )
 def q_benford_profile(spark, sf_dir):
     from .operators.profile import benford_profile
@@ -13284,16 +12913,14 @@ def q_benford_profile(spark, sf_dir):
                       AS DOUBLE) / COUNT(*), 6) AS bounce_rate
     FROM per_session GROUP BY day
     """,
-    doc="daily session statistics (round 14): sessions split on 30-min "
+    doc="daily session statistics: sessions split on 30-min "
     "inactivity per user (lag + cumulative-flag-sum — the "
     "gaps-and-islands sessionizer), then per-day session count, "
     "events/session, average duration and bounce rate (1-event "
     "share), the product-analytics KPI row. Durations are exact "
     "integer microseconds; every ratio is exact-int/exact-int at 6 "
     "dp. Two co-keyed user windows + one (user, session) agg + one "
-    "day agg — no self-join, no collect. Declared after the "
-    "round-14 window froze: judge-swept this round, heads the r15 "
-    "driver window as new",
+    "day agg — no self-join, no collect",
 )
 def q_session_stats(spark, sf_dir):
     e = T(spark, sf_dir, "events")
@@ -13361,16 +12988,13 @@ def q_session_stats(spark, sf_dir):
     JOIN mb ON c.b_value IS NOT DISTINCT FROM mb.b_value
     CROSS JOIN tot
     """,
-    doc="pointwise mutual information per (lang, source) cell (round "
-    "14 — operators/profile.py pmi_cells, the information-theoretic "
+    doc="pointwise mutual information per (lang, source) cell (operators/profile.py pmi_cells, the information-theoretic "
     "sibling of q_chi_square_scan): which value pairs co-occur more "
     "or less than independence predicts, with per-cell MI "
     "contributions (n_ab/N * pmi, 9-dp quantized before any sum) "
     "whose total is the columns' mutual information in bits. One "
     "data scan (marginals derive from the joint counts); max_cells "
-    "guards the dims-only work. Declared after the round-14 window "
-    "froze: judge-swept this round, heads the r15 driver window as "
-    "new",
+    "guards the dims-only work",
 )
 def q_pmi_scan(spark, sf_dir):
     from .operators.profile import pmi_cells
@@ -13419,7 +13043,7 @@ def q_pmi_scan(spark, sf_dir):
     GROUP BY w
     """,
     doc="Gries' DP dispersion of the top-20 corpus words across "
-    "sources (round 14): DP = 0.5 * sum_s |share of the word's "
+    "sources: DP = 0.5 * sum_s |share of the word's "
     "occurrences in s - s's share of the corpus| — 0 means the word "
     "spreads exactly like the corpus (a true stopword), near 1 means "
     "it clumps in one source (boilerplate / template leakage; "
@@ -13427,9 +13051,7 @@ def q_pmi_scan(spark, sf_dir):
     "signal). Every term is a ratio of exact integer counts; the "
     "<=|sources| summands per word are summed after identical IEEE "
     "arithmetic, rounded 6 dp. The grid is top-20 x sources — "
-    "dims-only; the data-scale work is the one (source, word) count. "
-    "Declared after the round-14 window froze: judge-swept this "
-    "round, heads the r15 driver window as new",
+    "dims-only; the data-scale work is the one (source, word) count",
 )
 def q_word_dispersion(spark, sf_dir):
     from .operators.dedup import word_tokens
@@ -13517,7 +13139,7 @@ def q_word_dispersion(spark, sf_dir):
                           AS DECIMAL(38,9))), 6) AS psi
     FROM shares GROUP BY event_type
     """,
-    doc="population stability index per event_type (round 14): the "
+    doc="population stability index per event_type: the "
     "standard ML-monitoring drift metric between the first half-month "
     "(ref) and the rest (cur) over 10 closed-form value bands "
     "(floor(value/50) clamped; the q_value_heatmap_2d banding "
@@ -13525,9 +13147,7 @@ def q_word_dispersion(spark, sf_dir):
     "empty bins are defined. PSI = sum (p_ref - p_cur) * "
     "ln(p_ref/p_cur) with per-band terms 9-dp-quantized and summed "
     "as exact decimal (<= 10 ln() summands, the bm25-idf exposure "
-    "class). One banded count + dims-only grid fill. Declared after "
-    "the round-14 window froze: judge-swept this round, heads the "
-    "r15 driver window as new",
+    "class). One banded count + dims-only grid fill",
 )
 def q_psi_drift(spark, sf_dir):
     e = T(spark, sf_dir, "events")
@@ -13667,9 +13287,7 @@ def q_psi_drift(spark, sf_dir):
     "Per-depth overlap counts are exact integers (docs whose "
     "max(rank_a, rank_b) <= d); each p^(d-1)-weighted term is "
     "9-dp-quantized and summed as exact decimal. All work is over "
-    "two top-k lists; the retrievers carry the corpus-scale plans. "
-    "Declared after the round-14 window froze: judge-swept this "
-    "round, heads the r15 driver window as new",
+    "two top-k lists; the retrievers carry the corpus-scale plans",
 )
 def q_rbo_lexical_dense(spark, sf_dir):
     from .operators.retrieval import bm25_topk
@@ -13727,8 +13345,8 @@ def q_rbo_lexical_dense(spark, sf_dir):
       AND event_type IS NOT NULL
     GROUP BY event_type
     """,
-    doc="streaming Theta segment store served END-TO-END (round 16 — "
-    "VERDICT r15 next-round #2; streaming/theta.py, the set-operation "
+    doc="streaming Theta segment store served END-TO-END ("
+    "streaming/theta.py, the set-operation "
     "face completing the streaming sketch family beside topk/"
     "durations/KLL): two real micro-batches (even/odd event_id) "
     "through the real foreachBatch sink maintain per-event_type "
@@ -13886,8 +13504,7 @@ def q_theta_stream_served(spark, sf_dir):
     SELECT event_type, value, count_lo, err_ub, n_rows
     FROM final WHERE rn <= 10
     """,
-    doc="streaming top-k heavy-hitter store served END-TO-END (round "
-    "16 — VERDICT r15 next-round #3): unlike the KLL/Theta stores, "
+    doc="streaming top-k heavy-hitter store served END-TO-END: unlike the KLL/Theta stores, "
     "the top-k store's served values are EXACT INTEGERS "
     "(functions/sketches.py topk_sketch decomposition), so the FULL "
     "served [count_lo, err_ub, n_rows] table hash-matches an oracle "
@@ -13984,8 +13601,8 @@ def q_topk_stream_served(spark, sf_dir):
 @declare(
     "q_theta_overlap_kway",
     None,
-    doc="k-way Theta segment intersections (round 16 — VERDICT r15 "
-    "next-round #6; functions/sketches.py theta_overlap_kway): for "
+    doc="k-way Theta segment intersections ("
+    "functions/sketches.py theta_overlap_kway): for "
     "every event_type triple, the distinct-user estimate of members "
     "in ALL THREE segments, chained theta_intersection over the "
     "dims-only segment grid — the question pairwise Jaccard cannot "
@@ -14035,7 +13652,7 @@ def q_theta_overlap_kway(spark, sf_dir):
                 ELSE 'regular' END AS segment
     FROM scored
     """,
-    doc="RFM customer segmentation (round 16 — VERDICT r15 next-round "
+    doc="RFM customer segmentation ("
     "#7; the classic recency/frequency/monetary quintile scoring): "
     "one grouped aggregate reduces events to a per-user (last_ts, "
     "count, exact-decimal spend) table, then three NTILE(5) windows "
@@ -14085,7 +13702,7 @@ def q_rfm_segmentation(spark, sf_dir):
 @declare(
     "q_rollup_theta_overlap",
     None,
-    doc="continuous-aggregate Theta segment cells (round 16 — "
+    doc="continuous-aggregate Theta segment cells ("
     "operators/rollup.py theta_col, completing the sketch-cell "
     "family beside the HLL distinct and KLL quantile cells): the "
     "rollup stores one Theta sketch of the user population per "
@@ -14156,7 +13773,7 @@ def q_rollup_theta_overlap(spark, sf_dir):
     FROM classed
     GROUP BY event_type, abc_class
     """,
-    doc="Pareto / ABC inventory classification (round 16): per "
+    doc="Pareto / ABC inventory classification: per "
     "event_type, users ranked by exact-decimal total spend; class A "
     "holds the top spenders up to 80% of cumulative value, B to 95%, "
     "C the tail — the classic concentration rollup behind 'which 20% "
@@ -14238,7 +13855,7 @@ def q_pareto_abc(spark, sf_dir):
            ) AS gini
     FROM terms
     """,
-    doc="Gini concentration coefficient (round 16): per event_type, "
+    doc="Gini concentration coefficient: per event_type, "
     "the inequality of per-user spend via the rank formula "
     "G = 2*SUM(i*x_i)/(n*SUM(x)) - (n+1)/n over ascending-sorted "
     "exact-decimal spends — 0 = perfectly even, ->1 = one user "
@@ -14333,15 +13950,15 @@ def q_gini_concentration(spark, sf_dir):
            ) AS effect_u1
     FROM u
     """,
-    doc="Mann-Whitney U rank-sum test statistic (round 16): per "
+    doc="Mann-Whitney U rank-sum test statistic: per "
     "event_type, compares the value distributions of two user "
     "populations (even vs odd user_id — the A/B-experiment split "
     "shape) via exact tied-rank sums. Per distinct value the tie "
     "block spans ranks [cum_before+1, cum_before+cnt] and every "
     "member takes the average rank — DOUBLING the rank sum "
     "(cnt_a*(2*cum_before+cnt+1)) keeps all arithmetic exact "
-    "integers, accumulated in DECIMAL(38,0)/HUGEINT (round 18 — "
-    "VERDICT r17 #4, the markov/binary_auc overflow class: the "
+    "integers, accumulated in DECIMAL(38,0)/HUGEINT ("
+    "the markov/binary_auc overflow class: the "
     "doubled sums are Theta(n^2), wrapping int64 past ~2.1e9 rows "
     "per group; decimal keeps both engines exact at any group "
     "size, and effect_u1 divides from the decimal form so its "
@@ -14377,8 +13994,8 @@ def q_mann_whitney(spark, sf_dir):
         "cnt_a",
         F.coalesce(F.sum("cnt").over(wb), F.lit(0)).alias("cum_before"),
     )
-    # doubled rank sums accumulate in DECIMAL(38,0) (round 18 —
-    # VERDICT r17 next-round #4, the markov/binary_auc overflow
+    # doubled rank sums accumulate in DECIMAL(38,0) (the markov/binary_auc
+    # overflow
     # class): each term and the per-group sum are Theta(n^2), which
     # wraps bigint past ~2.1e9 rows per group while the DuckDB
     # oracle (HUGEINT) raises — decimal keeps both engines exact at
@@ -14444,7 +14061,7 @@ def q_mann_whitney(spark, sf_dir):
     FROM cum
     GROUP BY flag
     """,
-    doc="weighted median (round 16): per returnflag, the smallest "
+    doc="weighted median: per returnflag, the smallest "
     "l_extendedprice whose cumulative l_quantity weight reaches half "
     "the total — the PERCENTILE_DISC-style lower weighted median "
     "(an ACTUAL data value, so it hash-matches; interpolated "
@@ -14540,8 +14157,7 @@ def q_weighted_median(spark, sf_dir):
            CAST(CAST(p3.p AS HUGEINT) * 1000000 // tot.t AS BIGINT) AS mass_micro
     FROM p3, tot
     """,
-    doc="Markov-chain stationary distribution of user behavior (round "
-    "16 — operators/graph.py markov_stationary): consecutive-event "
+    doc="Markov-chain stationary distribution of user behavior (operators/graph.py markov_stationary): consecutive-event "
     "transition counts per user (the q_event_transitions shape) feed "
     "an integer-exact power iteration — each step "
     "p'(j) = SUM_i p(i)*w_ij div out_i with PER-TERM floor division, "
@@ -14549,7 +14165,7 @@ def q_weighted_median(spark, sf_dir):
     "partitioning (the q_pagerank micro-unit discipline; this IS "
     "weighted PageRank at damping 1.0); the per-term product runs in "
     "DECIMAL(38,0) on Spark / HUGEINT in the oracle so hub-mass x "
-    "unbounded-count cannot wrap 2^63 (round 17) — answering 'where "
+    "unbounded-count cannot wrap 2^63 — answering 'where "
     "does user "
     "attention settle at equilibrium', the summary a raw transition "
     "matrix cannot give. 3 iterations unrolled identically in the "
@@ -14606,7 +14222,7 @@ def q_markov_stationary(spark, sf_dir):
     FROM ranked
     GROUP BY event_type
     """,
-    doc="10% trimmed mean (round 16): per event_type, drop exactly "
+    doc="10% trimmed mean: per event_type, drop exactly "
     "floor(n/10) rows from EACH tail by total-ordered rank (value, "
     "event_id — engine-identical membership, the same discipline as "
     "q_quantile_buckets) and average the exact-decimal middle — the "
@@ -14658,7 +14274,7 @@ def q_trimmed_mean(spark, sf_dir):
     ) c
     """,
     doc="correlated LATERAL subquery with per-row ORDER BY + LIMIT "
-    "(round 16): for each nation the top-2 customers by balance via "
+    ": for each nation the top-2 customers by balance via "
     "a LATERAL derived table — the SQL-standard spelling of "
     "per-group top-k that both engines now parse NATIVELY (Spark 4 "
     "decorrelates the lateral into a ranked window under the hood — "
@@ -14733,8 +14349,8 @@ def q_lateral_topk(spark, sf_dir):
            quality_score >= 0.5 AS keep
     FROM scored
     """,
-    doc="fastText-style pretrained linear quality gate (round 17 — "
-    "VERDICT r16 next-round #4; operators/quality.py "
+    doc="fastText-style pretrained linear quality gate ("
+    "operators/quality.py "
     "quality_classifier_score): score = sigmoid(mean_f w[f]) over "
     "each document's md5-hashed word unigram+bigram feature multiset "
     "against a broadcast 1024-bucket integer-micro weight table (the "
@@ -14826,8 +14442,7 @@ def q_quality_classifier(spark, sf_dir):
            END AS survival
     FROM logs
     """,
-    doc="Kaplan-Meier survival / churn curve per weekly cohort (round "
-    "17 — VERDICT r16 next-round #5; operators/funnel.py "
+    doc="Kaplan-Meier survival / churn curve per weekly cohort (operators/funnel.py "
     "kaplan_meier): the right-censoring-aware answer to 'what "
     "fraction of the cohort survives past day t' that a naive "
     "retention ratio undercounts — a user's lifetime runs first to "
@@ -14922,7 +14537,7 @@ def q_kaplan_meier(spark, sf_dir):
            quality_score >= 0.5 AS keep
     FROM scored
     """,
-    doc="TRAINED quality gate, end-to-end (round 17; operators/"
+    doc="TRAINED quality gate, end-to-end (operators/"
     "quality.py train_quality_weights + quality_classifier_score): "
     "the CCNet flow in one composed plan — Naive-Bayes log-odds "
     "weights trained over the labeled split (positive = source="
@@ -15049,7 +14664,7 @@ def q_quality_classifier_trained(spark, sf_dir):
     FROM agg2
     """,
     doc="per-language ROC-AUC of the TRAINED quality classifier "
-    "(round 17; operators/quality.py binary_auc) — the evaluation "
+    "(operators/quality.py binary_auc) — the evaluation "
     "face closing the model-based-curation loop (train_quality_"
     "weights -> quality_classifier_score -> evaluate), the "
     "classifier-side sibling of retrieval's NDCG/MRR. AUC via the "
@@ -15188,8 +14803,8 @@ def q_classifier_auc(spark, sf_dir):
                 ELSE 'ns' END AS p_class
     FROM final
     """,
-    doc="log-rank (Mantel-Cox) cohort-survival test (round 18 — "
-    "VERDICT r17 next-round #2; operators/funnel.py logrank / "
+    doc="log-rank (Mantel-Cox) cohort-survival test ("
+    "operators/funnel.py logrank / "
     "logrank_cohorts): the question q_kaplan_meier's curve alone "
     "cannot answer — does THIS acquisition cohort's churn DIFFER "
     "from everyone else's, or is the gap chance? Same purchase-"
@@ -15303,8 +14918,8 @@ def q_logrank_cohorts(spark, sf_dir):
            quality_score >= 0.5 AS keep
     FROM scored
     """,
-    doc="per-language trained quality gates (round 18 — VERDICT r17 "
-    "next-round #3; operators/quality.py train_quality_weights("
+    doc="per-language trained quality gates ("
+    "operators/quality.py train_quality_weights("
     "group_col=...) + quality_classifier_score(group_col=...)): the "
     "CCNet production shape — one INDEPENDENT Naive-Bayes log-odds "
     "head per lang (counts, the full 1024-bucket spine, smoothing "
@@ -15406,7 +15021,7 @@ def q_quality_classifier_by_lang(spark, sf_dir):
     FROM cum
     """,
     doc="Nelson-Aalen cumulative hazard per weekly acquisition "
-    "cohort (round 19 — VERDICT r18 next-round #2; operators/"
+    "cohort (operators/"
     "funnel.py nelson_aalen / nelson_aalen_cohorts): the survival "
     "family's third face beside q_kaplan_meier (the curve) and "
     "q_logrank_cohorts (the test) — H(t) = sum d_s/n_s over the "
@@ -15520,7 +15135,7 @@ def q_nelson_aalen(spark, sf_dir):
     FROM seg GROUP BY cohort
     """,
     doc="restricted mean survival time to a 21-day horizon per "
-    "weekly cohort (round 19 — VERDICT r18 next-round #2; operators/"
+    "weekly cohort (operators/"
     "funnel.py rmst): the area under q_kaplan_meier's step curve on "
     "[0, 21] — 'average retained days in the first three weeks', "
     "the single number churn dashboards report, defined even where "
@@ -15677,7 +15292,7 @@ def q_rmst(spark, sf_dir):
     FROM crit
     """,
     doc="k-sample omnibus log-rank test over the weekly acquisition "
-    "cohorts (round 19 — VERDICT r18 next-round #4; operators/"
+    "cohorts (operators/"
     "funnel.py logrank_omnibus): ONE df=k-1 statistic for 'do these "
     "k churn curves differ anywhere', beside q_logrank_cohorts' "
     "per-cohort group-vs-rest drill-downs. Statistic: the "
@@ -15848,7 +15463,7 @@ def q_logrank_omnibus(spark, sf_dir):
     FROM zz WHERE rn = 1
     """,
     doc="calibrated multi-class quality/router head, end-to-end "
-    "(round 19 — VERDICT r18 next-round #3; operators/quality.py "
+    "(operators/quality.py "
     "train_multiclass_weights + multiclass_classify): the k-class "
     "generalization of q_quality_classifier_trained — one "
     "one-vs-rest NB log-odds weight table per source domain (each "

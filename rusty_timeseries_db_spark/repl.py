@@ -103,7 +103,7 @@ class Repl:
                 .ExplainMode.fromString("formatted")
             )
         if line == "compact_files":
-            # maintenance verb (round 8): incremental small-file
+            # maintenance verb: incremental small-file
             # compaction of the active base (operators/maintenance.py)
             stats = self.engine.compact_small_files()
             if not stats:
@@ -113,7 +113,7 @@ class Repl:
             )
             return f"Compacted {len(stats)} partition(s) ({parts})."
         if line.startswith("retention "):
-            # maintenance verb (round 8): chunk-drop retention; needs
+            # maintenance verb: chunk-drop retention; needs
             # the date-partitioned layout, reported plainly otherwise
             cutoff = line.split(None, 1)[1].strip()
             try:
@@ -124,7 +124,7 @@ class Repl:
                 return "Retention: nothing older than " + cutoff + "."
             return f"Dropped {len(dropped)} chunk(s): {', '.join(dropped)}."
         if line == "compact_eo":
-            # maintenance verb (round 11): fold the exactly-once
+            # maintenance verb: fold the exactly-once
             # table's per-micro-batch dirs into one compacted
             # generation (api.compact_exactly_once) — the small-files
             # counterpart to retention_eo, same layout
@@ -133,7 +133,7 @@ class Repl:
                 return "Compaction: nothing to fold."
             return f"Folded {n} committed dir(s) into one generation."
         if line.startswith("retention_eo "):
-            # maintenance verb (round 10): retention on the
+            # maintenance verb: retention on the
             # exactly-once batch_id=N/compact=N layout — whole
             # committed dirs fully older than the cutoff, dropped
             # manifest-atomically (api.drop_exactly_once_before)
@@ -149,8 +149,8 @@ class Repl:
                 f"{', '.join(dropped)}."
             )
         if line == "latest" or line.startswith("latest "):
-            # current-state verb (round 8): latest row per series.
-            # Round 9: served from the streaming last-value snapshot
+            # current-state verb: latest row per series.
+            # Served from the streaming last-value snapshot
             # when one is committed (O(#series)), falling back to the
             # batch argmax over the live view; `latest <timeseries_id>`
             # narrows to one series (the point read, same as
@@ -158,7 +158,7 @@ class Repl:
             sid = line.split(None, 1)[1].strip() if " " in line else None
             return self.engine.latest(timeseries_id=sid)
         if line == "profile":
-            # data-quality verb (round 8): one-pass column profile of
+            # data-quality verb: one-pass column profile of
             # the canonical telemetry view (operators/profile.py) —
             # what an operator checks after a suspicious ingest batch
             return self.engine.profile()

@@ -60,10 +60,10 @@ TELEMETRY_SCHEMA = StructType(
 )
 
 #: On-disk telemetry schema = canonical schema + the physical bucket
-#: partition column (moved here from api.py in round 11 so the
+#: partition column (kept here, not in api.py, so the
 #: streaming module can read committed dirs with a KNOWN schema — a
 #: committed zero-row batch dir has no part files and would otherwise
-#: fail schema inference, ADVICE r10 #3). Built as a fresh StructType
+#: fail schema inference). Built as a fresh StructType
 #: (StructType.add mutates in place — never call it on the shared
 #: schema).
 STORED_TELEMETRY_SCHEMA = StructType(

@@ -37,13 +37,13 @@ Capability extension beyond the reference's two routes:
   the views lists bucket dirs on the driver: no Spark job.
 - ``GET /latest`` — current state: the latest row per series
   (engine.latest, the batch face of the streaming last-value cache).
-  One row per series, same row cap. ``?prefer_snapshot=false`` (r10,
-  ADVICE r9 #2) opts into the correct-anywhere batch scan for
+  One row per series, same row cap. ``?prefer_snapshot=false`` opts into the
+  correct-anywhere batch scan for
   warehouses that another process batch-appends into (the mixed-path
   guard is per-engine-instance and cannot see cross-process appends).
 - ``GET /summary?kind=topk|quantile|state|theta[&name=][&keys=a,b]
-  [&quantiles=0.5,0.95][&k=][&overlap_key=][&overlap_k=]`` (round 18
-  — VERDICT r17 #5): serve a facade-managed streaming summary store's
+  [&quantiles=0.5,0.95][&k=][&overlap_key=][&overlap_k=]``: serve a
+  facade-managed streaming summary store's
   merged estimates over HTTP — kind-inapplicable knobs and
   store-not-started errors map to 400 like /sql.
 
@@ -170,7 +170,7 @@ class TelemetryHttpServer:
                 the frame or executing it (analysis errors, ANSI
                 runtime errors, corrupt files) replies ``400
                 "<error>: <type>: <message>"``, never a dropped socket
-                from an uncaught handler exception (ADVICE r8 #3)."""
+                from an uncaught handler exception."""
                 payload = []
                 try:
                     for r in build().toLocalIterator():
@@ -208,7 +208,7 @@ class TelemetryHttpServer:
                 # read-only gate BEFORE the dialect sees the text:
                 # spark.sql executes DDL/DML eagerly, so DROP/INSERT/
                 # CREATE must never reach it from the network surface
-                # (ADVICE r7 — a far larger write surface than the
+                # (a far larger write surface than the
                 # reference's insert+bounded-read routes)
                 if not is_query_statement(query):
                     self._reply(
@@ -229,8 +229,7 @@ class TelemetryHttpServer:
                 url = urlparse(self.path)
                 qs = parse_qs(url.query)
                 if url.path == "/summary":
-                    # capability extension (round 18 — VERDICT r17
-                    # next-round #5): serve a facade-managed summary
+                    # capability extension: serve a facade-managed summary
                     # store over HTTP, so the four streaming stores
                     # the facade can START (start_summary_store) are
                     # also READABLE without Python access — the
@@ -239,7 +238,7 @@ class TelemetryHttpServer:
                     # (topk|quantile|state|theta), optional ?name=
                     # the named instance; kind-specific knobs map
                     # 1:1 onto engine.serve_summary, which RAISES on
-                    # knobs the kind cannot honor (ADVICE r17) — that,
+                    # knobs the kind cannot honor — that,
                     # a malformed knob and the store's own
                     # not-started-yet errors map to 400 like /sql.
                     # Output is O(stored cells).
@@ -280,8 +279,8 @@ class TelemetryHttpServer:
                     )
                     return
                 if url.path == "/latest":
-                    # capability extension (round 8): current state —
-                    # latest row per series. Round 9: engine.latest()
+                    # capability extension: current state —
+                    # latest row per series. engine.latest()
                     # serves the streaming last-value SNAPSHOT when one
                     # is committed (O(#series), no history scan — the
                     # route a dashboard polls must not pay the
@@ -292,7 +291,7 @@ class TelemetryHttpServer:
                     # row per series, so the row cap bounds driver
                     # memory.
                     sid = qs.get("timeseries_id", [None])[0]
-                    # ?prefer_snapshot=false (ADVICE r9 #2): the
+                    # ?prefer_snapshot=false: the
                     # _batch_ingested mixed-path guard is per-engine-
                     # instance, so a warehouse some OTHER process
                     # batch-appends into can serve a stale streaming

@@ -42,6 +42,9 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
+    # testdata has shipped events.ts as TIMESTAMP(NANOS), which Spark
+    # refuses unless it reads them as longs; queries.T() normalizes both.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # INT96 (the legacy default) carries NO parquet min/max statistics,
@@ -107,6 +110,8 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         "spark.sql.parquet.outputTimestampType",
         "spark.sql.execution.arrow.pyspark.enabled",
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.shuffle.partitions",
     ):
         try:
             spark.conf.set(k, _DEFAULT_CONF.get(k, "true"))

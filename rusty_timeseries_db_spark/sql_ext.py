@@ -22,12 +22,11 @@ raises ``ValueError`` rather than mis-parsing):
         ON <eq> [AND <eq>]... AND <ineq>
     [WHERE/GROUP BY/ORDER BY/... rest passes through]
 
-DuckDB join-type parity (round 12): bare ``ASOF JOIN`` is INNER —
-left rows with no right match drop; ``ASOF LEFT JOIN`` keeps them
-with NULL payloads. (Before r12 the bare spelling behaved as LEFT —
-the pandas default of the underlying operator; ported DuckDB
-statements now get DuckDB answers, and both forms are oracle-paired
-against DuckDB running the ORIGINAL spelling natively.)
+DuckDB join-type parity: bare ``ASOF JOIN`` is INNER — left rows
+with no right match drop; ``ASOF LEFT JOIN`` keeps them with NULL
+payloads (not the pandas LEFT default of the underlying operator), so
+ported DuckDB statements get DuckDB answers; both forms are
+oracle-paired against DuckDB running the ORIGINAL spelling natively.
 
 - ``<eq>``: ``lalias.k = ralias.k`` — same column name on both sides
   (the as-of key);
@@ -62,7 +61,7 @@ _VIEW_SEQ = itertools.count()
 #: again) must not restore the log level while an outer probe is
 #: still in flight. `_probe_prior_level` holds the level captured
 #: when the OUTERMOST probe turned the logger OFF, restored when the
-#: depth returns to 0 (ADVICE r17 — no hardcoded ERROR restore).
+#: depth returns to 0 (no hardcoded ERROR restore).
 _PROBE_DEPTH_LOCK = threading.Lock()
 _probe_depth = 0
 _probe_prior_level: str | None = None
@@ -89,9 +88,9 @@ def _get_listener_bus_level(spark: SparkSession) -> str | None:
     (inherited from an ancestor config when not explicitly set), or
     None where the JVM gateway is unavailable — captured before the
     probe window turns the logger OFF so restore puts back what the
-    deployment actually configured, not a hardcoded ERROR (ADVICE
-    r17: a user running this logger at WARN/DEBUG for their own
-    diagnostics would otherwise come out of every probe at ERROR)."""
+    deployment actually configured, not a hardcoded ERROR (a user
+    running this logger at WARN/DEBUG for their own diagnostics would
+    otherwise come out of every probe at ERROR)."""
     try:
         jvm = spark.sparkContext._jvm
         return str(
@@ -127,8 +126,8 @@ def _quiet_probe_errors(spark: SparkSession):
     not a user error.
 
     Also silences the JVM-side ``ExecutionListenerBus`` logger for the
-    window, draining the async bus before restoring (round 17 —
-    VERDICT r16 next-round #2): a probe's failed analysis posts a
+    window, draining the async bus before restoring: a probe's failed
+    analysis posts a
     failed-execution event, and once any ``Observation`` has run in
     the session, Spark 4's ObservationManager listener re-analyzes the
     failed plan inside ``onFailure`` and throws — the bus then logs a
@@ -138,8 +137,8 @@ def _quiet_probe_errors(spark: SparkSession):
     the moment the level restores), reentrancy-counted so nested
     probes don't un-suppress an outer window, and restores the level
     that was configured BEFORE the window (captured at the outermost
-    entry — ADVICE r17; previously a hardcoded ERROR, wrong for a
-    deployment running this logger at WARN/DEBUG).
+    entry; a hardcoded ERROR would be wrong for a deployment running
+    this logger at WARN/DEBUG).
 
     Known blind spot, accepted: the log4j OFF is PROCESS-GLOBAL for
     the window (log4j levels cannot be thread-scoped the way the
@@ -155,13 +154,13 @@ def _quiet_probe_errors(spark: SparkSession):
 
     Without this, every correlated nested-QUALIFY
     statement dumps two full ERROR stack traces into otherwise-clean
-    parity/audit logs, burying real failures (VERDICT r15 next-round
-    #5). The logger is the PYTHON-side structured logger Spark 4's
+    parity/audit logs, burying real failures. The logger is the
+    PYTHON-side structured logger Spark 4's
     error capture emits through (pyspark.logger machinery — the JSON
     lines carry the Py4J exception), and it logs in the thread whose
     ``spark.sql`` call raised, so suppression is a ``logging.Filter``
-    keyed on THIS thread's ident (review round 16: disabling the
-    process-global logger swallowed a concurrent thread's genuine
+    keyed on THIS thread's ident (disabling the process-global logger
+    would swallow a concurrent thread's genuine
     AnalysisException traces for the probe's duration) — restored on
     exit; the raised AnalysisException still carries the full message
     either way."""
@@ -171,7 +170,7 @@ def _quiet_probe_errors(spark: SparkSession):
     # CREATION, so a plain logging.getLogger here (if it ran first)
     # would pin a vanilla Logger whose _log rejects the errorClass=
     # kwarg pyspark passes — a TypeError the old disabled=True
-    # suppression masked by short-circuiting before _log (round 17)
+    # suppression masked by short-circuiting before _log
     try:
         from pyspark.logger import PySparkLogger
 
@@ -308,7 +307,7 @@ def _rewrite_asof(
         right_ts=right_ts,
         right_order=right_order,
         direction=direction,
-        # DuckDB semantics (round 12): bare ASOF JOIN is INNER —
+        # DuckDB semantics: bare ASOF JOIN is INNER —
         # unmatched left rows drop; ASOF LEFT JOIN keeps them with
         # NULL payloads. (The Python asof_join API defaults to
         # how="left" for pandas.merge_asof parity; the SQL surface
@@ -333,7 +332,7 @@ def _mask_string_literals(query: str) -> str:
     Handles the two escape forms Spark accepts: doubled quotes (``''``
     — the toggle scan pairs them naturally) and backslash escapes
     (``'it\\'s'`` — a backslashed quote inside a literal must NOT flip
-    the in-string state, ADVICE r7). Positions are preserved — indices
+    the in-string state). Positions are preserved — indices
     found on the mask slice the original correctly."""
     out = list(query)
     i = 0
@@ -382,7 +381,7 @@ def _top_level_qualify_matches(masked: str) -> list[re.Match]:
 
 
 #: '<name> [(cols)] AS (' — CTE definitions, INCLUDING the column-list
-#: form ``WITH t(a, b) AS (...)`` (3rd review pass: the plain form
+#: form ``WITH t(a, b) AS (...)`` (the plain form
 #: missed it, letting a column-list CTE shadow a temp view silently).
 #: Also matches WINDOW w AS (...), which only makes the scope guard
 #: more conservative.
@@ -398,7 +397,7 @@ def _find_deepest_nested_qualify(
 ) -> tuple[int, int] | None:
     """Locate the DEEPEST subquery-nested ``kw_re`` occurrence of the
     masked statement (QUALIFY by default; the DISTINCT ON rewrite
-    reuses it with its own keyword, round 12): returns
+    reuses it with its own keyword): returns
     (open_paren_idx, close_paren_idx) of its enclosing parenthesized
     block, or None when every occurrence sits at paren depth 0 (or
     there is none). Deepest-first guarantees the extracted block
@@ -436,8 +435,7 @@ def _find_deepest_nested_qualify(
 
 
 def _extract_nested_qualify(spark: SparkSession, query: str) -> str:
-    """Nested-QUALIFY support (round 10; the rewrite deferred from r9
-    at the old raise site): each parenthesized subquery containing a
+    """Nested-QUALIFY support: each parenthesized subquery containing a
     QUALIFY — derived table, IN/EXISTS body, scalar subquery, CTE
     body — is extracted INNERMOST-FIRST, run through the block-level
     rewrite recursively (``sql_with_qualify`` on the block text, so
@@ -458,7 +456,7 @@ def _extract_nested_qualify(spark: SparkSession, query: str) -> str:
     referencing outer-query columns — fall back to a pure-text rewrite
     left in place (``_textual_qualify_rewrite``), so those names
     resolve in their original scope when the full statement is planned
-    (code-review r10; the view path is preferred when it works because
+    (the view path is preferred when it works because
     its runtime two-form retry is more robust than the textual
     heuristic)."""
     while True:
@@ -473,7 +471,7 @@ def _extract_nested_qualify(spark: SparkSession, query: str) -> str:
                 f"block {block[:80]!r}... does not start a SELECT/WITH/"
                 "VALUES/TABLE subquery"
             )
-        # Scope guard (2nd review pass; refined twice since): a block
+        # Scope guard: a block
         # referencing a CTE name defined ELSEWHERE in the statement
         # must not be planned standalone when that name ALSO resolves
         # in the session catalog (engine.register_views registers
@@ -485,7 +483,7 @@ def _extract_nested_qualify(spark: SparkSession, query: str) -> str:
         # guard checks catalog existence FIRST (cheap, precise) and
         # only then word-matches the block — the broad word match is
         # safe here because it is scoped to names that genuinely exist
-        # as tables (4th review pass: a FROM/JOIN-position regex
+        # as tables (a FROM/JOIN-position regex
         # missed aliased comma-list and backticked references — false
         # NEGATIVES in the unsafe direction; the unscoped 2nd-pass
         # word match false-POSITIVED on select aliases and broke
@@ -600,7 +598,7 @@ def sql_with_qualify(spark: SparkSession, query: str) -> DataFrame:
     Exactly one QUALIFY per query block is supported (one top-level
     clause, plus any number of subquery-nested ones — each nested
     block is extracted and rewritten recursively by
-    ``_extract_nested_qualify``, round 10). Statements without the
+    ``_extract_nested_qualify``). Statements without the
     clause pass straight to ``spark.sql``.
     """
     # detect on a literal-masked copy: QUALIFY inside a string literal
@@ -651,7 +649,7 @@ def sql_with_qualify(spark: SparkSession, query: str) -> DataFrame:
             raise
         # the SECOND form is the final fallback, not a probe — when it
         # fails too, that failure is the user-facing one, so its ERROR
-        # trace stays LOUD in the logs (review round 16; only the
+        # trace stays LOUD in the logs (only the
         # first attempt's expected routing failure is suppressed)
         try:
             return spark.sql(second).drop("__qualify")
@@ -696,7 +694,7 @@ def _prefers_inline_form(head: str, pred: str) -> bool:
       the order;
     - an AGGREGATE call under a GROUP BY head (``rank() OVER (ORDER
       BY sum(v))``) — the aggregate's input columns don't survive the
-      boundary either (round 10).
+      boundary either.
     """
     masked_pred = _mask_string_literals(pred)
     if re.search(r"\b[A-Za-z_]\w*\.[A-Za-z_]\w*\b(?!\s*\()", masked_pred):
@@ -845,7 +843,7 @@ def is_query_statement(query: str) -> bool:
     which only occur inside those). DDL/DML (DROP, INSERT OVERWRITE,
     CREATE ... LOCATION) and multi-statement scripts return False.
 
-    Used by the HTTP /sql route (ADVICE r7): ``spark.sql`` EXECUTES
+    Used by the HTTP /sql route: ``spark.sql`` EXECUTES
     DDL/DML eagerly at call time, so the gate must be textual and run
     BEFORE the dialect entry point ever sees the statement. Comments,
     string literals ('/" with escapes), and backquoted identifiers are
@@ -870,20 +868,20 @@ def is_query_statement(query: str) -> bool:
         count=1,
         flags=re.IGNORECASE,
     )
-    # SUMMARIZE <table> (r12): strictly a read (routes to the column
+    # SUMMARIZE <table>: strictly a read (routes to the column
     # profiler) — the narrow regex admits only one bare identifier, so
     # nothing writable can hide behind the keyword
     if _SUMMARIZE_RE.match(head):
         return True
-    # PIVOT <table> ON <col> USING ... (r13): a read (routes to
+    # PIVOT <table> ON <col> USING ...: a read (routes to
     # groupBy().pivot()); the strict head regex pins the shape and the
     # write-keyword scan below rejects anything writable in USING
     if _PIVOT_HEAD_RE.match(head):
         return not _has_top_level_write_kw(head)
-    # UNPIVOT <table> ON ... (r13): same admission rule
+    # UNPIVOT <table> ON ...: same admission rule
     if _UNPIVOT_HEAD_RE.match(head):
         return not _has_top_level_write_kw(head)
-    # FROM-first syntax (round 14): a leading FROM is a read — the
+    # FROM-first syntax: a leading FROM is a read — the
     # dialect rewrites it to SELECT-first before spark.sql ever runs
     # it — but, like WITH, the tail could still smuggle DML keywords,
     # so the depth-0 write scan below stays in force
@@ -1001,9 +999,7 @@ def _rewrite_distinct_on(query: str) -> str:
 
 
 def _rewrite_distinct_on_nested(query: str) -> str:
-    """Nested DISTINCT ON support (round 12 — VERDICT r11 next-round
-    #2, discharging the honest raise at the old depth-0 guard): each
-    parenthesized subquery containing a ``SELECT DISTINCT ON`` —
+    """Nested DISTINCT ON support: each parenthesized subquery containing a ``SELECT DISTINCT ON`` —
     derived table, CTE body, IN/EXISTS body, scalar subquery — is
     located DEEPEST-FIRST with the same block finder the nested
     QUALIFY extraction uses, and its text is rewritten IN PLACE by
@@ -1178,7 +1174,7 @@ def _from_table_list(masked: str, start: int) -> list[str]:
 
 def _rewrite_columns(spark: SparkSession, query: str) -> str:
     """DuckDB's ``COLUMNS('regex')`` / ``COLUMNS(*)`` star variant
-    (round 12): expand each select item containing a COLUMNS call
+    expand each select item containing a COLUMNS call
     into one copy PER MATCHING COLUMN of the FROM table, with the
     surrounding expression applied to each — ``SUM(COLUMNS('^l_'))``
     becomes ``SUM(l_a) AS l_a, SUM(l_b) AS l_b, …``. Semantics pinned
@@ -1188,7 +1184,7 @@ def _rewrite_columns(spark: SparkSession, query: str) -> str:
     matter how the expression wraps it (verified: DuckDB names
     ``round(sum(COLUMNS(...)))`` outputs just the column).
 
-    FROM binding (round 13 — VERDICT r12 next-round #5): a depth-0
+    FROM binding: a depth-0
     FROM list of plain tables/views — comma joins and
     ``[INNER|LEFT|RIGHT|FULL [OUTER]|CROSS] JOIN … ON`` chains —
     expands over the CONCATENATED column lists in FROM order, which
@@ -1319,7 +1315,7 @@ def _split_top_level_commas(masked: str, text: str) -> list[str]:
 
 def _rewrite_star_replace(query: str) -> str:
     """DuckDB's ``SELECT * REPLACE (expr AS col, ...)`` → Spark's
-    ``* EXCEPT (col, ...), expr AS col, ...`` (round 12; Spark has
+    ``* EXCEPT (col, ...), expr AS col, ...`` (Spark has
     EXCEPT but no REPLACE). Purely textual and literal-masked; the
     ``alias.* REPLACE (...)`` form works (the ``*`` the regex anchors
     on is the one REPLACE follows), and the bare function call
@@ -1341,7 +1337,7 @@ def _rewrite_star_replace(query: str) -> str:
             # a star MODIFIER's * follows SELECT / ',' / '(' / '.'
             # (alias.*); a * preceded by an identifier, literal, or ')'
             # is MULTIPLICATION and 'replace(' is the plain function —
-            # pass through (review round 12: 'amount * replace(s, a, b)'
+            # pass through ('amount * replace(s, a, b)'
             # must not trip the rewrite)
             j = cand.start() - 1
             while j >= 0 and masked[j].isspace():
@@ -1407,19 +1403,19 @@ _SUMMARIZE_RE = re.compile(
 
 
 def _maybe_summarize(spark: SparkSession, query: str):
-    """DuckDB's ``SUMMARIZE <table>`` verb (round 12): routed to the
+    """DuckDB's ``SUMMARIZE <table>`` verb: routed to the
     engine's one-pass column profiler (operators/profile.py
     profile_columns — count / nulls / distinct / numeric min-max per
-    column, ONE aggregate job over the table; since round 13 with the
-    q25/q50/q75 approx-percentile trio in the same pass, closing
-    DuckDB's SUMMARIZE column set). The output schema remains this
+    column, ONE aggregate job over the table, with the q25/q50/q75
+    approx-percentile trio in the same pass, closing DuckDB's
+    SUMMARIZE column set). The output schema remains this
     engine's profile row ordering, and the quartile VALUES are this
     engine's sketch (DuckDB's SUMMARIZE quotes its own) — the verb is
     paste-compatibility sugar, documented as such. Returns None when
     the statement is not a SUMMARIZE."""
     # strip comments exactly like the read-only gate does — the gate
     # admits "SUMMARIZE t -- note" as a read, so the executor must
-    # recognize the same spelling (review round 12)
+    # recognize the same spelling
     head = _mask_string_literals(query)
     head = re.sub(r"--[^\n]*", " ", head)
     head = re.sub(r"/\*.*?\*/", " ", head, flags=re.DOTALL)
@@ -1482,7 +1478,7 @@ _PIVOT_MAX_VALUES = 10_000
 
 
 def _maybe_pivot(spark: SparkSession, query: str):
-    """DuckDB's ``PIVOT`` statement (round 13): ``PIVOT <table> ON
+    """DuckDB's ``PIVOT`` statement: ``PIVOT <table> ON
     <col> USING <agg> [AS <name>][, ...] [GROUP BY <cols>]`` routed to
     ``df.groupBy(...).pivot(col, values).agg(...)``. Semantics pinned
     against DuckDB native behavior (verified on duckdb in this repo's
@@ -1503,13 +1499,13 @@ def _maybe_pivot(spark: SparkSession, query: str):
     Values resolve at rewrite time (one distinct scan of the pivot
     column — dimension-sized by the nature of a pivot; > 10k distinct
     values raises like Spark's own ``spark.sql.pivotMaxValues``) —
-    OR, since round 14, an explicit ``ON <col> IN (v1, v2, ...)``
+    OR an explicit ``ON <col> IN (v1, v2, ...)``
     list (DuckDB's own spelling) pins the values with NO scan: output
     columns follow the list's order, rows with other values drop
     (both engines agree), and EXPLAIN PIVOT becomes genuinely
     plan-only. IN items must be literals (strings/numbers/booleans).
 
-    Multi-column ``ON c1[, c2 ...]`` (round 14, second wave): DuckDB
+    Multi-column ``ON c1[, c2 ...]``: DuckDB
     pivots on the CROSS PRODUCT of the columns' value sets, columns
     named ``<v1>_<v2>[_<alias>]`` in per-column (sorted / IN) order —
     implemented by pivoting a NULL-propagating combo column whose
@@ -1529,8 +1525,8 @@ def _maybe_pivot(spark: SparkSession, query: str):
             "ON columns; derived tables and expression ON raise)"
         )
     table_name = m.group(1)
-    # the ON segment runs to the first depth-0 USING (round 14:
-    # multi-column ON — DuckDB pivots on the CROSS PRODUCT of the
+    # the ON segment runs to the first depth-0 USING (multi-column ON —
+    # DuckDB pivots on the CROSS PRODUCT of the
     # columns' value sets, naming columns <v1>_<v2>[_<alias>])
     us = None
     for um in re.finditer(r"\bUSING\b", head, re.IGNORECASE):
@@ -1620,7 +1616,7 @@ def _maybe_pivot(spark: SparkSession, query: str):
     if len(aggs) > 1 and any(a is None for _, a in aggs):
         # covers every ON form, incl. multi-column ON where the
         # display-name rule would otherwise interpolate None into the
-        # per-combo column name (ADVICE r14 — pinned by
+        # per-combo column name (pinned by
         # test_pivot_multi_on_unaliased_multi_agg_raises)
         raise ValueError(
             "several PIVOT aggregates need an AS <name> each (Spark "
@@ -1655,12 +1651,12 @@ def _maybe_pivot(spark: SparkSession, query: str):
 
     if len(on_specs) == 1:
         # single-column ON: pivot directly on the column (typed value
-        # matching, the r13 path)
+        # matching)
         pivot_col = on_specs[0][0]
         values = per_col_values[0]
         src = t
     else:
-        # multi-column ON (round 14, DuckDB parity): pivot on a combo
+        # multi-column ON (DuckDB parity): pivot on a combo
         # column — each ON column maps its LISTED values to a
         # LENGTH-PREFIXED encoding of their DuckDB name spelling via
         # a typed CASE chain (never a raw cast, so literal spelling
@@ -1668,7 +1664,7 @@ def _maybe_pivot(spark: SparkSession, query: str):
         # any unlisted/NULL ON value gets a NULL combo and drops,
         # exactly DuckDB. The cell IDENTITY is the encoded tuple —
         # the length prefix makes it collision-free even when values
-        # contain '_' (review round 14: 'a'+'b_c' vs 'a_b'+'c' must
+        # contain '_' ('a'+'b_c' vs 'a_b'+'c' must
         # stay SEPARATE cells; their display names collide and are
         # deduplicated with _1/_2 suffixes, exactly DuckDB). The
         # values list is the columns' CROSS PRODUCT in per-column
@@ -1711,7 +1707,7 @@ def _maybe_pivot(spark: SparkSession, query: str):
         # referenced in the PIVOT statement
         used = {col for col, _ in on_specs} | {pivot_col}
         # scan the MASKED expr text: a column name inside a string
-        # literal is not a reference (review round 13 — DuckDB keeps
+        # literal is not a reference (DuckDB keeps
         # grouping by a column that only a literal mentions)
         for expr_masked in aggs_masked:
             for c in t.columns:
@@ -1758,7 +1754,7 @@ def _maybe_pivot(spark: SparkSession, query: str):
     if len(aggs) == 1 and aggs[0][1] is not None:
         # Spark names single-aggregate pivot columns by value alone,
         # even when aliased; DuckDB appends _<alias>. Rename
-        # POSITIONALLY (review round 13): withColumnRenamed would
+        # POSITIONALLY: withColumnRenamed would
         # no-op on boolean values (Spark names 'true', str(True) is
         # 'True') and would also rename a group column that string-
         # collides with a pivot value. Column order out of pivot is
@@ -1781,7 +1777,7 @@ _UNPIVOT_INTO_RE = re.compile(
 
 
 def _maybe_unpivot(spark: SparkSession, query: str):
-    """DuckDB's ``UNPIVOT`` statement (round 13, the PIVOT verb's
+    """DuckDB's ``UNPIVOT`` statement (the PIVOT verb's
     inverse): ``UNPIVOT <table> ON <col>[, ...] [INTO NAME <n> VALUE
     <v>]`` routed to ``DataFrame.unpivot`` — id columns are every
     table column NOT listed in ON (DuckDB's rule, table order kept),
@@ -1874,7 +1870,7 @@ _FF_CLAUSE_RE = re.compile(
 
 
 def _rewrite_from_first(query: str) -> str:
-    """DuckDB's FROM-first syntax (round 14): a statement may LEAD with
+    """DuckDB's FROM-first syntax: a statement may LEAD with
     its FROM clause — ``FROM t``, ``FROM t WHERE ...``, and
     ``FROM t [JOIN ...] SELECT cols WHERE ... ORDER BY ...`` are all
     admitted, with DuckDB's exact semantics (a missing SELECT clause
@@ -1911,7 +1907,7 @@ def _rewrite_from_first(query: str) -> str:
     # a set-operation keyword BETWEEN the FROM head and the first
     # depth-0 SELECT means that SELECT belongs to the second branch
     # ('FROM a UNION ALL SELECT ...') — reordering would corrupt the
-    # statement, so reject it honestly instead (review round 14)
+    # statement, so reject it honestly instead
     for sm in re.finditer(
         r"\b(?:UNION|INTERSECT|EXCEPT)\b", masked[m.end():sel.start()],
         re.IGNORECASE,
@@ -1961,16 +1957,16 @@ def sql(
     textually before any QUALIFY), then the QUALIFY rewrite on the
     rewritten statement, then plain ``spark.sql``. They compose —
     ``FROM a ASOF JOIN b ... QUALIFY row_number() OVER (...) = 1`` is
-    the natural "latest reading per sensor, keep rank 1" TSDB query
-    (VERDICT r7 gap #3). Statements using none pass through unchanged
+    the natural "latest reading per sensor, keep rank 1" TSDB query.
+    Statements using none pass through unchanged
     (GROUP BY ALL / ORDER BY ALL / ``* EXCEPT`` need no rewrite —
     Spark parses those natively). ``SUMMARIZE <table>`` routes to the
-    column profiler (r12 — see ``_maybe_summarize``). FROM-first
-    statements (``FROM t [SELECT ...] ...``, r14 — see
+    column profiler (see ``_maybe_summarize``). FROM-first
+    statements (``FROM t [SELECT ...] ...`` — see
     ``_rewrite_from_first``) are canonicalized to SELECT-first before
     any other pass runs, so every dialect feature composes with them.
 
-    ``EXPLAIN [EXTENDED|CODEGEN|COST|FORMATTED] <stmt>`` (r13): the
+    ``EXPLAIN [EXTENDED|CODEGEN|COST|FORMATTED] <stmt>``: the
     prefix is peeled, the inner statement goes through THIS function
     recursively — so every dialect feature (ASOF/QUALIFY/DISTINCT
     ON/COLUMNS/star modifiers AND the SUMMARIZE/PIVOT/UNPIVOT verbs)
@@ -1978,8 +1974,8 @@ def sql(
     through the same JVM path ``DataFrame.explain`` uses, returned as
     Spark's native 1-row ``(plan string)`` EXPLAIN shape. Nothing is
     WRITTEN (the read-only gate below rejects DDL/DML), and for every
-    verb except one nothing executes at all. The exception (ADVICE
-    r13 #2): ``EXPLAIN PIVOT`` — a PIVOT statement without an IN list
+    verb except one nothing executes at all. The exception: ``EXPLAIN
+    PIVOT`` — a PIVOT statement without an IN list
     cannot even be PLANNED without knowing the pivot values, so
     ``_maybe_pivot``'s value discovery runs its distinct scan at
     rewrite time exactly as the bare statement would; on a large
@@ -1993,7 +1989,7 @@ def sql(
     # match on a comment-blanked masked copy (length-preserving, so
     # em.end() indexes into the original): the gate admits
     # "/* audit */ EXPLAIN ..." and this entry must recognize the
-    # same spelling (review round 13)
+    # same spelling
     em = re.match(
         r"\s*EXPLAIN(?:\s+(EXTENDED|CODEGEN|COST|FORMATTED))?\s+",
         _blank_comments_preserving(_mask_string_literals(query)),
@@ -2014,7 +2010,7 @@ def sql(
             inner_df._jdf.queryExecution(), mode
         )
         return spark.createDataFrame([(text,)], "plan string")
-    # FROM-first syntax (round 14, DuckDB parity): reorder before any
+    # FROM-first syntax (DuckDB parity): reorder before any
     # verb/rewrite looks at the statement — downstream passes only
     # ever see the canonical SELECT-first spelling
     query = _rewrite_from_first(query)

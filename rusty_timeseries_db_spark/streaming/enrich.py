@@ -1,5 +1,5 @@
 """Streaming point-in-time feature enrichment — the serving face of
-:func:`..operators.asof.pit_join` (round 12).
+:func:`..operators.asof.pit_join`.
 
 An online training-data or feature-serving pipeline does not batch-join
 after the fact: events arrive continuously and each must pick up its
@@ -55,7 +55,7 @@ def start_enriched_sink(
     keep the features they were enriched with — an audit property,
     not a bug: re-enriching history is a batch backfill's job).
     ``with_batch_id=True`` stamps each landed row with its micro-batch
-    id (round 13 — the corpus sink's certification column: lets an
+    id (the corpus sink's certification column: lets an
     oracle attribute every row to the batch that enriched it)."""
     from pyspark.sql import functions as F
 

@@ -1,6 +1,6 @@
 """Streaming search-index maintenance — keep a persisted
 :class:`..operators.retrieval.Bm25Index` current as documents stream
-in (round 13; the serving loop the persisted index exists for:
+in (the serving loop the persisted index exists for:
 ingest → index → query without ever re-scanning the corpus).
 
 Shape: the index is BUILT once from the initial corpus (build() — the
@@ -50,8 +50,8 @@ def apply_bm25_batch(
     of the sink so the replay contract is unit-testable without a
     streaming harness.
 
-    ``removed_ids`` (review round 13; unified with the batch door in
-    round 14 — ONE policy knob, implemented once in
+    ``removed_ids`` (unified with the batch door — ONE policy knob,
+    implemented once in
     ``Bm25Index.add``): what to do when the batch carries an id that
     was ``remove()``d — ``"skip"`` (streaming default) drops those
     rows and applies the rest, since a stream cannot raise its way
@@ -135,7 +135,7 @@ def apply_ivf_batch(
     ``IvfIndex.should_rebuild`` / the query-time warning fire off the
     same ``n_added/n_rows`` ratio this sink keeps bumping, so drift
     stays observable in streaming deployments too. ``removed_ids``
-    (round 14, now that ``IvfIndex`` has the deletion lifecycle): same
+    (now that ``IvfIndex`` has the deletion lifecycle): same
     skip|error|readmit policy as the BM25 sink, streaming default
     ``"skip"`` — a re-published removed vector must not poison-pill
     the stream on the re-add guard."""
@@ -275,8 +275,8 @@ def apply_index_ops_batch(
     removed_ids: str = "skip",
 ) -> tuple[int, int]:
     """Apply ONE micro-batch that mixes document ADDS and erasure
-    REMOVES (round 14 — SCALE.md r15 candidate #4: ingest and erasure
-    sharing one topic): rows are routed by ``op_col`` (values ``add``
+    REMOVES (ingest and erasure sharing one topic): rows are routed by
+    ``op_col`` (values ``add``
     / ``remove``; anything else raises — an unknown op on an index-
     mutation topic is corruption, not data). Returns
     ``(n_added, n_removed)``.

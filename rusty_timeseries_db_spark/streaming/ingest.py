@@ -23,17 +23,17 @@ the id to a manifest via atomic rename. Readers
 so a torn write from a crash mid-batch is invisible and zero duplicate
 rows survive a replay — no reader-side dedup needed.
 
-**Manifest/snapshot I/O is storage-agnostic** (round 9, closing
-VERDICT r8 what's-wrong #2): every manifest read/write and the
+**Manifest/snapshot I/O is storage-agnostic**: every manifest read/write and
+the
 snapshot sweeper go through the scheme-resolved Hadoop FS layer
 (fsutil.py) — the same treatment the rollup high-water mark and IVF
-manifest got in round 8 — so the exactly-once sink and the last-value
+manifest got — so the exactly-once sink and the last-value
 cache run against ``hdfs://`` / ``s3a://`` warehouses, not just a
 driver-mounted POSIX path. Commits use fsutil's VERSIONED manifest
 protocol (fresh-name rename per write — old-or-new atomicity with no
 delete/rename window; see fsutil.py), with a read-side fallback to the
-pre-round-9 single-file manifests for warehouses written by earlier
-code. Since round 11 every exactly-once manifest write is a versioned
+legacy single-file manifests for warehouses written by earlier
+code. Every exactly-once manifest write is a versioned
 COMPARE-AND-SWAP (sink commit: append-only merge-and-retry;
 retention: rescan-and-retry; compaction: carry-forward merge), so the
 sink and ONE maintenance op may safely interleave — see SCALE.md
@@ -120,7 +120,7 @@ def normalize_batch(batch: DataFrame, batch_id: int) -> DataFrame:
 
 
 def _repair_late_rollup_days(rollup, norm) -> None:
-    """Writer-side late-data invalidation (round 15): the sink KNOWS
+    """Writer-side late-data invalidation: the sink KNOWS
     which days its batch touched — any day strictly below the
     rollup's high-water mark was already materialized, and
     ``refresh()`` deliberately never revisits it (its filter starts
@@ -185,7 +185,7 @@ def start_telemetry_sink(
     Implemented as ``foreachBatch`` so each micro-batch runs the shared
     batch normalization (incl. ``ingest_seq`` assignment)."""
     path = os.path.join(warehouse_dir, "telemetry")
-    # misconfiguration guards (code-review r8): asking for quarantine
+    # misconfiguration guards: asking for quarantine
     # without the reader flag would silently ingest garbage as all-NULL
     # rows — the exact failure the feature prevents; the reverse
     # combination silently discards bad lines, which is at least
@@ -253,11 +253,10 @@ def start_telemetry_sink(
 def _read_legacy_manifest_or_raise(
     spark: SparkSession, legacy_path: str, what: str, consequence: str
 ) -> dict | None:
-    """Read a pre-round-9 single-file manifest: None when absent (cold
+    """Read a legacy single-file manifest: None when absent (cold
     start), its dict when readable, and an actionable IOError when it
     EXISTS but cannot be parsed — one implementation of the
-    damaged-manifest contract for both sinks (code-review r9, 3rd
-    pass)."""
+    damaged-manifest contract for both sinks."""
     try:
         return read_json_manifest(spark, legacy_path)
     except ValueError as e:  # json.JSONDecodeError: torn bytes
@@ -293,15 +292,15 @@ def _read_manifest_versioned(
 ) -> tuple[int | None, dict]:
     """(manifest version, ledger dict): the version is the CAS token a
     read-modify-write maintenance job passes back to
-    ``_write_manifest(expected_version=...)`` (round 11 — VERDICT r10
-    next-round #3); None = no versioned manifest committed yet (cold
-    start, or a pre-round-9 legacy single-file manifest). A manifest
+    ``_write_manifest(expected_version=...)``; None = no versioned manifest
+    committed yet (cold
+    start, or a legacy single-file manifest). A manifest
     that EXISTS but cannot be read raises (from the versioned reader,
     or the wrapper below for the legacy single file): degrading a
     damaged ledger to 'empty' would let the next commit write a fresh
     manifest listing only itself — permanently hiding every committed
     directory and re-admitting replayed batches as duplicates
-    (code-review r9, second pass). A crash keeps the data;
+    (second pass). A crash keeps the data;
     retry/repair resolves it."""
     spark = _session(spark)
     consequence = (
@@ -312,7 +311,7 @@ def _read_manifest_versioned(
     got = read_versioned_manifest_versioned(spark, path, "_manifest")
     if got is not None:
         version, m = got
-    else:  # pre-round-9 single-file manifest (legacy layout)
+    else:  # legacy single-file manifest
         m = _read_legacy_manifest_or_raise(
             spark, os.path.join(path, "_manifest.json"),
             "exactly-once manifest", consequence,
@@ -328,12 +327,12 @@ def _read_manifest_versioned(
             "committed_ids": list(m["committed_ids"]),
             "compact_seq": int(m.get("compact_seq", 0)),
             "fingerprints": dict(m.get("fingerprints", {})),
-            # round 10 (ADVICE r9 #4): compaction folds per-batch
+            # compaction folds per-batch
             # ledger entries below its point into (hwm, folded_fps) so
             # the per-micro-batch manifest rewrite stops growing one
             # dict entry per batch forever — ids <= hwm are committed
             # by definition, their content fingerprints pooled in one
-            # flat set. Pre-r10 manifests: no fold yet.
+            # flat set. Older manifests: no fold yet.
             "hwm": int(m.get("hwm", -1)),
             "folded_fps": list(m.get("folded_fps", [])),
         }
@@ -358,7 +357,7 @@ def _write_manifest(
     compare-and-swap that raises
     :class:`~..fsutil.ManifestVersionConflict` when another writer
     committed since that read. EVERY exactly-once ledger writer (sink
-    commit, retention, compaction) passes it since round 11 — see the
+    commit, retention, compaction) passes it — see the
     module docstring's concurrency note; the omit-default exists for
     the non-ledger manifests (last-value pointer: genuinely single
     writer)."""
@@ -379,7 +378,7 @@ _CAS_ATTEMPTS = 6
 
 #: materialization guard for the diagnostic id list below: past this
 #: many folded batches, return the capped prefix + a warning instead of
-#: allocating O(hwm) ints (VERDICT r10 what's-wrong #2)
+#: allocating O(hwm) ints
 _COMMITTED_IDS_CAP = 100_000
 
 
@@ -391,7 +390,7 @@ def committed_batch_summary(
     folds the dense prefix into the high-water mark), plus the
     explicitly listed ids above it. O(#unfolded batches) however long
     the stream has run — the monitoring-safe alternative to
-    :func:`committed_batch_ids` (round 11)."""
+    :func:`committed_batch_ids`."""
     man = _read_manifest(path, spark)
     return {
         "hwm": man["hwm"],
@@ -410,8 +409,8 @@ def committed_batch_ids(
     densely, so the implied set is exactly ``range(hwm+1)``). This is
     a diagnostic helper — the commit path itself only compares against
     ``hwm`` — and on a manifest with millions of folded batches the
-    materialized list is CAPPED at {cap} ids with a warning (VERDICT
-    r10 what's-wrong #2: monitoring code calling the public helper
+    materialized list is CAPPED at {cap} ids with a warning (monitoring code
+    calling the public helper
     must not allocate O(hwm) ints on a long-lived stream); use
     :func:`committed_batch_summary` for the compact (hwm, sparse_ids)
     form that never materializes the dense prefix."""
@@ -466,8 +465,8 @@ def commit_batch_exactly_once(
     zero duplicates in every crash window. Returns True if this call
     performed the write (False = replay skip).
 
-    The replay skip is CONTENT-VERIFIED (round 9 — the exactly-once
-    face of ADVICE r8 #2's checkpoint-loss scenario): the manifest
+    The replay skip is CONTENT-VERIFIED (the exactly-once
+    face of the checkpoint-loss scenario): the manifest
     stores an order-independent payload fingerprint per committed
     batch, and a committed id whose replayed content MATCHES a stored
     fingerprint is skipped, while a committed id delivering NEW
@@ -481,13 +480,13 @@ def commit_batch_exactly_once(
     any number of replays. Legacy manifests without fingerprints keep
     the old skip-on-id behavior (content cannot be verified).
 
-    ``warn_state`` (round 11 — ADVICE r10 #1): a mutable dict scoped
+    ``warn_state``: a mutable dict scoped
     to one sink run latches the new-content warning to fire ONCE per
     run — after a checkpoint reset on a compacted warehouse (large
     hwm) every renumbered batch with genuinely new content sits below
     the fold indefinitely, and re-warning per micro-batch forever
     would drown the one real reset signal (the same perpetual-noise
-    fix the last-value sink's ``_reset_warned`` got in r10). The
+    fix as the last-value sink's ``_reset_warned``). The
     content-addressed write itself still happens every time — only
     the warning is latched. None (standalone/test calls) = warn every
     time.
@@ -537,7 +536,7 @@ def commit_batch_exactly_once(
     if fp is None:
         # common (non-replay) path: fuse the fingerprint aggregation
         # into the write job via observe() — zero extra passes over
-        # the batch (code-review r9); the rare replay path above still
+        # the batch; the rare replay path above still
         # computes it standalone because the skip decision needs it
         # BEFORE any write
         from pyspark.sql import Observation
@@ -553,7 +552,7 @@ def commit_batch_exactly_once(
     if obs is not None:
         got = obs.get
         fp = _format_fp(got["n"], got["h"])
-    # Manifest commit is a compare-and-swap merge (round 11): the sink
+    # Manifest commit is a compare-and-swap merge: the sink
     # is the single WRITER of batches, but retention/compaction are
     # legal concurrent manifest writers now that they CAS — a plain
     # write here could resurrect a dir retention just retired (the
@@ -648,7 +647,7 @@ def compact_exactly_once(
 
     Returns the number of directories folded (0 = nothing to do).
 
-    Concurrency (round 11): the manifest swap is a versioned
+    Concurrency: the manifest swap is a versioned
     compare-and-swap MERGE, like the sink's commit and retention's —
     a live sink may commit new batches during the (long) fold job,
     and the swap then carries those batches' dirs/ids/fingerprints
@@ -671,8 +670,8 @@ def compact_exactly_once(
         .partitionBy("series_bucket")
         .parquet(os.path.join(path, out))
     )
-    # Fold the ledger below the compaction point (round 10, ADVICE r9
-    # #4): the per-batch ids/fingerprint entries collapse into a
+    # Fold the ledger below the compaction point: the per-batch
+    # ids/fingerprint entries collapse into a
     # high-water mark + one pooled fingerprint set, so the JSON the
     # sink rewrites EVERY micro-batch stops growing one dict entry per
     # batch forever. The exactly-once meaning is preserved exactly:
@@ -690,12 +689,12 @@ def compact_exactly_once(
     folded_fps = set(man["folded_fps"])
     for entry in man["fingerprints"].values():
         folded_fps.update(entry)
-    # CAS merge loop (round 11): only the SCANNED snapshot's dirs/ids
+    # CAS merge loop: only the SCANNED snapshot's dirs/ids
     # fold; anything the live sink committed since the scan — new
     # dirs, new ids above the fold, fingerprints appended to old ids
     # by content-addressed replays — is carried forward per-id. On
     # the first pass `fresh` IS the scanned snapshot and every delta
-    # below is empty, reproducing the pre-r11 payload exactly.
+    # below is empty, reproducing the scanned payload exactly.
     fresh_version, fresh = man_version, man
     for _attempt in range(_CAS_ATTEMPTS):
         keep_fps = {}
@@ -743,7 +742,7 @@ def _read_dirs(spark: SparkSession, path: str, dirs: list[str]) -> DataFrame:
     conflicting partition columns). ``series_bucket`` is recovered via
     per-dir partition discovery; the KNOWN stored schema is supplied
     so a committed zero-row dir (no part files) reads as an empty
-    frame instead of failing schema inference (ADVICE r10 #3 — same
+    frame instead of failing schema inference (same
     fix as the retention age scan)."""
     dfs = [
         spark.read.schema(STORED_TELEMETRY_SCHEMA)
@@ -769,9 +768,8 @@ def start_telemetry_sink_exactly_once(
     directories + atomic manifest commit — see
     :func:`commit_batch_exactly_once`.
 
-    ``rollup`` / ``quarantine_dir`` (round 11): the feature asymmetry
-    the r9 guard froze — "exactly-once OR quarantine/rollup, pick
-    one" — is closed:
+    ``rollup`` / ``quarantine_dir``: both compose with exactly-once
+    (no "exactly-once OR quarantine/rollup, pick one"):
 
     - ``quarantine_dir`` gets the EXACTLY-ONCE treatment the data
       itself has: bad lines land in ``{quarantine_dir}/batch_id=<id>``
@@ -805,7 +803,7 @@ def start_telemetry_sink_exactly_once(
             stacklevel=2,
         )
     #: per-sink-run warn-once latch for the checkpoint-reset
-    #: new-content warning (ADVICE r10 #1) — a NEW restart of the sink
+    #: new-content warning — a NEW restart of the sink
     #: warns once again
     warn_state: dict = {}
 
@@ -851,8 +849,8 @@ def start_telemetry_sink_exactly_once(
 def drop_exactly_once_older_than(
     spark: SparkSession, warehouse_dir: str, cutoff_ts: str
 ) -> list[str]:
-    """Retention for the exactly-once layout (round 10 — VERDICT r9
-    next-round #7): drop every COMMITTED directory (``batch_id=N`` /
+    """Retention for the exactly-once layout: drop every COMMITTED directory
+    (``batch_id=N`` /
     ``compact=N``) whose rows are ALL older than ``cutoff_ts``,
     manifest-atomically — completing the maintenance surface that
     ``drop_partitions_older_than`` (plain ``col=value`` layouts)
@@ -866,16 +864,15 @@ def drop_exactly_once_older_than(
     Age is decided by ONE Spark job over all visible dirs (each
     tagged with its dir name, grouped, counted) — a ts-column-only
     scan, never a full-table read, and never the O(#dirs) sequential
-    job launches an uncompacted layout would make of a per-dir loop
-    (2nd review pass). The cutoff comparison runs JVM-side against
+    job launches an uncompacted layout would make of a per-dir loop.
+    The cutoff comparison runs JVM-side against
     the UTC session clock: collecting timestamps to Python would
     convert them into the DRIVER's OS timezone and silently mis-drop
     on non-UTC hosts.
 
     Protocol mirrors compaction: (1) compute the drop set, (2) swap
     the manifest to the surviving dirs via a versioned
-    COMPARE-AND-SWAP (round 11 — VERDICT r10 next-round #3 / ADVICE
-    r10 #2: the write carries the manifest version the scan read, and
+    COMPARE-AND-SWAP (the write carries the manifest version the scan read, and
     a live sink's commit in between makes it raise instead of
     clobbering — retention then re-reads, age-scans only the NEW
     dirs, and retries; after ``_CAS_ATTEMPTS`` lost races it raises
@@ -885,8 +882,8 @@ def drop_exactly_once_older_than(
     ``committed_ids`` / fingerprints are PRESERVED: a replay of a
     retired batch must skip as already-committed — re-admitting data
     that retention deliberately retired would undo the cutoff. The
-    CAS closes the seconds-wide scan→write clobber window the r10
-    code documented; the residual list→rename race inside one commit
+    CAS closes the seconds-wide scan→write clobber window; the residual
+    list→rename race inside one commit
     is microseconds and detection-only (fsutil contract) — retention
     may now run safely OUTSIDE the sink process, the cron shape
     operators actually use.
@@ -900,7 +897,7 @@ def drop_exactly_once_older_than(
 
     raw = cutoff_ts.strip().replace("T", " ").removesuffix("Z").rstrip()
     try:
-        # parse AND re-canonicalize (3rd review pass): Python's
+        # parse AND re-canonicalize: Python's
         # fromisoformat accepts forms Spark's parser does not (ISO
         # basic '20300101'), and passing such a cutoff through would
         # either raise an uncontracted SparkDateTimeException (ANSI
@@ -930,8 +927,8 @@ def drop_exactly_once_older_than(
             if d not in age_old and d not in age_keep
         ]
         if to_scan:
-            # read each dir with the KNOWN stored schema (ADVICE r10
-            # #3): a committed zero-row batch (empty DataFrame written
+            # read each dir with the KNOWN stored schema: a committed
+            # zero-row batch (empty DataFrame written
             # with partitionBy produces no part files) would fail
             # schema INFERENCE and break retention for the whole
             # table; with an explicit schema it reads as an empty
@@ -1053,14 +1050,14 @@ def windowed_ohlc(
     order_col: str | None = None,
 ) -> DataFrame:
     """Watermarked per-series OHLC bars — the streaming face of
-    ``q_ohlc_bars`` (round 8). open/close are ``min_by``/``max_by`` on
+    ``q_ohlc_bars``. open/close are ``min_by``/``max_by`` on
     an order struct: DECLARATIVE aggregates (a running argmin, not a
     sort), so they are legal in streaming groupBy and merge correctly
     across micro-batches — replaying the same rows in any batch split
     yields the same bars exactly (stream/batch parity-tested).
 
-    Tie policy on duplicate timestamps (round 10, VERDICT r9
-    next-round #6): when the stream carries an arrival/identity
+    Tie policy on duplicate timestamps: when the stream carries an
+    arrival/identity
     column, pass it as ``order_col`` (or let the default pick up
     ``ingest_seq``/``event_id`` when present) — the argmins then order
     by (ts, order_col), giving EXACT tie parity with batch
@@ -1070,13 +1067,13 @@ def windowed_ohlc(
     row IDENTITY can stay ambiguous between two same-(ts, value)
     rows, but the picked value (all a bar reports) is then identical
     either way — total-order deterministic, though same-ts ties may
-    pick a different row than the batch query would (the pre-r10
-    documented divergence, now opt-out-only).
+    pick a different row than the batch query would (a documented
+    divergence, opt-out-only).
 
-    UPGRADE NOTE (pre-r10 checkpoints): the order struct is part of
+    UPGRADE NOTE (older checkpoints): the order struct is part of
     the aggregation STATE schema, so a running query whose stream
-    carries ingest_seq/event_id cannot restart from a pre-r10
-    checkpoint under the new auto-detect (value:double →
+    carries ingest_seq/event_id cannot restart from a checkpoint
+    written without it under the new auto-detect (value:double →
     id:bigint fails Spark's state-schema compatibility check) — pass
     ``order_col="value"`` to pin the old policy on existing
     checkpoints, or discard the checkpoint to adopt the id tiebreak.
@@ -1087,7 +1084,7 @@ def windowed_ohlc(
             (c for c in ("ingest_seq", "event_id") if c in stream.columns),
             None,
         )
-        # say which tie policy the auto-detect picked (ADVICE r10 #4):
+        # say which tie policy the auto-detect picked:
         # the choice is part of the aggregation STATE schema, so an
         # operator diagnosing a checkpoint-compat failure needs to see
         # it without reading this source
@@ -1178,14 +1175,14 @@ def _read_latest_manifest(
     a damaged pointer as 'no snapshot yet' would make the next sink
     batch rebuild the snapshot WITHOUT merging the previous one —
     silently evicting every series absent from that one batch
-    (code-review r9, second pass). Crash-and-retry keeps the cache."""
+    (second pass). Crash-and-retry keeps the cache."""
     spark = _session(spark)
     consequence = (
         "refusing to treat it as absent (the next snapshot would drop "
         "every series not in its own batch)"
     )
     m = read_versioned_manifest(spark, path, "_latest")
-    if m is None:  # pre-round-9 single-file pointer (legacy layout)
+    if m is None:  # legacy single-file pointer
         m = _read_legacy_manifest_or_raise(
             spark, os.path.join(path, "_latest.json"),
             "last-value pointer", consequence,
@@ -1228,15 +1225,15 @@ def start_latest_value_sink(
       is idempotent (max of a max is the max);
     - each snapshot is written to its own ``snap=<batch_id>``
       directory, then the ``_latest`` pointer is atomically repointed
-      (fsutil's versioned-manifest commit — scheme-resolved Hadoop FS,
-      round 9): readers observe the old or the new snapshot, never a
+      (fsutil's versioned-manifest commit — scheme-resolved Hadoop
+      FS): readers observe the old or the new snapshot, never a
       torn one. A crash between write and repoint leaves a dead dir
       the residue sweeper reclaims — correctness unaffected;
     - state is O(#series) rows however long the stream runs; merge
       cost per batch is O(batch + #series) with a single shuffle on
       the series key.
 
-    ``sweep_grace`` (round 9): when set, the sink runs the snapshot
+    ``sweep_grace``: when set, the sink runs the snapshot
     janitor itself after each commit, keeping that many superseded
     ``snap=`` dirs besides the live one — without it, a
     one-dir-per-micro-batch stream grows storage without bound until
@@ -1244,7 +1241,7 @@ def start_latest_value_sink(
     value is the reader window: concurrent ``read_latest_values``
     callers get that many commits' worth of time to materialize a
     pinned frame (the sweeper's documented contract). None (default)
-    = never sweep, exactly the pre-round-9 behavior."""
+    = never sweep."""
     path = os.path.join(warehouse_dir, "latest")
     if sweep_grace is not None and sweep_grace < 1:
         raise ValueError(
@@ -1254,8 +1251,8 @@ def start_latest_value_sink(
             "(sweep_latest_snapshots' contract)"
         )
 
-    #: warn-once latch for the checkpoint-reset branch below (ADVICE
-    #: r9 #5): after a reset, EVERY subsequent batch id of the re-
+    #: warn-once latch for the checkpoint-reset branch below: after a reset,
+    #: EVERY subsequent batch id of the re-
     #: numbered stream sits below the (bumped) manifest id — the gap
     #: is expected steady state, and re-warning per micro-batch
     #: forever would drown the one genuine reset signal. Per-query-run
@@ -1277,8 +1274,7 @@ def start_latest_value_sink(
         # a NULL series key cannot identify a series — groupBy would
         # happily keep it and serve a phantom row
         rows = rows.filter(F.col("timeseries_id").isNotNull())
-        # Replay-skip (code-review r8, narrowed per ADVICE r8 #2, then
-        # CONTENT-VERIFIED in round 9 like the exactly-once sink):
+        # Replay-skip (CONTENT-VERIFIED like the exactly-once sink):
         # after a crash BETWEEN the manifest repoint and Spark's
         # checkpoint commit, this batch id replays with the manifest
         # already pointing at its own snap dir — re-processing naively
@@ -1333,7 +1329,7 @@ def start_latest_value_sink(
             # aggregation into the snapshot-write job via observe() on
             # the BATCH subtree (pre-union, matching the standalone
             # formula the replay branch compares against) — zero extra
-            # passes over the batch source (code-review r9, 2nd pass)
+            # passes over the batch source
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -1405,7 +1401,7 @@ def sweep_latest_snapshots(
     warehouse_dir: str, grace: int = 1, spark: SparkSession | None = None
 ) -> list[str]:
     """Janitor for the last-value cache: delete superseded ``snap=<id>``
-    directories. Concurrency contract (code-review r8):
+    directories. Concurrency contract:
 
     - dirs with id >= the manifest's batch_id are ALWAYS spared — a
       running sink may have just written snap=<new> and not yet
@@ -1419,10 +1415,8 @@ def sweep_latest_snapshots(
       safe when no concurrent readers exist.
 
     Listing and deletion are scheme-resolved Hadoop FS operations
-    (round 9): on a remote warehouse the pre-round-9 ``os.listdir``
-    walk saw nothing and silently swept nothing — the one SILENT
-    member of the driver-local-I/O family (VERDICT r8 what's-wrong
-    #2). Returns deleted dir names."""
+    (an ``os.listdir`` walk would see nothing on a remote warehouse
+    and silently sweep nothing). Returns deleted dir names."""
     spark = _session(spark)
     path = os.path.join(warehouse_dir, "latest")
     man = _read_latest_manifest(path, spark)

@@ -1,6 +1,6 @@
 """Streaming quantile maintenance — keep a mergeable
 :func:`..functions.sketches.quantile_rollup` store current as events
-stream in (round 15; the percentile face of the streaming sketch
+stream in (the percentile face of the streaming sketch
 stores, completing the family: topk=streaming/sketch.py,
 durations=streaming/state.py, quantiles=here).
 

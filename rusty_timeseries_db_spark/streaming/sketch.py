@@ -1,6 +1,6 @@
 """Streaming heavy-hitter maintenance — keep a mergeable
 :func:`..functions.sketches.topk_sketch` store current as events
-stream in (round 14; the streaming face of the sketch the way
+stream in (the streaming face of the sketch the way
 streaming/index.py is the streaming face of the persisted retrieval
 indexes).
 
@@ -12,7 +12,7 @@ bump of the ``last_applied_batch`` watermark). :func:`topk_sketch`
 is deterministic (ties broken by value), so a crash between the
 summary write and the manifest bump replays the batch and OVERWRITES
 the directory with identical content — replays converge instead of
-appending duplicate summary rows (review round 15; raw events are not
+appending duplicate summary rows (raw events are not
 retained and the stream checkpoint never re-delivers consumed
 batches, so an appended duplicate would inflate ``count_lo`` for
 good).
@@ -25,7 +25,7 @@ just means several summary rows for that cell, and the merge's
 (pinned by the batch-side property test). No raw event is ever
 revisited: the store grows by O(cells × k) per batch, not O(events).
 
-Compaction (:func:`compact_topk_sketch`; round 15 — the answer to
+Compaction (:func:`compact_topk_sketch` — the answer to
 ``serve_topk`` paying O(applied batches) forever on a long-running
 stream): fold every committed summary into ONE base snapshot. The
 trap the other stores do not have: a finished summary's per-cell

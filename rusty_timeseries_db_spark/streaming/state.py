@@ -1,5 +1,5 @@
 """Streaming state-residence durations — the streaming face of
-:func:`..operators.resample.state_durations` (round 14; TimescaleDB
+:func:`..operators.resample.state_durations` (TimescaleDB
 ``state_agg`` over a live event stream).
 
 Why this is not just another per-batch summary sink: a state interval
@@ -110,8 +110,8 @@ def apply_state_durations_batch(
             # count. STRICTLY older only when no tiebreak exists: a new
             # event tied with the carryover timestamp is genuinely new
             # data (a zero-length interval, not a negative one) and
-            # dropping it would break stream==batch parity (review
-            # round 14). With a tiebreak the tied-below comparison
+            # dropping it would break stream==batch parity. With a tiebreak
+            # the tied-below comparison
             # additionally drops exact duplicates of the carryover row.
             bounds = carry.select(
                 F.col(key),
@@ -242,8 +242,8 @@ def start_state_durations_sink(
 
 
 def compact_state_durations(spark, store_path: str) -> int:
-    """Fold every committed increment into ONE base snapshot (round
-    14; the delta-store answer to the serving cost growing
+    """Fold every committed increment into ONE base snapshot (the
+    delta-store answer to the serving cost growing
     O(applied batches) — the Bm25Index/IvfIndex compact() stance
     applied to the duration store): serving afterwards reads base +
     the deltas landed since, with IDENTICAL totals (pinned).
@@ -251,5 +251,5 @@ def compact_state_durations(spark, store_path: str) -> int:
     sweep (:func:`.store_common.compact`): the CAS switch never rolls
     back a sink batch that committed during the fold — the stream
     checkpoint has already advanced past it, so it would be lost for
-    good (ADVICE r14). Returns the number of delta versions folded."""
+    good. Returns the number of delta versions folded."""
     return compact(spark, _STORE, store_path)

@@ -163,7 +163,7 @@ def is_missing_summaries_error(e: Exception) -> bool:
     does not exist (``PATH_NOT_FOUND``) or exists with no parquet
     footers after a compaction cleanup (``UNABLE_TO_INFER_SCHEMA``).
     Matched on the exception's error CLASS, not message substrings
-    (ADVICE r15 low: substring matching over bare ``Exception`` could
+    (substring matching over bare ``Exception`` could
     misclassify corrupt footers or permission faults that happen to
     embed those tokens as 'no summaries yet'). Everything else —
     corrupt files, auth failures, connectivity — propagates as
@@ -261,7 +261,7 @@ def committed_parts(
                 _base_dirs(store, path, base_upto), store.columns
             )
         )
-    # FS pre-check before the read (VERDICT r16 #2): a fully-folded
+    # FS pre-check before the read: a fully-folded
     # store legitimately has no data dir (or an empty one after the
     # compaction sweep), and PROBING it with the reader posts a
     # failed-execution event that any registered

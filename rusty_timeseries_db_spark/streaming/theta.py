@@ -1,6 +1,6 @@
 """Streaming Theta segment-membership maintenance — keep a mergeable
 :func:`..functions.sketches.theta_rollup` store current as events
-stream in (round 16 — VERDICT r15 next-round #2; the SET-OPERATION
+stream in (the SET-OPERATION
 face of the streaming sketch stores, completing the family:
 topk=streaming/sketch.py, durations=streaming/state.py,
 quantiles=streaming/quantile.py).
@@ -74,7 +74,7 @@ def apply_theta_sketch_batch(
     ``batch_id`` was already applied or the batch is empty. Factored
     out of the sink so the replay contract is unit-testable.
 
-    Late-row contract (round 17 — stated so the four stores' lateness
+    Late-row contract (stated so the four stores' lateness
     contracts read uniformly, the streaming/state.py paragraph being
     the model): there is NO watermark and no late-data bound — a row
     for any cell may arrive in any batch at any time, because Theta

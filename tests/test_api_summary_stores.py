@@ -1,5 +1,5 @@
-"""Engine-facade doors for the four streaming summary stores (round
-17 — VERDICT r16 next-round #3): ``api.TimeseriesEngine`` can start,
+"""Engine-facade doors for the four streaming summary stores:
+``api.TimeseriesEngine`` can start,
 serve, and compact the topk / quantile / state-duration / Theta
 stores from the telemetry drop directory without importing streaming
 modules — one start→serve→compact cycle per kind, values checked
@@ -219,7 +219,7 @@ def test_named_store_reachable_from_module_api(spark, tmp_path):
 
 
 def test_same_name_across_kinds_no_collision(spark, tmp_path):
-    """ADVICE r17: the store path and the streaming checkpoint both
+    """The store path and the streaming checkpoint both
     key on kind + name, so a topk store and a quantile store sharing
     a name neither share a directory nor — the silent killer — a
     checkpoint whose source offsets would make the second sink skip
@@ -251,7 +251,7 @@ def test_same_name_across_kinds_no_collision(spark, tmp_path):
 
 
 def test_serve_summary_rejects_inapplicable_knobs(spark, tmp_path):
-    """ADVICE r17: a knob the selected kind cannot honor raises
+    """A knob the selected kind cannot honor raises
     instead of silently returning differently-shaped output."""
     eng = _engine(spark, tmp_path)
     for kind, kwargs in [
@@ -274,7 +274,7 @@ def test_serve_summary_rejects_inapplicable_knobs(spark, tmp_path):
 
 
 def test_serve_summary_rejects_degenerate_knob_values(spark, tmp_path):
-    """ADVICE r18: overlap_k without overlap_key is the same
+    """overlap_k without overlap_key is the same
     silent-drop class the knob validation exists to stop (it only
     means anything in overlap mode), and falsy-but-explicit values
     (quantiles=(), overlap_k=0) must not silently fall through an

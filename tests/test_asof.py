@@ -219,7 +219,7 @@ def test_asof_tolerance_matches_pandas(spark):
 
 def test_asof_null_payload_not_blended(spark):
     """The matched right row's NULLs must carry through — not be
-    backfilled from an older right row (ADVICE r1: per-column
+    backfilled from an older right row (per-column
     last(ignorenulls) blended fields across right rows)."""
     left = spark.createDataFrame(
         [("a", 3)], "k string, ts int"
@@ -254,7 +254,7 @@ def test_asof_direction_schema_symmetry(spark):
 
 
 def test_sql_asof_matches_python_api(spark):
-    """SQL surface parity (VERDICT r3 #9): the DuckDB-style ASOF JOIN
+    """SQL surface parity: the DuckDB-style ASOF JOIN
     clause must produce exactly the Python asof_join output."""
     from rusty_timeseries_db_spark.sql_ext import sql_with_asof
 
@@ -298,15 +298,15 @@ def test_sql_asof_matches_python_api(spark):
         "ON l.k = r.k AND l.ts >= r.ts WHERE l.k = 'a' ORDER BY lid",
         right_order="rid",
     ).toPandas()
-    # bare ASOF JOIN is inner (r12): lid 3 has no backward match and
+    # bare ASOF JOIN is inner: lid 3 has no backward match and
     # drops; the WHERE still passed through the rewrite
     assert list(filt["lid"]) == [1, 2]
 
 
 def test_sql_asof_bare_is_inner_left_keeps_unmatched(spark):
-    """DuckDB join-type parity (round 12): the bare ASOF JOIN spelling
+    """DuckDB join-type parity: the bare ASOF JOIN spelling
     drops unmatched left rows (DuckDB inner); ASOF LEFT JOIN keeps
-    them with NULL payloads (the pre-r12 behavior, now opt-in by
+    them with NULL payloads (opt-in by
     spelling — and the Python API's unchanged how="left" default)."""
     from rusty_timeseries_db_spark.sql_ext import sql_with_asof
 
@@ -475,7 +475,7 @@ def test_sql_keywords_inside_string_literals_are_data(spark):
 
 
 def test_sql_asof_composes_with_qualify(spark):
-    """VERDICT r7 gap #3: 'latest reading per sensor, keep rank 1' —
+    """Gap #3: 'latest reading per sensor, keep rank 1' —
     one statement with both dialect extensions. Parity against the
     explicit DataFrame composition (asof_join + window filter)."""
     from pyspark.sql import Window
@@ -520,7 +520,7 @@ def _nested_qualify_fixture(spark):
 
 
 def test_sql_qualify_nested_in_derived_table(spark):
-    """Round 10 (the rewrite r9 deferred): QUALIFY inside a derived
+    """QUALIFY inside a derived
     table is extracted innermost-first and rewritten — the outer query
     aggregates the block's filtered rows, and the __qualify helper
     column never leaks through the block's SELECT *."""
@@ -589,7 +589,7 @@ def test_sql_qualify_nested_plus_top_level_compose(spark):
 
 
 def test_sql_qualify_nested_in_cte_referencing_preceding_cte(spark):
-    """code-review r10 #5: a QUALIFY inside a CTE body that references
+    """A QUALIFY inside a CTE body that references
     a PRECEDING CTE cannot be planned standalone — the extraction must
     fall back to the in-place textual rewrite so the name resolves in
     its original scope, with no __qualify leak through SELECT *."""
@@ -625,7 +625,7 @@ def test_sql_qualify_nested_in_cte_referencing_preceding_cte(spark):
 
 
 def test_sql_qualify_nested_cte_shadowing_temp_view(spark):
-    """2nd review pass: a CTE whose name SHADOWS a registered temp
+    """A CTE whose name SHADOWS a registered temp
     view must resolve to the CTE — standalone block planning would
     silently hit the view (no AnalysisException to trigger the
     fallback), so the scope guard must route the block textual."""
@@ -648,7 +648,7 @@ def test_sql_qualify_nested_cte_shadowing_temp_view(spark):
     # the decoy ('z', 999.0) must NOT appear: the CTE won
     assert [(r.k, r.v) for r in out] == [("a", 30.0), ("b", 7.0)]
 
-    # an aliased comma-list FROM reference (4th review pass: the
+    # an aliased comma-list FROM reference (the
     # FROM/JOIN-position regex stopped at 'AS d' and missed the CTE
     # name after the comma — silently reading the decoy view)
     spark.createDataFrame(
@@ -666,7 +666,7 @@ def test_sql_qualify_nested_cte_shadowing_temp_view(spark):
     ).collect()
     assert [(r.k, r.v) for r in out_c] == [("a", 30.0), ("b", 7.0)]
 
-    # column-list CTE form shadows too (3rd review pass: the plain
+    # column-list CTE form shadows too (the plain
     # regex missed 'WITH t(a,b) AS (...)')
     out2 = sql_with_qualify(
         spark,
@@ -711,7 +711,7 @@ def test_sql_asof_inside_nested_qualify_block_composes(spark):
 
 
 def test_sql_qualify_nested_alias_sharing_cte_name_not_misrouted(spark):
-    """3rd review pass: the scope guard must check TABLE-REFERENCE
+    """The scope guard must check TABLE-REFERENCE
     positions only — a select alias that merely shares a CTE's name
     must NOT route the block to the one-shot textual form (which
     cannot express a lateral alias inside a window and would fail a
@@ -790,7 +790,7 @@ def test_sql_qualify_in_non_query_paren_raises(spark):
 
 
 def test_mask_handles_backslash_escaped_quotes():
-    """ADVICE r7: a \\' inside a literal must not flip the in-string
+    """A \\' inside a literal must not flip the in-string
     state — 'it\\'s QUALIFY' is ONE literal, all data."""
     from rusty_timeseries_db_spark.sql_ext import _mask_string_literals
 
@@ -834,7 +834,7 @@ def test_sql_qualify_over_group_by_aggregate_inputs(spark):
 
 
 def test_qualify_decimal_literal_does_not_flip_rewrite_order(spark):
-    """Code-review r8: '0.5' must not look like a dotted alias — the
+    """'0.5' must not look like a dotted alias — the
     nested form (select-list-alias resolution) must stay first, so a
     predicate alias shadowing a base column resolves to the ALIAS."""
     from rusty_timeseries_db_spark.sql_ext import sql_with_qualify
@@ -853,7 +853,7 @@ def test_qualify_decimal_literal_does_not_flip_rewrite_order(spark):
 
 
 def test_sql_qualify_in_correlated_exists(spark):
-    """Round 11 (VERDICT r10 next-round #8): a QUALIFY inside a
+    """A QUALIFY inside a
     CORRELATED EXISTS body cannot be planned standalone (the outer
     alias doesn't resolve), so the extraction's textual fallback
     rewrites it in place and Spark decorrelates the
@@ -976,7 +976,7 @@ def test_distinct_on_guardrails():
     assert rw(q) is q
 
 
-# ---------------------------------------- nested DISTINCT ON (round 12)
+# ---------------------------------------- nested DISTINCT ON
 
 def _nested_don_fixture(spark):
     spark.createDataFrame(
@@ -1102,7 +1102,7 @@ def test_distinct_on_nested_guardrails(spark):
     assert rwn(q) is q
 
 
-# ------------------------------------------- * REPLACE rewrite (round 12)
+# ------------------------------------------- * REPLACE rewrite
 
 def test_star_replace_forms():
     from rusty_timeseries_db_spark.sql_ext import _rewrite_star_replace as rw
@@ -1153,7 +1153,7 @@ def test_dialect_sql_star_replace_end_to_end(spark):
     assert [r.v for r in out2.collect()] == [11.0, 21.0]
 
 
-# -------------------------------------------- PIT feature join (round 12)
+# -------------------------------------------- PIT feature join
 
 def test_pit_join_no_future_leakage_and_tolerance(spark):
     from rusty_timeseries_db_spark.operators.asof import pit_join
@@ -1211,7 +1211,7 @@ def test_star_replace_composes_with_distinct_on(spark):
     ]
 
 
-# --------------------------------------- COLUMNS() expansion (round 12)
+# --------------------------------------- COLUMNS() expansion
 
 def test_columns_expansion_forms(spark):
     from rusty_timeseries_db_spark.sql_ext import sql as dialect_sql
@@ -1279,7 +1279,7 @@ def test_summarize_verb_routes_to_profiler(spark):
         "id long, v double, tag string",
     ).createOrReplaceTempView("_t_summ")
     out = dialect_sql(spark, "SUMMARIZE _t_summ")
-    # round 13: the verb carries DuckDB SUMMARIZE's quartile trio
+    # The verb carries DuckDB SUMMARIZE's quartile trio
     assert out.columns == [
         "column_name", "n", "n_nulls", "n_distinct",
         "min_num", "max_num", "q25", "q50", "q75",
@@ -1307,7 +1307,7 @@ def test_summarize_verb_routes_to_profiler(spark):
 
 
 def test_star_replace_ignores_multiplication_by_replace_fn(spark):
-    """Review round 12: 'amount * replace(...)' is MULTIPLICATION by
+    """'amount * replace(...)' is MULTIPLICATION by
     the plain replace() function — the star-modifier rewrite must pass
     it through, while the true modifier forms still fire (including
     after SELECT DISTINCT)."""
@@ -1333,7 +1333,7 @@ def test_star_replace_ignores_multiplication_by_replace_fn(spark):
 
 
 def test_columns_expands_over_joins(spark):
-    """Round 13 (VERDICT r12 next-round #5): COLUMNS binds to the
+    """COLUMNS binds to the
     CONCATENATED column set of a depth-0 FROM join list in FROM order
     — DuckDB's own join-expansion semantics — for comma joins and
     ON-joins, alias-qualified or not; derived tables / USING /
@@ -1409,7 +1409,7 @@ def test_columns_expands_over_joins(spark):
 
 
 def test_pivot_statement_forms(spark):
-    """Round 13: DuckDB's PIVOT statement routed to
+    """DuckDB's PIVOT statement routed to
     groupBy().pivot() — naming pinned against DuckDB native
     (<value> unaliased, <value>_<alias> aliased/multi), NULL pivot
     rows drop, implicit grouping excludes USING-referenced columns."""
@@ -1475,7 +1475,7 @@ def test_pivot_statement_forms(spark):
 
 
 def test_unpivot_statement_forms(spark):
-    """Round 13: DuckDB's UNPIVOT statement — id columns are the
+    """DuckDB's UNPIVOT statement — id columns are the
     unlisted table columns in order, default names name/value, NULL
     unpivoted values drop, COLUMNS('regex') expands in ON."""
     import pytest
@@ -1514,7 +1514,7 @@ def test_unpivot_statement_forms(spark):
 
 
 def test_pivot_review_round13_fixes(spark):
-    """Review round 13: (a) a column name inside a STRING LITERAL in
+    """(a) a column name inside a STRING LITERAL in
     USING is not a reference — it stays in the implicit grouping
     (DuckDB parity); (b) boolean pivot values rename to DuckDB's
     lowercase 'true_s'/'false_s'; (c) a group column string-colliding
@@ -1557,7 +1557,7 @@ def test_pivot_review_round13_fixes(spark):
 
 
 def test_explain_through_dialect(spark):
-    """Round 13: EXPLAIN peels off, the inner statement takes the FULL
+    """EXPLAIN peels off, the inner statement takes the FULL
     dialect (verbs included), the plan renders via the DataFrame.explain
     JVM path as Spark's native (plan string) row — and EXPLAIN can
     never execute a write."""
@@ -1600,7 +1600,7 @@ def test_explain_through_dialect(spark):
 
 
 def test_pivot_in_list(spark):
-    """Round 14 (ADVICE r13 #2): an explicit ON <col> IN (...) list
+    """An explicit ON <col> IN (...) list
     pins the pivot values — column order follows the LIST (DuckDB's
     rule), unlisted values drop, no discovery scan runs (so EXPLAIN
     PIVOT with IN is genuinely plan-only), and non-literal items
@@ -1660,7 +1660,7 @@ def test_pivot_in_list(spark):
 
 
 def test_from_first_statement_forms(spark):
-    """Round 14: DuckDB's FROM-first syntax — bare FROM, FROM+clauses
+    """DuckDB's FROM-first syntax — bare FROM, FROM+clauses
     without SELECT, FROM ... SELECT ... with trailing clauses (DuckDB
     semantics verified against native DuckDB in the oracle-paired
     q_sql_from_first), composition with the dialect's own QUALIFY, and
@@ -1730,7 +1730,7 @@ def test_from_first_statement_forms(spark):
 def test_from_first_star_except_modifier(spark):
     """`FROM t SELECT * EXCEPT (col) WHERE ...`: the star-modifier
     EXCEPT must not be mistaken for the set operation when locating
-    the end of the select list (round-14 self-review)."""
+    the end of the select list."""
     from rusty_timeseries_db_spark.sql_ext import sql as dialect_sql
 
     spark.createDataFrame(
@@ -1750,7 +1750,7 @@ def test_from_first_star_except_modifier(spark):
 
 
 def test_pivot_multi_on(spark):
-    """Round 14 second wave: multi-column ON pivots the CROSS PRODUCT
+    """Multi-column ON pivots the CROSS PRODUCT
     of the value sets with <v1>_<v2>[_<alias>] names — pinned against
     native DuckDB on the identical data, incl. per-column IN lists."""
     import duckdb
@@ -1787,7 +1787,7 @@ def test_pivot_multi_on(spark):
 
 
 def test_pivot_multi_on_underscore_values_stay_separate(spark):
-    """Review round 14: values containing '_' must keep their cells
+    """Values containing '_' must keep their cells
     SEPARATE ('a'+'b_c' vs 'a_b'+'c') even though the display names
     collide — DuckDB behavior (duplicate column names, distinct
     numbers)."""
@@ -1826,7 +1826,7 @@ def test_pivot_multi_on_underscore_values_stay_separate(spark):
 
 
 def test_pivot_multi_on_unaliased_multi_agg_raises(spark):
-    """ADVICE r14: multi-ON + multiple USING aggregates where one lacks
+    """Multi-ON + multiple USING aggregates where one lacks
     an AS alias must not interpolate Python None into the display
     name. The parse-time every-aggregate-needs-an-alias guard covers
     the multi-ON form too — pinned here so it stays that way."""

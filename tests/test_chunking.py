@@ -97,7 +97,7 @@ def test_counter_rate_resets_and_single_sample(spark):
 
 
 def test_chunk_null_text_yields_one_empty_chunk(spark):
-    """Code-review r8: NULL text must behave like the empty doc — one
+    """NULL text must behave like the empty doc — one
     chunk, n_tokens 0 (size(NULL) would otherwise leak -1 into token
     sums)."""
     df = spark.createDataFrame([(1, None), (2, "a b")],
@@ -108,7 +108,7 @@ def test_chunk_null_text_yields_one_empty_chunk(spark):
 
 
 def test_moving_median_null_frame_returns_null(spark):
-    """Code-review r8 (2nd pass): an all-NULL leading frame must yield
+    """An all-NULL leading frame must yield
     med7 NULL (DuckDB median-over-empty semantics), not an
     element_at(arr, 0) runtime error."""
     from pyspark.sql import Window

@@ -254,7 +254,7 @@ def test_topk_per_group_matches_pandas_nlargest(spark):
 
 
 def test_ivf_index_persist_and_query_matches_adhoc(spark, tmp_path):
-    """IvfIndex (round 8): build-once parquet index + manifest must
+    """IvfIndex: build-once parquet index + manifest must
     return EXACTLY the ad-hoc ivf_cosine_topk results (same seed ->
     same k-means -> same cells), survive a fresh object ('restart'),
     and keep the cell column as a partition dir for pruning."""
@@ -306,7 +306,7 @@ def test_ivf_index_persist_and_query_matches_adhoc(spark, tmp_path):
 
 
 def test_ivf_index_incremental_add(spark, tmp_path):
-    """IvfIndex.add (round 9, VERDICT r8 next-round #4): build on
+    """IvfIndex.add: build on
     corpus A, add corpus B — queries must then equal the broadcast
     brute-force top-k over the PROBED CELLS of A∪B (candidate
     membership + rerank both exact), every added vector must be
@@ -401,7 +401,7 @@ def test_ivf_index_incremental_add(spark, tmp_path):
 
 
 def test_ivf_should_rebuild_and_query_drift_warning(spark, tmp_path):
-    """Round 10 (VERDICT r9 next-round #5): the recall-drift contract
+    """The recall-drift contract
     becomes a method — should_rebuild() flips past the added-fraction
     threshold and query() warns there; below it both stay silent."""
     import warnings as _warnings
@@ -440,7 +440,7 @@ def test_ivf_should_rebuild_and_query_drift_warning(spark, tmp_path):
     assert [w for w in caught if "drifted" in str(w.message)]
 
     # a recall-validated instance threshold aligns BOTH surfaces
-    # (code-review r10 #7): no hot-path warning, no rebuild verdict
+    #: no hot-path warning, no rebuild verdict
     idx.max_added_frac = 10.0
     assert idx.should_rebuild() is False
     with _warnings.catch_warnings(record=True) as caught:
@@ -449,7 +449,7 @@ def test_ivf_should_rebuild_and_query_drift_warning(spark, tmp_path):
     assert not [w for w in caught if "drifted" in str(w.message)]
 
 
-# ------------------------------- embedding quantization (round 12)
+# ------------------------------- embedding quantization
 
 def test_quantize_roundtrip_error_bound_and_zero_guard(spark):
     """Every dequantized coordinate is within scale/2 of the original
@@ -529,7 +529,7 @@ def test_quantized_cosine_topk_recall(spark):
 
 
 def test_ivf_index_quantized_mode(spark, tmp_path):
-    """IVF+SQ (round 12): a quantize_bits=8 index stores int codes
+    """IVF+SQ: a quantize_bits=8 index stores int codes
     (no float vector column), serves the same probe routing, keeps
     >= 8/10 top-10 overlap with the full-precision index, and
     incremental add() quantizes appended vectors to the same layout."""
@@ -573,8 +573,8 @@ def test_ivf_index_quantized_mode(spark, tmp_path):
     assert got and got[0].vec_id == 5 and got[0].cos_sim > 0.99
 
 
-# ---------------------------------------------------------------- round 14
-# IvfIndex deletion lifecycle (VERDICT r13 next-round #2)
+# -------------------------------------------------------------------------
+# IvfIndex deletion lifecycle
 
 
 def test_ivf_remove_exact_and_compact_equality(spark, tmp_path):

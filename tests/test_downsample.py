@@ -85,7 +85,7 @@ def test_lttb_deterministic_with_duplicate_timestamps(spark):
 
 
 def test_minmax_decimate_requires_id_col(spark):
-    """ADVICE r7: the deterministic tie-break cannot be silently
+    """The deterministic tie-break cannot be silently
     omitted — absent id_col raises; an EXPLICIT None is an opt-out
     that warns."""
     import warnings
@@ -100,7 +100,7 @@ def test_minmax_decimate_requires_id_col(spark):
 
 
 def test_lttb_memory_guard_bounds_group_size(spark):
-    """VERDICT r7 next-round #3: a series over max_group_rows is
+    """A series over max_group_rows is
     pre-decimated JVM-side so the pandas group is bounded BY
     CONSTRUCTION — and the guard keeps endpoints and extremes."""
     from rusty_timeseries_db_spark.operators.downsample import (
@@ -142,7 +142,7 @@ def test_lttb_guard_end_to_end_and_noop_on_small(spark):
 
 
 def test_minmax_decimate_null_values_never_win(spark):
-    """Round 15: a NULL reading is a missing measurement, not an
+    """A NULL reading is a missing measurement, not an
     extreme — nulls order LAST on both legs, so the picked min/max
     rows are always real values; an all-NULL bucket degenerates to
     one (honest) NULL row."""
@@ -175,7 +175,7 @@ def test_minmax_decimate_null_values_never_win(spark):
 
 
 def test_m4_decimate_pixel_contract(spark):
-    """Round 15: every bucket keeps its min, max, first and last rows
+    """Every bucket keeps its min, max, first and last rows
     (<= 4 rows, multi-role rows once); NULL values never win a value
     leg."""
     from datetime import datetime

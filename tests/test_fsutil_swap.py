@@ -1,5 +1,5 @@
-"""The crash-safe directory-swap protocol (round 14 — fsutil
-swap_dir_into_place / recover_dir_swap, ADVICE r13 #1): every
+"""The crash-safe directory-swap protocol (fsutil
+swap_dir_into_place / recover_dir_swap): every
 reachable interruption state converges, and the live directory is
 never the only copy deleted."""
 

@@ -1,5 +1,4 @@
-"""Event-sequence analytics: funnel stages (and cohort retention,
-added alongside in round 14)."""
+"""Event-sequence analytics: funnel stages and cohort retention."""
 
 from datetime import datetime, timedelta
 
@@ -255,7 +254,7 @@ def test_kaplan_meier_unit_and_guards(spark):
 
 
 # ---------------------------------------------------------------------------
-# Log-rank test (round 18 — VERDICT r17 next-round #2)
+# Log-rank test
 # ---------------------------------------------------------------------------
 
 #: Freireich 1963 6-MP vs placebo leukemia trial — THE published
@@ -411,7 +410,7 @@ def test_logrank_cohorts_from_event_stream(spark):
 
 
 # ---------------------------------------------------------------------------
-# Nelson-Aalen + RMST (round 19 — VERDICT r18 next-round #2)
+# Nelson-Aalen + RMST
 # ---------------------------------------------------------------------------
 
 
@@ -643,7 +642,7 @@ def test_rmst_end_to_end_from_event_stream(spark):
 
 
 # ---------------------------------------------------------------------------
-# k-sample omnibus log-rank (round 19 — VERDICT r18 next-round #4)
+# k-sample omnibus log-rank
 # ---------------------------------------------------------------------------
 
 

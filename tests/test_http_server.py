@@ -355,7 +355,7 @@ def test_sql_route_execution_time_error_maps_to_400(server):
 
 
 def test_sql_route_rejects_non_query_statements(server):
-    """ADVICE r7: POST /sql must be read-only — DDL/DML would run with
+    """POST /sql must be read-only — DDL/DML would run with
     the server's privileges. The gate is textual and sits BEFORE the
     dialect entry point because spark.sql executes DDL eagerly."""
     base = server.base_url
@@ -400,7 +400,7 @@ def test_sql_route_rejects_non_query_statements(server):
 
 
 def test_sql_gate_rejects_cte_prefixed_dml(server):
-    """Code-review r8: Spark's grammar allows 'WITH ... INSERT/MERGE',
+    """Spark's grammar allows 'WITH ... INSERT/MERGE',
     so a leading WITH is not proof of read-only — depth-0 write
     keywords are rejected; function-call REPLACE() and backquoted
     identifiers are not."""
@@ -442,7 +442,7 @@ def test_sql_gate_rejects_cte_prefixed_dml(server):
 
 
 def test_sql_gate_quote_masking_cannot_be_derailed(server):
-    """Code-review r8 (2nd pass): a single quote INSIDE a double-quoted
+    """A single quote INSIDE a double-quoted
     literal or backquoted identifier must not derail the masking scan
     and hide DML; keyword-NAMED columns must still be accepted."""
     base = server.base_url
@@ -480,7 +480,7 @@ def test_sql_gate_quote_masking_cannot_be_derailed(server):
 
 
 def test_get_latest_route(server):
-    """round 8: GET /latest serves the current row per series (the
+    """GET /latest serves the current row per series (the
     last-value answer) as JSON — one row per series, bounded by the
     same row cap as /query_by_id."""
     base = server.base_url
@@ -497,7 +497,7 @@ def test_get_latest_route(server):
 
 
 def test_get_latest_route_serves_committed_snapshot(spark, tmp_path):
-    """round 9 (VERDICT r8 what's-wrong #1 fixed): when a last-value
+    """When a last-value
     sink has committed into the engine's warehouse, GET /latest serves
     the O(#series) snapshot — same answer shape, and the engine-side
     plan reads only the snapshot directory (asserted at the engine
@@ -544,7 +544,7 @@ def test_get_latest_route_serves_committed_snapshot(spark, tmp_path):
 
 
 def test_get_latest_prefer_snapshot_false_param(spark, tmp_path):
-    """ADVICE r9 #2: the _batch_ingested guard is per-engine-instance,
+    """The _batch_ingested guard is per-engine-instance,
     so a warehouse that a DIFFERENT process batch-appends into can be
     served a stale snapshot with no HTTP remediation —
     ?prefer_snapshot=false must forward to engine.latest's batch-face
@@ -602,7 +602,7 @@ def test_get_latest_prefer_snapshot_false_param(spark, tmp_path):
 
 
 def test_get_latest_execution_error_maps_to_400(spark, tmp_path):
-    """ADVICE r8 #3: an execution-time failure inside GET /latest must
+    """An execution-time failure inside GET /latest must
     reply 400 with the error text — not drop the socket."""
     eng = TimeseriesEngine(spark, str(tmp_path / "wh"))
 
@@ -631,7 +631,7 @@ def _get(base, path):
 
 
 def test_get_summary_route(spark, tmp_path):
-    """Round 18 (VERDICT r17 #5): the four facade-startable summary
+    """The four facade-startable summary
     stores are servable over HTTP — GET /summary?kind=... returns the
     merged estimates as JSON, named stores via &name=, kind knobs map
     1:1, and both kind-inapplicable knobs and a not-started store map
@@ -675,12 +675,12 @@ def test_get_summary_route(spark, tmp_path):
         assert code == 400 and "unknown summary-store kind" in body
         code, body = _get(base, "/summary?kind=quantile")
         assert code == 400 and "start the sink" in body
-        # kind-inapplicable knob (ADVICE r17 raise surfaces as 400)
+        # kind-inapplicable knob (raise surfaces as 400)
         code, body = _get(
             base, "/summary?kind=topk&name=hot&quantiles=0.5"
         )
         assert code == 400 and "cannot honor" in body
-        # degenerate knob values (ADVICE r18) surface as 400 too:
+        # degenerate knob values surface as 400 too:
         # overlap_k without overlap_key, and overlap_k below pairwise
         code, body = _get(base, "/summary?kind=theta&overlap_k=3")
         assert code == 400 and "only applies with" in body

@@ -1,5 +1,5 @@
-"""Enforced single-writer contract on the persisted indexes (round 15
-— VERDICT r14 next-round #5): the manifest commit is a compare-and-
+"""Enforced single-writer contract on the persisted indexes: the manifest
+commit is a compare-and-
 swap, so two interleaved mutators SERIALIZE OR RAISE — the second
 writer gets ``ManifestVersionConflict`` instead of silently clobbering
 the first's N/sum_dl/n_rows accounting."""
@@ -95,8 +95,8 @@ def test_bm25_concurrent_remove_conflicts(spark, tmp_path):
 
 def test_bm25_compact_vs_add_conflicts(spark, tmp_path):
     """compact() pins its CAS token at the OPENING manifest read
-    (ADVICE r15 — matching IvfIndex.compact) and re-verifies it
-    immediately before the first destructive swap (ADVICE r16), so an
+    (matching IvfIndex.compact) and re-verifies it
+    immediately before the first destructive swap, so an
     add() landing during the pre-swap bookkeeping raises BEFORE any
     data is touched: the marker is dropped, the tombstones survive,
     and a plain re-run of compact() performs the full compaction
@@ -149,7 +149,7 @@ def test_bm25_compact_post_swap_conflict_names_data_loss(spark, tmp_path):
     token was read before the marker landed) is caught by the FINAL
     CAS commit — and that conflict must say rows may have been
     physically dropped and advise a rebuild, not the generic
-    're-read and retry' wording (ADVICE r16)."""
+    're-read and retry' wording."""
     path = str(tmp_path / "bm25")
     idx = Bm25Index(spark, path).build(_docs(spark))
     idx.remove([1])
@@ -219,8 +219,8 @@ def test_ivf_concurrent_add_conflicts_not_clobbers(spark, tmp_path):
 
 
 def test_ivf_compact_vs_add_raises_before_touching_data(spark, tmp_path):
-    """IvfIndex.compact mirrors the Bm25 pre-swap CAS re-check
-    (ADVICE r16): an add() landing during compact's pre-swap
+    """IvfIndex.compact mirrors the Bm25 pre-swap CAS re-check:
+    an add() landing during compact's pre-swap
     bookkeeping raises with the cell tree UNTOUCHED — tombstones
     still pending, marker dropped, and a plain re-run performs the
     full compaction including the interleaved rows."""

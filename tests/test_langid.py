@@ -1,5 +1,5 @@
-"""Char-trigram language identification (round 14 —
-operators/langid.py): crafted multilingual fixtures, the und/empty
+"""Char-trigram language identification (operators/langid.py): crafted
+multilingual fixtures, the und/empty
 contract, determinism of the pinned profiles, and the opt-in pipeline
 stage-0 gate."""
 

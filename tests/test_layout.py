@@ -173,7 +173,7 @@ def test_zorder_three_columns_all_selective(spark, tmp_path):
         assert ov < 0.8, (c, ov)
 
 
-# ---------------------------------------------- PageRank (round 13)
+# ---------------------------------------------- PageRank
 
 def test_pagerank_hand_computed_and_guards(spark):
     """Integer PageRank on a 3-node chain a->b->c plus c->b: exact
@@ -207,7 +207,7 @@ def test_pagerank_hand_computed_and_guards(spark):
 
 
 def test_pagerank_normalized_flag(spark):
-    """Round 14 (VERDICT r13 'what's wrong' #2): raw ranks are NOT a
+    """Raw ranks are NOT a
     distribution (init SCALE/node, dangling mass dropped); the
     normalized=True variant rescales so Σ rank_micro lands within
     N-1 micro-units of SCALE (integer floor), the ORDER unchanged.
@@ -233,7 +233,7 @@ def test_pagerank_normalized_flag(spark):
 
 
 def test_markov_stationary_hand_computed(spark):
-    """Round 16: weighted random-walk power iteration in integer
+    """Weighted random-walk power iteration in integer
     micro-units — hand-computed on a 2-state chain with asymmetric
     weights, plus the convergence/normalization invariants."""
     import pytest

@@ -1,4 +1,4 @@
-"""Round-11 LLM-pipeline operators: SemDeDup semantic dedup,
+"""LLM-pipeline operators: SemDeDup semantic dedup,
 train/test n-gram contamination, Gopher repetition profiling.
 
 Each operator also has a driver-checked DuckDB oracle pair
@@ -558,7 +558,7 @@ def test_dsir_select_temperature_flattens(spark):
     assert sorted(r.doc_id for r in cold) == [47, 48, 49]
 
 
-# ------------------------------------ span removal rewrite (round 12)
+# ------------------------------------ span removal rewrite
 
 def test_remove_duplicate_spans_keeps_canonical(spark):
     """The lowest-id document keeps the span; every other holder is
@@ -652,7 +652,7 @@ def test_remove_duplicate_spans_idempotent(spark):
     }
 
 
-# ------------------------------------------- BM25 retrieval (round 12)
+# ------------------------------------------- BM25 retrieval
 
 def test_bm25_rare_term_outranks_common(spark):
     """A doc matching the RARE query term scores above docs matching
@@ -709,7 +709,7 @@ def test_bm25_empty_query_raises(spark):
         bm25_topk(df, [])
 
 
-# -------------------------------- span decontamination (round 12)
+# -------------------------------- span decontamination
 
 def test_cross_duplicate_spans_sides_and_id_collisions(spark):
     """Cross-corpus spans pair (a-side, b-side) only — identical ids
@@ -771,7 +771,7 @@ def test_span_decontamination_cuts_train_side_only(spark):
     assert set(out) == {1, 2}
 
 
-# --------------------------------------- soft dedup weights (round 12)
+# --------------------------------------- soft dedup weights
 
 def test_soft_dedup_duplicated_doc_downweighted(spark):
     """A doc duplicated k times weighs ~1/k; unique docs weigh 1; the
@@ -817,7 +817,7 @@ def test_soft_dedup_boilerplate_partial_downweight(spark):
 
 
 def test_bigram_surprisal_semantics(spark):
-    """Round 13: gibberish (unique transitions) scores a higher mean
+    """Gibberish (unique transitions) scores a higher mean
     inverse conditional probability and rare fraction than text made
     of the corpus's dominant transitions; 1-token docs drop."""
     from rusty_timeseries_db_spark.operators.contamination import (

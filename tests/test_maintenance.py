@@ -174,7 +174,7 @@ def test_repl_maintenance_verbs(spark, tmp_path):
 
 
 def test_repl_retention_eo_verb(spark, tmp_path):
-    """Round 10: the retention_eo verb maps onto
+    """The retention_eo verb maps onto
     drop_exactly_once_before with the same plain-summary replies."""
     from rusty_timeseries_db_spark.api import TimeseriesEngine
     from rusty_timeseries_db_spark.repl import Repl
@@ -219,7 +219,7 @@ def test_sweep_residue_removes_only_crash_leftovers(spark, tmp_path):
 
 
 def test_drop_chunks_before_validates_cutoff_format(spark, tmp_path):
-    """Code-review r8: a malformed cutoff ('tomorrow') sorts above
+    """A malformed cutoff ('tomorrow') sorts above
     every ISO date and would drop EVERYTHING — rejected hard."""
     import pytest
 
@@ -239,7 +239,7 @@ def test_drop_chunks_before_validates_cutoff_format(spark, tmp_path):
 
 
 def test_compaction_skips_partition_changed_mid_rewrite(spark, tmp_path, monkeypatch):
-    """Code-review r8: a file appended between the rewrite's read and
+    """A file appended between the rewrite's read and
     the swap must NOT be lost — the partition is skipped and reported
     (files_before, -1), with the original directory intact."""
     import rusty_timeseries_db_spark.operators.maintenance as M
@@ -288,7 +288,7 @@ def test_compaction_skips_partition_changed_mid_rewrite(spark, tmp_path, monkeyp
     )
 
 def test_exactly_once_retention_drops_aged_dirs(spark, tmp_path):
-    """Round 10 (VERDICT r9 next-round #7): retention on the
+    """Retention on the
     exactly-once batch_id=N/compact=N layout — whole committed dirs
     fully older than the cutoff are dropped manifest-atomically;
     partially-new dirs survive whole; replays of retired batches
@@ -330,8 +330,8 @@ def test_exactly_once_retention_drops_aged_dirs(spark, tmp_path):
     # ISO-BASIC form ('20240101'): Python >= 3.11 parses it (3.10
     # rejects it at validation, which is also fine — loud either way)
     # but Spark's to_timestamp does not — the canonicalization must
-    # make it behave identically to '2024-01-01' (3rd review pass:
-    # passed raw, it NULLed the cutoff on ANSI-off sessions and aged
+    # make it behave identically to '2024-01-01' (passed raw, it NULLed the
+    # cutoff on ANSI-off sessions and aged
     # out every dir)
     import sys
 
@@ -370,7 +370,7 @@ def test_exactly_once_retention_drops_aged_dirs(spark, tmp_path):
 def test_eo_retention_cas_preserves_interleaved_commit(
     spark, tmp_path, monkeypatch
 ):
-    """Round 11 (VERDICT r10 next-round #3 / ADVICE r10 #2): a live
+    """A live
     sink's commit landing between retention's manifest read and its
     write must NOT be delisted — the versioned compare-and-swap
     detects the moved version, retention re-reads, age-scans only the
@@ -430,7 +430,7 @@ def test_eo_retention_cas_preserves_interleaved_commit(
 
 
 def test_eo_retention_survives_empty_committed_dir(spark, tmp_path):
-    """ADVICE r10 #3: a committed zero-row batch writes a dir with no
+    """A committed zero-row batch writes a dir with no
     part files; schema inference over it would raise and break
     retention for the whole table. The known-schema read makes it an
     empty frame — no group row, dir kept, everything else retires
@@ -464,7 +464,7 @@ def test_eo_retention_survives_empty_committed_dir(spark, tmp_path):
 
 
 def test_committed_batch_summary_and_ids_cap(spark, tmp_path):
-    """Round 11 (VERDICT r10 what's-wrong #2): the public diagnostic
+    """The public diagnostic
     must not allocate O(hwm) ints on a long-lived folded stream —
     committed_batch_summary returns the compact (hwm, sparse_ids)
     form; committed_batch_ids caps its materialized list with a
@@ -492,7 +492,7 @@ def test_committed_batch_summary_and_ids_cap(spark, tmp_path):
     assert ids[0] == 0 and ids[-1] == SI._COMMITTED_IDS_CAP - 1
     assert any("committed_batch_summary" in str(x.message) for x in w)
 
-    # small manifests: exact, uncapped, unwarned (pre-r11 behavior)
+    # small manifests: exact, uncapped, unwarned
     small = os.path.join(str(tmp_path / "wh2"), "telemetry_eo")
     SI._write_manifest(
         small,
@@ -513,7 +513,7 @@ def test_committed_batch_summary_and_ids_cap(spark, tmp_path):
 def test_eo_cas_exhaustion_raises_without_damage(
     spark, tmp_path, monkeypatch
 ):
-    """Round 11: when every CAS attempt loses (a pathologically hot
+    """When every CAS attempt loses (a pathologically hot
     writer), retention and the sink commit give up LOUDLY — retention
     with nothing deleted and the manifest unchanged; the commit with
     its data directory written so a stream retry is safe."""
@@ -574,9 +574,9 @@ def test_eo_cas_exhaustion_raises_without_damage(
 
 
 def test_repl_compact_eo_verb_and_engine_facade(spark, tmp_path):
-    """Round 11: compact_eo folds the exactly-once dirs through the
+    """compact_eo folds the exactly-once dirs through the
     engine facade (api.compact_exactly_once) — the small-files
-    counterpart retention_eo got in r10. Replays of folded batches
+    counterpart of retention_eo. Replays of folded batches
     still skip through the folded ledger."""
     from rusty_timeseries_db_spark.api import TimeseriesEngine
     from rusty_timeseries_db_spark.repl import Repl

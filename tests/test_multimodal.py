@@ -317,7 +317,7 @@ def test_resize_stub(assets):
         assert len(r.meta.sha256) == 64
 
 
-# -------------------------------- JPEG SOF scan + meta probe (round 13)
+# -------------------------------- JPEG SOF scan + meta probe
 
 def _jpeg_bytes(width: int, height: int, sof: int = 0xC0, ncomp: int = 3
                 ) -> bytes:
@@ -402,8 +402,8 @@ def _wav_bytes(rate: int = 8000, n: int = 4000) -> bytes:
     )
 
 
-# ---------------------------------------------------------------- round 14
-# MP4 metadata probe (VERDICT r13 next-round #4)
+# -------------------------------------------------------------------------
+# MP4 metadata probe
 
 
 def _box(t: bytes, payload: bytes) -> bytes:

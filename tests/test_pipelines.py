@@ -256,7 +256,7 @@ def test_temperature_mixture_optional_stage(spark):
 
 
 def test_dsir_optional_stage(spark):
-    """Opt-in DSIR selection (round 12): target-domain train docs all
+    """Opt-in DSIR selection: target-domain train docs all
     survive, the raw train pool is cut to exactly k, val/test rows are
     untouched, and the selected ids are deterministic across runs.
     Default-off is pinned by the unchanged-manifest check; combining
@@ -316,7 +316,7 @@ def test_dsir_optional_stage(spark):
 
 
 def test_dsir_null_domain_doc_competes_in_pool(spark):
-    """Review round 12: a train doc with a NULL domain is a RAW-pool
+    """A train doc with a NULL domain is a RAW-pool
     candidate — with k large enough it survives; it must never vanish
     unconditionally (the plain == NULL trap)."""
     rows = [(i, f"target style doc {i} phrasing here now", "wiki")

@@ -4,6 +4,8 @@ guess" — these lock in the 100 TB-relevant plan properties)."""
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import functions as F
 
 from rusty_timeseries_db_spark.plans.explain import (
@@ -189,7 +191,7 @@ def test_q6_filters_pushed_to_scan(spark):
 def test_tfidf_single_documents_scan(spark):
     """df-as-window-count must not re-scan documents: exactly ONE
     parquet scan of documents in the plan (plus the broadcast scalar's
-    own scan) — the round-6 rewrite this test pins down."""
+    own scan)."""
     from rusty_timeseries_db_spark.queries import q_tfidf_top_terms
 
     import re
@@ -247,7 +249,7 @@ def test_q13_left_join_preserves_zero_count_customers(spark):
 
 
 def test_assign_nearest_argmin_is_aggregate_not_window(spark):
-    """code-review r8 fix, pinned: the nearest-centroid argmin must
+    """The nearest-centroid argmin must
     plan as a (partial-aggregating) min_by aggregate — a Window node
     here would mean the k-times-expanded scored stream is shuffled
     wholesale again."""
@@ -267,19 +269,34 @@ def test_assign_nearest_argmin_is_aggregate_not_window(spark):
     assert "partial_min_by" in plan or "partial_minby" in plan.lower()
 
 
-def test_rotation_window_holds_modified_and_r03_tiers():
-    """Meta-guard on the driver-window invariants (VERDICT r3 #3 rule
-    and r7 #1): every round-modified query AND every r03-stale query
-    must sit inside the first 50 registry entries — adding a new query
-    that silently evicts either tier should fail CI, not the round."""
+def test_registry_lists_queries_in_declaration_order():
+    """``all_queries()`` is the registry in declaration order with one
+    entry per name, and ``all_oracles()`` its oracle-bearing subset in
+    the same order."""
     from rusty_timeseries_db_spark import queries as Q
 
-    window = {q.name for q in Q._ordered_registry()[:50]}
-    assert Q._ROUND_MODIFIED <= window, (
-        sorted(Q._ROUND_MODIFIED - window)
-    )
-    r03 = {k for k, v in Q._LAST_DRIVER_ROUND.items() if v == 3}
-    assert r03 <= window, sorted(r03 - window)
+    names = [s.name for s in Q._REGISTRY]
+    assert list(Q.all_queries()) == names
+    assert len(Q.all_queries()) == len(Q._REGISTRY)
+    assert list(Q.all_oracles().items()) == [
+        (s.name, s.oracle) for s in Q._REGISTRY if s.oracle is not None
+    ]
+
+
+def test_table_loader_sets_no_session_conf(spark, sf_dir):
+    """``T()`` leaves the session's confs as it found them (the session
+    factory owns them), and ``events.ts`` still reads as a timestamp."""
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        df = T(spark, sf_dir, "events")
+        row = df.select("ts").where("ts IS NOT NULL").limit(1).collect()
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, orig)
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    assert isinstance(row[0]["ts"], datetime.datetime)
 
 
 def test_dsir_weights_plan_shape(spark):
@@ -332,7 +349,7 @@ def test_predict_linear_single_aggregate(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
 
 
-# --------------------------------------- round-12 operator plan shapes
+# --------------------------------------- operator plan shapes
 
 def test_merge_upsert_never_shuffles_target(spark):
     """merge_upsert's contract plan: two broadcast legs, ZERO
@@ -390,7 +407,7 @@ def test_counter_irate_plans_window_group_limit_shape(spark):
 
 
 def test_logrank_grid_and_grouped_spine_plan_hash_joins(spark):
-    """Round 18: the two new many×many dims grids — logrank's
+    """The two new many×many dims grids — logrank's
     groups × churn-times at-risk grid and the grouped quality
     trainer's langs × bucket spine — must plan as BroadcastHashJoin
     on the derived constant key, never a nested-loop/cartesian node
@@ -408,7 +425,7 @@ def test_logrank_grid_and_grouped_spine_plan_hash_joins(spark):
 
 
 def test_survival_and_multiclass_plans_hash_joins(spark):
-    """Round 19: the new dims grids — the omnibus' reuse of the
+    """The new dims grids — the omnibus' reuse of the
     logrank at-risk grid, multiclass training's classes × bucket
     spine, and classification's doc × class spine — must all plan as
     BroadcastHashJoin on the derived constant key, never a

@@ -1,4 +1,4 @@
-"""Probe-failure log hygiene (round 17 — VERDICT r16 next-round #2):
+"""Probe-failure log hygiene:
 expected-missing store reads never issue a probing ``spark.read``
 (FS pre-check instead), and the inherent QUALIFY analysis probes
 suppress the JVM ExecutionListenerBus logger only for their own
@@ -34,7 +34,7 @@ def test_parquet_data_exists(spark, tmp_path):
         pass
     assert not parquet_data_exists(spark, d)  # bookkeeping only
     # a data-named file inside a '_'-prefixed bookkeeping DIRECTORY
-    # does not count either (ADVICE r17): the reader's file index
+    # does not count either: the reader's file index
     # prunes hidden directories, so counting it here would pass the
     # pre-check and then fail the read this check exists to avoid
     os.makedirs(os.path.join(d, "_tmp"))
@@ -52,7 +52,7 @@ def test_parquet_data_exists(spark, tmp_path):
 
 
 def test_data_file_filter_fails_closed_on_base_mismatch():
-    """ADVICE r18: a listed path that does not prefix-match the base
+    """A listed path that does not prefix-match the base
     (a URI-rendering mismatch — unreachable when both come from the
     same FileSystem) must NOT fall back to basename-only filtering:
     that silently reverted to counting data-named files inside
@@ -76,7 +76,7 @@ def test_data_file_filter_fails_closed_on_base_mismatch():
 
 def test_probe_window_scoped_and_restored(spark):
     # register the ObservationManager listener — the trigger that
-    # made every expected probe failure an ERROR trace pre-r17
+    # would make every expected probe failure an ERROR trace
     obs = Observation()
     spark.range(5).observe(obs, F.count(F.lit(1)).alias("n")).count()
     assert obs.get["n"] == 5
@@ -95,14 +95,14 @@ def test_probe_window_scoped_and_restored(spark):
         with pytest.raises(Exception):
             spark.sql("SELECT definitely_not_a_column FROM range(1)")
     assert sx._probe_depth == 0
-    # restored to the PRIOR configured level (ADVICE r17 — no longer
+    # restored to the PRIOR configured level (no longer
     # a hardcoded ERROR), so a genuine listener failure outside the
     # window logs again exactly as the deployment configured
     assert _bus_level(spark) == prior
 
 
 def test_probe_restores_prior_configured_level(spark):
-    """ADVICE r17: restore puts back the level configured BEFORE the
+    """Restore puts back the level configured BEFORE the
     window — a deployment running the bus logger at WARN for its own
     diagnostics must not come out of every probe at ERROR."""
     jvm = spark.sparkContext._jvm

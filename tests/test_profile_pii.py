@@ -1,4 +1,4 @@
-"""Round-8 pipeline additions: column profiling (operators/profile.py)
+"""Pipeline additions: column profiling (operators/profile.py)
 and PII scrubbing (functions/text.py). The cross-engine regex/stat
 parity lives in q_column_profile / q_pii_scrub; these tests pin the
 semantics the oracle can't see — scrub order, approx-mode plan shape,
@@ -77,7 +77,7 @@ def test_profile_columns_stats(spark):
 
 
 def test_profile_percentiles_one_pass(spark):
-    """Round 13 (VERDICT r12 next-round #6): percentiles=True adds the
+    """Percentiles=True adds the
     q25/q50/q75 trio IN the same single aggregate — the plan still
     holds exactly one scan of the input — with NULL quartiles for
     non-numeric columns and the default schema untouched."""
@@ -173,7 +173,7 @@ def test_label_centroids_and_assignment(spark):
         assert all(abs(x - y) < 1e-9 for x, y in zip(cv, loose[k]))
 
 
-# ------------------------------------ data-quality rules (round 12)
+# ------------------------------------ data-quality rules
 
 def test_data_quality_report_rules(spark):
     from pyspark.sql import functions as F
@@ -220,7 +220,7 @@ def test_data_quality_report_rules(spark):
 
 
 def test_chi_square_cells_hand_computed(spark):
-    """Round 13: independent columns -> chi2 ~ 0; a deterministic
+    """Independent columns -> chi2 ~ 0; a deterministic
     dependence -> each cell's term matches the textbook formula;
     zero-observed cells contribute their expected count; max_cells
     guard raises."""
@@ -258,7 +258,7 @@ def test_chi_square_cells_hand_computed(spark):
 
 
 def test_max_cells_guard_counts_null_levels(spark):
-    """Round 20: the fused one-job dims guard must count a NULL level
+    """The fused one-job dims guard must count a NULL level
     exactly like the old per-marginal ``count()`` did (count(DISTINCT)
     alone would skip it): 3 a-levels (incl. NULL) x 2 b-levels = 6
     cells — over a max_cells of 5, under 6."""
@@ -281,7 +281,7 @@ def test_max_cells_guard_counts_null_levels(spark):
     assert pmi_cells(empty, "a", "b").count() == 0
 
 
-# ---------------------------------------------------------------- round 14
+# -------------------------------------------------------------------------
 
 
 def test_luhn_known_vectors(spark):
@@ -435,7 +435,7 @@ def test_winsorize_bounds_are_data_values_and_edges(spark):
 
 
 def test_winsorize_null_values_excluded_from_bounds(spark):
-    """Review round 14: NULLs must not shift the rank universe (they
+    """NULLs must not shift the rank universe (they
     sort first in Spark), must pass through unclipped, and an all-NULL
     group must keep its rows."""
     from rusty_timeseries_db_spark.operators.profile import winsorize

@@ -308,7 +308,7 @@ def test_query_gate_properties(col, lit, tail):
     )
 )
 def test_scrub_pii_reaches_fixed_point(spark, texts):
-    """Property (code-review-adjacent, round 8): after one scrub pass,
+    """Property: after one scrub pass,
     NO pattern matches remain — replacement tokens carry no digits or
     '@', so removal cannot splice new PII into existence — which also
     makes scrub idempotent (scrub∘scrub == scrub) on arbitrary text."""
@@ -340,7 +340,7 @@ def test_scrub_pii_reaches_fixed_point(spark, texts):
 )
 @settings(max_examples=300, deadline=None)
 def test_find_deepest_nested_qualify_span_properties(s):
-    """round 10: the nested-QUALIFY locator either returns a valid
+    """The nested-QUALIFY locator either returns a valid
     enclosing-paren span containing a QUALIFY keyword, None (no
     nested occurrence), or raises the documented unbalanced-parens
     error — never a bogus span."""
@@ -384,7 +384,7 @@ def test_find_deepest_nested_qualify_span_properties(s):
 )
 @settings(max_examples=200, deadline=None)
 def test_textual_qualify_rewrite_structure(pred, tail):
-    """round 10: the one-shot textual rewrite of a QUALIFY block must
+    """The one-shot textual rewrite of a QUALIFY block must
     eliminate the QUALIFY keyword, preserve the head and predicate
     text, keep parens balanced, and exclude the __qualify helper from
     the final projection."""
@@ -465,7 +465,7 @@ def test_word_grams_matches_python_reference(spark, docs, k):
 def test_remove_duplicate_spans_matches_python_interval_model(
     spark, spans, n_tok
 ):
-    """Property (round 12): for ANY span set — overlapping, nested,
+    """Property: for ANY span set — overlapping, nested,
     duplicated, beyond-the-end — remove_duplicate_spans' splice equals
     a plain Python interval-merge reference on the same token list:
     same kept tokens, same removed count, same merged-interval
@@ -519,7 +519,7 @@ def test_remove_duplicate_spans_matches_python_interval_model(
     ),
 )
 def test_merge_upsert_matches_dict_model(spark, target, source):
-    """Property (round 12): merge_upsert equals the obvious Python
+    """Property: merge_upsert equals the obvious Python
     dict replay — update matched keys (source NULL wins), insert the
     rest with NULL fill — for any unique-keyed target/source pair."""
     from rusty_timeseries_db_spark.operators.scd2 import merge_upsert
@@ -549,7 +549,7 @@ def test_merge_upsert_matches_dict_model(spark, target, source):
                 min_size=0, max_size=10, unique_by=lambda t: t[0]),
 )
 def test_pit_join_matches_python_model(spark, spine, fa, fb):
-    """Property (round 12): pit_join over two feature tables equals
+    """Property: pit_join over two feature tables equals
     the per-row Python model 'latest feature at or before the spine
     ts, independently per table' — one key, integer timestamps."""
     from pyspark.sql import functions as F
@@ -593,7 +593,7 @@ def test_pit_join_matches_python_model(spark, spine, fa, fb):
 )
 @settings(max_examples=200, deadline=None)
 def test_new_rewrites_identity_on_nonmatching_statements(q):
-    """Property (round 12): statements carrying NONE of the new
+    """Property: statements carrying NONE of the new
     dialect keywords pass the purely-textual rewrites through by
     IDENTITY (the `is`-level contract the dialect entry documents) —
     including ones full of stars, parens, and plain replace() calls.
@@ -626,7 +626,7 @@ def test_new_rewrites_identity_on_nonmatching_statements(q):
     ),
 )
 def test_bm25_matches_python_reference(spark, docs):
-    """Property (round 12): bm25_topk equals a direct Python Okapi
+    """Property: bm25_topk equals a direct Python Okapi
     BM25 implementation (Lucene +1 idf, k1=1.2, b=0.75) on arbitrary
     small corpora — scores to 6 decimals, identical ranking under the
     (score desc, id) total order."""
@@ -675,7 +675,7 @@ def test_bm25_matches_python_reference(spark, docs):
     bits=st.sampled_from([2, 4, 8, 16]),
 )
 def test_quantize_roundtrip_bound_property(spark, vec, bits):
-    """Property (round 12): for ANY float vector and bit width, every
+    """Property: for ANY float vector and bit width, every
     dequantized coordinate is within scale/2 of the original, codes
     fit the signed range, and the all-zero edge keeps scale 0."""
     from pyspark.sql import functions as F
@@ -705,7 +705,7 @@ def test_quantize_roundtrip_bound_property(spark, vec, bits):
     assert all(e <= bound for e in row.err)
 
 
-# -------------------------------------- round-13 operators (property)
+# -------------------------------------- operators (property)
 
 @settings(max_examples=6, deadline=None)
 @given(
@@ -880,7 +880,7 @@ def test_token_budget_sample_matches_python_reference(spark, docs, budget):
     assert got == want
 
 
-# -------------------------------------- round-14 operators (property)
+# -------------------------------------- operators (property)
 
 @settings(max_examples=6, deadline=None)
 @given(
@@ -1035,7 +1035,7 @@ def test_mp4_meta_roundtrip(w, h, dur, ts, version):
     assert (got_w, got_h) == (w, h)
 
 
-# ------------------------------------------------- round 17: AUC / KM
+# ------------------------------------------------- AUC / KM
 
 @settings(max_examples=8, deadline=None)
 @given(

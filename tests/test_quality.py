@@ -1,4 +1,4 @@
-"""fastText-style linear quality gate (round 17 — operators/quality.py):
+"""fastText-style linear quality gate (operators/quality.py):
 hand-computed scores on tiny docs, the empty-document bias contract,
 the quantized-score keep boundary, missing-bucket zero weights, the
 deterministic weight stand-in, and the opt-in pipeline stage (CCNet
@@ -227,7 +227,7 @@ def test_binary_auc_hand_computed_with_ties(spark):
 
 
 def test_per_group_heads_equal_solo_training(spark):
-    """Round 18 (VERDICT r17 #3): train_quality_weights(group_col=)
+    """train_quality_weights(group_col=)
     produces, for every group, EXACTLY the table the ungrouped
     trainer produces on that group's rows alone — counts, spine,
     smoothing totals, and quantization all carry the group key."""
@@ -335,7 +335,7 @@ def test_unseen_group_scores_at_bias(spark):
 
 
 # ---------------------------------------------------------------------------
-# Multi-class head (round 19 — VERDICT r18 next-round #3)
+# Multi-class head
 # ---------------------------------------------------------------------------
 
 
@@ -410,7 +410,7 @@ def test_multiclass_routes_and_calibrates(spark):
 
 
 def test_multiclass_separates_where_binary_cannot(spark):
-    """The VERDICT r18 acceptance example: a binary gate trained
+    """The acceptance example: a binary gate trained
     positive='code' REJECTS both a news doc and a chat doc — it
     cannot tell them apart — while the k-class head routes each to
     its own class."""

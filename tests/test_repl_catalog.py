@@ -368,7 +368,7 @@ def test_engine_sql_facade(spark, tmp_path):
 
 
 def test_repl_profile_verb(repl):
-    """round 8: the `profile` verb returns the one-pass column profile
+    """The `profile` verb returns the one-pass column profile
     of the live telemetry view (nulls/distincts/ranges), overlay-aware
     like every other read."""
     repl.execute("insert Sa_FanSpeed 2024-08-28T12:00:00Z 0.8 s-1")
@@ -385,7 +385,7 @@ def test_repl_profile_verb(repl):
 
 
 def test_repl_latest_verb_sees_overlay(repl):
-    """round 8: `latest` returns the current row per series and must
+    """`latest` returns the current row per series and must
     reflect overlay point-updates (live view), plus ingest-order
     tie-break on duplicate timestamps."""
     repl.execute("insert Sa 2024-08-28T12:00:00Z 0.5 s-1")
@@ -409,7 +409,7 @@ def test_repl_latest_verb_sees_overlay(repl):
 
 
 def test_repl_latest_point_read_verb(repl):
-    """round 9: `latest <timeseries_id>` narrows to one series — the
+    """`latest <timeseries_id>` narrows to one series — the
     REPL twin of GET /latest?timeseries_id=."""
     repl.execute("insert Sa 2024-08-28T12:00:00Z 0.5 s-1")
     repl.execute("insert Sa 2024-08-28T12:05:00Z 0.7 s-1")

@@ -1,4 +1,4 @@
-"""Persisted BM25 index (round 13 — operators/retrieval.py
+"""Persisted BM25 index (operators/retrieval.py
 Bm25Index): result-equality with the ad-hoc bm25_topk operator,
 restart-from-manifest, incremental add exactness, and shard
 partition-pruning on the query path."""
@@ -120,7 +120,7 @@ def test_empty_terms_raises(spark, tmp_path):
         idx.query([])
 
 
-# ----------------------------------------------- RRF fusion (round 13)
+# ----------------------------------------------- RRF fusion
 
 def test_rrf_fuse_hand_computed(spark):
     """Fused scores equal the hand-computed 1/(60+rank) sums; a doc in
@@ -164,7 +164,7 @@ def test_rrf_fuse_k_cut_and_empty_raises(spark):
         rrf_fuse({}, id_col="doc_id")
 
 
-# ------------------------------- streaming index maintenance (round 13)
+# ------------------------------- streaming index maintenance
 
 def test_apply_bm25_batch_idempotent(spark, tmp_path):
     """The replay contract: a batch_id at or below the manifest's
@@ -325,7 +325,7 @@ def test_streaming_ivf_index_sink_parity_with_batch_add(spark, tmp_path):
     ) == 0
 
 
-# ------------------------------------- deletion + compaction (round 13)
+# ------------------------------------- deletion + compaction
 
 def test_remove_is_exact_vs_live_rebuild(spark, tmp_path):
     """The deletion contract: after remove(), query() must EXACTLY
@@ -470,7 +470,7 @@ def test_query_refuses_mid_compact_marker(spark, tmp_path):
 
 
 def test_remove_requires_docs_sidecar(spark, tmp_path):
-    """A pre-r13 index (no docs/ sidecar flag) must fail LOUDLY on
+    """An index without the docs/ sidecar flag must fail LOUDLY on
     remove() — a partial sidecar would silently skip old docs."""
     from rusty_timeseries_db_spark.fsutil import (
         read_json_manifest,
@@ -520,7 +520,7 @@ def test_remove_manifest_self_heals(spark, tmp_path):
 
 
 def test_stream_sink_skips_removed_ids(spark, tmp_path):
-    """removed_ids='skip' (review round 13): a re-published removed doc
+    """removed_ids='skip': a re-published removed doc
     must not poison-pill the stream — the batch applies minus the
     tombstoned ids; 'error' keeps add()'s strict raise."""
     from pyspark.sql import functions as F
@@ -550,8 +550,8 @@ def test_stream_sink_skips_removed_ids(spark, tmp_path):
         )
 
 
-# ---------------------------------------------------------------- round 14
-# crash-safe compact swap (ADVICE r13 #1) + removed_ids policy matrix
+# -------------------------------------------------------------------------
+# crash-safe compact swap + removed_ids policy matrix
 
 
 def test_compact_interrupted_mid_swap_converges(spark, tmp_path):
@@ -559,7 +559,7 @@ def test_compact_interrupted_mid_swap_converges(spark, tmp_path):
     strand the index: recover_dir_swap finishes the swap on re-entry
     and the compact re-run converges to the exact live-subset scores.
     Simulated state: src missing, complete rewrite at src+SWAP_NEW,
-    marker present (the exact window ADVICE r13 #1 flagged)."""
+    marker present."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -622,7 +622,7 @@ def test_compact_never_deletes_live_dir_first(spark, tmp_path):
 
 
 def test_removed_ids_policy_matrix_batch_and_stream(spark, tmp_path):
-    """VERDICT r13 next-round #6: ONE removed_ids policy
+    """ONE removed_ids policy
     (error|skip|readmit) on BOTH doors. Batch add() defaults to error;
     the streaming apply defaults to skip; readmit compacts first and
     then serves the re-published doc with exact scores."""
@@ -668,7 +668,7 @@ def test_removed_ids_policy_matrix_batch_and_stream(spark, tmp_path):
 
 
 def test_concurrent_staging_dirs_do_not_collide(spark, tmp_path):
-    """ADVICE r13 #4: staging is per-call — two interleaved stage
+    """Staging is per-call — two interleaved stage
     calls (the concurrent-writer window) must not clobber each other's
     staged batches."""
     from pyspark.sql import functions as F
@@ -786,7 +786,7 @@ def test_should_compact_threshold_both_indexes(spark, tmp_path):
     assert not ivf.should_compact()
 
 
-# ----------------------- combined add+remove (one-topic) sink (r14)
+# ----------------------- combined add+remove (one-topic) sink
 
 def test_apply_index_ops_batch_bm25(spark, tmp_path):
     """One micro-batch mixing adds and removes: the survivors must
@@ -1113,7 +1113,7 @@ def test_ranking_metrics_k_cut_and_perfect(spark):
 
 
 def test_ranking_metrics_zero_result_query_emits_zero_row(spark):
-    """Review round 14: a query with labels but NO retrieved rows must
+    """A query with labels but NO retrieved rows must
     emit its all-zero row (n_rel intact), not vanish."""
     from rusty_timeseries_db_spark.operators.retrieval import (
         ranking_metrics,

@@ -181,7 +181,7 @@ def test_streaming_sink_maintains_rollup(spark, tmp_path):
 
 
 def test_window_must_align_with_session_timezone(spark, paths):
-    """ADVICE r7 (medium): F.window buckets are epoch(UTC)-aligned but
+    """F.window buckets are epoch(UTC)-aligned but
     window_day / hwm casts use the session zone — a zone offset that is
     not a multiple of the window puts local midnight INSIDE a window
     and read() could double-count it. The constructor must reject the
@@ -203,7 +203,7 @@ def test_window_must_align_with_session_timezone(spark, paths):
 
 
 def test_manifest_and_probe_use_hadoop_fs_scheme_paths(spark, tmp_path):
-    """Storage-agnostic manifest (VERDICT r7 #2): with an explicit
+    """Storage-agnostic manifest: with an explicit
     'file:/...' URI — the scheme-qualified form every non-local store
     uses — os.path.exists()/os.walk() see NOTHING, so this test fails
     if the implementation regresses to driver-local I/O: the hwm would
@@ -231,7 +231,7 @@ def test_manifest_and_probe_use_hadoop_fs_scheme_paths(spark, tmp_path):
 
 
 def test_streaming_maintenance_hash_equals_batch_formulation(spark, tmp_path):
-    """Stream/batch parity for the rollup (VERDICT r7 next-round #7):
+    """Stream/batch parity for the rollup:
     after N micro-batches through the foreachBatch maintenance sink,
     rollup.read() must be ROW-IDENTICAL to the pure batch aggregation
     of the same ingested rows — the ST1 parity pattern applied to the
@@ -347,7 +347,7 @@ def test_engine_rollup_forwards_distinct_col(spark, tmp_path):
 
 
 def test_tz_offsets_accept_short_fixed_forms():
-    """Code-review r8: Spark accepts 'GMT+8' / '+8' / 'UTC+1' — the
+    """Spark accepts 'GMT+8' / '+8' / 'UTC+1' — the
     guard must resolve them instead of raising."""
     from rusty_timeseries_db_spark.operators.rollup import (
         _tz_offsets_seconds,
@@ -417,7 +417,7 @@ def test_streaming_sink_maintains_sketch_rollup(spark, tmp_path):
 
 
 def test_scheduler_advances_hwm_on_cadence(spark, paths):
-    """VERDICT r7 next-round #9: the RollupScheduler re-arms like the
+    """The RollupScheduler re-arms like the
     FDD loop (R5/R6) — two scheduled refreshes, with an append in
     between, advance the high-water mark twice with no manual
     refresh() call."""
@@ -465,7 +465,7 @@ def test_scheduler_stop_cancels_pending_tick(spark, paths):
 
 
 def test_scheduler_survives_refresh_errors(spark, paths):
-    """code-review r8: a transient refresh failure must not kill the
+    """A transient refresh failure must not kill the
     cadence (that would be the reference's never-re-arms R6 bug via
     the error path) — the scheduler records it and keeps ticking."""
     from rusty_timeseries_db_spark.operators.rollup import RollupScheduler
@@ -497,7 +497,7 @@ def test_scheduler_survives_refresh_errors(spark, paths):
 def test_distinct_sketch_value_idempotent_across_refresh_orders(
     spark, tmp_path
 ):
-    """VERDICT r8 next-round #9 (pins rollup.py's documented contract):
+    """Next-round #9 (pins rollup.py's documented contract):
     HLL cells are VALUE-level idempotent — the sketch BYTES may differ
     across refresh orders (coupon order in sparse mode), but
     ``distinct_estimate`` must be identical whether the rollup was
@@ -566,7 +566,7 @@ def test_distinct_sketch_value_idempotent_across_refresh_orders(
 
 
 def test_invalidate_days_repairs_late_rows(spark, paths):
-    """Round 15: the targeted late-data repair — invalidate exactly
+    """The targeted late-data repair — invalidate exactly
     the touched day instead of refresh(full=True)'s whole-rollup
     rebuild; other materialized days' files are not rewritten."""
     base, rollup = paths
@@ -601,7 +601,7 @@ def test_invalidate_days_repairs_late_rows(spark, paths):
 
 
 def test_theta_cells_segment_overlap_estimate(spark, tmp_path):
-    """Round 16: Theta sketch cells complete the sketch-cell family —
+    """Theta sketch cells complete the sketch-cell family —
     segment_overlap_estimate intersects segment member populations
     across MATERIALIZED days and the LIVE tail (the set operation HLL
     cells cannot do), within ~5% of the exact overlap, for pairwise
@@ -683,7 +683,7 @@ def test_theta_cells_segment_overlap_estimate(spark, tmp_path):
 
 
 def test_invalidate_days_prunes_ds_partitions(spark, tmp_path):
-    """Round 16 — VERDICT r15 #4: on a date-partitioned warehouse the
+    """On a date-partitioned warehouse the
     late-day repair's base scan carries the named days as PARTITION
     filters (``ds IN (...)`` reaches PartitionFilters, pruning whole
     ``ds=<day>`` directories) instead of leaning on row-group ts
@@ -728,7 +728,7 @@ def test_invalidate_days_prunes_ds_partitions(spark, tmp_path):
 
 
 def test_keep_ds_survives_overlay_and_repair_stays_correct(spark, tmp_path):
-    """Round 16 gap-closer: the facade rollup's keep_ds base view must
+    """The facade rollup's keep_ds base view must
     retain the ds partition column THROUGH the overlay merge
     (apply_overlay passes non-payload base columns), and
     invalidate_days on that view must fold an overlay point-update
@@ -772,7 +772,7 @@ def test_keep_ds_survives_overlay_and_repair_stays_correct(spark, tmp_path):
 
 
 def test_streaming_sink_repairs_late_days(spark, tmp_path):
-    """Round 15: the sink's writer-side invalidation — a micro-batch
+    """The sink's writer-side invalidation — a micro-batch
     carrying a row for an already-materialized day triggers
     invalidate_days automatically; rollup.read() equals the batch
     recompute with no manual full refresh."""
@@ -849,7 +849,7 @@ def test_streaming_sink_repairs_late_days(spark, tmp_path):
 
 
 def test_engine_rollup_forwards_theta_col(spark, tmp_path):
-    """ADVICE r16 low: continuous_rollup(theta_col=...) must include
+    """continuous_rollup(theta_col=...) must include
     the sketch column in the facade's base-view selection — before the
     fix the ContinuousRollup's base view lacked the column and
     refresh() failed with AnalysisException for any theta_col outside

@@ -188,7 +188,7 @@ def test_temperature_sample_validation(spark):
 
 
 def test_token_budget_sample_semantics(spark):
-    """Round 13: per-domain fill-until-enough — the doc that CROSSES
+    """Per-domain fill-until-enough — the doc that CROSSES
     the budget is kept, later docs are not; unbudgeted domains honor
     default_budget (None = excluded); selection is order-stable."""
     from pyspark.sql import functions as F  # noqa: F401

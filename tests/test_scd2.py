@@ -94,7 +94,7 @@ def test_scd2_point_in_time_query(spark):
     assert got == {"k1": "addr_v2", "k2": "addr_b"}  # the 2023-08 view
 
 
-# ------------------------------------------ MERGE upsert (round 12)
+# ------------------------------------------ MERGE upsert
 
 def test_merge_upsert_update_insert_and_null_assignment(spark):
     """Matched rows take the source's values INCLUDING NULLs (MERGE
@@ -146,7 +146,7 @@ def test_merge_upsert_update_cols_subset_and_missing_col_raises(spark):
 
 
 def test_merge_upsert_target_missing_update_col_raises(spark):
-    """Review round 12: an update column absent from the TARGET was a
+    """An update column absent from the TARGET was a
     silent no-op (the select iterates target columns only) — now it
     raises like the source-side check."""
     import pytest
@@ -181,7 +181,7 @@ def test_merge_upsert_composite_keys(spark):
     }
 
 
-# ------------------------------------------ snapshot diff (round 13)
+# ------------------------------------------ snapshot diff
 
 def test_table_diff_change_types_and_null_safety(spark):
     from pyspark.sql import functions as F  # noqa: F401

@@ -160,7 +160,7 @@ def test_topk_sketch_null_values_ignored(spark):
 
 
 def test_kll_rank_error_vs_exact(spark):
-    """Round 15: a merged per-day KLL rollup's quantile estimates must
+    """A merged per-day KLL rollup's quantile estimates must
     sit within the sketch's normalized rank-error bound of the exact
     percentiles — checked in RANK space (the KLL guarantee is on
     ranks, not values): the exact rank of each estimated value must be
@@ -271,7 +271,7 @@ def test_kll_rollup_cells_roundtrip_and_continuous_rollup(spark, tmp_path):
 
 
 def test_theta_overlap_accuracy_and_invariants(spark):
-    """Round 15: pairwise segment overlap from theta sketches must sit
+    """Pairwise segment overlap from theta sketches must sit
     within ~5% of the exact distinct intersection/union, and respect
     the set invariants (inter <= min cardinality, union >= max,
     |A|+|B| == inter + union within sketch error)."""
@@ -327,7 +327,7 @@ def test_theta_rollup_ignores_nulls_and_counts_rows(spark):
 
 
 def test_theta_rollup_excludes_null_key_segments(spark):
-    """ADVICE r15 low: a NULL-key segment would appear in the rollup
+    """A NULL-key segment would appear in the rollup
     yet vanish from every overlap pair (seg_a < seg_b is NULL for it)
     — theta_rollup excludes it so rollup and overlap stay
     consistent."""
@@ -341,7 +341,7 @@ def test_theta_rollup_excludes_null_key_segments(spark):
 
 
 def test_theta_overlap_kway_vs_exact_3way(spark):
-    """Round 16 — VERDICT r15 next-round #6: k-way Theta intersections
+    """K-way Theta intersections
     over the events segment grid must sit within ~5% of the exact
     3-way distinct-user intersection (the question pairwise Jaccard
     cannot answer), for EVERY segment triple at sf0.001."""

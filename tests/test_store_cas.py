@@ -1,5 +1,5 @@
-"""Streaming-store manifest CAS protocol (round 16 — ADVICE r15
-medium #2): the topk/quantile/state stores' manifests commit through
+"""Streaming-store manifest CAS protocol (medium #2): the
+topk/quantile/state stores' manifests commit through
 ``fsutil.write_versioned_manifest`` with a compare-and-swap token and
 a bounded retry-on-conflict loop (``store_common.
 update_store_manifest``). Unlike the persisted indexes' serialize-or-
@@ -40,7 +40,7 @@ def _df(spark, rows):
 
 
 def test_conflict_between_cas_read_and_write_retries(spark, tmp_path):
-    """The exact race ADVICE r15 names: another writer lands BETWEEN
+    """The exact race: another writer lands BETWEEN
     the committer's CAS read and its write. The stale write must
     conflict and the retry must preserve BOTH writers' fields — the
     interleaved sink watermark AND the compactor's base_upto."""

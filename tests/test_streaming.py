@@ -192,7 +192,7 @@ def test_consecutive_faults_runs(spark):
 
 
 def test_corrupt_json_lines_are_quarantined(spark, tmp_path):
-    """Round 8: garbage lines in the drop dir land verbatim in the
+    """Garbage lines in the drop dir land verbatim in the
     quarantine dir; the valid lines of the SAME file still ingest —
     neither silent all-NULL rows nor a failed stream."""
     import json as _json
@@ -304,7 +304,7 @@ def test_streaming_dedup_on_rocksdb_state_store(spark, tmp_path):
 def test_exactly_once_checkpoint_reset_new_content_not_dropped(
     spark, tmp_path
 ):
-    """Round 9 (the exactly-once face of ADVICE r8 #2): a committed
+    """A committed
     batch id replayed with IDENTICAL content skips (fingerprint
     match); the same id delivering NEW content — checkpoint loss/reset
     renumbering new source files into old ids — lands in a fresh
@@ -363,7 +363,7 @@ def test_exactly_once_checkpoint_reset_new_content_not_dropped(
 
 
 def test_exactly_once_compaction_folds_ledger(spark, tmp_path):
-    """Round 10 (ADVICE r9 #4): compaction collapses the per-batch
+    """Compaction collapses the per-batch
     ids/fingerprint dict into (hwm, folded_fps) so the manifest the
     sink rewrites every micro-batch stops growing one entry per batch
     forever — while keeping every replay semantic: folded-content
@@ -425,7 +425,7 @@ def test_exactly_once_compaction_folds_ledger(spark, tmp_path):
 
 
 def test_exactly_once_legacy_manifest_skips_on_id(spark, tmp_path):
-    """Pre-round-9 manifests carry no fingerprints: a committed id
+    """Legacy manifests carry no fingerprints: a committed id
     replay cannot be content-verified, so the old skip-on-id behavior
     is preserved (never a crash, never a duplicate)."""
     import json as _json
@@ -522,7 +522,7 @@ def test_versioned_manifest_protocol(spark, tmp_path):
 
 
 def test_eo_new_content_warning_latched_per_sink_run(spark, tmp_path):
-    """Round 11 (ADVICE r10 #1): after a checkpoint reset on a
+    """After a checkpoint reset on a
     compacted warehouse, EVERY renumbered batch with new content sits
     below the fold indefinitely — the 'replayed with NEW content'
     warning must fire once per sink run (warn_state latch), not per
@@ -585,7 +585,7 @@ def test_eo_new_content_warning_latched_per_sink_run(spark, tmp_path):
 def test_eo_sink_commit_cas_merges_with_concurrent_writer(
     spark, tmp_path, monkeypatch
 ):
-    """Round 11: the sink's manifest commit is a CAS merge — a
+    """The sink's manifest commit is a CAS merge — a
     concurrent writer (retention, compaction, or as here another
     commit) bumping the version between the sink's read and write
     must not be clobbered: the sink re-reads and re-applies its
@@ -644,7 +644,7 @@ def test_eo_sink_commit_cas_merges_with_concurrent_writer(
 def test_eo_compaction_cas_carries_concurrent_commit(
     spark, tmp_path, monkeypatch
 ):
-    """Round 11: a live sink committing DURING the compaction fold is
+    """A live sink committing DURING the compaction fold is
     carried forward by the swap's CAS merge — its dir, id and
     fingerprint survive beside the compacted generation instead of
     being delisted (the long fold job is the widest clobber window
@@ -704,7 +704,7 @@ def test_eo_compaction_cas_carries_concurrent_commit(
 
 
 def test_eo_cas_randomized_interleavings(spark, tmp_path, monkeypatch):
-    """Round 11, protocol stress: a seeded random schedule of sink
+    """Protocol stress: a seeded random schedule of sink
     commits, same-content replays, new-content replays, compactions
     and retentions, where a fraction of CAS manifest writes get a
     concurrent commit injected between read and write. Invariants
@@ -851,8 +851,8 @@ def test_eo_cas_randomized_interleavings(spark, tmp_path, monkeypatch):
 
 
 def test_eo_sink_quarantine_requires_corrupt_column(spark, tmp_path):
-    """The r8 misconfiguration guard applies to the exactly-once sink
-    too (round 11): quarantine without the corrupt-record column would
+    """The misconfiguration guard applies to the exactly-once sink
+    too: quarantine without the corrupt-record column would
     silently commit garbage lines as all-NULL rows."""
     import pytest
 

@@ -197,7 +197,7 @@ def test_null_ingest_ts_row_is_not_lost_in_dedup_mode(spark, tmp_path):
     assert sorted(r.doc_id for r in out.collect()) == [1, 2]
 
 
-# ------------------------- streaming PIT enrichment (round 12)
+# ------------------------- streaming PIT enrichment
 
 def test_streaming_enrichment_stream_batch_parity(spark, tmp_path):
     """Every micro-batch enriches against the static feature tables

@@ -1,4 +1,4 @@
-"""Streaming KLL quantile store (round 15 — streaming/quantile.py):
+"""Streaming KLL quantile store (streaming/quantile.py):
 replay idempotence in effect (exact n_rows, rank-error containment),
 schema/k guards, compaction (exact accounting preserved, dirs pruned,
 containment holds), the interleaved-commit manifest merge, and the

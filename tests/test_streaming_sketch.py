@@ -1,7 +1,6 @@
-"""Streaming heavy-hitter sketch sink (rounds 14-15 —
-streaming/sketch.py): replay idempotence (versioned-dir overwrite
+"""Streaming heavy-hitter sketch sink (streaming/sketch.py): replay idempotence (versioned-dir overwrite
 convergence from the crash window), schema/k guards, bound containment
-for batch-split data, the real-sink end-to-end run, and the round-15
+for batch-split data, the real-sink end-to-end run, and
 compaction: served results bit-identical before/after a fold, crash
 recovery at every protocol step, and the interleaved sink-commit
 manifest merge."""
@@ -76,7 +75,7 @@ def test_apply_idempotent_and_guards(spark, tmp_path):
 
 
 def test_crash_between_summary_write_and_manifest_bump(spark, tmp_path):
-    """The ADVICE r14 medium: a crash after the summary write but
+    """A crash after the summary write but
     before the manifest bump replays the batch. The versioned-dir
     overwrite must CONVERGE (identical store) instead of appending the
     batch's summaries a second time."""
@@ -135,7 +134,7 @@ def test_split_across_batches_bound_holds(spark, tmp_path):
 
 
 def test_compact_served_identical_and_cost_flat(spark, tmp_path):
-    """The round-15 fold: served results BIT-IDENTICAL before/after,
+    """The fold: served results BIT-IDENTICAL before/after,
     at both the stored and a coarsened key granularity, with the
     folded summary dirs gone (serve cost no longer O(batches)); later
     batches keep landing and merge on top of the base."""
@@ -381,7 +380,7 @@ def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
     """A sink micro-batch committing between compact's opening
     manifest read and its base-commit write must survive: compact
     merges base_upto into a FRESH manifest read (the streaming/state.py
-    ADVICE r14 fix, applied here symmetrically)."""
+    fix, applied here symmetrically)."""
     store = str(tmp_path / "hh")
     b0, b1 = ROWS[::2], ROWS[1::2]
     apply_topk_sketch_batch(spark, store, _df(spark, b0), 0, ["g"], "v", k=2)

@@ -1,5 +1,5 @@
-"""Streaming state-residence durations (round 14 —
-streaming/state.py): exact stream==batch parity across micro-batch
+"""Streaming state-residence durations (streaming/state.py): exact
+stream==batch parity across micro-batch
 boundaries, replay convergence from every crash point, late-row
 policy, and the real-sink end-to-end run."""
 
@@ -200,7 +200,7 @@ def test_streaming_sink_end_to_end(spark, tmp_path):
 
 
 def test_tied_timestamp_without_tiebreak_is_kept(spark, tmp_path):
-    """Review round 14: with no tiebreak column, a new event tied with
+    """With no tiebreak column, a new event tied with
     the carryover timestamp is KEPT (zero-length interval), preserving
     stream==batch parity."""
     store = str(tmp_path / "sd")
@@ -318,7 +318,7 @@ def test_compact_crash_between_base_and_cleanup_is_invisible(
 
 
 def test_compact_interleaved_sink_commit_not_rolled_back(spark, tmp_path):
-    """ADVICE r14 low: a sink micro-batch committing between compact's
+    """A sink micro-batch committing between compact's
     opening manifest read and its commit write must not get its
     last_applied_batch rolled back (the checkpoint has advanced — the
     batch would be lost forever). compact now merges base_upto into a

@@ -1,5 +1,5 @@
-"""Streaming Theta segment store (round 16 — streaming/theta.py,
-VERDICT r15 next-round #2): replay idempotence in EFFECT (exact
+"""Streaming Theta segment store (streaming/theta.py): replay idempotence in
+EFFECT (exact
 n_rows accounting at every crash/replay point, estimates ≤5% vs the
 exact distinct), compaction folding to a merged-sketch base with
 accounting preserved, the interleaved sink-commit CAS survival, the

@@ -283,7 +283,7 @@ def test_streaming_sliding_matches_batch_oracle(spark, tmp_path):
 
 
 def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
-    """leftOuter stream-stream join (round 8): unmatched readings emit
+    """leftOuter stream-stream join: unmatched readings emit
     with null right columns once the watermark proves no match can
     still arrive. A far-future flush row advances the watermark so the
     availableNow run actually closes the outer state."""
@@ -393,7 +393,7 @@ def test_stream_stream_join_matches_batch_formulation(spark, tmp_path):
 
 
 def test_stream_batch_ohlc_parity(spark, tmp_path):
-    """Round 8: the streaming OHLC bars (min_by/max_by running argmins)
+    """The streaming OHLC bars (min_by/max_by running argmins)
     replayed over multiple micro-batches equal the batch formulation on
     the same rows — including open/close picks under duplicate
     timestamps (tie broken by value on both sides)."""
@@ -475,7 +475,7 @@ def test_stream_batch_ohlc_parity(spark, tmp_path):
 
 
 def test_stream_ohlc_tie_parity_with_batch_q_ohlc_bars(spark, tmp_path):
-    """Round 10 (VERDICT r9 next-round #6): when the stream carries an
+    """When the stream carries an
     identity column, windowed_ohlc orders its argmins by (ts, id) and
     the streamed bars equal batch q_ohlc_bars ITSELF — not the
     (ts, value) reformulation — including open/close picks on
@@ -547,7 +547,7 @@ def test_stream_ohlc_tie_parity_with_batch_q_ohlc_bars(spark, tmp_path):
 
 
 def test_latest_value_sink_stream_batch_parity(spark, tmp_path):
-    """Round 8: the last-value cache replayed over multiple
+    """The last-value cache replayed over multiple
     micro-batches equals the batch last-row-per-series computation,
     including ties (ingest_seq breaks same-ts rows by arrival order);
     the snapshot read is O(#series) and survives the manifest repoint."""
@@ -648,7 +648,7 @@ def test_latest_value_snapshot_sweeper(spark, tmp_path):
 
 
 def test_latest_value_sink_survives_checkpoint_replay(spark, tmp_path):
-    """code-review r8 replay-wedge guard, narrowed per ADVICE r8 #2:
+    """Replay-wedge guard, narrowed:
     when the checkpoint is lost, already-recorded batch ids replay —
     an id EQUAL to the manifest's is skipped (crash between repoint
     and checkpoint commit: same id ⇒ same data, already committed);
@@ -709,7 +709,7 @@ def test_latest_value_sink_survives_checkpoint_replay(spark, tmp_path):
 
 
 def test_latest_value_sink_checkpoint_reset_keeps_new_data(spark, tmp_path):
-    """ADVICE r8 #2's data-loss scenario: after checkpoint loss the
+    """The data-loss scenario: after checkpoint loss the
     source re-delivers under LOW batch ids — but with genuinely NEW
     files. The old `>=` skip silently dropped those rows until batch
     ids caught up; the narrowed guard must ingest them."""
@@ -760,7 +760,7 @@ def test_latest_value_sink_checkpoint_reset_keeps_new_data(spark, tmp_path):
 
 
 def test_latest_value_sink_reset_warns_once_per_run(spark, tmp_path):
-    """ADVICE r9 #5: after a checkpoint reset, EVERY batch of the
+    """After a checkpoint reset, EVERY batch of the
     renumbered stream sits below the bumped manifest id — the warning
     must fire once per sink run, not once per micro-batch, or the
     perpetual noise drowns the one genuine reset signal. A fresh sink
@@ -814,13 +814,13 @@ def test_latest_value_sink_reset_warns_once_per_run(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round 9: snapshot-backed serving + storage-agnostic streaming manifests
+# Snapshot-backed serving + storage-agnostic streaming manifests
 # ---------------------------------------------------------------------------
 
 def test_engine_latest_serves_snapshot_and_matches_batch_face(
     spark, tmp_path
 ):
-    """VERDICT r8 next-round #2 Done criteria: with a committed
+    """Done criteria: with a committed
     last-value sink in the warehouse, engine.latest() (and therefore
     GET /latest and the REPL verb) must (a) answer row-identically to
     the batch argmax over the same ingested rows, and (b) plan a read
@@ -921,7 +921,7 @@ def test_engine_latest_snapshot_merges_flag_overlay(spark, tmp_path):
 
 
 def test_streaming_manifests_use_hadoop_fs_scheme_paths(spark, tmp_path):
-    """VERDICT r8 next-round #3 Done criterion (the rollup
+    """Done criterion (the rollup
     scheme-path test pattern, test_rollup.py): with an explicit
     'file:/...' URI — the scheme-qualified form every non-local store
     uses — driver-local os.path sees NOTHING, so this test fails if
@@ -983,7 +983,7 @@ def test_streaming_manifests_use_hadoop_fs_scheme_paths(spark, tmp_path):
 
 
 def test_manifest_legacy_single_file_fallback(spark, tmp_path):
-    """Warehouses written by pre-round-9 code carry single-file
+    """Warehouses written by older code carry single-file
     ``_manifest.json`` / ``_latest.json`` manifests: the versioned
     reader must fall back to them, and the next write must upgrade to
     the versioned protocol (which then takes precedence)."""
@@ -1007,7 +1007,7 @@ def test_manifest_legacy_single_file_fallback(spark, tmp_path):
     assert man == {
         "dirs": ["batch_id=0"], "committed_ids": [0], "compact_seq": 2,
         "fingerprints": {},  # legacy manifests carry none
-        "hwm": -1, "folded_fps": [],  # ...nor a round-10 ledger fold
+        "hwm": -1, "folded_fps": [],  # ...nor a ledger fold
     }
     assert committed_batch_ids(eo, spark) == [0]
 
@@ -1030,7 +1030,7 @@ def test_manifest_legacy_single_file_fallback(spark, tmp_path):
 
 
 def test_engine_start_streaming_ingest_wires_both_sinks(spark, tmp_path):
-    """round 9: one engine call starts the live ingest path — telemetry
+    """One engine call starts the live ingest path — telemetry
     sink + last-value cache — and the serving surface then answers
     from the snapshot while query_by_id scans the streamed table."""
     from rusty_timeseries_db_spark.api import TimeseriesEngine
@@ -1069,7 +1069,7 @@ def test_engine_start_streaming_ingest_wires_both_sinks(spark, tmp_path):
 
 
 def test_latest_value_sink_auto_sweep(spark, tmp_path):
-    """round 9: sweep_grace bounds snapshot storage from inside the
+    """sweep_grace bounds snapshot storage from inside the
     sink — after N micro-batches only the live dir + grace superseded
     dirs remain, and the read is unaffected."""
     from rusty_timeseries_db_spark.schema import TELEMETRY_INGEST_SCHEMA
@@ -1111,7 +1111,7 @@ def test_latest_value_sink_auto_sweep(spark, tmp_path):
 
 
 def test_get_latest_route_point_read(spark, tmp_path):
-    """round 9: GET /latest?timeseries_id= returns only that series —
+    """GET /latest?timeseries_id= returns only that series —
     the 'what is sensor X now' point read; unknown series -> []."""
     import json as _json
     import urllib.request
@@ -1248,7 +1248,7 @@ def test_latest_snapshot_ts_moving_update_divergence_is_as_documented(
 
 
 def test_retrofitted_snapshot_with_overlay_warns_once(spark, tmp_path):
-    """VERDICT r9 next-round #3: the retrofitted-sink stale-flag case
+    """The retrofitted-sink stale-flag case
     must be an operational signal, not just documentation — a
     last-value sink attached to a warehouse whose telemetry checkpoint
     already advanced serves a snapshot whose ingest_seq lineage cannot
@@ -1306,7 +1306,7 @@ def test_retrofitted_snapshot_with_overlay_warns_once(spark, tmp_path):
 
 
 def test_mixed_lineage_checkpoints_warn_on_snapshot_serve(spark, tmp_path):
-    """3rd review pass: a warehouse carrying BOTH at-least-once and
+    """A warehouse carrying BOTH at-least-once and
     exactly-once ingest checkpoints has an unknowable snapshot seq
     lineage — serving the snapshot face with an overlay present must
     warn on the ambiguity itself (the epoch comparison alone stayed
@@ -1378,7 +1378,7 @@ def test_supported_dual_sink_wiring_does_not_warn(spark, tmp_path):
 
 
 def test_eo_sink_quarantine_idempotent_and_rollup(spark, tmp_path):
-    """Round 11 (closing the r9 pick-one guard): the exactly-once sink
+    """The exactly-once sink
     supports quarantine_dir and rollup. Quarantine writes bad lines to
     {quarantine_dir}/batch_id=<id> with OVERWRITE, so re-delivering
     the same batches after a checkpoint loss rewrites the same dirs
@@ -1441,10 +1441,10 @@ def test_eo_sink_quarantine_idempotent_and_rollup(spark, tmp_path):
 def test_latest_stops_preferring_snapshot_after_batch_ingest(
     spark, tmp_path
 ):
-    """code-review r9 #2: rows appended through the BATCH path are
+    """Rows appended through the BATCH path are
     invisible to the streaming snapshot — after ingest_rows on this
     engine instance, latest() must serve the live view, not the stale
-    snapshot (round-8 behavior restored for mixed-path engines)."""
+    snapshot."""
     from rusty_timeseries_db_spark.api import TimeseriesEngine
     from rusty_timeseries_db_spark.streaming.ingest import (
         _write_latest_manifest_atomic,
@@ -1477,7 +1477,7 @@ def test_latest_stops_preferring_snapshot_after_batch_ingest(
 def test_latest_value_sink_same_id_new_content_not_dropped(
     spark, tmp_path
 ):
-    """code-review r9 #3: checkpoint loss where the FIRST replayed id
+    """Checkpoint loss where the FIRST replayed id
     EQUALS the committed manifest id (the id-0 single-batch case) —
     the stored batch fingerprint distinguishes the true crash-window
     replay (skip) from new content under the same id (merge)."""
@@ -1534,7 +1534,7 @@ def test_latest_value_sink_same_id_new_content_not_dropped(
 
 
 def test_damaged_manifests_raise_instead_of_wiping(spark, tmp_path):
-    """code-review r9 (2nd pass): a manifest/pointer that EXISTS but
+    """A manifest/pointer that EXISTS but
     cannot be read must RAISE — degrading it to 'absent' would let the
     next commit rebuild over it, silently discarding the exactly-once
     ledger (→ hidden data + replay duplicates) or the last-value
@@ -1587,7 +1587,7 @@ def test_damaged_manifests_raise_instead_of_wiping(spark, tmp_path):
 
 
 def test_versioned_manifest_infra_errors_propagate(spark, tmp_path, monkeypatch):
-    """ADVICE r9 #3: a transient ENVIRONMENT failure (JVM/Py4J hiccup,
+    """A transient ENVIRONMENT failure (JVM/Py4J hiccup,
     FS connectivity) that persists across the relist attempts must
     propagate with its own message — not be misreported as 'every
     committed version is unreadable' damage directing the operator to
@@ -1620,9 +1620,9 @@ def test_versioned_manifest_infra_errors_propagate(spark, tmp_path, monkeypatch)
 
 
 def test_engine_start_streaming_ingest_exactly_once_path(spark, tmp_path):
-    """round 9: the exactly_once=True wiring lands batches in the
+    """The exactly_once=True wiring lands batches in the
     manifest-committed telemetry_eo table, readable via
-    read_committed_telemetry (round 10: ALSO served through the
+    read_committed_telemetry (ALSO served through the
     engine surface — covered by the serving tests below)."""
     from rusty_timeseries_db_spark.api import TimeseriesEngine
     from rusty_timeseries_db_spark.streaming.ingest import (
@@ -1657,7 +1657,7 @@ def test_engine_start_streaming_ingest_exactly_once_path(spark, tmp_path):
 
 
 def test_exactly_once_table_served_through_engine_surface(spark, tmp_path):
-    """Round 10 (VERDICT r9 next-round #2): with
+    """With
     start_streaming_ingest(exactly_once=True), the committed rows are
     visible through engine.telemetry() / query_by_id / latest — the
     stronger-guarantee wiring keeps the full query surface. A replayed
@@ -1714,7 +1714,7 @@ def test_exactly_once_table_served_through_engine_surface(spark, tmp_path):
     assert eng.telemetry().count() == 4
     assert {r.timeseries_id for r in eng.latest().collect()} == {"s1", "s2"}
 
-    # mode pins: False restores the pre-round-10 view; True serves an
+    # mode pins: False ignores the EO rows; True serves an
     # empty (not missing) table when nothing has committed yet
     assert TimeseriesEngine(
         spark, wh, exactly_once=False
@@ -1728,7 +1728,7 @@ def test_exactly_once_table_served_through_engine_surface(spark, tmp_path):
 def test_eo_overlay_seq_remap_prevents_cross_store_corruption(
     spark, tmp_path
 ):
-    """code-review r10 #1/#2/#4: the EO sink and the batch path assign
+    """The EO sink and the batch path assign
     ingest_seq from unrelated lineages, and the overlay merge keys on
     ingest_seq alone — without the read-time remap, a flag update
     targeting a batch row would wholesale-substitute an unrelated EO
@@ -1792,8 +1792,8 @@ def test_eo_overlay_seq_remap_prevents_cross_store_corruption(
     snap = eng.telemetry(as_of_seq=eng.current_seq())
     assert {r.timeseries_id for r in snap.collect()} == {"sb"}
 
-    # (d) R2 point update against an EO row binds the EO store (2nd
-    # review pass: built from the batch base it was a silent no-op)
+    # (d) R2 point update against an EO row binds the EO store (built from
+    # the batch base it was a silent no-op)
     assert eng.update_rows([
         {"sensor_name": "eo", "timestamp": "2024-08-28T10:01:00Z",
          "value": 5.5, "fc1_flag": None, "timeseries_id": "se"},
@@ -1819,7 +1819,7 @@ def test_eo_overlay_seq_remap_prevents_cross_store_corruption(
 
 
 def test_eo_wiring_snapshot_face_sees_overlay_flags(spark, tmp_path):
-    """2nd review pass: under start_streaming_ingest(exactly_once=True,
+    """Under start_streaming_ingest(exactly_once=True,
     latest_cache=True), overlay rows carry remapped (negative) EO seqs
     while the snapshot stores raw stream seqs — the snapshot face must
     remap its seqs before the overlay merge, or FDD flags silently
@@ -1853,7 +1853,7 @@ def test_eo_wiring_snapshot_face_sees_overlay_flags(spark, tmp_path):
 def test_compact_recovery_merges_stranded_retained_overlay(
     spark, tmp_path
 ):
-    """2nd review pass: if compact() crashed in its one-rename window
+    """If compact() crashed in its one-rename window
     and a later update RECREATED the overlay dir, the next compact()
     must MERGE the stranded retained rows back instead of deleting
     them as residue."""
@@ -1898,7 +1898,7 @@ def test_compact_recovery_merges_stranded_retained_overlay(
     assert not os.path.isdir(eng.overlay_path + "__retained")
 
     # a fresh instance seeds its version counter from the overlay AND
-    # any stranded sibling (3rd review pass): its update must outrank
+    # any stranded sibling: its update must outrank
     # everything recovered, never lose to a resurrected stale row
     eng3 = TimeseriesEngine(spark, wh)
     assert eng3.update_rows([
@@ -1949,7 +1949,7 @@ def test_exactly_once_damaged_manifest_propagates_to_reads(spark, tmp_path):
 
 
 def test_damaged_pointer_reader_falls_back_writer_raises(spark, tmp_path):
-    """code-review r9 (3rd pass): the damage contract is role-aware —
+    """The damage contract is role-aware —
     the READER (engine.latest / GET /latest) degrades to the correct
     batch-argmax fallback with a warning when the snapshot pointer is
     damaged (no serving outage); direct read_latest_values (and the
@@ -2000,7 +2000,7 @@ def test_damaged_pointer_reader_falls_back_writer_raises(spark, tmp_path):
 
 
 def test_eo_time_travel_as_of_hwm(spark, tmp_path):
-    """Round 11 (VERDICT r10 next-round #2): the exactly-once lineage
+    """The exactly-once lineage
     gets its own snapshot cursor — telemetry(as_of_eo_hwm=N) reads
     exactly the rows of committed micro-batches with id <= N (the
     consistent cut the EO manifest's hwm defines), survives
@@ -2078,7 +2078,7 @@ def test_eo_time_travel_as_of_hwm(spark, tmp_path):
 
 
 def test_batch_ingest_into_eo_wired_warehouse_warns(spark, tmp_path):
-    """Round 11 (VERDICT r10 next-round #4): batch ingest into a
+    """Batch ingest into a
     warehouse whose streaming lineage is purely exactly-once creates
     the dual-lineage ambiguity AT WRITE TIME — warn there (once per
     engine instance), not only when latest() later serves a

@@ -91,7 +91,7 @@ def test_dedup_clusters_long_chain_converges(spark):
 
 
 def test_dedup_clusters_deep_chain_pointer_jump(spark):
-    """Round 20: pointer jumping converges in O(log diameter) rounds,
+    """Pointer jumping converges in O(log diameter) rounds,
     so a diameter-64 path graph now resolves WITHIN the default
     max_iter=25 (the 1-hop loop needed ~64 rounds and silently
     returned partial labels at the bound)."""
@@ -103,7 +103,7 @@ def test_dedup_clusters_deep_chain_pointer_jump(spark):
 
 
 def test_dedup_clusters_max_iter_bounds_total_rounds(spark):
-    """Round 20 (ADVICE r19): max_iter bounds the TOTAL round count —
+    """max_iter bounds the TOTAL round count —
     the fused init is round 1, so max_iter=1 returns exactly the
     init labels (min over self and direct neighbors)."""
     out = {r.doc_id: r.cluster_id for r in dedup_clusters(
@@ -226,7 +226,7 @@ def test_predict_linear_exact_trend_and_degenerates(spark):
     assert out["same_ts"].slope_per_second is None  # den = 0
 
 
-# ------------------------------------------- PromQL irate (round 12)
+# ------------------------------------------- PromQL irate
 
 def test_counter_irate_last_pair_and_reset(spark):
     from rusty_timeseries_db_spark.operators.resample import counter_irate
@@ -278,7 +278,7 @@ def test_counter_irate_plans_window_group_limit(spark):
 
 
 def test_gauge_changes_promql_parity(spark):
-    """Round 13: changes() counts consecutive-sample transitions —
+    """changes() counts consecutive-sample transitions —
     first sample free, NULL-safe compare, tie-broken sample order."""
     from pyspark.sql import functions as F
 
@@ -304,7 +304,7 @@ def test_gauge_changes_promql_parity(spark):
 
 
 def test_gauge_changes_sees_sub_cent_transitions(spark):
-    """Review round 13: a change detector must not quantize away
+    """A change detector must not quantize away
     sub-0.01 transitions (the counter_irate precision contract)."""
     from pyspark.sql import functions as F
 

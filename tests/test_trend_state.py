@@ -1,6 +1,6 @@
 """Trend statistics (Mann-Kendall, Theil-Sen) and state residence
 durations — hand-computed semantics, guard behavior, and a
-property-check against pure-Python references (round 14)."""
+property-check against pure-Python references."""
 
 from __future__ import annotations
 
@@ -105,7 +105,7 @@ def test_max_points_guard_raises(spark):
 
 
 def test_guard_reject_leaks_no_cache_and_caller_frame_unpersisted(spark):
-    """Round 20 (VERDICT r19 #7 / ADVICE): a guard-rejected call must
+    """A guard-rejected call must
     unpersist before raising (no leaked cache entry), and the persist
     must target an INTERNAL projection — the caller's frame is never
     marked persisted as a side effect."""
@@ -129,7 +129,7 @@ def test_guard_reject_leaks_no_cache_and_caller_frame_unpersisted(spark):
 
 
 def test_max_points_guard_is_on_by_default(spark):
-    """Round 15 (VERDICT r14): the guard defaults ON (5000) — a caller
+    """The guard defaults ON (5000) — a caller
     who passes raw ticks instead of bucketed series raises instead of
     silently exploding quadratically; ``max_points=None`` opts out."""
     df = _daily(spark, [("a", i, i % 7) for i in range(5001)])
@@ -212,7 +212,7 @@ def test_state_durations_fracs_sum_to_one(spark):
 
 
 def test_mann_kendall_single_point_series_emits(spark):
-    """Review round 14: a 1-point series must emit (n=1, S=0, var 0,
+    """A 1-point series must emit (n=1, S=0, var 0,
     z NULL), not silently vanish from the output."""
     df = _daily(spark, [("solo", 0, 7), ("pair", 0, 1), ("pair", 1, 2)])
     got = {r.k: r for r in mann_kendall(df, "k", "d", "v").collect()}
