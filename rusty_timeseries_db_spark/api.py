@@ -1053,14 +1053,14 @@ class TimeseriesEngine:
 
         1. write the merged table to a NEW versioned dir
            ``telemetry__v{N+1}`` (old base untouched);
-        2. atomically swap the version pointer (write tmp file +
-           ``os.replace`` — atomic on POSIX);
+        2. switch the version pointer (``_switch_base``: write tmp
+           file + ``os.replace``, atomic on POSIX) and best-effort
+           delete the previous base dir (a crash leaves an orphan dir
+           that the next switch removes);
         3. clear the overlay — a crash between 2 and 3 just means the
            overlay is re-applied on top of a base that already contains
            its values, which is idempotent (last-write-wins overlay
-           merge of identical rows);
-        4. best-effort delete the previous base dir (a crash leaves an
-           orphan dir that the next compact removes).
+           merge of identical rows).
 
         Overlay rows targeting EXACTLY-ONCE
         rows (negative remapped seqs — FDD write-back / update_rows
@@ -1129,11 +1129,7 @@ class TimeseriesEngine:
             if n_eo:
                 eo_overlay.write.mode("overwrite").parquet(retained_tmp)
             overlay = overlay.filter(F.col("ingest_seq") >= 0)
-            old_version = self._active_version()
-            new_version = 1 if old_version is None else old_version + 1
-            new_path = os.path.join(
-                self.warehouse_dir, f"telemetry__v{new_version}"
-            )
+            new_version, new_path = self._next_base()
             merged = apply_overlay(self._read_base(), overlay)
             if self.partition_by_date:
                 merged = merged.withColumn(
@@ -1157,14 +1153,9 @@ class TimeseriesEngine:
                 .parquet(new_path)
             )
             n = int(obs.get["n"])
-            # -- the swap point: one atomic rename flips readers to the new
-            # base; everything before this line leaves the old base intact
-            tmp_ptr = self._version_file + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(str(new_version))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp_ptr, self._version_file)
+            # -- the switch point: everything before this line leaves the
+            # old base intact
+            self._switch_base(new_version)
             shutil.rmtree(self.overlay_path, ignore_errors=True)
             if n_eo:
                 # re-seed the overlay with the retained EO-targeting rows.
@@ -1176,16 +1167,38 @@ class TimeseriesEngine:
                 # the EO flags are absent from reads until compact()
                 # re-runs (the narrowest achievable window: one rename)
                 os.rename(retained_tmp, self.overlay_path)
-            # reclaim superseded bases (incl. orphans from crashed compacts)
-            for name in os.listdir(self.warehouse_dir):
-                full = os.path.join(self.warehouse_dir, name)
-                if full == new_path or not os.path.isdir(full):
-                    continue
-                if name == "telemetry" or (
-                    name.startswith("telemetry__v") and full != new_path
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
             return n
+
+    def _next_base(self) -> tuple[int, str]:
+        """(version, directory) of the base a rewrite writes next."""
+        old = self._active_version()
+        version = 1 if old is None else old + 1
+        return version, os.path.join(
+            self.warehouse_dir, f"telemetry__v{version}"
+        )
+
+    def _switch_base(self, version: int) -> None:
+        """Make base ``telemetry__v<version>`` the active one: write the
+        version pointer to a temp file, fsync it, ``os.replace`` it over
+        the old pointer (atomic on POSIX), then delete every superseded
+        base dir, orphans of crashed rewrites included (a crash in the
+        sweep leaves dirs the next switch deletes). The pointer is a
+        local file because serving reads it 2-3 times per request.
+        Callers hold ``_write_lock``."""
+        import shutil
+
+        tmp_ptr = self._version_file + ".tmp"
+        with open(tmp_ptr, "w") as f:
+            f.write(str(version))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp_ptr, self._version_file)
+        for name in os.listdir(self.warehouse_dir):
+            full = os.path.join(self.warehouse_dir, name)
+            if name == f"telemetry__v{version}" or not os.path.isdir(full):
+                continue
+            if name == "telemetry" or name.startswith("telemetry__v"):
+                shutil.rmtree(full, ignore_errors=True)
 
     def optimize_storage(self, target_files: int | None = None) -> int:
         """Rewrite the base range-clustered and sorted on
@@ -1196,17 +1209,11 @@ class TimeseriesEngine:
         interleaved series across files. Folds any pending overlay
         first (an optimized base with a stale overlay on top would
         re-fragment reads). Returns rows in the new base."""
-        import shutil
-
         from .operators.layout import optimize_layout
 
         with self._write_lock:
             self.compact()  # folds overlay; no-op if none pending
-            old_version = self._active_version()
-            new_version = 1 if old_version is None else old_version + 1
-            new_path = os.path.join(
-                self.warehouse_dir, f"telemetry__v{new_version}"
-            )
+            new_version, new_path = self._next_base()
             base = self._read_base(keep_ds=self.partition_by_date).persist()
             n = base.count()
             optimize_layout(
@@ -1217,18 +1224,7 @@ class TimeseriesEngine:
                 target_files=target_files,
             )
             base.unpersist()
-            tmp_ptr = self._version_file + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(str(new_version))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp_ptr, self._version_file)
-            for name in os.listdir(self.warehouse_dir):
-                full = os.path.join(self.warehouse_dir, name)
-                if full == new_path or not os.path.isdir(full):
-                    continue
-                if name == "telemetry" or name.startswith("telemetry__v"):
-                    shutil.rmtree(full, ignore_errors=True)
+            self._switch_base(new_version)
             return n
 
     def compact_small_files(

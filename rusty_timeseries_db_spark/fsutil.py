@@ -1,10 +1,19 @@
-"""Shared Hadoop-FileSystem helpers — ONE implementation of the
-scheme-resolved FS access + atomic JSON-manifest protocol that the
-storage-adjacent operators (continuous rollup high-water mark, IVF
-index manifest, maintenance partition walks) all need. The FS is
-always resolved from the PATH's own scheme, so file://, hdfs:// and
-s3a:// behave identically; manifests commit via write-tmp-then-rename
-(atomic on HDFS/POSIX, the closest available commit on object stores).
+"""Shared Hadoop-FileSystem helpers: scheme-resolved FS access and
+the ONE manifest commit protocol every store in the package uses. The
+FS is always resolved from the PATH's own scheme, so file://, hdfs://
+and s3a:// behave identically.
+
+Every manifest (the streaming sinks' ledgers and pointers, the summary
+stores, the persisted indexes, the rollup high-water mark) commits
+through :func:`write_versioned_manifest`: write-tmp-then-rename under
+a FRESH versioned name, optionally as a compare-and-swap. Stores that
+rewrite data (index compaction, summary-store folds) write the new
+data under a fresh directory the manifest does not name yet, switch
+the manifest to it, then sweep what it superseded; a crash at any
+step leaves either the old state or the new one readable. (The
+telemetry base's version pointer is the exception: a local file that
+``TimeseriesEngine._switch_base`` replaces, read on every serving
+request.)
 """
 
 from __future__ import annotations
@@ -22,7 +31,7 @@ def fs_for(spark: SparkSession, p: str):
     return hpath(spark, p).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def read_json_manifest(spark: SparkSession, path: str) -> dict | None:
+def _read_json_manifest(spark: SparkSession, path: str) -> dict | None:
     """The manifest's dict, or None when it does not exist."""
     fs = fs_for(spark, path)
     p = hpath(spark, path)
@@ -38,44 +47,15 @@ def read_json_manifest(spark: SparkSession, path: str) -> dict | None:
     return json.loads(raw.decode("utf-8"))
 
 
-def write_json_manifest(spark: SparkSession, path: str, payload: dict) -> None:
-    """Manifest commit: write ``path + '.tmp'``, delete any previous
-    manifest (Hadoop rename refuses to clobber), rename into place.
-    A torn/partial manifest is never observable — but the
-    delete→rename pair is NOT one atomic step: a crash (or a
-    concurrent read) in between sees NO manifest. Callers must treat
-    an absent manifest as 'cold start' (the rollup re-aggregates from
-    base — correct, just slower; the IVF index reports not-built) and
-    re-run the writer to converge; none may assume old-or-new
-    atomicity."""
-    fs = fs_for(spark, path)
-    tmp = hpath(spark, path + ".tmp")
-    dst = hpath(spark, path)
-    out = fs.create(tmp, True)  # overwrite=True
-    try:
-        out.write(json.dumps(payload).encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise IOError(f"manifest rename failed: {tmp} -> {dst}")
-
-
 # ---------------------------------------------------------------------------
 # Versioned manifest protocol: old-or-new atomicity on any FS
 # ---------------------------------------------------------------------------
 #
-# ``write_json_manifest`` above commits via delete→rename, which is two
-# steps: a reader (or crash) between them observes NO manifest. That is
-# fine for callers with a cold-start fallback (rollup re-aggregates,
-# IVF reports not-built) but NOT for the streaming sinks, where a
-# vanished manifest would drop the exactly-once sink's committed-ids
-# ledger or the last-value cache's pointer. The versioned protocol
-# commits each write under a FRESH name — ``{stem}.v{N}.json`` with N
+# Each write commits under a FRESH name — ``{stem}.v{N}.json`` with N
 # strictly increasing — so the rename never needs to clobber and is
 # atomic on every Hadoop FS with atomic rename (POSIX, HDFS; the
-# closest available commit on object stores, same caveat as above).
+# closest available commit on object stores). A crash before the
+# rename leaves only the temp file, which readers never open.
 # Readers list the versions and take the highest: they observe the old
 # manifest or the new one, never neither and never a torn file (the
 # in-flight temp is ``...json.tmp``, excluded by the ``*.json`` glob).
@@ -111,7 +91,7 @@ def _manifest_versions(spark: SparkSession, dir_path: str, stem: str):
 
 
 def _is_manifest_read_error(e: Exception) -> bool:
-    """True for the failures ``read_json_manifest`` produces on a torn
+    """True for the failures ``_read_json_manifest`` produces on a torn
     or VANISHED manifest file — decode errors (json.JSONDecodeError /
     UnicodeDecodeError ⊂ ValueError), missing-file IO errors
     (FileNotFoundError/IOError ⊂ OSError), and the Py4J-wrapped
@@ -167,7 +147,7 @@ def read_versioned_manifest_versioned(
             return None
         for n, path in reversed(versions):
             try:
-                payload = read_json_manifest(spark, path)
+                payload = _read_json_manifest(spark, path)
             except Exception as e:
                 if not _is_manifest_read_error(e):
                     # genuine infrastructure failure (JVM/Py4J hiccup,
@@ -318,93 +298,3 @@ def delete_path(spark: SparkSession, path: str) -> bool:
     """Recursive delete (scheme-agnostic shutil.rmtree); False if absent."""
     fs = fs_for(spark, path)
     return bool(fs.delete(hpath(spark, path), True))
-
-
-# ---------------------------------------------------------------------------
-# Crash-safe directory swap: rename-aside, never delete-first
-# ---------------------------------------------------------------------------
-#
-# The index compactors rewrite a live directory (postings/, the IVF cell
-# tree) with a filtered copy. A delete-src-then-rename-tmp swap has a
-# window where the live directory is GONE — a crash there strands the
-# data in the temp dir and every later read raises path-not-found.
-# The safe order keeps a complete copy on disk at
-# every instant:
-#
-#   1. write the rewrite to  src + SWAP_NEW   (src untouched)
-#   2. rename src       ->   src + SWAP_OLD   (rewrite is complete)
-#   3. rename src+NEW   ->   src              (swap visible)
-#   4. delete src+OLD                          (reclaim)
-#
-# ``recover_dir_swap`` finishes any interrupted state; callers run it
-# on every directory BEFORE reading or rewriting, so a re-run converges
-# from any interruption point.
-
-SWAP_NEW = "__swap_new"
-SWAP_OLD = "__swap_old"
-
-
-def recover_dir_swap(spark: SparkSession, src_path: str) -> None:
-    """Converge ``src_path`` after a possibly-interrupted
-    :func:`swap_dir_into_place`. Every reachable intermediate state
-    maps to exactly one action:
-
-    - src exists: any ``__swap_new`` is a stale pre-swap rewrite (it
-      was never renamed in) and any ``__swap_old`` is a completed
-      swap's undeleted leftover — delete both;
-    - src missing but ``__swap_new`` exists: the crash hit between
-      the aside-rename and the swap-in — the rewrite is COMPLETE by
-      construction (it is only written before step 2), so finish
-      step 3 and reclaim;
-    - src missing, only ``__swap_old`` exists: defensive restore (not
-      reachable from the protocol above, but an operator may have
-      hand-deleted src) — rename the old copy back.
-    """
-    fs = fs_for(spark, src_path)
-    src = hpath(spark, src_path)
-    new = hpath(spark, src_path + SWAP_NEW)
-    old = hpath(spark, src_path + SWAP_OLD)
-    if fs.exists(src):
-        if fs.exists(new):
-            fs.delete(new, True)
-        if fs.exists(old):
-            fs.delete(old, True)
-        return
-    if fs.exists(new):
-        if not fs.rename(new, src):
-            raise IOError(
-                f"swap recovery: rename {src_path + SWAP_NEW} -> "
-                f"{src_path} failed"
-            )
-        if fs.exists(old):
-            fs.delete(old, True)
-        return
-    if fs.exists(old):
-        if not fs.rename(old, src):
-            raise IOError(
-                f"swap recovery: rename {src_path + SWAP_OLD} -> "
-                f"{src_path} failed"
-            )
-
-
-def swap_dir_into_place(spark: SparkSession, src_path: str) -> None:
-    """Steps 2-4 of the swap protocol: the caller has already written
-    the complete rewrite to ``src_path + SWAP_NEW``; rename the live
-    directory aside, rename the rewrite in, delete the old copy. A
-    complete copy of the data exists on disk at every instant; a crash
-    anywhere is healed by :func:`recover_dir_swap`. Raises on any
-    failed FS operation (HDFS rename reports failure by returning
-    false, not by raising)."""
-    fs = fs_for(spark, src_path)
-    src = hpath(spark, src_path)
-    new = hpath(spark, src_path + SWAP_NEW)
-    old = hpath(spark, src_path + SWAP_OLD)
-    if not fs.exists(new):
-        raise IOError(f"swap: rewrite {src_path + SWAP_NEW} not found")
-    if fs.exists(old):  # leftover of a COMPLETED swap (src exists)
-        fs.delete(old, True)
-    if not fs.rename(src, old):
-        raise IOError(f"swap: rename {src_path} -> aside failed")
-    if not fs.rename(new, src):
-        raise IOError(f"swap: rename {src_path + SWAP_NEW} -> {src_path} failed")
-    fs.delete(old, True)

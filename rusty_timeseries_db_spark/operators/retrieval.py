@@ -214,15 +214,15 @@ class Bm25Index(IndexLifecycleMixin):
 
     #: manifest key of the live doc count (IndexLifecycleMixin)
     _ROWS_FIELD = "n_docs"
+    _LABEL = "BM25"
+    _PARTS = ("postings", "terms", "docs", "tombstones")
 
     def __init__(self, spark, index_path: str):
         self.spark = spark
         self.index_path = index_path.rstrip("/")
-        self.postings_path = self.index_path + "/postings"
-        self.terms_path = self.index_path + "/terms"
-        self.docs_path = self.index_path + "/docs"
-        self.tombstones_path = self.index_path + "/tombstones"
-        self.marker_path = self.index_path + "/_compacting.json"
+
+    def _gen0_path(self, part: str) -> str:
+        return f"{self.index_path}/{part}"
 
     # -- build -------------------------------------------------------
     def _stage_docs(
@@ -353,7 +353,7 @@ class Bm25Index(IndexLifecycleMixin):
 
         # CAS token from BEFORE any work: a writer interleaving with
         # this build conflicts at the commit instead of being clobbered
-        ver = self._read_manifest_cas()[0]
+        ver, old = self._read_manifest_cas()
         staged, staging, n, sum_dl = self._stage_docs(
             corpus, id_col, text_col
         )
@@ -388,67 +388,52 @@ class Bm25Index(IndexLifecycleMixin):
             # (guide §2.6; the docs/ sidecar is the deletion story:
             # remove() needs each doc's length to
             # decrement sum_dl exactly, token-less docs included)
-            self._parallel_writes(
-                lambda: (
-                    post.write.mode("overwrite")
-                    .partitionBy("_shard")
-                    .parquet(self.postings_path)
-                ),
-                lambda: (
-                    terms.write.mode("overwrite")
-                    .partitionBy("_shard")
-                    .parquet(self.terms_path)
-                ),
-                lambda: (
-                    staged.select(
-                        F.col("_doc").alias("doc"),
-                        F.size("_ws").cast("double").alias("dl"),
-                    ).write.mode("overwrite").parquet(self.docs_path)
-                ),
-            )
+            def write(root):
+                delete_path(self.spark, root("tombstones"))
+                self._parallel_writes(
+                    lambda: (
+                        post.write.mode("overwrite")
+                        .partitionBy("_shard")
+                        .parquet(root("postings"))
+                    ),
+                    lambda: (
+                        terms.write.mode("overwrite")
+                        .partitionBy("_shard")
+                        .parquet(root("terms"))
+                    ),
+                    lambda: (
+                        staged.select(
+                            F.col("_doc").alias("doc"),
+                            F.size("_ws").cast("double").alias("dl"),
+                        ).write.mode("overwrite").parquet(root("docs"))
+                    ),
+                )
+
+            # a first build writes generation 0; a rebuild switches to
+            # a new generation, so the old one serves until the commit
+            self._switch_generation(ver, {
+                "n_docs": n,
+                "sum_dl": sum_dl,
+                "n_shards": n_shards,
+                "id_col": id_col,
+                "n_added": 0,
+                "n_removed": 0,
+                # feature flag: remove() requires the per-doc sidecar
+                # this build wrote — an index without it must rebuild
+                # to delete
+                "docs_sidecar": True,
+                # feature flag: query_tfidf() requires the per-doc tfn2
+                # norms in postings — an index without them must
+                # rebuild to serve cosine scoring
+                "tfn2": True,
+            }, write, fresh=old is None)
         finally:
             delete_path(self.spark, staging)
-
-        delete_path(self.spark, self.tombstones_path)  # fresh build
-        delete_path(self.spark, self.marker_path)
         # reclaim staging orphans from hard-crashed earlier calls
         # (each call's try/finally cleans its OWN dir, but kill -9
         # between write and finally strands one)
         delete_path(self.spark, self.index_path + "/_staging")
-        self._commit_manifest({
-            "n_docs": n,
-            "sum_dl": sum_dl,
-            "n_shards": n_shards,
-            "id_col": id_col,
-            "n_added": 0,
-            "n_removed": 0,
-            # feature flag: remove() requires the per-doc sidecar this
-            # build wrote — an index without it must rebuild to delete
-            "docs_sidecar": True,
-            # feature flag: query_tfidf() requires the per-doc tfn2
-            # norms in postings — an index without them must rebuild to
-            # serve cosine scoring
-            "tfn2": True,
-        }, expected=ver)
         return self
-
-    def _manifest(self) -> dict:
-        man = self._read_manifest_cas()[1]
-        if man is None:
-            raise FileNotFoundError(
-                f"no BM25 manifest for {self.index_path} — build() first"
-            )
-        return man
-
-    def _manifest_cas(self) -> tuple[int | None, dict]:
-        """(CAS token, manifest) for mutators — same not-built error
-        as :meth:`_manifest`."""
-        ver, man = self._read_manifest_cas()
-        if man is None:
-            raise FileNotFoundError(
-                f"no BM25 manifest for {self.index_path} — build() first"
-            )
-        return ver, man
 
     # -- serve -------------------------------------------------------
     def _pruned(self, terms: list[str], man: dict):
@@ -464,17 +449,17 @@ class Bm25Index(IndexLifecycleMixin):
         n_shards = int(man["n_shards"])
         shards = sorted({_term_shard_py(t, n_shards) for t in terms})
         post = (
-            self.spark.read.parquet(self.postings_path)
+            self.spark.read.parquet(self._path(man, "postings"))
             .filter(F.col("_shard").isin(shards) & F.col("term").isin(terms))
         )
         dfreq = (
-            self.spark.read.parquet(self.terms_path)
+            self.spark.read.parquet(self._path(man, "terms"))
             .filter(F.col("_shard").isin(shards) & F.col("term").isin(terms))
             # add() appends df DELTA rows — a term's df is the sum
             .groupBy("term")
             .agg(F.sum("df").alias("_df"))
         )
-        tomb = self._tombstones()
+        tomb = self._tombstones(man)
         if tomb is not None:
             dead_df = (
                 post.join(tomb, "doc", "left_semi")
@@ -529,7 +514,6 @@ class Bm25Index(IndexLifecycleMixin):
         """
         if not query_terms:
             raise ValueError("query_terms must be non-empty")
-        self._check_not_compacting("serving queries")
         man = self._manifest()
         if not man.get("tfn2"):
             raise ValueError(
@@ -590,7 +574,6 @@ class Bm25Index(IndexLifecycleMixin):
         parquet scans inside them."""
         if not query_terms:
             raise ValueError("query_terms must be non-empty")
-        self._check_not_compacting("serving queries")
         man = self._manifest()
         n_docs = float(man["n_docs"])
         avgdl = man["sum_dl"] / n_docs if n_docs > 0 else 0.0
@@ -662,7 +645,6 @@ class Bm25Index(IndexLifecycleMixin):
             raise ValueError(
                 f"removed_ids must be error|skip|readmit, got {removed_ids!r}"
             )
-        self._check_not_compacting("add()")
         ver, man = self._manifest_cas()
         id_col = id_col or man.get("id_col", "doc_id")
         n_shards = int(man["n_shards"])
@@ -670,7 +652,7 @@ class Bm25Index(IndexLifecycleMixin):
             corpus, id_col, text_col
         )
         try:
-            tomb = self._tombstones()
+            tomb = self._tombstones(man)
             if tomb is not None:
                 n_clash = staged.select(F.col("_doc").alias("doc")).join(
                     tomb, "doc", "left_semi"
@@ -721,12 +703,12 @@ class Bm25Index(IndexLifecycleMixin):
                 lambda: (
                     post.write.mode("append")
                     .partitionBy("_shard")
-                    .parquet(self.postings_path)
+                    .parquet(self._path(man, "postings"))
                 ),
                 lambda: (
                     delta.write.mode("append")
                     .partitionBy("_shard")
-                    .parquet(self.terms_path)
+                    .parquet(self._path(man, "terms"))
                 ),
             ]
             if man.get("docs_sidecar"):
@@ -735,7 +717,7 @@ class Bm25Index(IndexLifecycleMixin):
                         staged.select(
                             F.col("_doc").alias("doc"),
                             F.size("_ws").cast("double").alias("dl"),
-                        ).write.mode("append").parquet(self.docs_path)
+                        ).write.mode("append").parquet(self._path(man, "docs"))
                     )
                 )
             self._parallel_writes(*writes)
@@ -750,10 +732,6 @@ class Bm25Index(IndexLifecycleMixin):
         return n
 
     # -- delete ------------------------------------------------------
-    # (_dir_exists / _tombstones / _check_not_compacting /
-    # should_compact come from IndexLifecycleMixin — one
-    # implementation for both persisted indexes)
-
     def remove(self, doc_ids) -> int:
         """Delete documents from the SERVING index without a rebuild
         (the GDPR/right-to-erasure story a corpus index
@@ -782,7 +760,6 @@ class Bm25Index(IndexLifecycleMixin):
         would silently miss pre-upgrade docs)."""
         from ..fsutil import delete_path
 
-        self._check_not_compacting("remove()")
         ver, man = self._manifest_cas()
         if not man.get("docs_sidecar"):
             raise ValueError(
@@ -790,18 +767,19 @@ class Bm25Index(IndexLifecycleMixin):
                 "(round 13) — remove() needs it for exact N/avgdl "
                 "accounting; rebuild with build() to enable deletion"
             )
+        docs_path = self._path(man, "docs")
         if not isinstance(doc_ids, DataFrame):
-            docs_schema = self.spark.read.parquet(self.docs_path).schema
+            docs_schema = self.spark.read.parquet(docs_path).schema
             ids = self.spark.createDataFrame(
                 [(i,) for i in doc_ids],
                 StructType([docs_schema["doc"]]),
             )
         else:
             ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc"))
-        live = self.spark.read.parquet(self.docs_path).join(
+        live = self.spark.read.parquet(docs_path).join(
             ids.distinct(), "doc", "left_semi"
         )
-        tomb = self._tombstones()
+        tomb = self._tombstones(man)
         if tomb is not None:
             live = live.join(tomb, "doc", "left_anti")
         # STAGE the resolved id set (per-call dir, same rationale as
@@ -827,7 +805,7 @@ class Bm25Index(IndexLifecycleMixin):
             if k > 0:
                 self.spark.read.parquet(staging).write.mode(
                     "append"
-                ).parquet(self.tombstones_path)
+                ).parquet(self._path(man, "tombstones"))
         finally:
             delete_path(self.spark, staging)
         # manifest DERIVED from authoritative state (docs minus
@@ -835,8 +813,8 @@ class Bm25Index(IndexLifecycleMixin):
         # ONE docs-sidecar scan computes live count, live length sum
         # AND the tombstoned count (the anti-join + count
         # pair scanned the sidecar twice)
-        docs_all = self.spark.read.parquet(self.docs_path)
-        tomb_now = self._tombstones()
+        docs_all = self.spark.read.parquet(docs_path)
+        tomb_now = self._tombstones(man)
         if tomb_now is None:
             flagged = docs_all.withColumn("_t", F.lit(None).cast("int"))
         else:
@@ -864,144 +842,71 @@ class Bm25Index(IndexLifecycleMixin):
         """Apply the tombstones physically: rewrite ``postings/`` and
         ``docs/`` without the removed docs, recompute ``terms/`` from
         the rewritten postings (exact df, folding every add()-era
-        delta row too), drop the tombstone list. Query results are
+        delta row too), with no tombstones. Query results are
         IDENTICAL before and after (equality pinned in tests) — this
         reclaims bytes and removes the per-query tombstone join, it
         never changes scores. Returns the number of tombstones
         applied. Cost: one full index rewrite — run it like any
         compaction job, when the tombstone fraction warrants.
 
-        Crash safety: a ``_compacting`` marker is written before the
-        directory swaps
-        and cleared after the tombstones drop; :meth:`query` /
-        :meth:`add` / :meth:`remove` all REFUSE while the marker
-        exists (the intermediate states are internally inconsistent —
-        and an add() mid-compact would write postings the in-flight
-        rewrite never saw, to be swapped away silently). Each swap
-        uses the rename-aside protocol (``fsutil.swap_dir_into_place``:
-        write rewrite beside, rename live aside, rename rewrite in,
-        delete aside) so a COMPLETE copy of every directory exists on
-        disk at every instant; re-entry first converges any
-        interrupted swap (``fsutil.recover_dir_swap``) and then
-        recomputes every rewrite from the CURRENT directory state —
-        anti-joining tombstones is idempotent, so re-running compact()
-        from ANY interruption point converges. All FS rename/delete
-        return codes are checked (HDFS rename reports failure by
-        returning false, not by raising)."""
-        from ..fsutil import (
-            delete_path,
-            recover_dir_swap,
-            swap_dir_into_place,
-            write_json_manifest,
-        )
-        # (write_json_manifest is still used for the UNVERSIONED
-        # _compacting marker file — only the index manifest is CAS)
+        Crash safety: the rewrite is a new generation committed by
+        the manifest switch (``IndexLifecycleMixin``), so every step
+        before the commit leaves the old generation served and every
+        step after it leaves the new one served; re-running compact()
+        converges from any interruption point and sweeps what a crash
+        left behind."""
+        from ..fsutil import delete_path
 
-        # converge any interrupted earlier compact() BEFORE reading
-        # state: a crash mid-swap leaves a directory renamed aside
-        for p in (self.postings_path, self.terms_path, self.docs_path):
-            recover_dir_swap(self.spark, p)
         # compact() is the maintenance pass: reclaim staging orphans
-        # from hard-crashed add()/remove() calls (mutators refuse
-        # while the marker exists, and the writer contract forbids a
-        # concurrent add anyway). _sweep_staging=False only when
-        # add()'s readmit path invokes compact() mid-call — ITS OWN
-        # staged batch lives here and must survive.
+        # from hard-crashed add()/remove() calls. _sweep_staging=False
+        # only when add()'s readmit path invokes compact() mid-call —
+        # ITS OWN staged batch lives here and must survive.
         if _sweep_staging:
             delete_path(self.spark, self.index_path + "/_staging")
-        tomb = self._tombstones()
+        ver, man = self._manifest_cas()
+        tomb = self._tombstones(man)
         if tomb is None:
-            if self._dir_exists(self.marker_path):
-                # an earlier compact() crashed AFTER dropping the
-                # tombstones — every swap is complete; finish the
-                # cleanup so query() serves again
-                delete_path(self.spark, self.marker_path)
-            ver0, man0 = self._manifest_cas()
-            if int(man0.get("n_removed", 0)) != 0:
-                # crash landed between the tombstone drop and the
-                # manifest reset: without this heal, should_compact()
-                # stays True forever while compact() is a permanent
-                # no-op (the convergence claim must
-                # cover the bookkeeping too)
-                man0["n_removed"] = 0
-                self._commit_manifest(man0, expected=ver0)
+            self._sweep(int(man.get("generation", 0)))
             return 0
         n_tomb = tomb.count()
-        # CAS token taken BEFORE the rewrite (matching
-        # IvfIndex.compact): an add() interleaving during the
-        # postings/terms/docs rewrite would otherwise CAS-commit its
-        # accounting while the swapped-in directories silently drop
-        # its rows; with the token pinned here, compact's final commit
-        # raises ManifestVersionConflict instead of passing.
-        ver, man = self._manifest_cas()
         n_shards = int(man["n_shards"])
-        # guard BEFORE any destructive step: an all-removed index
-        # would leave an empty partitioned postings dir that cannot
-        # be re-read (the build()-documented hazard) — keep serving
-        # via tombstones instead and tell the caller the honest fix
-        n_live_postings = (
-            self.spark.read.parquet(self.postings_path)
-            .join(tomb, "doc", "left_anti")
-            .count()
-        )
-        if n_live_postings == 0:
+        postings = self.spark.read.parquet(self._path(man, "postings"))
+        # guard BEFORE writing: an all-removed index would leave an
+        # empty partitioned postings dir that cannot be re-read (the
+        # build()-documented hazard) — keep serving via tombstones
+        # instead and tell the caller the honest fix
+        if postings.join(tomb, "doc", "left_anti").limit(1).count() == 0:
             raise ValueError(
                 "compact() would leave zero postings (every posting-"
                 "bearing doc is tombstoned) — an empty partitioned "
                 "layout is unreadable; keep serving via tombstones or "
                 "rebuild with build() on the live corpus"
             )
-        write_json_manifest(self.spark, self.marker_path, {
-            "n_tombstones": int(n_tomb),
-        })
-        # last cheap exit: re-verify the pinned CAS
-        # token now that the marker blocks new mutators — a writer
-        # that committed during the n_live_postings count above is
-        # detected HERE, while the index is untouched, instead of by
-        # the final commit after its rows were already swapped away
-        self._verify_manifest_unmoved(ver)
 
-        from ..fsutil import SWAP_NEW
-
-        def _swap_in(src_path: str, df: DataFrame, partitioned: bool):
-            """Write ``df`` beside ``src_path`` then rename-aside swap
-            it into place — the live directory is never deleted before
-            its replacement is in place (fsutil swap protocol)."""
-            w = df.write.mode("overwrite")
-            if partitioned:
-                w = w.partitionBy("_shard")
-            w.parquet(src_path + SWAP_NEW)
-            swap_dir_into_place(self.spark, src_path)
-
-        _swap_in(
-            self.postings_path,
-            self.spark.read.parquet(self.postings_path).join(
+        def write(root):
+            postings.join(tomb, "doc", "left_anti").write.mode(
+                "overwrite"
+            ).partitionBy("_shard").parquet(root("postings"))
+            # terms rebuilt from the REWRITTEN postings — one pass,
+            # exact, and it also folds historical add() df-delta rows
+            # into one row per term
+            (
+                self.spark.read.parquet(root("postings"))
+                .groupBy("term")
+                .agg(F.count(F.lit(1)).cast("double").alias("df"))
+                .withColumn(
+                    "_shard", _term_shard_col(F.col("term"), n_shards)
+                )
+                .write.mode("overwrite")
+                .partitionBy("_shard")
+                .parquet(root("terms"))
+            )
+            self.spark.read.parquet(self._path(man, "docs")).join(
                 tomb, "doc", "left_anti"
-            ),
-            partitioned=True,
-        )
-        # terms rebuilt from the REWRITTEN postings — one pass, exact,
-        # and it also folds historical add() df-delta rows into one
-        # row per term
-        _swap_in(
-            self.terms_path,
-            self.spark.read.parquet(self.postings_path)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).cast("double").alias("df"))
-            .withColumn("_shard", _term_shard_col(F.col("term"), n_shards)),
-            partitioned=True,
-        )
-        _swap_in(
-            self.docs_path,
-            self.spark.read.parquet(self.docs_path).join(
-                tomb, "doc", "left_anti"
-            ),
-            partitioned=False,
-        )
-        delete_path(self.spark, self.tombstones_path)
-        man["n_removed"] = 0  # tombstones are now physical deletions
-        self._commit_compact_manifest(man, expected=ver)
-        delete_path(self.spark, self.marker_path)
+            ).write.mode("overwrite").parquet(root("docs"))
+
+        # tombstones are now physical deletions
+        self._switch_generation(ver, {**man, "n_removed": 0}, write)
         return int(n_tomb)
 
 

@@ -17,7 +17,9 @@ always complete even between refreshes. The Spark-idiomatic build:
   (``partitionOverwriteMode=dynamic``). Re-running a refresh is
   idempotent — the same partitions get the same bytes — so a crashed
   refresh is retried, never reconciled. No driver state: the
-  watermark manifest is one tiny JSON file beside the data.
+  watermark is a versioned JSON manifest beside the data
+  (``<rollup>.hwm/hwm.v<N>.json``), so a reader sees the old mark or
+  the new one, never none.
 - **The tail stays correct by re-aggregating from base.** Windows at
   or after the high-water mark may still receive appends, so
   ``read()`` unions the materialized part (window_day < hwm) with an
@@ -52,7 +54,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_for, hpath, read_json_manifest, write_json_manifest
+from ..fsutil import (
+    fs_for,
+    hpath,
+    read_versioned_manifest,
+    write_versioned_manifest,
+)
 
 
 def _tz_offsets_seconds(tz: str) -> list[int]:
@@ -169,7 +176,8 @@ class ContinuousRollup:
         #: ``refresh(full=True)``), since pruning reads the partition
         #: value, not the merged ts.
         self.partition_day_col = partition_day_col
-        self.manifest_path = rollup_path + ".hwm.json"
+        #: the versioned high-water-mark manifest's directory
+        self.manifest_path = rollup_path + ".hwm"
         # Day boundaries must be window boundaries: otherwise a window
         # spanning midnight could be half-materialized and half-tail
         # (double-counted by read()). Tumbling rollups use day-dividing
@@ -366,11 +374,13 @@ class ContinuousRollup:
     # like file:// — the FS is resolved from the PATH's scheme.
 
     def _read_hwm(self) -> str | None:
-        man = read_json_manifest(self.spark, self.manifest_path)
+        man = read_versioned_manifest(self.spark, self.manifest_path, "hwm")
         return None if man is None else man["hwm_day"]
 
     def _write_hwm(self, day: str) -> None:
-        write_json_manifest(self.spark, self.manifest_path, {"hwm_day": day})
+        write_versioned_manifest(
+            self.spark, self.manifest_path, "hwm", {"hwm_day": day}
+        )
 
     def _has_data_files(self) -> bool:
         """True iff the materialization holds at least one parquet data

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..fsutil import write_json_manifest
 from ..functions.vectors import cosine, dot, norm
 
 
@@ -406,20 +405,20 @@ class IvfIndex(IndexLifecycleMixin):
     serializes adds per micro-batch.
     """
 
+    _LABEL = "IVF"
+    _PARTS = ("cells", "tombstones")
+
     def __init__(self, spark, index_path: str):
         self.spark = spark
-        self.index_path = index_path
-        # deletion-lifecycle sidecars (the Bm25Index pattern): SIBLINGS of
-        # the cell
-        # tree, never inside it — the index_path IS the parquet root,
-        # so a nested dir would be read as data files
-        self.tombstones_path = index_path + ".tombstones"
-        self.marker_path = index_path + ".compacting.json"
+        self.index_path = index_path.rstrip("/")
 
-    # (_dir_exists / _tombstones / _check_not_compacting /
-    # should_compact come from IndexLifecycleMixin — one
-    # implementation for both persisted indexes;
-    # _ROWS_FIELD defaults to "n_rows", which is this class's key)
+    def _gen0_path(self, part: str) -> str:
+        # generation 0: the index_path IS the cell tree's parquet root,
+        # so the tombstone sidecar is a SIBLING (a nested dir would be
+        # read as data files)
+        if part == "cells":
+            return self.index_path
+        return f"{self.index_path}.{part}"
 
     def build(
         self,
@@ -446,7 +445,7 @@ class IvfIndex(IndexLifecycleMixin):
 
         # CAS token from BEFORE any work: a writer interleaving with
         # this build conflicts at the commit instead of being clobbered
-        ver = self._read_manifest_cas()[0]
+        ver, old = self._read_manifest_cas()
         c = corpus.select(
             F.col(corpus_id).alias("_cid"), F.col(corpus_vec).alias("_cvec")
         ).withColumn(
@@ -478,52 +477,39 @@ class IvfIndex(IndexLifecycleMixin):
         # the just-written cell tree
         from pyspark.sql import Observation
 
-        obs = Observation("ivf_build_rows")
-        (
-            stored.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .partitionBy("_cell")
-            .parquet(self.index_path)
-        )
-        n_rows = int(obs.get["n"])
-        centroids = [list(map(float, ctr)) for ctr in model.clusterCenters()]
         from ..fsutil import delete_path
 
-        delete_path(self.spark, self.tombstones_path)  # fresh build
-        delete_path(self.spark, self.marker_path)
-        # reclaim staging orphans from hard-crashed remove() calls
-        delete_path(self.spark, self.index_path + ".staging")
-        self._commit_manifest({
-            "centroids": centroids,
+        obs = Observation("ivf_build_rows")
+        man = {
+            "centroids": [
+                list(map(float, ctr)) for ctr in model.clusterCenters()
+            ],
             "n_clusters": n_clusters,
             "seed": seed,
             "corpus_id": corpus_id,
             "quantize_bits": quantize_bits,
-            # seeded at build so remove()'s accounting and
-            # the drift ratio never need a lazy backfill count
-            "n_rows": n_rows,
             "n_added": 0,
             "n_removed": 0,
-        }, expected=ver)
+        }
+
+        def write(root):
+            delete_path(self.spark, root("tombstones"))
+            (
+                stored.observe(obs, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite")
+                .partitionBy("_cell")
+                .parquet(root("cells"))
+            )
+            # seeded at build so remove()'s accounting and the drift
+            # ratio never need a lazy backfill count
+            man["n_rows"] = int(obs.get["n"])
+
+        # a first build writes generation 0; a rebuild switches to a
+        # new generation, so the old one serves until the commit
+        self._switch_generation(ver, man, write, fresh=old is None)
+        # reclaim staging orphans from hard-crashed remove() calls
+        delete_path(self.spark, self.index_path + ".staging")
         return self
-
-    def _manifest(self) -> dict:
-        man = self._read_manifest_cas()[1]
-        if man is None:
-            raise FileNotFoundError(
-                f"no IVF manifest for {self.index_path} — build() first"
-            )
-        return man
-
-    def _manifest_cas(self) -> tuple[int | None, dict]:
-        """(CAS token, manifest) for mutators — same not-built error
-        as :meth:`_manifest`."""
-        ver, man = self._read_manifest_cas()
-        if man is None:
-            raise FileNotFoundError(
-                f"no IVF manifest for {self.index_path} — build() first"
-            )
-        return ver, man
 
     def centroids_df(self) -> DataFrame:
         """The index's frozen centroids as a ``(cluster_id, centroid)``
@@ -591,7 +577,6 @@ class IvfIndex(IndexLifecycleMixin):
         query_vec: str = "embedding",
         n_probe: int = 4,
     ) -> DataFrame:
-        self._check_not_compacting("serving queries")
         man = self._manifest()
         frac = self._added_frac(man)
         limit = self._drift_threshold()
@@ -608,8 +593,8 @@ class IvfIndex(IndexLifecycleMixin):
                 stacklevel=2,
             )
         corpus_id = man["corpus_id"]
-        assigned = self.spark.read.parquet(self.index_path)
-        tomb = self._tombstones()
+        assigned = self.spark.read.parquet(self._path(man, "cells"))
+        tomb = self._tombstones(man)
         if tomb is not None:
             # logical deletes (remove()): drop tombstoned vectors from
             # the SAME cell-pruned scan — post-remove results are EXACT
@@ -688,11 +673,10 @@ class IvfIndex(IndexLifecycleMixin):
             raise ValueError(
                 f"removed_ids must be error|skip|readmit, got {removed_ids!r}"
             )
-        self._check_not_compacting("add()")
         ver, man = self._manifest_cas()
         corpus_id = corpus_id or man["corpus_id"]
-        stored = self.spark.read.parquet(self.index_path).schema
-        tomb = self._tombstones()
+        stored = self.spark.read.parquet(self._path(man, "cells")).schema
+        tomb = self._tombstones(man)
         if tomb is not None:
             clash_ids = corpus.select(
                 F.col(corpus_id).cast(stored["_cid"].dataType).alias("_cid")
@@ -763,7 +747,7 @@ class IvfIndex(IndexLifecycleMixin):
             assigned.observe(obs, F.count(F.lit(1)).alias("n"))
             .write.mode("append")
             .partitionBy("_cell")
-            .parquet(self.index_path)
+            .parquet(self._path(man, "cells"))
         )
         n = int(obs.get["n"])
         if "n_rows" not in man:
@@ -771,7 +755,7 @@ class IvfIndex(IndexLifecycleMixin):
             # from the index itself (one metadata-cheap count job) so
             # the drift ratio n_added/n_rows is meaningful
             man["n_rows"] = (
-                self.spark.read.parquet(self.index_path).count() - n
+                self.spark.read.parquet(self._path(man, "cells")).count() - n
             )
         man["n_rows"] = int(man["n_rows"]) + n
         man["n_added"] = int(man.get("n_added", 0)) + n
@@ -807,9 +791,9 @@ class IvfIndex(IndexLifecycleMixin):
 
         from ..fsutil import delete_path
 
-        self._check_not_compacting("remove()")
         ver, man = self._manifest_cas()
-        stored = self.spark.read.parquet(self.index_path)
+        cells = self._path(man, "cells")
+        stored = self.spark.read.parquet(cells)
         if not isinstance(vec_ids, DataFrame):
             ids = self.spark.createDataFrame(
                 [(i,) for i in vec_ids],
@@ -822,7 +806,7 @@ class IvfIndex(IndexLifecycleMixin):
                 .alias("_cid")
             )
         live = stored.select("_cid").join(ids.distinct(), "_cid", "left_semi")
-        tomb = self._tombstones()
+        tomb = self._tombstones(man)
         if tomb is not None:
             live = live.join(tomb, "_cid", "left_anti")
         staging = f"{self.index_path}.staging/remove_{uuid.uuid4().hex}"
@@ -841,15 +825,15 @@ class IvfIndex(IndexLifecycleMixin):
             if k > 0:
                 self.spark.read.parquet(staging).write.mode(
                     "append"
-                ).parquet(self.tombstones_path)
+                ).parquet(self._path(man, "tombstones"))
         finally:
             delete_path(self.spark, staging)
         # manifest DERIVED from authoritative state (index minus
         # tombstones): self-healing under interrupted earlier calls.
         # ONE index scan computes live AND tombstoned counts (the anti-join
         # + count pair scanned the cell tree twice)
-        rows_all = self.spark.read.parquet(self.index_path).select("_cid")
-        tomb_now = self._tombstones()
+        rows_all = self.spark.read.parquet(cells).select("_cid")
+        tomb_now = self._tombstones(man)
         if tomb_now is None:
             flagged = rows_all.withColumn("_t", F.lit(None).cast("int"))
         else:
@@ -879,45 +863,26 @@ class IvfIndex(IndexLifecycleMixin):
         applied. Cost: one full index rewrite — run like any
         compaction job, when the tombstone fraction warrants.
 
-        Crash safety: same protocol as ``Bm25Index.compact`` — a
-        marker refuses query/add/remove mid-swap, the rewrite lands
-        via ``fsutil.swap_dir_into_place`` (rename-aside: a complete
-        copy of the index exists on disk at every instant), and
-        re-entry converges from any interruption point
-        (``recover_dir_swap`` + idempotent anti-join)."""
-        from ..fsutil import (
-            SWAP_NEW,
-            delete_path,
-            recover_dir_swap,
-            swap_dir_into_place,
-            write_json_manifest,
-        )
+        Crash safety: the same generation switch as
+        ``Bm25Index.compact`` (``IndexLifecycleMixin``): the filtered
+        cell tree is a new generation the manifest commit names, and
+        re-running compact() converges from any interruption point."""
+        from ..fsutil import delete_path
 
-        recover_dir_swap(self.spark, self.index_path)
         # maintenance pass: reclaim staging orphans from hard-crashed
-        # remove() calls (mutators refuse while the marker exists)
+        # remove() calls
         delete_path(self.spark, self.index_path + ".staging")
-        tomb = self._tombstones()
+        ver, man = self._manifest_cas()
+        tomb = self._tombstones(man)
         if tomb is None:
-            if self._dir_exists(self.marker_path):
-                # crashed AFTER dropping tombstones: swap complete —
-                # finish the cleanup so the index serves again
-                delete_path(self.spark, self.marker_path)
-            ver0, man0 = self._manifest_cas()
-            if int(man0.get("n_removed", 0)) != 0:
-                # heal the bookkeeping too: a crash
-                # between the tombstone drop and the manifest reset
-                # would otherwise pin should_compact() True forever
-                man0["n_removed"] = 0
-                self._commit_manifest(man0, expected=ver0)
+            self._sweep(int(man.get("generation", 0)))
             return 0
         n_tomb = tomb.count()
-        ver, man = self._manifest_cas()
-        live = self.spark.read.parquet(self.index_path).join(
+        live = self.spark.read.parquet(self._path(man, "cells")).join(
             tomb, "_cid", "left_anti"
         )
-        # guard BEFORE any destructive step: an all-removed index
-        # would leave an empty partitioned dir that cannot be re-read
+        # guard BEFORE writing: an all-removed index would leave an
+        # empty partitioned dir that cannot be re-read
         if live.limit(1).count() == 0:
             raise ValueError(
                 "compact() would leave zero vectors (every row is "
@@ -925,21 +890,12 @@ class IvfIndex(IndexLifecycleMixin):
                 "unreadable; keep serving via tombstones or rebuild "
                 "with build() on the live corpus"
             )
-        write_json_manifest(self.spark, self.marker_path, {
-            "n_tombstones": int(n_tomb),
-        })
-        # last cheap exit before the destructive swap (mirroring
-        # Bm25Index.compact): a writer that committed
-        # during the live-count above raises HERE, index untouched
-        self._verify_manifest_unmoved(ver)
-        live.write.mode("overwrite").partitionBy("_cell").parquet(
-            self.index_path + SWAP_NEW
+        self._switch_generation(
+            ver,
+            # tombstones are now physical deletions
+            {**man, "n_removed": 0},
+            lambda root: live.write.mode("overwrite")
+            .partitionBy("_cell")
+            .parquet(root("cells")),
         )
-        swap_dir_into_place(self.spark, self.index_path)
-        delete_path(self.spark, self.tombstones_path)
-        self._commit_compact_manifest({
-            **man,
-            "n_removed": 0,  # tombstones are now physical deletions
-        }, expected=ver)
-        delete_path(self.spark, self.marker_path)
         return int(n_tomb)

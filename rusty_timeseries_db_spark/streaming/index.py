@@ -211,13 +211,12 @@ def apply_removal_batch(
     ids newly removed.
 
     Poison-pill contract (deliberate, unlike ``removed_ids="skip"`` on
-    the add sinks): if an interrupted ``compact()`` left the index
-    mid-swap, ``remove()`` raises and the micro-batch fails on every
-    retry — an erasure request must NEVER be silently dropped, so the
-    stream stalls until an operator re-runs compact(). Writer
+    the add sinks): if ``remove()`` raises, the micro-batch fails on
+    every retry — an erasure request must NEVER be silently dropped,
+    so the stream stalls until an operator intervenes. Writer
     contract: do not run a removal sink concurrently with an add sink
-    on the SAME index (the manifest commit is last-writer-wins; see
-    the index class docstrings)."""
+    on the SAME index (the manifest commit is a compare-and-swap, so
+    the loser raises; see the index class docstrings)."""
     if kind == "bm25":
         idx = Bm25Index(spark, index_path)
     elif kind == "ivf":
@@ -297,9 +296,8 @@ def apply_index_ops_batch(
 
     Poison-pill contract: inherited per leg — adds follow
     ``removed_ids`` (streaming default ``skip``), removes follow the
-    strict erasure contract (a mid-swap index raises and the batch
-    retries until an operator re-runs ``compact()``; an erasure
-    request is never silently dropped)."""
+    strict erasure contract (a failing ``remove()`` fails the batch,
+    which retries; an erasure request is never silently dropped)."""
     from pyspark.sql import functions as F
 
     if kind == "bm25":

@@ -23,21 +23,20 @@ the id to a manifest via atomic rename. Readers
 so a torn write from a crash mid-batch is invisible and zero duplicate
 rows survive a replay — no reader-side dedup needed.
 
-**Manifest/snapshot I/O is storage-agnostic**: every manifest read/write and
-the
-snapshot sweeper go through the scheme-resolved Hadoop FS layer
-(fsutil.py) — the same treatment the rollup high-water mark and IVF
-manifest got — so the exactly-once sink and the last-value
-cache run against ``hdfs://`` / ``s3a://`` warehouses, not just a
-driver-mounted POSIX path. Commits use fsutil's VERSIONED manifest
-protocol (fresh-name rename per write — old-or-new atomicity with no
-delete/rename window; see fsutil.py), with a read-side fallback to the
-legacy single-file manifests for warehouses written by earlier
-code. Every exactly-once manifest write is a versioned
-COMPARE-AND-SWAP (sink commit: append-only merge-and-retry;
-retention: rescan-and-retry; compaction: carry-forward merge), so the
-sink and ONE maintenance op may safely interleave — see SCALE.md
-"CAS everywhere" for the full concurrency contract.
+**Manifest/snapshot I/O is storage-agnostic**: every manifest
+read/write and the snapshot sweeper go through the scheme-resolved
+Hadoop FS layer (fsutil.py), so the exactly-once sink and the
+last-value cache run against ``hdfs://`` / ``s3a://`` warehouses, not
+just a driver-mounted POSIX path. Both commit through fsutil's one
+manifest protocol, the versioned manifest every store in the package
+uses (fresh-name rename per write: a reader sees the old manifest or
+the new one, never neither); the single-file ``_manifest.json`` /
+``_latest.json`` of earlier code are not read. Every exactly-once
+manifest write is a versioned COMPARE-AND-SWAP (sink commit:
+append-only merge-and-retry; retention: rescan-and-retry; compaction:
+carry-forward merge), so the sink and ONE maintenance op may safely
+interleave — see SCALE.md "CAS everywhere" for the full concurrency
+contract.
 """
 
 from __future__ import annotations
@@ -52,7 +51,6 @@ from ..fsutil import (
     ManifestVersionConflict,
     delete_path,
     list_dir_names,
-    read_json_manifest,
     read_versioned_manifest,
     read_versioned_manifest_versioned,
     write_versioned_manifest,
@@ -250,22 +248,6 @@ def start_telemetry_sink(
 
 # ------------------------------------------------ exactly-once sink
 
-def _read_legacy_manifest_or_raise(
-    spark: SparkSession, legacy_path: str, what: str, consequence: str
-) -> dict | None:
-    """Read a legacy single-file manifest: None when absent (cold
-    start), its dict when readable, and an actionable IOError when it
-    EXISTS but cannot be parsed — one implementation of the
-    damaged-manifest contract for both sinks."""
-    try:
-        return read_json_manifest(spark, legacy_path)
-    except ValueError as e:  # json.JSONDecodeError: torn bytes
-        raise IOError(
-            f"legacy {what} at {legacy_path} exists but is unreadable "
-            f"— {consequence}; repair or remove the file deliberately"
-        ) from e
-
-
 def _session(spark: SparkSession | None) -> SparkSession:
     """The session for manifest I/O: the caller's, else the active one
     (the FS gateway lives on the JVM, so some session must exist)."""
@@ -292,30 +274,18 @@ def _read_manifest_versioned(
 ) -> tuple[int | None, dict]:
     """(manifest version, ledger dict): the version is the CAS token a
     read-modify-write maintenance job passes back to
-    ``_write_manifest(expected_version=...)``; None = no versioned manifest
-    committed yet (cold
-    start, or a legacy single-file manifest). A manifest
-    that EXISTS but cannot be read raises (from the versioned reader,
-    or the wrapper below for the legacy single file): degrading a
-    damaged ledger to 'empty' would let the next commit write a fresh
+    ``_write_manifest(expected_version=...)``; None = no manifest
+    committed yet (cold start). A manifest that EXISTS but cannot be
+    read raises (from the versioned reader): degrading a damaged
+    ledger to 'empty' would let the next commit write a fresh
     manifest listing only itself — permanently hiding every committed
     directory and re-admitting replayed batches as duplicates
     (second pass). A crash keeps the data;
     retry/repair resolves it."""
     spark = _session(spark)
-    consequence = (
-        "refusing to treat it as empty (a rebuild would discard the "
-        "committed-batch ledger)"
-    )
-    version: int | None = None
-    got = read_versioned_manifest_versioned(spark, path, "_manifest")
-    if got is not None:
-        version, m = got
-    else:  # legacy single-file manifest
-        m = _read_legacy_manifest_or_raise(
-            spark, os.path.join(path, "_manifest.json"),
-            "exactly-once manifest", consequence,
-        )
+    version, m = read_versioned_manifest_versioned(
+        spark, path, "_manifest"
+    ) or (None, None)
     if m is None:
         return version, {
             "dirs": [], "committed_ids": [], "compact_seq": 0,
@@ -341,8 +311,9 @@ def _read_manifest_versioned(
         # same actionable message — never a bare KeyError crash-loop
         raise IOError(
             f"exactly-once manifest under {path} parsed but has an "
-            f"unexpected shape — {consequence}; repair or remove it "
-            "deliberately"
+            "unexpected shape — refusing to treat it as empty (a "
+            "rebuild would discard the committed-batch ledger); repair "
+            "or remove it deliberately"
         ) from e
 
 
@@ -1170,23 +1141,12 @@ def _read_latest_manifest(
     path: str, spark: SparkSession | None = None
 ) -> dict | None:
     """The last-value cache pointer, or None when NO pointer exists. A
-    pointer that EXISTS but cannot be read/parsed raises (versioned
-    reader, or the wrapper below for the legacy single file): treating
+    pointer that EXISTS but cannot be read/parsed raises: treating
     a damaged pointer as 'no snapshot yet' would make the next sink
     batch rebuild the snapshot WITHOUT merging the previous one —
     silently evicting every series absent from that one batch
     (second pass). Crash-and-retry keeps the cache."""
-    spark = _session(spark)
-    consequence = (
-        "refusing to treat it as absent (the next snapshot would drop "
-        "every series not in its own batch)"
-    )
-    m = read_versioned_manifest(spark, path, "_latest")
-    if m is None:  # legacy single-file pointer
-        m = _read_legacy_manifest_or_raise(
-            spark, os.path.join(path, "_latest.json"),
-            "last-value pointer", consequence,
-        )
+    m = read_versioned_manifest(_session(spark), path, "_latest")
     if m is None:
         return None
     try:
@@ -1197,8 +1157,9 @@ def _read_latest_manifest(
     except (TypeError, KeyError, ValueError) as e:
         raise IOError(
             f"last-value pointer under {path} parsed but has an "
-            f"unexpected shape — {consequence}; repair or remove it "
-            "deliberately"
+            "unexpected shape — refusing to treat it as absent (the "
+            "next snapshot would drop every series not in its own "
+            "batch); repair or remove it deliberately"
         ) from e
 
 

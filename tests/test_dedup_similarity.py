@@ -316,7 +316,6 @@ def test_ivf_index_incremental_add(spark, tmp_path):
     same answers from the manifest."""
     import pytest
 
-    from rusty_timeseries_db_spark.fsutil import read_json_manifest
     from rusty_timeseries_db_spark.functions.vectors import cosine
     from rusty_timeseries_db_spark.operators.similarity import (
         IvfIndex,
@@ -586,7 +585,6 @@ def test_ivf_remove_exact_and_compact_equality(spark, tmp_path):
     tombstone sidecar lives OUTSIDE the cell tree."""
     import pytest
 
-    from rusty_timeseries_db_spark.fsutil import read_json_manifest
     from rusty_timeseries_db_spark.operators.similarity import IvfIndex
     from rusty_timeseries_db_spark.queries import T
     from tests.conftest import SF_DIR
@@ -702,52 +700,6 @@ def test_ivf_add_removed_ids_policy_matrix(spark, tmp_path):
     assert apply_ivf_batch(  # replay of an applied batch is a no-op
         spark, idx2_path, readd, batch_id=2, removed_ids="readmit"
     ) == 0
-
-
-def test_ivf_marker_refuses_and_compact_recovers(spark, tmp_path):
-    """An interrupted compact() (marker present, index renamed aside
-    mid-swap) refuses query/add/remove and converges on re-run —
-    the Bm25Index crash-safety contract, ported."""
-    import shutil
-
-    import pytest
-
-    from rusty_timeseries_db_spark.fsutil import SWAP_NEW, write_json_manifest
-    from rusty_timeseries_db_spark.operators.similarity import IvfIndex
-    from rusty_timeseries_db_spark.queries import T
-    from tests.conftest import SF_DIR
-
-    emb = T(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    corpus = emb.filter("vec_id >= 20")
-    queries = emb.filter("vec_id < 5").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx_path = str(tmp_path / "ivf")
-    idx = IvfIndex(spark, idx_path).build(corpus, n_clusters=8, seed=7)
-    idx.remove([22, 24])
-    logical = sorted(
-        (r.query_id, r.vec_id, r.rank)
-        for r in idx.query(queries, k=5, n_probe=3).collect()
-    )
-    # simulate the crash window: marker on disk, cell tree renamed aside
-    write_json_manifest(spark, idx.marker_path, {"n_tombstones": 2})
-    shutil.move(idx_path, idx_path + SWAP_NEW)
-    for verb in ("query", "add", "remove"):
-        with pytest.raises(RuntimeError, match="interrupted compact"):
-            if verb == "query":
-                idx.query(queries, k=5)
-            elif verb == "add":
-                idx.add(corpus.limit(1))
-            else:
-                idx.remove([20])
-    assert idx.compact() == 2  # recovers the swap, then applies
-    assert not idx._dir_exists(idx.marker_path)
-    assert not idx._dir_exists(idx.tombstones_path)
-    physical = sorted(
-        (r.query_id, r.vec_id, r.rank)
-        for r in idx.query(queries, k=5, n_probe=3).collect()
-    )
-    assert physical == logical
 
 
 def test_ngram_containment_directional(spark):

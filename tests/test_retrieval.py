@@ -384,13 +384,15 @@ def test_compact_preserves_results_and_clears_tombstones(spark, tmp_path):
 
     applied = idx.compact()
     assert applied > 0
-    assert idx._tombstones() is None  # physically gone
+    assert idx._tombstones(idx._manifest()) is None  # physically gone
     after = _rows(Bm25Index(spark, path).query(TERMS, k=25))
     assert after == before
     man_after = idx._manifest()
     assert man_after["n_docs"] == man_before["n_docs"]
     # the docs sidecar no longer holds the removed ids
-    remaining = spark.read.parquet(idx.docs_path).count()
+    remaining = spark.read.parquet(
+        idx._path(idx._manifest(), "docs")
+    ).count()
     assert remaining == man_after["n_docs"]
     # a second compact is a no-op
     assert idx.compact() == 0
@@ -452,31 +454,9 @@ def test_compact_guards_all_removed(spark, tmp_path):
     assert idx.query(TERMS, k=5).count() == 0
 
 
-def test_query_refuses_mid_compact_marker(spark, tmp_path):
-    """An interrupted compact() (marker present) must refuse queries —
-    the intermediate directory states are inconsistent — and a re-run
-    with no tombstones left finishes the cleanup."""
-    from rusty_timeseries_db_spark.fsutil import write_json_manifest
-
-    docs = _docs(spark)
-    path = str(tmp_path / "bm25")
-    idx = Bm25Index(spark, path).build(docs)
-    write_json_manifest(spark, idx.marker_path, {"n_tombstones": 1})
-    with pytest.raises(RuntimeError, match="interrupted compact"):
-        idx.query(TERMS, k=5)
-    # simulate crash after the tombstone drop: compact() cleans up
-    assert idx.compact() == 0
-    assert idx.query(TERMS, k=5).count() > 0
-
-
 def test_remove_requires_docs_sidecar(spark, tmp_path):
     """An index without the docs/ sidecar flag must fail LOUDLY on
     remove() — a partial sidecar would silently skip old docs."""
-    from rusty_timeseries_db_spark.fsutil import (
-        read_json_manifest,
-        write_json_manifest,
-    )
-
     docs = _docs(spark)
     path = str(tmp_path / "bm25")
     idx = Bm25Index(spark, path).build(docs)
@@ -488,9 +468,10 @@ def test_remove_requires_docs_sidecar(spark, tmp_path):
     # and add() on the old format does NOT create a partial sidecar
     import shutil
 
-    shutil.rmtree(idx.docs_path)
+    docs_path = idx._path(idx._manifest(), "docs")
+    shutil.rmtree(docs_path)
     idx.add(_docs(spark).limit(0))  # no-op add is fine
-    assert not idx._dir_exists(idx.docs_path)
+    assert not idx._dir_exists(docs_path)
 
 
 def test_remove_manifest_self_heals(spark, tmp_path):
@@ -551,74 +532,7 @@ def test_stream_sink_skips_removed_ids(spark, tmp_path):
 
 
 # -------------------------------------------------------------------------
-# crash-safe compact swap + removed_ids policy matrix
-
-
-def test_compact_interrupted_mid_swap_converges(spark, tmp_path):
-    """A crash between compact()'s aside-rename and swap-in must NOT
-    strand the index: recover_dir_swap finishes the swap on re-entry
-    and the compact re-run converges to the exact live-subset scores.
-    Simulated state: src missing, complete rewrite at src+SWAP_NEW,
-    marker present."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from rusty_timeseries_db_spark.fsutil import SWAP_NEW, write_json_manifest
-
-    docs = _docs(spark)
-    path = str(tmp_path / "bm25")
-    idx = Bm25Index(spark, path).build(docs)
-    idx.remove([2, 4, 6])
-    # simulate: marker written, postings renamed aside mid-swap (the
-    # on-disk content IS a complete directory, which is all the
-    # protocol guarantees at that point — compact() re-filters it)
-    write_json_manifest(spark, idx.marker_path, {"n_tombstones": 3})
-    shutil.move(idx.postings_path, idx.postings_path + SWAP_NEW)
-    assert not os.path.exists(idx.postings_path)
-
-    # all three mutators + query refuse while the marker exists
-    with pytest.raises(RuntimeError, match="interrupted compact"):
-        idx.query(TERMS, k=5)
-    with pytest.raises(RuntimeError, match="interrupted compact"):
-        idx.add(docs.limit(1))
-    with pytest.raises(RuntimeError, match="interrupted compact"):
-        idx.remove([1])
-
-    assert idx.compact() == 3  # converges from the torn state
-    assert not os.path.exists(idx.postings_path + SWAP_NEW)
-    assert not idx._dir_exists(idx.marker_path)
-    assert not idx._dir_exists(idx.tombstones_path)
-    live = docs.filter(~F.col("doc_id").isin([2, 4, 6]))
-    assert _rows(idx.query(TERMS, k=15)) == _rows(
-        bm25_topk(live, TERMS, k=15)
-    )
-
-
-def test_compact_never_deletes_live_dir_first(spark, tmp_path):
-    """The swap protocol keeps a complete copy of every directory on
-    disk at every instant: simulate the OTHER crash window (swap-in
-    done for postings, aside copy not yet deleted; terms untouched)
-    and check recovery + re-run."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from rusty_timeseries_db_spark.fsutil import SWAP_OLD, write_json_manifest
-
-    docs = _docs(spark)
-    path = str(tmp_path / "bm25")
-    idx = Bm25Index(spark, path).build(docs)
-    idx.remove([1, 3])
-    write_json_manifest(spark, idx.marker_path, {"n_tombstones": 2})
-    # completed swap, aside copy left behind
-    shutil.copytree(idx.postings_path, idx.postings_path + SWAP_OLD)
-    assert idx.compact() == 2
-    assert not os.path.exists(idx.postings_path + SWAP_OLD)
-    live = docs.filter(~F.col("doc_id").isin([1, 3]))
-    assert _rows(idx.query(TERMS, k=15)) == _rows(
-        bm25_topk(live, TERMS, k=15)
-    )
+# removed_ids policy matrix
 
 
 def test_removed_ids_policy_matrix_batch_and_stream(spark, tmp_path):
@@ -1024,11 +938,6 @@ def test_query_tfidf_exact_through_lifecycle(spark, tmp_path):
 
 
 def test_query_tfidf_requires_tfn2_manifest_flag(spark, tmp_path):
-    from rusty_timeseries_db_spark.fsutil import (
-        read_json_manifest,
-        write_json_manifest,
-    )
-
     docs = _docs(spark)
     path = str(tmp_path / "bm25")
     idx = Bm25Index(spark, path).build(docs)

@@ -202,6 +202,49 @@ def test_window_must_align_with_session_timezone(spark, paths):
         spark.conf.set("spark.sql.session.timeZone", orig)
 
 
+def test_hwm_commit_failing_before_rename_keeps_previous(
+    spark, paths, monkeypatch
+):
+    """The high-water mark commits through the versioned manifest: a
+    commit that fails between the temp write and the rename leaves the
+    previous mark readable, so the next refresh stays incremental."""
+    from rusty_timeseries_db_spark import fsutil
+
+    base, rollup = paths
+    _write_batch(spark, base, _rows(1, "a", [(0, 1.0), (2, 3.0)]))
+    _write_batch(spark, base, _rows(4, "a", [(0, 2.0)]))
+    roll = ContinuousRollup(spark, base, rollup, ["series"])
+    roll.refresh()
+    assert roll._read_hwm() == "2024-03-04"
+    _write_batch(spark, base, _rows(6, "a", [(0, 7.0)]))
+
+    class _RenameFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            raise IOError("killed before the rename")
+
+    real_fs_for = fsutil.fs_for
+    monkeypatch.setattr(
+        fsutil, "fs_for", lambda s, p: _RenameFails(real_fs_for(s, p))
+    )
+    with pytest.raises(IOError, match="killed"):
+        roll.refresh()
+    assert any(
+        n.endswith(".json.tmp") for n in os.listdir(roll.manifest_path)
+    )
+    assert roll._read_hwm() == "2024-03-04"
+    assert _as_set(roll.read()) == _as_set(_full_recompute(roll))
+    monkeypatch.undo()
+    roll.refresh()
+    assert roll._read_hwm() == "2024-03-06"
+    assert _as_set(roll.read()) == _as_set(_full_recompute(roll))
+
+
 def test_manifest_and_probe_use_hadoop_fs_scheme_paths(spark, tmp_path):
     """Storage-agnostic manifest: with an explicit
     'file:/...' URI — the scheme-qualified form every non-local store

@@ -425,10 +425,11 @@ def test_exactly_once_compaction_folds_ledger(spark, tmp_path):
 
 
 def test_exactly_once_legacy_manifest_skips_on_id(spark, tmp_path):
-    """Legacy manifests carry no fingerprints: a committed id
-    replay cannot be content-verified, so the old skip-on-id behavior
-    is preserved (never a crash, never a duplicate)."""
-    import json as _json
+    """A manifest without fingerprints (written before they existed):
+    a committed id replay cannot be content-verified, so the old
+    skip-on-id behavior is preserved (never a crash, never a
+    duplicate)."""
+    from rusty_timeseries_db_spark.fsutil import write_versioned_manifest
 
     wh = str(tmp_path / "wh")
     path = os.path.join(wh, "telemetry_eo")
@@ -438,18 +439,15 @@ def test_exactly_once_legacy_manifest_skips_on_id(spark, tmp_path):
         "fc1_flag int, timeseries_id string",
     )
     assert commit_batch_exactly_once(normalize_batch(raw, 0), 0, path)
-    # strip fingerprints, simulating a legacy manifest (single-file form)
+    # commit the next version with the fingerprints stripped
     from rusty_timeseries_db_spark.streaming.ingest import _read_manifest
 
     man = _read_manifest(path, spark)
-    for f in os.listdir(path):
-        if f.startswith("_manifest.v"):
-            os.remove(os.path.join(path, f))
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        _json.dump(
-            {"dirs": man["dirs"], "committed_ids": man["committed_ids"],
-             "compact_seq": man["compact_seq"]}, f,
-        )
+    write_versioned_manifest(spark, path, "_manifest", {
+        "dirs": man["dirs"], "committed_ids": man["committed_ids"],
+        "compact_seq": man["compact_seq"],
+    })
+    assert _read_manifest(path, spark)["fingerprints"] == {}
     assert commit_batch_exactly_once(normalize_batch(raw, 0), 0, path) is False
     assert read_committed_telemetry(spark, wh).count() == 1
 

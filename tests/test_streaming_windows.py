@@ -982,53 +982,6 @@ def test_streaming_manifests_use_hadoop_fs_scheme_paths(spark, tmp_path):
             for r in read_latest_values(spark, wh).collect()} == {"s1": 2.0}
 
 
-def test_manifest_legacy_single_file_fallback(spark, tmp_path):
-    """Warehouses written by older code carry single-file
-    ``_manifest.json`` / ``_latest.json`` manifests: the versioned
-    reader must fall back to them, and the next write must upgrade to
-    the versioned protocol (which then takes precedence)."""
-    import json as _json
-
-    from rusty_timeseries_db_spark.streaming.ingest import (
-        _read_latest_manifest,
-        _read_manifest,
-        _write_manifest,
-        committed_batch_ids,
-    )
-
-    eo = str(tmp_path / "telemetry_eo")
-    os.makedirs(eo)
-    with open(os.path.join(eo, "_manifest.json"), "w") as f:
-        _json.dump(
-            {"dirs": ["batch_id=0"], "committed_ids": [0],
-             "compact_seq": 2}, f,
-        )
-    man = _read_manifest(eo, spark)
-    assert man == {
-        "dirs": ["batch_id=0"], "committed_ids": [0], "compact_seq": 2,
-        "fingerprints": {},  # legacy manifests carry none
-        "hwm": -1, "folded_fps": [],  # ...nor a ledger fold
-    }
-    assert committed_batch_ids(eo, spark) == [0]
-
-    # a write upgrades to the versioned layout; reads prefer it even
-    # with the stale legacy file still present
-    man["committed_ids"] = [0, 1]
-    _write_manifest(eo, man, spark)
-    assert any(
-        n.startswith("_manifest.v") for n in os.listdir(eo)
-    ) and os.path.exists(os.path.join(eo, "_manifest.json"))
-    assert committed_batch_ids(eo, spark) == [0, 1]
-
-    lat = str(tmp_path / "latest")
-    os.makedirs(lat)
-    with open(os.path.join(lat, "_latest.json"), "w") as f:
-        _json.dump({"dir": "snap=3", "batch_id": 3}, f)
-    assert _read_latest_manifest(lat, spark) == {
-        "dir": "snap=3", "batch_id": 3
-    }
-
-
 def test_engine_start_streaming_ingest_wires_both_sinks(spark, tmp_path):
     """One engine call starts the live ingest path — telemetry
     sink + last-value cache — and the serving surface then answers
@@ -1556,17 +1509,17 @@ def test_damaged_manifests_raise_instead_of_wiping(spark, tmp_path):
     assert _read_manifest(eo, spark)["committed_ids"] == []
     assert _read_latest_manifest(str(tmp_path / "lat"), spark) is None
 
-    # torn legacy files: raise with an actionable message
+    # a torn only version: raise with an actionable message
     os.makedirs(eo)
-    with open(os.path.join(eo, "_manifest.json"), "w") as f:
+    with open(os.path.join(eo, "_manifest.v1.json"), "w") as f:
         f.write('{"dirs": ["batch_id=0"], "committed')  # truncated
-    with pytest.raises(IOError, match="refusing to treat it as empty"):
+    with pytest.raises(IOError, match="refusing to treat a damaged"):
         _read_manifest(eo, spark)
     lat = str(tmp_path / "lat")
     os.makedirs(lat)
-    with open(os.path.join(lat, "_latest.json"), "w") as f:
+    with open(os.path.join(lat, "_latest.v1.json"), "w") as f:
         f.write("{torn")
-    with pytest.raises(IOError, match="refusing to treat it as absent"):
+    with pytest.raises(IOError, match="refusing to treat a damaged"):
         _read_latest_manifest(lat, spark)
 
     # versioned: torn top version falls back to the predecessor...
@@ -1607,14 +1560,14 @@ def test_versioned_manifest_infra_errors_propagate(spark, tmp_path, monkeypatch)
     def _infra_boom(spark_, path):
         raise RuntimeError("Py4J connection dropped")
 
-    monkeypatch.setattr(fsutil, "read_json_manifest", _infra_boom)
+    monkeypatch.setattr(fsutil, "_read_json_manifest", _infra_boom)
     with pytest.raises(RuntimeError, match="Py4J connection dropped"):
         read_versioned_manifest(spark, vd, "_m")
 
     def _damage_boom(spark_, path):
         raise ValueError("torn bytes")
 
-    monkeypatch.setattr(fsutil, "read_json_manifest", _damage_boom)
+    monkeypatch.setattr(fsutil, "_read_json_manifest", _damage_boom)
     with pytest.raises(IOError, match="unreadable"):
         read_versioned_manifest(spark, vd, "_m")
 
@@ -1937,7 +1890,7 @@ def test_exactly_once_damaged_manifest_propagates_to_reads(spark, tmp_path):
     wh = str(tmp_path / "wh")
     eo = os.path.join(wh, "telemetry_eo")
     os.makedirs(eo)
-    with open(os.path.join(eo, "_manifest.json"), "w") as f:
+    with open(os.path.join(eo, "_manifest.v1.json"), "w") as f:
         f.write("{torn")
     eng = TimeseriesEngine(spark, wh)
     with pytest.raises(IOError):
@@ -1976,7 +1929,7 @@ def test_damaged_pointer_reader_falls_back_writer_raises(spark, tmp_path):
     eng2 = TimeseriesEngine(spark, wh)  # fresh: would prefer a snapshot
     lat = os.path.join(wh, "latest")
     os.makedirs(lat)
-    with open(os.path.join(lat, "_latest.json"), "w") as f:
+    with open(os.path.join(lat, "_latest.v1.json"), "w") as f:
         f.write("{torn")
     with pytest.raises(IOError):
         read_latest_values(spark, wh)  # the raw reader keeps the raise
@@ -1987,13 +1940,13 @@ def test_damaged_pointer_reader_falls_back_writer_raises(spark, tmp_path):
     assert [(r.timeseries_id, r.value) for r in got] == [("s1", 0.5)]
 
     # wrong-shape (valid JSON, missing keys): actionable IOError
-    with open(os.path.join(lat, "_latest.json"), "w") as f:
+    with open(os.path.join(lat, "_latest.v1.json"), "w") as f:
         _json.dump({"nope": 1}, f)
     with pytest.raises(IOError, match="unexpected shape"):
         _read_latest_manifest(lat, spark)
     eo = str(tmp_path / "eo")
     os.makedirs(eo)
-    with open(os.path.join(eo, "_manifest.json"), "w") as f:
+    with open(os.path.join(eo, "_manifest.v1.json"), "w") as f:
         _json.dump([1, 2], f)
     with pytest.raises(IOError, match="unexpected shape"):
         _read_manifest(eo, spark)
